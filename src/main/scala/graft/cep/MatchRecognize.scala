@@ -81,18 +81,17 @@ object MatchRecognize extends Serializable {
   private[graft] val unboundedMatchNumWarns =
     new java.util.concurrent.atomic.AtomicLong(0)
 
-  /** Round 13 (VERDICT r12 "what's wrong #3"): a STREAMING clause
-    * using MATCH_NUMBER() without `matchNumberRetention` keeps an
-    * 8-byte counter row per ever-matched key FOREVER (exact
-    * cross-batch numbering on an unbounded key space = unbounded
-    * state). The trade is documented on both runners; this makes it
-    * loud at query-construction time, once per query. */
+  /** A STREAMING clause using MATCH_NUMBER() without
+    * `matchNumberRetention` keeps an 8-byte counter row per
+    * ever-matched key FOREVER (exact cross-batch numbering on an
+    * unbounded key space = unbounded state). The trade is documented
+    * on [[runStream]]; this makes it loud at query-construction time,
+    * once per query. */
   private def warnIfUnboundedMatchNum(streaming: Boolean,
-      usesMatchNum: Boolean, retentionMs: Option[Long],
-      runner: String): Unit =
+      usesMatchNum: Boolean, retentionMs: Option[Long]): Unit =
     if (streaming && usesMatchNum && retentionMs.isEmpty) {
       unboundedMatchNumWarns.incrementAndGet()
-      mrLog.warn(s"$runner: streaming MATCH_RECOGNIZE clause uses " +
+      mrLog.warn("runStream: streaming MATCH_RECOGNIZE clause uses " +
         "MATCH_NUMBER() without matchNumberRetention - the per-key " +
         "match counter is retained FOREVER (state grows with distinct " +
         "ever-matched keys). Pass matchNumberRetention = " +
@@ -900,9 +899,7 @@ object MatchRecognize extends Serializable {
     * activity + retention (one event-time timeout per idle key, NOT
     * a per-batch wakeup), and a later match on that key restarts
     * numbering at 1 — the documented trade. Requires a watermark;
-    * without one the option is inert (lazy semantics throughout).
-    * See [[runStreamTws]] for the same contract on the native
-    * transformWithState API. */
+    * without one the option is inert (lazy semantics throughout). */
   def runStream(df: DataFrame, sql: String,
                 matchNumberRetention: Option[java.time.Duration] = None)
       : DataFrame = {
@@ -940,8 +937,7 @@ object MatchRecognize extends Serializable {
     // 8-byte counter alive instead of being removed (the price of
     // cross-batch numbering — without it, numbering restarts)
     val usesMatchNum = c.clause.measures.exists(_._1 == MatchNum)
-    warnIfUnboundedMatchNum(streaming, usesMatchNum, retentionMs,
-      "runStream")
+    warnIfUnboundedMatchNum(streaming, usesMatchNum, retentionMs)
     // State encoding (round 11): a ROW with the input schema nested
     // inside — Tungsten/UnsafeRow-encoded through Encoders.row, the
     // cheapest state encoder Spark offers. The previous spelling
@@ -970,12 +966,9 @@ object MatchRecognize extends Serializable {
       .toDF()
   }
 
-  /** [[runStream]]'s per-key trigger function, extracted as a class
-    * (round 13) so the differential cadence-fuzz arm can drive it
-    * against [[MrTwsProcessor]] over the same simulated micro-batch
-    * schedule (via `TestGroupState`) — two independent runner
-    * implementations of one contract, one oracle. Production behavior
-    * is identical to the former local closure. */
+  /** [[runStream]]'s per-key trigger function, a class so the cadence
+    * fuzz can drive it over simulated micro-batch schedules (via
+    * `TestGroupState`) and check it against the batch runner. */
   private[cep] final class MrGwsFn(c: Compiled, nfa: Cep.Nfa[Row],
       streaming: Boolean, expireOn: Boolean, usesMatchNum: Boolean,
       retentionMs: Option[Long], within: Option[Long], timeoutOn: Boolean)
@@ -1056,11 +1049,11 @@ object MatchRecognize extends Serializable {
     }
   }
 
-  /** The streaming state layout both stream runners share: the
-    * MATCH_NUMBER counter next to the NFA state (partials + pending
-    * + nextOrigin), every row nested against the input schema — a
-    * plan-time fact, so the whole value Tungsten-encodes through
-    * `Encoders.row` with no Java/Kryo serialization. */
+  /** [[runStream]]'s per-key state layout: the MATCH_NUMBER counter
+    * next to the NFA state (partials + pending + nextOrigin), every
+    * row nested against the input schema — a plan-time fact, so the
+    * whole value Tungsten-encodes through `Encoders.row` with no
+    * Java/Kryo serialization. */
   private[cep] def mrStateSchema(inSchema: StructType): StructType = {
     import org.apache.spark.sql.types._
     val intsT = ArrayType(IntegerType, containsNull = false)
@@ -1104,184 +1097,6 @@ object MatchRecognize extends Serializable {
       r.getSeq[Row](3).map(q => Cep.Pending[Row](q.getLong(0),
         q.getSeq[Int](1).toVector, entries(q, 2))),
       r.getLong(1)), r.getLong(0))
-  }
-
-  /** [[runStream]] on the NATIVE stateful API (`transformWithState`,
-    * Spark 4's successor to flatMapGroupsWithState): same compile,
-    * same NFA, same Tungsten Row state layout ([[mrStateSchema]]),
-    * same emission — the engines cannot diverge — with the timer
-    * bookkeeping on first-class `registerTimer`/`handleExpiredTimer`
-    * instead of the single GroupState timeout slot. WITHIN expiry
-    * and the `matchNumberRetention` counter eviction are explicit
-    * event-time timers here (state TTLConfig is processing-time-only
-    * in Spark — verified against the handle's validateTTLConfig — so
-    * watermark-driven eviction must ride timers on both APIs).
-    *
-    * Streaming runs require the RocksDB state store provider, the
-    * transformWithState backend requirement (the [[graft.streaming
-    * .StatefulTws]] note). A BATCH DataFrame delegates to [[run]] —
-    * batch transformWithState never fires timers, so the held-match
-    * flush that makes runStream(batch) ≡ run(batch) has no trigger
-    * point on this API; delegation gives the same contract exactly.
-    *
-    * Checkpoints are NOT interchangeable with [[runStream]]'s (a
-    * different operator with different state/timer stores); pick one
-    * runner per checkpoint location. */
-  def runStreamTws(df: DataFrame, sql: String,
-                   matchNumberRetention: Option[java.time.Duration] = None)
-      : DataFrame = {
-    if (!df.isStreaming) return run(df, sql)
-    val c = compile(df.schema, sql)
-    val partitionBy = c.clause.partitionBy
-    val nfa = new Cep.Nfa[Row](c.spec, r => c.ordKey(r).toLong)
-    val within = c.spec.withinMs
-    val hasWatermark = df.queryExecution.logical.collectFirst {
-      case e: org.apache.spark.sql.catalyst.plans.logical.EventTimeWatermark =>
-        e
-    }.isDefined
-    val retentionMs = matchNumberRetention.map(_.toMillis)
-    val timersOn = hasWatermark &&
-      (within.isDefined || retentionMs.isDefined)
-    val usesMatchNum = c.clause.measures.exists(_._1 == MatchNum)
-    warnIfUnboundedMatchNum(streaming = true, usesMatchNum, retentionMs,
-      "runStreamTws")
-    val processor = new MrTwsProcessor(c, nfa, mrStateSchema(df.schema),
-      within, usesMatchNum, retentionMs, timersOn)
-    import org.apache.spark.sql.streaming.{OutputMode, TimeMode}
-    df.groupByKey(r => String.valueOf(r.getAs[Any](partitionBy)))(
-        org.apache.spark.sql.Encoders.STRING)
-      .transformWithState(processor,
-        if (timersOn) TimeMode.EventTime() else TimeMode.None(),
-        OutputMode.Append())(org.apache.spark.sql.Encoders.row(c.outSchema))
-      .toDF()
-  }
-
-  /** The [[runStreamTws]] state machine: one Row-encoded ValueState
-    * per key (identical layout to [[runStream]]'s GroupState value)
-    * plus one tracked event-time timer. Timer rule, shared with
-    * runStream: live partials → min(startTs) + within + 1; pending
-    * only → watermark + 1 (the next advance releases held matches);
-    * counter-only with a retention → watermark + retention (armed
-    * once per activity, sliding); otherwise none. */
-  private[cep] class MrTwsProcessor(c: Compiled, nfa: Cep.Nfa[Row],
-      stateSchema: StructType, withinMs: Option[Long],
-      usesMatchNum: Boolean, retentionMs: Option[Long], timersOn: Boolean)
-      extends org.apache.spark.sql.streaming.StatefulProcessor[String, Row, Row] {
-    import org.apache.spark.sql.streaming.{ExpiredTimerInfo, ListState,
-      OutputMode, TTLConfig, TimeMode, TimerValues, ValueState}
-
-    @transient private var st: ValueState[Row] = _
-    // the one registered timer's timestamp, so re-arming can delete
-    // the stale one (registerTimer accumulates; GroupState's single
-    // timeout slot replaced implicitly)
-    @transient private var timerAt: ValueState[Long] = _
-
-    override def init(outputMode: OutputMode, timeMode: TimeMode): Unit = {
-      st = getHandle.getValueState[Row]("mr",
-        org.apache.spark.sql.Encoders.row(stateSchema), TTLConfig.NONE)
-      if (timersOn)
-        timerAt = getHandle.getValueState[Long]("timerAt",
-          org.apache.spark.sql.Encoders.scalaLong, TTLConfig.NONE)
-    }
-
-    private def load(): (Cep.NfaState[Row], Long) =
-      if (st.exists()) unpackMrState(st.get())
-      else (Cep.NfaState.empty[Row], 0L)
-
-    /** Persist + retime after a trigger; returns nothing — the
-      * caller already holds the emitted rows. */
-    private def save(stNow: Cep.NfaState[Row], matchSeq: Long,
-                     wasCounterOnly: Boolean, timedOut: Boolean,
-                     wm: Long): Unit = {
-      val counterOnly = stNow.partials.isEmpty && stNow.pending.isEmpty
-      val drop =
-        (counterOnly && (!usesMatchNum || matchSeq == 0)) ||
-        (counterOnly && wasCounterOnly && retentionMs.isDefined && timedOut)
-      if (drop) {
-        st.clear()
-        if (timersOn && timerAt.exists()) {
-          getHandle.deleteTimer(timerAt.get()); timerAt.clear()
-        }
-        return
-      }
-      st.update(packMrState(stNow, matchSeq))
-      if (!timersOn) return
-      val want: Long =
-        if (withinMs.isDefined && stNow.partials.nonEmpty)
-          math.max(stNow.partials.map(_.startTs + withinMs.get).min + 1,
-            wm + 1)
-        else if (withinMs.isDefined && stNow.pending.nonEmpty) wm + 1
-        else if (counterOnly && retentionMs.isDefined)
-          math.max(wm + retentionMs.get, wm + 1)
-        else -1L
-      val have = if (timerAt.exists()) timerAt.get() else -1L
-      if (want != have) {
-        if (have != -1L) getHandle.deleteTimer(have)
-        if (want != -1L) getHandle.registerTimer(want)
-        if (want != -1L) timerAt.update(want) else timerAt.clear()
-      }
-    }
-
-    override def handleInputRows(key: String, rows: Iterator[Row],
-        timerValues: TimerValues): Iterator[Row] = {
-      val (st0, seq0) = load()
-      val wasCounterOnly = st0.partials.isEmpty && st0.pending.isEmpty
-      var stNow = st0
-      var matchSeq = seq0
-      val out = Seq.newBuilder[Row]
-      def emit(m: Cep.MatchResult[Row]): Unit = {
-        matchSeq += 1
-        out ++= matchRows(c, None, m, matchSeq)
-      }
-      for (e <- rows.toSeq.sortBy(c.ordKey)) {
-        val (s2, done, _) = nfa.onEvent(stNow, e)
-        stNow = s2
-        done.foreach(emit)
-      }
-      if (withinMs.isDefined && timersOn) {
-        val (s3, done, _) =
-          nfa.expire(stNow, timerValues.getCurrentWatermarkInMs())
-        stNow = s3
-        done.foreach(emit)
-      }
-      save(stNow, matchSeq, wasCounterOnly, timedOut = false,
-        timerValues.getCurrentWatermarkInMs())
-      out.result().iterator
-    }
-
-    override def handleExpiredTimer(key: String,
-        timerValues: TimerValues,
-        expiredTimerInfo: ExpiredTimerInfo): Iterator[Row] = {
-      // the fired timer is consumed by the runtime; drop our record
-      // of it so save() doesn't delete a live re-registration — but
-      // ONLY if the expiry matches the tracked timestamp. A timer we
-      // believed deleted (delivered anyway) must not clear tracking
-      // for the live one, or a later save() leaves a stale timer
-      // registered and the counter can evict early / wake spuriously.
-      val tracked = if (timerAt.exists()) timerAt.get() else -1L
-      val expiry = expiredTimerInfo.getExpiryTimeInMs()
-      if (tracked != -1L && tracked != expiry)
-        return Iterator.empty // unknown/stale timer: ignore
-      if (tracked == expiry) timerAt.clear()
-      val (st0, seq0) = load()
-      val wasCounterOnly = st0.partials.isEmpty && st0.pending.isEmpty
-      var stNow = st0
-      var matchSeq = seq0
-      val out = Seq.newBuilder[Row]
-      def emit(m: Cep.MatchResult[Row]): Unit = {
-        matchSeq += 1
-        out ++= matchRows(c, None, m, matchSeq)
-      }
-      if (withinMs.isDefined) {
-        val (s3, done, _) =
-          nfa.expire(stNow, timerValues.getCurrentWatermarkInMs())
-        stNow = s3
-        done.foreach(emit)
-      }
-      save(stNow, matchSeq, wasCounterOnly, timedOut = true,
-        timerValues.getCurrentWatermarkInMs())
-      out.result().iterator
-    }
   }
 
   /** Run the clause over a DataFrame, returning one row per match:

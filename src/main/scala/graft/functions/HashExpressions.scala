@@ -1,7 +1,7 @@
 package graft.functions
 
 import org.apache.spark.sql.Column
-import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression}
+import org.apache.spark.sql.catalyst.expressions.{ExpectsInputTypes, Expression, UnaryExpression}
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
 import org.apache.spark.sql.catalyst.util.{ArrayData, GenericArrayData}
 import org.apache.spark.sql.types.{ArrayType, DataType, LongType, StringType}
@@ -26,13 +26,13 @@ import org.apache.spark.unsafe.types.UTF8String
   * the wrappers dominate the hash itself on every corpus scan.
   */
 case class Md5PrefixLong(child: Expression, nibbles: Int)
-    extends UnaryExpression {
+    extends UnaryExpression with ExpectsInputTypes {
   require(nibbles >= 1 && nibbles <= 16, s"nibbles out of range: $nibbles")
 
-  // callers hash STRING keys by construction (Portable.hash32/hash60
-  // wrap this; concat/cast upstream always yields string) — a
-  // non-string child would CCE in eval, same contract as the other
-  // graft expressions
+  // a non-string child fails analysis, not eval (the element type is
+  // inferred: AbstractDataType is private to Spark's sql package)
+  override def inputTypes = Seq(StringType)
+
   override def dataType: DataType = LongType
 
   override def nullSafeEval(v: Any): Any =
@@ -87,8 +87,10 @@ object Md5PrefixLong {
   * row building each shingle directly.
   */
 case class WordShingles(child: Expression, n: Int)
-    extends UnaryExpression {
+    extends UnaryExpression with ExpectsInputTypes {
   require(n >= 2 && n <= 8, s"shingle width out of range: $n")
+
+  override def inputTypes = Seq(ArrayType(StringType))
 
   override def dataType: DataType =
     ArrayType(StringType, containsNull = true)

@@ -1227,9 +1227,17 @@ object TextOps extends graft.QueryModule {
     * sane corpus, the driver holds (word, pieces, freq) ≈ ~100 B/row
     * → ~100 MB at the cap, and the mis-pick penalty is bounded (the
     * distributed loop still works below the cap, just ~1 s slower at
-    * bench scale). Env-overridable for cluster tuning. */
-  private val MaxDriverVocab =
-    sys.env.getOrElse("SPARK_GRAFT_MAX_DRIVER_VOCAB", "1000000").toLong
+    * bench scale). Env-overridable for cluster tuning; read per call,
+    * so a malformed value fails the call that uses it. */
+  private def MaxDriverVocab: Long =
+    driverVocabCap(sys.env.get("SPARK_GRAFT_MAX_DRIVER_VOCAB"))
+
+  /** Parses a `SPARK_GRAFT_MAX_DRIVER_VOCAB` value (absent: 1 000 000);
+    * a value that is not an integer fails naming the variable. */
+  private[graft] def driverVocabCap(raw: Option[String]): Long =
+    raw.fold(1000000L)(v => v.trim.toLongOption.getOrElse(
+      throw new IllegalArgumentException(
+        s"SPARK_GRAFT_MAX_DRIVER_VOCAB must be an integer, got '$v'")))
 
   /** The [[bpeTrain]] driver loop; also returns the final piece table
     * (word, ps, freq) so [[bpeEncode]] can apply the learned merges.
@@ -1258,11 +1266,13 @@ object TextOps extends graft.QueryModule {
     checkpointDir.foreach(spark.sparkContext.setCheckpointDir)
     val wf0 = bpeInitState(documents)
     // size gate in ONE job: limit(cap+1) — if fewer rows come back,
-    // those are ALL the rows, collected without a separate count pass
+    // those are ALL the rows, collected without a separate count pass.
+    // limit takes an Int, so the cap clamps to Int.MaxValue - 1
+    val cap = math.min(maxDriverVocab, Int.MaxValue - 1L)
     val probe =
-      if (maxDriverVocab <= 0) Array.empty[org.apache.spark.sql.Row]
-      else wf0.limit(maxDriverVocab.toInt + 1).collect()
-    if (maxDriverVocab > 0 && probe.length <= maxDriverVocab) {
+      if (cap <= 0) Array.empty[org.apache.spark.sql.Row]
+      else wf0.limit(cap.toInt + 1).collect()
+    if (cap > 0 && probe.length <= cap) {
       val (out, state) = bpeLoopLocal(
         probe.map(r => (r.getString(0), r.getString(1), r.getLong(2))),
         merges)

@@ -34,7 +34,17 @@ object Stateful extends Serializable {
 
   /** Port of the reference FraudDetector: a flag marks "last txn was
     * small"; a large txn while flagged alerts; the flag expires after
-    * `flagTtlMs` (processing-time timeout ≙ the reference's timer).
+    * `flagTtlMs` (the reference's processing-time timer).
+    *
+    * The state is the flag's deadline, not a Boolean: Spark calls a key
+    * that has data with `hasTimedOut = false` even when its timeout has
+    * already passed, so the flag counts only while the micro-batch's
+    * processing time is before the deadline (`Long.MaxValue` when
+    * `flagTtlMs = None`). The timeout stays, to remove idle flags.
+    * Fraud checkpoints written while the state was a Boolean do not
+    * restore; restart them from a fresh checkpoint location. The state
+    * row keeps its size: a Boolean and a Long each take one 8-byte
+    * UnsafeRow slot.
     *
     * Operational note: with a processing-time timeout pending, Spark
     * keeps scheduling (empty) micro-batches so timers can fire — run
@@ -45,10 +55,11 @@ object Stateful extends Serializable {
                     flagTtlMs: Option[Long] = Some(FlagTtlMs)): Dataset[FraudAlert] = {
     import txns.sparkSession.implicits._
     def fn(accountId: Long, it: Iterator[Transaction],
-           state: GroupState[Boolean]): Iterator[FraudAlert] = {
+           state: GroupState[Long]): Iterator[FraudAlert] = {
       if (state.hasTimedOut) { state.remove(); return Iterator.empty }
+      val now = state.getCurrentProcessingTimeMs()
       val alerts = Seq.newBuilder[FraudAlert]
-      var flagged = state.getOption.getOrElse(false)
+      var flagged = state.getOption.exists(now < _)
       for (t <- it.toSeq.sortBy(_.seq)) {
         if (flagged) {
           if (t.amount > LargeAmount) alerts += FraudAlert(accountId, t.seq)
@@ -57,7 +68,7 @@ object Stateful extends Serializable {
         if (t.amount < SmallAmount) flagged = true
       }
       if (flagged) {
-        state.update(true)
+        state.update(flagTtlMs.fold(Long.MaxValue)(now + _))
         flagTtlMs.foreach(state.setTimeoutDuration)
       } else state.remove()
       alerts.result().iterator
@@ -175,7 +186,6 @@ object Stateful extends Serializable {
   def countWindowSum(values: Dataset[KeyedValue], size: Int,
                      slide: Int): Dataset[CountWindowSum] = {
     import values.sparkSession.implicits._
-    case class Buf(ring: Seq[KeyedValue], sinceEmit: Int)
     def fn(key: String, it: Iterator[KeyedValue],
            state: GroupState[(Seq[(String, Long, Long)], Int)]): Iterator[CountWindowSum] = {
       val (rawRing, rawSince) = state.getOption.getOrElse((Seq.empty, 0))

@@ -2,7 +2,7 @@ package graft.tools
 
 import org.apache.spark.sql.{Dataset, SparkSession}
 import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
-import graft.streaming.{Stateful, StatefulTws, Models}
+import graft.streaming.Stateful
 import graft.streaming.Models._
 
 /** Streaming throughput micro-bench for the stateful operators (the
@@ -22,11 +22,10 @@ import graft.streaming.Models._
   *
   * `runMain graft.tools.ProfileStream [op ...] [--rocksdb]` with ops
   * `baseline`, `fraud` (T1), `dfa` (T2), `topn` (T3/A6), `match`
-  * (J3), `countwin` (A5/W5); default all, default HDFS-backed state
-  * store. Under `--rocksdb` the sweep adds the transformWithState
-  * twins `twsfraud`/`twscountwin`/`twstopn` (the native API requires
-  * that provider) — compare them against the fMGWS ops from the SAME
-  * rocksdb sweep.
+  * (J3), `countwin` (A5/W5), the stateless gates `imggate`,
+  * `audgate`, `vidgate`, `sembase`, `semgate`, and `mrstream`
+  * (MATCH_RECOGNIZE); default all. `--rocksdb` runs the same ops on
+  * the RocksDB state store instead of the default HDFS-backed one.
   */
 object ProfileStream {
   private val Rows =
@@ -48,9 +47,9 @@ object ProfileStream {
       b.config("spark.sql.streaming.stateStore.providerClass",
         "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
       // 4.1's checksummed checkpoint files cost real throughput under
-      // RocksDB (measured round 8: fraud 43 -> 35, twsfraud 29 -> 18
-      // krows/s — every snapshot-zip close waits on its checksum
-      // future, jstack shows all 32 executor threads parked in
+      // RocksDB (measured round 8: fraud 43 -> 35 krows/s — every
+      // snapshot-zip close waits on its checksum future, jstack shows
+      // all 32 executor threads parked in
       // ChecksumCancellableFSDataOutputStream.close). Off by default
       // so the sweep measures the operators, not the durability
       // audit; pass --checksum to re-measure with them on.
@@ -77,32 +76,11 @@ object ProfileStream {
       if (rocksdb) "rocksdb" else "hdfs-backed"}, $Rows rows x " +
       s"$Batches batches, $cpus cores)")
 
-    /** One timed run: fresh stream + query, `Batches` micro-batches.
-      * `poll=true` waits on CONSUMED-ROW progress instead of
-      * `processAllAvailable` — required for TimeMode.ProcessingTime
-      * transformWithState queries, where the engine keeps scheduling
-      * timer-check batches and processAllAvailable never settles
-      * (the StatefulSpec tws-TTL test's documented behavior). A
-      * listener sums numInputRows so the count survives past the
-      * recentProgress ring buffer; only one query runs at a time in
-      * this harness, so no run-id filter is needed. */
+    /** One timed run: fresh stream + query, `Batches` micro-batches. */
     def drive[T](mk: SparkSession => (Seq[T] => Unit,
                                       org.apache.spark.sql.DataFrame),
-                 gen: Int => T, poll: Boolean): Double = {
+                 gen: Int => T): Double = {
       val (add, out) = mk(spark)
-      val consumed = new java.util.concurrent.atomic.AtomicLong
-      val listener =
-        new org.apache.spark.sql.streaming.StreamingQueryListener {
-          override def onQueryStarted(
-            e: org.apache.spark.sql.streaming.StreamingQueryListener.QueryStartedEvent): Unit = ()
-          override def onQueryProgress(
-            e: org.apache.spark.sql.streaming.StreamingQueryListener.QueryProgressEvent): Unit = {
-            consumed.addAndGet(e.progress.numInputRows); ()
-          }
-          override def onQueryTerminated(
-            e: org.apache.spark.sql.streaming.StreamingQueryListener.QueryTerminatedEvent): Unit = ()
-        }
-      if (poll) spark.streams.addListener(listener)
       val q = out.writeStream.format("noop")
         .outputMode(org.apache.spark.sql.streaming.OutputMode.Append)
         .start()
@@ -112,31 +90,20 @@ object ProfileStream {
         var bi = 0
         while (bi < Batches) {
           add((bi * per until (bi + 1) * per).map(gen))
-          if (poll) {
-            val target = (bi + 1).toLong * per
-            val deadline = System.nanoTime() + 300L * 1000 * 1000 * 1000
-            while (consumed.get() < target) {
-              require(System.nanoTime() < deadline,
-                s"stalled at ${consumed.get()}/$target rows")
-              Thread.sleep(5)
-            }
-          } else q.processAllAvailable()
+          q.processAllAvailable()
           bi += 1
         }
         (System.nanoTime() - t0) / 1e9
-      } finally {
-        q.stop()
-        if (poll) spark.streams.removeListener(listener)
-      }
+      } finally q.stop()
     }
 
-    def bench[T](name: String, poll: Boolean = false)
+    def bench[T](name: String)
                 (mk: SparkSession => (Seq[T] => Unit,
                                       org.apache.spark.sql.DataFrame),
                  gen: Int => T): Unit = {
       if (only.nonEmpty && !only(name)) return
-      drive(mk, gen, poll) // warm: codegen + JIT, thrown away
-      val secs = (1 to 2).map { _ => System.gc(); drive(mk, gen, poll) }
+      drive(mk, gen) // warm: codegen + JIT, thrown away
+      val secs = (1 to 2).map { _ => System.gc(); drive(mk, gen) }
       val best = secs.min
       println(f"$name%-9s ${Rows / best / 1000}%8.0f krows/s  $best%6.2f s" +
         f"  ${Rows / best * anchor / 1e6}%6.2f Mrow*anchor  (runs: ${
@@ -204,40 +171,6 @@ object ProfileStream {
       ((rows: Seq[KeyedValue]) => { in.addData(rows); () },
         Stateful.countWindowSum(in.toDS(), 16, 8).toDF())
     }, i => KeyedValue("k" + (i % Keys), i, i))
-
-    // transformWithState twins (Spark's native stateful API) — same
-    // semantics, typed per-variable state instead of one encoder
-    // blob. The engine REQUIRES the RocksDB provider for tws, so
-    // these run only under --rocksdb: compare them against the fMGWS
-    // ops re-run under the SAME provider, never against the
-    // HDFS-backed numbers above.
-    if (rocksdb) {
-      bench("twsfraud", poll = true)({ s =>
-        implicit val sq = s.sqlContext
-        val in = MemoryStream[Transaction]
-        ((rows: Seq[Transaction]) => { in.addData(rows); () },
-          StatefulTws.fraudDetector(in.toDS()).toDF())
-      }, i => Transaction(i % Keys,
-        if (i % 3 == 0) 0.5 else if (i % 3 == 1) 600.0 else 50.0, i))
-
-      bench("twscountwin")({ s =>
-        implicit val sq = s.sqlContext
-        val in = MemoryStream[KeyedValue]
-        ((rows: Seq[KeyedValue]) => { in.addData(rows); () },
-          StatefulTws.countWindowSum(in.toDS(), 16, 8).toDF())
-      }, i => KeyedValue("k" + (i % Keys), i, i))
-
-      bench("twstopn")({ s =>
-        implicit val sq = s.sqlContext
-        val in = MemoryStream[TimedItemViewCount]
-        val ds = in.toDS().withWatermark("eventTime", "0 milliseconds")
-          .as[TimedItemViewCount](org.apache.spark.sql.Encoders.product)
-        ((rows: Seq[TimedItemViewCount]) => { in.addData(rows); () },
-          StatefulTws.topNPerWindow(ds, 3).toDF())
-      }, i => TimedItemViewCount(i % 1000, (i / 1000 + 1) * 1000L, i % 97,
-        new java.sql.Timestamp((i / 1000 + 1) * 1000L)))
-    } else if (only.exists(Set("twsfraud", "twscountwin", "twstopn")))
-      println("tws ops need --rocksdb (transformWithState requires it)")
 
     // streaming image-admission gate: STATELESS, so the number is
     // pure ImageIO-decode + dHash + 8 index probes per row. A 1000-
@@ -353,10 +286,9 @@ object ProfileStream {
     // streaming MATCH_RECOGNIZE (round 10): the doc-shaped A B+ C
     // clause over `Keys` symbols, names cycling a,b,b,c per key so
     // every key completes one match per 4 rows and SKIP PAST LAST ROW
-    // keeps state bounded — measures the flatMapGroupsWithState NFA
-    // path (Tungsten Row state round-trip since round 11 + per-row
-    // onEvent + MEASURES resolution) against the same harness floor
-    // as the gates
+    // keeps state bounded — measures the NFA path (Tungsten Row state
+    // round-trip + per-row onEvent + MEASURES resolution) against the
+    // same harness floor as the gates
     locally {
       val clause = """
         PARTITION BY sym
@@ -369,16 +301,6 @@ object ProfileStream {
         val in = MemoryStream[(Long, String, String)]
         ((rows: Seq[(Long, String, String)]) => { in.addData(rows); () },
           graft.cep.MatchRecognize.runStream(
-            in.toDF().toDF("seq", "name", "sym"), clause))
-      }, i => ((i / Keys).toLong,
-        Seq("a", "b", "b", "c")(((i / Keys) % 4).toInt), s"k${i % Keys}"))
-      // the same clause on the native transformWithState runner
-      // (round 12) — requires --rocksdb (the TWS backend requirement)
-      if (rocksdb) bench[(Long, String, String)]("mrstreamtws")({ s =>
-        implicit val sq = s.sqlContext
-        val in = MemoryStream[(Long, String, String)]
-        ((rows: Seq[(Long, String, String)]) => { in.addData(rows); () },
-          graft.cep.MatchRecognize.runStreamTws(
             in.toDF().toDF("seq", "name", "sym"), clause))
       }, i => ((i / Keys).toLong,
         Seq("a", "b", "b", "c")(((i / Keys) % 4).toInt), s"k${i % Keys}"))

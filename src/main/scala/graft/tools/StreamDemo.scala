@@ -90,14 +90,6 @@ object StreamDemo {
       .deltaTriggerMaxSpeed(spark.createDataset(Seq(Car(9, 5, 0.0, 0L))),
         50.0, 10000L).collect().length)
 
-    // transformWithState (Spark 4) fraud variant, reference fixture
-    val txns = Seq((1L, 13.01), (2L, 25.00), (3L, 0.09), (3L, 510.00),
-      (5L, 102.62), (6L, 91.50), (7L, 0.02), (8L, 30.01), (9L, 701.83),
-      (5L, 31.92)).zipWithIndex.map { case ((a, amt), i) =>
-      Transaction(a, amt, i.toLong) }
-    println("TWS_ALERTS=" + StatefulTws
-      .fraudDetector(spark.createDataset(txns)).collect().mkString(";"))
-
     // async enrichment (J7): ordered bounded-window futures
     {
       import scala.concurrent.Future
@@ -146,28 +138,6 @@ object StreamDemo {
       println(s"TOPN_HELD=$held TOPN=" +
         spark.table("drive_topn").collect().sortBy(_.getInt(1)).mkString(";"))
       tq.stop()
-    }
-
-    // native transformWithState top-N: ListState + first-class
-    // event-time timer (RocksDB state store)
-    {
-      spark.conf.set("spark.sql.streaming.stateStore.providerClass",
-        "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
-      def ivc(id: Long, we: Long, n: Long) =
-        TimedItemViewCount(id, we, n, new java.sql.Timestamp(we))
-      val tin = MemoryStream[TimedItemViewCount]
-      val tq = StatefulTws.topNPerWindow(
-          tin.toDS().withWatermark("eventTime", "0 milliseconds"), 2)
-        .writeStream.format("memory").queryName("drive_tws_topn")
-        .outputMode("append").start()
-      tin.addData(ivc(201, 1000, 4), ivc(202, 1000, 8))
-      tq.processAllAvailable()
-      tin.addData(ivc(900, 60000, 1))
-      tq.processAllAvailable(); tq.processAllAvailable()
-      println("TWS_TOPN=" + spark.table("drive_tws_topn").collect()
-        .sortBy(_.getInt(1)).mkString(";"))
-      tq.stop()
-      spark.conf.unset("spark.sql.streaming.stateStore.providerClass")
     }
 
     // event-time CEP timeout: the idle key's partial times out when

@@ -1149,91 +1149,8 @@ class MatchRecognizeSpec extends SparkSpec {
     } finally q.stop()
   }
 
-  test("runStreamTws: the native transformWithState runner equals the " +
-    "batch runner across micro-batches, and delegates batch input to " +
-    "run()") {
-    import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
-    implicit val sqlCtx = spark.sqlContext
-    spark.conf.set("spark.sql.streaming.stateStore.providerClass",
-      "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
-    try {
-      val clause = """
-        PARTITION BY sym
-        ORDER BY seq
-        MEASURES FIRST(A.seq) AS a0, COUNT(B.*) AS n_b, C.seq AS c_seq
-        PATTERN (A B+ C)
-        DEFINE A AS name = 'a', B AS name = 'b', C AS name = 'c'
-      """
-      val rows = Seq(
-        (1L, "a", "S"), (2L, "b", "S"), (3L, "b", "S"), (4L, "c", "S"),
-        (1L, "a", "T"), (2L, "x", "T"), (3L, "a", "T"), (4L, "b", "T"),
-        (5L, "c", "T"),
-        (5L, "a", "S"), (6L, "b", "S"), (7L, "c", "S"))
-      val batch = MatchRecognize.run(rows.toDF("seq", "name", "sym"), clause)
-        .collect().map(_.toSeq).toSet
-      assert(batch.size == 3)
-      val in = MemoryStream[(Long, String, String)]
-      val q = MatchRecognize.runStreamTws(
-          in.toDF().toDF("seq", "name", "sym"), clause)
-        .writeStream.format("memory").queryName("mr_tws_out")
-        .outputMode("append").start()
-      try {
-        rows.grouped(3).foreach { ch =>
-          in.addData(ch: _*)
-          q.processAllAvailable()
-        }
-        val got = spark.table("mr_tws_out").collect().map(_.toSeq).toSet
-        assert(got == batch, s"stream $got != batch $batch")
-      } finally q.stop()
-      // batch input delegates to the batch runner (documented: batch
-      // transformWithState never fires the flush timers)
-      val viaTws = MatchRecognize.runStreamTws(
-        rows.toDF("seq", "name", "sym"), clause).collect().map(_.toSeq).toSet
-      assert(viaTws == batch)
-    } finally
-      spark.conf.unset("spark.sql.streaming.stateStore.providerClass")
-  }
-
-  test("runStreamTws WITHIN + watermark: an idle key's held-back " +
-    "match flushes on the native event-time timer") {
-    import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
-    import org.apache.spark.sql.functions.{col, timestamp_millis}
-    implicit val sqlCtx = spark.sqlContext
-    spark.conf.set("spark.sql.streaming.stateStore.providerClass",
-      "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
-    try {
-      val clause = """
-        PARTITION BY sym
-        ORDER BY ts
-        MEASURES FIRST(X.seq) AS x0, COUNT(B.*) AS n_b
-        PATTERN (X B+) WITHIN INTERVAL '2' SECOND
-        DEFINE X AS name = 'x', B AS name = 'b'
-      """
-      val in = MemoryStream[(Long, Long, String, String)]
-      val df = in.toDF().toDF("seq", "ts_ms", "name", "sym")
-        .withColumn("ts", timestamp_millis(col("ts_ms")))
-        .withWatermark("ts", "0 seconds")
-      val q = MatchRecognize.runStreamTws(df, clause)
-        .writeStream.format("memory").queryName("mr_tws_within_out")
-        .outputMode("append").start()
-      try {
-        in.addData((1L, 1000L, "x", "S"), (2L, 2000L, "b", "S"))
-        q.processAllAvailable()
-        assert(spark.table("mr_tws_within_out").count() == 0)
-        in.addData((3L, 10000L, "z", "T"))
-        q.processAllAvailable()
-        in.addData((4L, 11000L, "z", "T"))
-        q.processAllAvailable()
-        val got = spark.table("mr_tws_within_out").collect()
-          .map(r => (r.getString(0), r.getLong(1), r.getLong(2))).toSet
-        assert(got == Set(("S", 1L, 1L)), s"got ${got.mkString(",")}")
-      } finally q.stop()
-    } finally
-      spark.conf.unset("spark.sql.streaming.stateStore.providerClass")
-  }
-
-  test("matchNumberRetention evicts the idle MATCH_NUMBER counter on " +
-    "both stream runners; without it numbering continues") {
+  test("matchNumberRetention evicts the idle MATCH_NUMBER counter in " +
+    "runStream; without it numbering continues (RocksDB)") {
     import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
     import org.apache.spark.sql.functions.{col, timestamp_millis}
     implicit val sqlCtx = spark.sqlContext
@@ -1276,48 +1193,10 @@ class MatchRecognizeSpec extends SparkSpec {
       val ret = Some(java.time.Duration.ofSeconds(5))
       // with retention: the counter evicts while S idles -> restart at 1
       assert(mnOf(MatchRecognize.runStream(_, _, ret), "mr_ret_gws")
-        == Seq(1L, 1L), "flatMapGroupsWithState runner kept the counter")
-      assert(mnOf(MatchRecognize.runStreamTws(_, _, ret), "mr_ret_tws")
-        == Seq(1L, 1L), "transformWithState runner kept the counter")
+        == Seq(1L, 1L), "runStream kept the counter")
       // without: exact cross-batch numbering (the default contract)
       assert(mnOf(MatchRecognize.runStream(_, _), "mr_noret_gws")
         == Seq(1L, 2L))
-      assert(mnOf(MatchRecognize.runStreamTws(_, _), "mr_noret_tws")
-        == Seq(1L, 2L))
-    } finally
-      spark.conf.unset("spark.sql.streaming.stateStore.providerClass")
-  }
-
-  test("MATCH_NUMBER() numbering survives micro-batches in " +
-    "runStreamTws (counter-only state without retention)") {
-    import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
-    implicit val sqlCtx = spark.sqlContext
-    spark.conf.set("spark.sql.streaming.stateStore.providerClass",
-      "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
-    try {
-      val clause = """
-        PARTITION BY sym
-        ORDER BY seq
-        MEASURES MATCH_NUMBER() AS mn, CLASSIFIER() AS clf, A.seq AS a0
-        PATTERN (A B)
-        DEFINE A AS name = 'a', B AS name = 'b'
-      """
-      val in = MemoryStream[(Long, String, String)]
-      val q = MatchRecognize.runStreamTws(
-          in.toDF().toDF("seq", "name", "sym"), clause)
-        .writeStream.format("memory").queryName("mr_tws_mn_out")
-        .outputMode("append").start()
-      try {
-        in.addData((1L, "a", "S"), (2L, "b", "S"))
-        q.processAllAvailable()
-        in.addData((3L, "x", "S"))
-        q.processAllAvailable()
-        in.addData((4L, "a", "S"), (5L, "b", "S"))
-        q.processAllAvailable()
-        val got = spark.table("mr_tws_mn_out").collect()
-          .map(r => (r.getLong(1), r.getString(2), r.getLong(3))).toSet
-        assert(got == Set((1L, "B", 1L), (2L, "B", 4L)), s"got ${got.toSeq}")
-      } finally q.stop()
     } finally
       spark.conf.unset("spark.sql.streaming.stateStore.providerClass")
   }
@@ -1403,16 +1282,13 @@ class MatchRecognizeSpec extends SparkSpec {
     val batchDf = Seq((1L, "a", "S"), (2L, "b", "S"))
       .toDF("seq", "name", "sym")
     val ret = Some(java.time.Duration.ofSeconds(5))
-    // fires: streaming + MATCH_NUMBER + no retention, both runners,
-    // exactly once each (at query construction, not per batch)
+    // fires: streaming + MATCH_NUMBER + no retention, exactly once
+    // (at query construction, not per batch)
     assert(warns(MatchRecognize.runStream(streamDf(), clause)) == 1L)
-    assert(warns(MatchRecognize.runStreamTws(streamDf(), clause)) == 1L)
     // silent: retention set
     assert(warns(MatchRecognize.runStream(streamDf(), clause, ret)) == 0L)
-    assert(warns(MatchRecognize.runStreamTws(streamDf(), clause, ret)) == 0L)
     // silent: batch input (no cross-batch counter state at all)
     assert(warns(MatchRecognize.runStream(batchDf, clause)) == 0L)
-    assert(warns(MatchRecognize.runStreamTws(batchDf, clause)) == 0L)
     // silent: streaming clause that never names MATCH_NUMBER()
     val noMn = clause.replace("MATCH_NUMBER() AS mn, ", "")
     assert(warns(MatchRecognize.runStream(streamDf(), noMn)) == 0L)

@@ -579,6 +579,33 @@ class OperatorsSpec extends SparkSpec {
     assert(encLocal == encDist, s"encode paths diverge:\n$encLocal\n$encDist")
   }
 
+  test("BPE driver-vocab cap: a huge cap clamps, a non-number names the env var") {
+    // limit(cap + 1) takes an Int: Long.MaxValue must not wrap negative
+    val docs = Seq((1L, "aaab abab ab"), (2L, "abab cdcd")).toDF("doc_id", "text")
+    val capped = TextOps.bpeTrain(docs, merges = 3, maxDriverVocab = Long.MaxValue)
+      .as[(Int, String, String, String, Long)].collect().sortBy(_._1).toSeq
+    val dflt = TextOps.bpeTrain(docs, merges = 3)
+      .as[(Int, String, String, String, Long)].collect().sortBy(_._1).toSeq
+    assert(capped == dflt)
+    assert(TextOps.driverVocabCap(None) == 1000000L)
+    assert(TextOps.driverVocabCap(Some(" 42 ")) == 42L)
+    val e = intercept[IllegalArgumentException](TextOps.driverVocabCap(Some("1e6")))
+    assert(e.getMessage.contains("SPARK_GRAFT_MAX_DRIVER_VOCAB"))
+  }
+
+  test("md5Prefix rejects a non-string input at analysis") {
+    val e = intercept[org.apache.spark.sql.AnalysisException](
+      spark.range(3).select(graft.functions.HashExpressions.md5Prefix($"id", 15)))
+    assert(e.getMessage.contains("DATATYPE_MISMATCH"), e.getMessage)
+  }
+
+  test("wordShingles rejects a non-array-of-string input at analysis") {
+    val e = intercept[org.apache.spark.sql.AnalysisException](
+      spark.range(3).select(graft.functions.HashExpressions.wordShingles(
+        array($"id"), 2)))
+    assert(e.getMessage.contains("DATATYPE_MISMATCH"), e.getMessage)
+  }
+
   test("BPE encode: learned merges tokenize the corpus, fallback = 1 token") {
     // merges on this corpus: aa, ab, aaab, cd → aaab/ab/cd all encode
     // to ONE piece; the 1-char word "z" is outside the trainable

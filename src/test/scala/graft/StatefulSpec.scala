@@ -1,9 +1,9 @@
 package graft
 
 import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
-import org.apache.spark.sql.streaming.OutputMode
+import org.apache.spark.sql.streaming.{OutputMode, StreamingQuery, Trigger}
 import graft.streaming.Models._
-import graft.streaming.{Dfa, Stateful, StatefulTws}
+import graft.streaming.{Dfa, Stateful}
 
 /** Golden tests for the stateful operators, using the reference's own
   * fixtures (FIXTURES.md §3, §9, §11; expected outputs from the
@@ -17,6 +17,24 @@ class StatefulSpec extends SparkSpec {
     (1L, 13.01), (2L, 25.00), (3L, 0.09), (3L, 510.00), (5L, 102.62),
     (6L, 91.50), (7L, 0.02), (8L, 30.01), (9L, 701.83), (5L, 31.92)
   ).zipWithIndex.map { case ((a, amt), i) => Transaction(a, amt, i.toLong) }
+
+  private def pollUntil(cond: => Boolean, what: String): Unit = {
+    val deadline = System.nanoTime() + 90L * 1000 * 1000 * 1000
+    while (!cond) {
+      assert(System.nanoTime() < deadline, s"timed out waiting: $what")
+      Thread.sleep(200)
+    }
+  }
+
+  private def consumed(q: StreamingQuery): Long =
+    q.recentProgress.map(_.numInputRows).sum
+
+  private def withRocksDb(body: => Unit): Unit = {
+    spark.conf.set("spark.sql.streaming.stateStore.providerClass",
+      "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
+    try body
+    finally spark.conf.unset("spark.sql.streaming.stateStore.providerClass")
+  }
 
   test("fraud detector alerts exactly for account 3 (batch)") {
     val alerts = Stateful.fraudDetector(spark.createDataset(txns)).collect()
@@ -38,6 +56,48 @@ class StatefulSpec extends SparkSpec {
       q.processAllAvailable()
       val got = spark.table("fraud_out").as[FraudAlert].collect()
       assert(got.toSeq == Seq(FraudAlert(7L, 1)))
+    } finally q.stop()
+  }
+
+  test("fraud detector carries a TTL'd flag across micro-batches (RocksDB)") {
+    // a pending processing-time timeout keeps the engine scheduling
+    // timer-check batches, so processAllAvailable never settles —
+    // poll progress/output instead
+    implicit val sqlCtx = spark.sqlContext
+    withRocksDb {
+      val in = MemoryStream[Transaction]
+      val q = Stateful.fraudDetector(in.toDS(), Some(10L * 60 * 1000))
+        .writeStream.format("memory").queryName("fraud_ttl_out")
+        .trigger(Trigger.ProcessingTime("1 second"))
+        .outputMode(OutputMode.Append).start()
+      try {
+        in.addData(Transaction(7L, 0.50, 0))
+        pollUntil(consumed(q) >= 1, "first txn consumed")
+        in.addData(Transaction(7L, 900.0, 1))
+        pollUntil(spark.table("fraud_ttl_out").count() >= 1, "alert emitted")
+        val got = spark.table("fraud_ttl_out").as[FraudAlert].collect()
+        assert(got.toSeq == Seq(FraudAlert(7L, 1)))
+      } finally q.stop()
+    }
+  }
+
+  test("fraud detector ignores a flag whose TTL passed before the next batch") {
+    // the large txn arrives after the flag's 1 s TTL but before the
+    // next 6 s trigger, so its batch calls the key with data and
+    // hasTimedOut = false: only the stored deadline shows the expiry
+    implicit val sqlCtx = spark.sqlContext
+    val in = MemoryStream[Transaction]
+    val q = Stateful.fraudDetector(in.toDS(), Some(1000L))
+      .writeStream.format("memory").queryName("fraud_expired_out")
+      .trigger(Trigger.ProcessingTime("6 seconds"))
+      .outputMode(OutputMode.Append).start()
+    try {
+      in.addData(Transaction(7L, 0.50, 0))
+      pollUntil(consumed(q) >= 1, "small txn consumed")
+      Thread.sleep(1500)
+      in.addData(Transaction(7L, 900.0, 1))
+      pollUntil(consumed(q) >= 2, "large txn consumed")
+      assert(spark.table("fraud_expired_out").count() == 0)
     } finally q.stop()
   }
 
@@ -151,6 +211,29 @@ class StatefulSpec extends SparkSpec {
       CountWindowSum("k", 6, 4, 18)))
   }
 
+  test("count window carries ring and phase across micro-batches (RocksDB)") {
+    implicit val sqlCtx = spark.sqlContext
+    withRocksDb {
+      val in = MemoryStream[KeyedValue]
+      val q = Stateful.countWindowSum(in.toDS(), 4, 2)
+        .writeStream.format("memory").queryName("cw_out")
+        .outputMode(OutputMode.Append).start()
+      try {
+        // the window at seq 4 spans both batches: the ring keeps
+        // 1..3 and the phase keeps "one record since the last emit"
+        in.addData((1 to 3).map(i => KeyedValue("k", i.toLong, i.toLong)): _*)
+        q.processAllAvailable()
+        in.addData((4 to 7).map(i => KeyedValue("k", i.toLong, i.toLong)): _*)
+        q.processAllAvailable()
+        val got = spark.table("cw_out").as[CountWindowSum].collect()
+          .sortBy(_.endSeq)
+        assert(got.toSeq == Seq(
+          CountWindowSum("k", 2, 2, 3), CountWindowSum("k", 4, 4, 10),
+          CountWindowSum("k", 6, 4, 18)))
+      } finally q.stop()
+    }
+  }
+
   test("two-stream match pairs big/small and times out singletons (batch)") {
     val tagged = Seq(
       ("big", Order(1000, "o1", "u1", 1, 10, 1)),
@@ -206,104 +289,6 @@ class StatefulSpec extends SparkSpec {
     val got = Stateful.patternMatch(spark.createDataset(actions),
       ActionPattern("Add to cart", "User logout")).collect()
     assert(got.toSeq == Seq(PatternMatch(1002, "Add to cart", "User logout")))
-  }
-
-  test("transformWithState fraud detector matches the fixture (batch)") {
-    val alerts = StatefulTws.fraudDetector(spark.createDataset(txns)).collect()
-    assert(alerts.map(_.accountId).toSeq == Seq(3L))
-  }
-
-  test("transformWithState carries TTL'd flag state across micro-batches") {
-    // TimeMode.ProcessingTime keeps scheduling timer-check batches, so
-    // processAllAvailable never settles — poll progress/output instead
-    implicit val sqlCtx = spark.sqlContext
-    spark.conf.set("spark.sql.streaming.stateStore.providerClass",
-      "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
-    def pollUntil(cond: => Boolean, what: String): Unit = {
-      val deadline = System.nanoTime() + 90L * 1000 * 1000 * 1000
-      while (!cond) {
-        assert(System.nanoTime() < deadline, s"timed out waiting: $what")
-        Thread.sleep(200)
-      }
-    }
-    try {
-      val in = MemoryStream[Transaction]
-      val q = StatefulTws.fraudDetector(in.toDS(),
-          java.time.Duration.ofMinutes(10))
-        .writeStream.format("memory").queryName("tws_out")
-        .outputMode(OutputMode.Append).start()
-      try {
-        in.addData(Transaction(7L, 0.50, 0))
-        pollUntil(q.recentProgress.map(_.numInputRows).sum >= 1,
-          "first txn consumed")
-        in.addData(Transaction(7L, 900.0, 1))
-        pollUntil(spark.table("tws_out").count() >= 1, "alert emitted")
-        val got = spark.table("tws_out").as[FraudAlert].collect()
-        assert(got.toSeq == Seq(FraudAlert(7L, 1)))
-      } finally q.stop()
-    } finally
-      spark.conf.unset("spark.sql.streaming.stateStore.providerClass")
-  }
-
-  test("transformWithState count window matches the fMGWS port (batch + stream)") {
-    // batch parity with Stateful.countWindowSum
-    val vals = (1 to 7).map(i => KeyedValue("k", i.toLong, i.toLong))
-    val batch = StatefulTws.countWindowSum(spark.createDataset(vals), 4, 2)
-      .collect().sortBy(_.endSeq)
-    assert(batch.toSeq == Seq(
-      CountWindowSum("k", 2, 2, 3), CountWindowSum("k", 4, 4, 10),
-      CountWindowSum("k", 6, 4, 18)))
-    // streaming: ring buffer + phase carried across micro-batches
-    implicit val sqlCtx = spark.sqlContext
-    spark.conf.set("spark.sql.streaming.stateStore.providerClass",
-      "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
-    try {
-      val in = MemoryStream[KeyedValue]
-      val q = StatefulTws.countWindowSum(in.toDS(), 4, 2)
-        .writeStream.format("memory").queryName("tws_cw_out")
-        .outputMode(OutputMode.Append).start()
-      try {
-        in.addData((1 to 3).map(i => KeyedValue("k", i.toLong, i.toLong)): _*)
-        q.processAllAvailable()
-        in.addData((4 to 7).map(i => KeyedValue("k", i.toLong, i.toLong)): _*)
-        q.processAllAvailable()
-        val got = spark.table("tws_cw_out").as[CountWindowSum].collect()
-          .sortBy(_.endSeq)
-        assert(got.toSeq == batch.toSeq) // batch ≡ streaming
-      } finally q.stop()
-    } finally
-      spark.conf.unset("spark.sql.streaming.stateStore.providerClass")
-  }
-
-  test("transformWithState top-N emits from a native event-time timer") {
-    implicit val sqlCtx = spark.sqlContext
-    spark.conf.set("spark.sql.streaming.stateStore.providerClass",
-      "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
-    try {
-      def ivc(itemId: Long, windowEnd: Long, n: Long) =
-        TimedItemViewCount(itemId, windowEnd, n,
-          new java.sql.Timestamp(windowEnd))
-      val in = MemoryStream[TimedItemViewCount]
-      val ds = in.toDS()
-        .withWatermark("eventTime", "0 milliseconds")
-        .as[TimedItemViewCount]
-      val q = StatefulTws.topNPerWindow(ds, 2)
-        .writeStream.format("memory").queryName("tws_topn_out")
-        .outputMode(OutputMode.Append).start()
-      try {
-        in.addData(ivc(101, 1000, 5), ivc(102, 1000, 9), ivc(103, 1000, 7))
-        q.processAllAvailable()
-        assert(spark.table("tws_topn_out").count() == 0) // window open
-        in.addData(ivc(900, 60000, 1)) // advances watermark past 1001
-        q.processAllAvailable()
-        q.processAllAvailable() // extra batch lets the timer fire
-        val got = spark.table("tws_topn_out").as[RankedItem].collect()
-          .sortBy(_.rank).toSeq.filter(_.windowEnd == 1000)
-        assert(got == Seq(
-          RankedItem(1000, 1, 102, 9), RankedItem(1000, 2, 103, 7)))
-      } finally q.stop()
-    } finally
-      spark.conf.unset("spark.sql.streaming.stateStore.providerClass")
   }
 
   test("delta trigger fires on distance jumps and evicts old points (W4)") {

@@ -571,129 +571,73 @@ class MatchRecognizeFuzzSpec extends AnyFunSuite {
     }
   }
 
-  // ---- processor-level cadence differential (round 13) ---------------
+  // ---- stream-runner cadence arm -------------------------------------
   //
   // The chunked-replay arm above drives the shared NFA; THIS arm drives
-  // the two per-key STREAM RUNNER state machines around it — the
-  // processor-level logic VERDICT r12 flagged as hand-pinned only:
-  // MrTwsProcessor's timerAt re-arm/delete discipline and save() drop
-  // conditions, and MrGwsFn's timeout/retention bookkeeping — over
+  // runStream's per-key state machine around it (MrGwsFn: the
+  // timeout/retention bookkeeping and the state-drop conditions) over
   // random micro-batch chunkings (empty batches included), lagging /
   // stalling watermark schedules, WITHIN on/off and
-  // matchNumberRetention on/off, plus spurious timer redelivery.
-  // Oracles: (1) the two independent runner implementations must agree
-  // row-for-row (MATCH_NUMBER included) under the identical schedule;
-  // (2) with WITHIN, the drained stream must equal the one-shot batch
-  // runner exactly (modulo MATCH_NUMBER restarts when retention
-  // evicted a counter — restarts must then align with observed
-  // evictions, and evictions must never fire before the retention
-  // deadline); (3) without WITHIN, the stream output must be a prefix
-  // of the batch output (lazy expiry releases the tail only on later
-  // events); (4) after a full drain the state store and timer queue
-  // must be EMPTY (retention on) or exactly the 8-byte counter with no
-  // live timer (retention off + matches) — a stale live timer or a
-  // leaked state row fails loudly.
+  // matchNumberRetention on/off. Oracles: (1) with WITHIN, the drained
+  // stream must equal the one-shot batch runner exactly (modulo
+  // MATCH_NUMBER restarts when retention evicted a counter — restarts
+  // must then align with observed evictions, and evictions must never
+  // fire before the retention deadline); (2) without WITHIN, the
+  // stream output must be a prefix of the batch output (lazy expiry
+  // releases the tail only on later events); (3) after a full drain
+  // the state must be EMPTY (retention on) or exactly the counter
+  // (retention off + matches), with no live timeout — a stale timeout
+  // or a leaked state row fails loudly.
 
-  /** Minimal StatefulProcessorHandle over in-memory maps: value
-    * states + a sorted timer queue (registerTimer accumulates,
-    * deleteTimer removes — the real runtime contract). */
-  private class FakeTwsHandle
-      extends org.apache.spark.sql.streaming.StatefulProcessorHandle {
-    import org.apache.spark.sql.streaming.{ListState, MapState, QueryInfo,
-      TTLConfig, ValueState}
-    val store = scala.collection.mutable.HashMap.empty[String, Any]
-    val timers = scala.collection.mutable.SortedSet.empty[Long]
-    private def vs[T](name: String): ValueState[T] = new ValueState[T] {
-      override def exists(): Boolean = store.contains(name)
-      override def get(): T = store.getOrElse(name, null).asInstanceOf[T]
-      override def update(v: T): Unit = store(name) = v
-      override def clear(): Unit = store.remove(name)
-    }
-    override def getValueState[T](name: String,
-        enc: org.apache.spark.sql.Encoder[T],
-        ttl: TTLConfig): ValueState[T] = vs[T](name)
-    override def getValueState[T](name: String, ttl: TTLConfig)(
-        implicit enc: org.apache.spark.sql.Encoder[T]): ValueState[T] =
-      vs[T](name)
-    override def getListState[T](name: String,
-        enc: org.apache.spark.sql.Encoder[T],
-        ttl: TTLConfig): ListState[T] =
-      throw new UnsupportedOperationException
-    override def getListState[T](name: String, ttl: TTLConfig)(
-        implicit enc: org.apache.spark.sql.Encoder[T]): ListState[T] =
-      throw new UnsupportedOperationException
-    override def getMapState[K, V](name: String,
-        kEnc: org.apache.spark.sql.Encoder[K],
-        vEnc: org.apache.spark.sql.Encoder[V],
-        ttl: TTLConfig): MapState[K, V] =
-      throw new UnsupportedOperationException
-    override def getMapState[K, V](name: String, ttl: TTLConfig)(
-        implicit kEnc: org.apache.spark.sql.Encoder[K],
-        vEnc: org.apache.spark.sql.Encoder[V]): MapState[K, V] =
-      throw new UnsupportedOperationException
-    override def getQueryInfo(): QueryInfo =
-      throw new UnsupportedOperationException
-    override def registerTimer(t: Long): Unit = timers += t
-    override def deleteTimer(t: Long): Unit = timers -= t
-    override def listTimers(): Iterator[Long] = timers.iterator
-    override def deleteIfExists(name: String): Unit = store.remove(name)
-  }
-
-  private def twsTimerValues(wm: Long)
-      : org.apache.spark.sql.streaming.TimerValues =
-    new org.apache.spark.sql.streaming.TimerValues {
-      override def getCurrentProcessingTimeInMs(): Long = 0L
-      override def getCurrentWatermarkInMs(): Long = wm
-    }
-  private def twsExpired(t: Long)
-      : org.apache.spark.sql.streaming.ExpiredTimerInfo =
-    new org.apache.spark.sql.streaming.ExpiredTimerInfo {
-      override def getExpiryTimeInMs(): Long = t
-    }
-
-  /** Drives MrTwsProcessor over a (chunk, watermark) schedule the way
-    * TransformWithStateExec does: input rows first, then every
-    * registered timer whose expiry < the batch watermark, each
-    * CONSUMED by the runtime before the callback. Tracks observed
-    * counter evictions (store row dropped by an expiry while the
-    * loaded state was counter-only) with the watermark the key BECAME
-    * counter-only at — the premature-eviction check. */
-  private class TwsDriver(c: MatchRecognize.Compiled, nfa: Cep.Nfa[Row],
-      withinMs: Option[Long], retentionMs: Option[Long], timersOn: Boolean,
-      rnd: Random) {
-    val h = new FakeTwsHandle
-    val proc = new MatchRecognize.MrTwsProcessor(c, nfa,
-      MatchRecognize.mrStateSchema(schema), withinMs,
-      usesMatchNum = true, retentionMs, timersOn)
-    proc.setHandle(h)
-    proc.init(org.apache.spark.sql.streaming.OutputMode.Append(),
-      if (timersOn) org.apache.spark.sql.streaming.TimeMode.EventTime()
-      else org.apache.spark.sql.streaming.TimeMode.None())
+  /** Drives MrGwsFn through TestGroupState with
+    * FlatMapGroupsWithStateExec's cadence: input invocation first,
+    * then ONE timed-out invocation per batch when the persisted
+    * timeout timestamp < the batch watermark. Every invocation starts
+    * with no timeout, so one that sets none clears it (the runtime's
+    * GroupStateImpl contract). Tracks observed counter evictions
+    * (state dropped by a timed-out invocation while it held a
+    * counter) against the watermark the key BECAME counter-only at —
+    * the premature-eviction check. */
+  private class GwsDriver(fn: MatchRecognize.MrGwsFn, timeoutOn: Boolean,
+                          retentionMs: Option[Long]) {
+    import org.apache.spark.api.java.Optional
+    import org.apache.spark.sql.streaming.{GroupStateTimeout, TestGroupState}
+    private val conf =
+      if (timeoutOn) GroupStateTimeout.EventTimeTimeout
+      else GroupStateTimeout.NoTimeout
+    var stateOpt: Option[Row] = None
+    var timeoutTs: Long = -1L
     val out = Vector.newBuilder[Row]
     /** match-ordinal positions (0-based, into the emitted ONE-ROW
       * sequence) right after which a counter eviction was observed */
     val evictionsAfter = scala.collection.mutable.Set.empty[Int]
     private var emitted = 0
     private var becameCounterOnlyWm = -1L
-    private def counterOnlyNow: Boolean =
-      h.store.get("mr").exists { v =>
-        val (st, seq) = MatchRecognize.unpackMrState(v.asInstanceOf[Row])
-        st.partials.isEmpty && st.pending.isEmpty && seq > 0
-      }
-    /** matchSeq > 0 — with usesMatchNum on, the ONLY legitimate way
-      * this state can be dropped is a retention eviction, so any
-      * disappearance during an expiry call is checked as one. */
-    private def hasCounterNow: Boolean =
-      h.store.get("mr").exists { v =>
-        MatchRecognize.unpackMrState(v.asInstanceOf[Row])._2 > 0
-      }
-    private def afterCall(wm: Long, hadCounterBefore: Boolean,
-                          expiry: Boolean): Unit = {
+    def unpacked: Option[(Cep.NfaState[Row], Long)] =
+      stateOpt.map(MatchRecognize.unpackMrState)
+    private def counterOnlyNow: Boolean = unpacked.exists {
+      case (st, seq) => st.partials.isEmpty && st.pending.isEmpty && seq > 0
+    }
+    private def invoke(rows: Seq[Row], wm: Long,
+                       timedOut: Boolean): Unit = {
+      // matchSeq > 0 — with usesMatchNum on, the ONLY legitimate way
+      // this state can be dropped is a retention eviction
+      val hadCounter = unpacked.exists(_._2 > 0)
+      val gs = TestGroupState.create[Row](
+        Optional.ofNullable(stateOpt.orNull), conf, 0L,
+        Optional.of(wm), timedOut)
+      val rs = fn("S", rows.iterator, gs).toVector
+      out ++= rs; emitted += rs.size
+      if (gs.isRemoved) stateOpt = None
+      else if (gs.isUpdated) stateOpt = Some(gs.get)
+      timeoutTs =
+        if (gs.getTimeoutTimestampMs.isPresent) gs.getTimeoutTimestampMs.get()
+        else -1L
       if (counterOnlyNow && becameCounterOnlyWm == -1L)
         becameCounterOnlyWm = wm
-      else if (!counterOnlyNow && h.store.contains("mr"))
+      else if (!counterOnlyNow && stateOpt.isDefined)
         becameCounterOnlyWm = -1L
-      if (expiry && hadCounterBefore && !h.store.contains("mr")) {
+      if (timedOut && hadCounter && stateOpt.isEmpty) {
         // counter evicted: must be at/after the retention deadline,
         // and the key must have been counter-only since BEFORE this
         // call (a just-drained key's retention clock starts now — a
@@ -709,74 +653,6 @@ class MatchRecognizeFuzzSpec extends AnyFunSuite {
       }
     }
     def feed(chunk: Seq[Row], wm: Long): Unit = {
-      if (chunk.nonEmpty) {
-        val had = counterOnlyNow
-        val rs = proc.handleInputRows("S", chunk.iterator,
-          twsTimerValues(wm)).toVector
-        out ++= rs; emitted += rs.size
-        afterCall(wm, had, expiry = false)
-      }
-      fireTimers(wm)
-    }
-    def fireTimers(wm: Long): Unit = {
-      var guard = 0
-      while (h.timers.nonEmpty && h.timers.head < wm && guard < 64) {
-        val t = h.timers.head
-        h.timers -= t // the runtime consumes the fired timer
-        val had = hasCounterNow
-        val rs = proc.handleExpiredTimer("S", twsTimerValues(wm),
-          twsExpired(t)).toVector
-        out ++= rs; emitted += rs.size
-        afterCall(wm, had, expiry = true)
-        guard += 1
-      }
-      assert(guard < 64, s"timer storm at wm=$wm: ${h.timers}")
-      // spurious redelivery of a timer the processor believes deleted
-      // (the round-13 stale-timer guard): must emit nothing and leave
-      // state + tracking + queue untouched
-      if (rnd.nextInt(4) == 0 && h.store.contains("timerAt")) {
-        val snapshot = h.store.toMap
-        val timersBefore = h.timers.toVector
-        val bogus = h.store("timerAt").asInstanceOf[Long] + 7919L
-        val rs = proc.handleExpiredTimer("S", twsTimerValues(wm),
-          twsExpired(bogus)).toVector
-        assert(rs.isEmpty && h.store.toMap == snapshot &&
-          h.timers.toVector == timersBefore,
-          s"spurious timer $bogus at wm=$wm mutated the processor")
-      }
-    }
-  }
-
-  /** Drives MrGwsFn through TestGroupState with
-    * FlatMapGroupsWithStateExec's cadence: input invocation first,
-    * then ONE timed-out invocation per batch when the persisted
-    * timeout timestamp < the batch watermark (the runtime clears a
-    * fired timeout unless the callback re-arms; an input invocation
-    * that sets no timeout KEEPS the old one). */
-  private class GwsDriver(fn: MatchRecognize.MrGwsFn, timeoutOn: Boolean) {
-    import org.apache.spark.api.java.Optional
-    import org.apache.spark.sql.streaming.{GroupStateTimeout, TestGroupState}
-    private val conf =
-      if (timeoutOn) GroupStateTimeout.EventTimeTimeout
-      else GroupStateTimeout.NoTimeout
-    var stateOpt: Option[Row] = None
-    var timeoutTs: Long = -1L
-    val out = Vector.newBuilder[Row]
-    private def invoke(rows: Seq[Row], wm: Long,
-                       timedOut: Boolean): Unit = {
-      val gs = TestGroupState.create[Row](
-        Optional.ofNullable(stateOpt.orNull), conf, 0L,
-        Optional.of(wm), timedOut)
-      out ++= fn("S", rows.iterator, gs).toVector
-      if (gs.isRemoved) { stateOpt = None; timeoutTs = -1L }
-      else {
-        if (gs.isUpdated) stateOpt = Some(gs.get)
-        if (gs.getTimeoutTimestampMs.isPresent)
-          timeoutTs = gs.getTimeoutTimestampMs.get()
-        else if (timedOut) timeoutTs = -1L
-      }
-    }
-    def feed(chunk: Seq[Row], wm: Long): Unit = {
       if (chunk.nonEmpty) invoke(chunk, wm, timedOut = false)
       if (timeoutOn && stateOpt.isDefined && timeoutTs != -1L &&
         timeoutTs < wm)
@@ -784,8 +660,8 @@ class MatchRecognizeFuzzSpec extends AnyFunSuite {
     }
   }
 
-  test(s"${Cases / 2} stream-runner cadence cases: MrTwsProcessor == " +
-    "MrGwsFn == batch run under random chunking/watermark/retention") {
+  test(s"${Cases / 2} stream-runner cadence cases: MrGwsFn == batch run " +
+    "under random chunking/watermark/retention") {
     val rnd = new Random(0x7757C4DEL)
     var cases = 0
     while (cases < Cases / 2) {
@@ -811,93 +687,87 @@ class MatchRecognizeFuzzSpec extends AnyFunSuite {
         val evs = rows(tape)
         val batch = MatchRecognize.matchKey(c, "S", evs).toVector
 
-        val tws = new TwsDriver(c,
-          new Cep.Nfa[Row](c.spec, r => c.ordKey(r).toLong),
-          withinMs, retentionMs, timersOn, rnd)
         val gws = new GwsDriver(new MatchRecognize.MrGwsFn(c,
           new Cep.Nfa[Row](c.spec, r => c.ordKey(r).toLong),
           streaming = true, expireOn = withinMs.isDefined,
           usesMatchNum = true, retentionMs, withinMs, timersOn),
-          timeoutOn = timersOn)
+          timeoutOn = timersOn, retentionMs)
 
-        // identical schedule for both runners: chunks of 0-3 events
-        // (0 = watermark-only batch), watermark lagging 0-2 rows
-        // behind the max fed event time, sometimes stalling
+        // chunks of 0-3 events (0 = watermark-only batch), watermark
+        // lagging 0-2 rows behind the max fed event time, sometimes
+        // stalling
         var wm = 0L // rows start at TsStep; 0 = nothing expired yet
         var i = 0
         while (i < evs.length) {
           val sz = rnd.nextInt(4)
           val chunk = evs.slice(i, i + sz)
           i += sz
-          tws.feed(chunk, wm); gws.feed(chunk, wm)
+          gws.feed(chunk, wm)
           if (rnd.nextInt(4) != 0) { // advance (else stall)
             val lag = rnd.nextInt(3) * TsStep
             wm = math.max(wm, i * TsStep - lag)
           }
         }
-        // drain: march the watermark past every deadline until both
-        // runners report no live work (bounded; a non-converging
-        // drain = a stale-timer bug)
+        // drain: march the watermark past every deadline until the
+        // runner reports no live timeout (bounded; a non-converging
+        // drain = a stale-timeout bug)
         if (timersOn) {
           val horizon = (evs.length + 1) * TsStep +
             withinMs.getOrElse(0L) + retentionMs.getOrElse(0L) + 10L
           var guard = 0
-          while (guard < 40 && (
-            tws.h.timers.nonEmpty || (gws.stateOpt.isDefined &&
-              gws.timeoutTs != -1L))) {
+          while (guard < 40 && gws.stateOpt.isDefined &&
+            gws.timeoutTs != -1L) {
             wm = math.max(wm + 1 + rnd.nextInt(1000),
               math.min(horizon, wm + horizon / 4))
-            tws.feed(Seq.empty, wm); gws.feed(Seq.empty, wm)
+            gws.feed(Seq.empty, wm)
             guard += 1
           }
-          assert(guard < 40, s"drain did not converge: tws timers " +
-            s"${tws.h.timers}, gws timeout ${gws.timeoutTs}")
+          assert(guard < 40,
+            s"drain did not converge: timeout ${gws.timeoutTs}")
         }
 
         val ctx = s"\nPATTERN (${patternStr(elems)}) tape='$tape' " +
           s"skip='${if (skipClause.isEmpty) "<default>" else skipClause}'" +
           s" within=${withinSec}s retention=$retentionMs"
-        val twsOut = tws.out.result()
-        val gwsOut = gws.out.result()
-        // (1) the two independent runners agree, MATCH_NUMBER included
-        assert(twsOut == gwsOut,
-          s"$ctx: TWS != GWS\n tws: $twsOut\n gws: $gwsOut")
-        val mnIdx = twsOut.headOption.map(_.length - 1).getOrElse(0)
+        val got = gws.out.result()
+        val mnIdx = got.headOption.map(_.length - 1).getOrElse(0)
         def noMn(r: Row) = r.toSeq.dropRight(1)
         if (withinMs.isDefined) {
-          // (2) drained stream == batch (rows exactly; MATCH_NUMBER
+          // (1) drained stream == batch (rows exactly; MATCH_NUMBER
           // exactly without retention, eviction-aligned restarts with)
-          assert(twsOut.map(noMn) == batch.map(noMn),
-            s"$ctx: stream rows != batch\n stream: $twsOut\n batch: $batch")
+          assert(got.map(noMn) == batch.map(noMn),
+            s"$ctx: stream rows != batch\n stream: $got\n batch: $batch")
           if (retentionMs.isEmpty)
-            assert(twsOut == batch,
-              s"$ctx: MATCH_NUMBER diverged\n stream: $twsOut\n batch: $batch")
+            assert(got == batch,
+              s"$ctx: MATCH_NUMBER diverged\n stream: $got\n batch: $batch")
           else {
             var expect = 1L
-            twsOut.zipWithIndex.foreach { case (r, k) =>
+            got.zipWithIndex.foreach { case (r, k) =>
               val mn = r.getLong(mnIdx)
               assert(mn == expect,
                 s"$ctx: mn $mn at match $k, expected $expect " +
-                  s"(evictions after ${tws.evictionsAfter.toSeq.sorted})")
-              expect = if (tws.evictionsAfter.contains(k)) 1L else mn + 1L
+                  s"(evictions after ${gws.evictionsAfter.toSeq.sorted})")
+              expect = if (gws.evictionsAfter.contains(k)) 1L else mn + 1L
             }
           }
-          // (4) post-drain state: empty with retention; counter-only
-          // with matches and no retention; no timer either way
-          assert(tws.h.timers.isEmpty, s"$ctx: live timer after drain")
+          // (3) post-drain state: empty with retention; the counter
+          // alone with matches and no retention; no timeout either way
+          assert(gws.timeoutTs == -1L || gws.stateOpt.isEmpty,
+            s"$ctx: live timeout ${gws.timeoutTs} after drain")
           if (retentionMs.isDefined)
-            assert(tws.h.store.isEmpty && gws.stateOpt.isEmpty,
-              s"$ctx: state leaked past retention: ${tws.h.store.keySet}")
+            assert(gws.stateOpt.isEmpty,
+              s"$ctx: state leaked past retention: ${gws.unpacked}")
           else if (batch.nonEmpty)
-            assert(tws.h.store.contains("mr") && gws.stateOpt.isDefined,
-              s"$ctx: counter state dropped without retention")
+            assert(gws.unpacked.exists { case (st, seq) =>
+              st.partials.isEmpty && st.pending.isEmpty &&
+                seq == batch.size },
+              s"$ctx: state is not the counter alone: ${gws.unpacked}")
           else
-            assert(!tws.h.store.contains("mr") && gws.stateOpt.isEmpty,
-              s"$ctx: matchless key kept state")
+            assert(gws.stateOpt.isEmpty, s"$ctx: matchless key kept state")
         } else {
-          // (3) lazy expiry: a prefix of the batch output
-          assert(twsOut == batch.take(twsOut.size),
-            s"$ctx: stream not a batch prefix\n stream: $twsOut" +
+          // (2) lazy expiry: a prefix of the batch output
+          assert(got == batch.take(got.size),
+            s"$ctx: stream not a batch prefix\n stream: $got" +
               s"\n batch: $batch")
         }
       }

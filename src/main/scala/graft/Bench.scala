@@ -1,5 +1,7 @@
 package graft
 import org.apache.spark.sql.SparkSession
+import scala.util.control.NonFatal
+import graft.core.GraftSession
 object Bench {
 
   /** `Bench compare old.json new.json` — the operational form of the
@@ -94,14 +96,7 @@ object Bench {
       compare(args(1), args(2)); return
     }
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS",
-      Runtime.getRuntime.availableProcessors().toString)
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = GraftSession.build()
     // Silence WindowExec's "No Partition Defined" WARN for this bench
     // process only: every unpartitioned window in the library is a
     // documented MODEL-SIZED frame (Corpus bucket/shard cumulative
@@ -128,7 +123,7 @@ object Bench {
         Tables.documents, Tables.embeddings)
       loaders.foreach { l =>
         try { l(spark, sfDir).count(); () }
-        catch { case _: Throwable => () }
+        catch { case NonFatal(_) => () }
       }
     }
     // Calibration anchor: a fixed, data-independent, codegen-only
@@ -198,47 +193,57 @@ object Bench {
     val only = args.toSet
     val selected = SparkEntry.queries.toSeq.sortBy(_._1)
       .filter { case (n, _) => only.isEmpty || only(n) }
-    val results = selected.map { case (name, fn) =>
+    // A query that throws is left out of `queries` and `total` and
+    // listed under "failed": a time for it would read as a fast success.
+    val failed = Seq.newBuilder[String]
+    val results = selected.flatMap { case (name, fn) =>
       // The timed action is a noop-sink write, not count(): count()
       // lets Catalyst prune unreferenced projection expressions, so
       // map-only queries (q21-q24, q40, q44, q46...) would time the
       // scan instead of their regex/hash work. The noop sink consumes
       // every row with all columns materialized.
       def run(): Unit =
-        try { fn(spark, sfDir).write.format("noop").mode("overwrite").save() }
-        catch { case _: Throwable => () }
-      // Untimed warm run first: the first execution of a plan pays
-      // Janino whole-stage-codegen compile + JIT of the generated
-      // classes — measured at 2.2s of q20's 2.7s cold run vs 0.45s
-      // steady-state. That cost is constant in data size (irrelevant
-      // at scale) and dominated bench noise across rounds (q20 "drift"
-      // r1 0.78 -> r3 3.55 was compile-under-contention, not operator
-      // work). Timing the second run reports steady-state expression
-      // cost, which is what scales with SF.
-      run()
-      // Timed = MIN of two runs: a single timed run after one warm run
-      // still races the C2 JIT of the query's generated classes (the
-      // warm run only TRIGGERS compilation; it completes concurrently,
-      // sometimes inside the first timed window — measured 4.2 s
-      // steady-state q29 showing 7.8-12.9 s across otherwise identical
-      // sweeps). The second timed run executes fully compiled code;
-      // min() reports steady state, which is what scales with SF.
-      val dt = (1 to 2).map { _ =>
-        spark.catalog.clearCache() // timed run redoes any internal persist
-        // Drain accumulated garbage + ContextCleaner (broadcast/shuffle
-        // unregister) work BEFORE the timed region, so a previous
-        // query's cleanup pause doesn't land inside this query's window
-        // (observed: a one-off 5s q39 when q36/q38 garbage collected
-        // mid-run).
-        System.gc()
-        val t0 = System.nanoTime()
+        fn(spark, sfDir).write.format("noop").mode("overwrite").save()
+      try {
+        // Untimed warm run first: the first execution of a plan pays
+        // Janino whole-stage-codegen compile + JIT of the generated
+        // classes — measured at 2.2s of q20's 2.7s cold run vs 0.45s
+        // steady-state. That cost is constant in data size (irrelevant
+        // at scale) and dominated bench noise across rounds (q20 "drift"
+        // r1 0.78 -> r3 3.55 was compile-under-contention, not operator
+        // work). Timing the second run reports steady-state expression
+        // cost, which is what scales with SF.
         run()
-        (System.nanoTime() - t0) / 1e9
-      }.min
-      // release per-query cached state so queries stay independent —
-      // OUTSIDE the timed region (unpersist cost is not query work)
-      spark.catalog.clearCache()
-      name -> dt
+        // Timed = MIN of two runs: a single timed run after one warm run
+        // still races the C2 JIT of the query's generated classes (the
+        // warm run only TRIGGERS compilation; it completes concurrently,
+        // sometimes inside the first timed window — measured 4.2 s
+        // steady-state q29 showing 7.8-12.9 s across otherwise identical
+        // sweeps). The second timed run executes fully compiled code;
+        // min() reports steady state, which is what scales with SF.
+        val dt = (1 to 2).map { _ =>
+          spark.catalog.clearCache() // timed run redoes any internal persist
+          // Drain accumulated garbage + ContextCleaner (broadcast/shuffle
+          // unregister) work BEFORE the timed region, so a previous
+          // query's cleanup pause doesn't land inside this query's window
+          // (observed: a one-off 5s q39 when q36/q38 garbage collected
+          // mid-run).
+          System.gc()
+          val t0 = System.nanoTime()
+          run()
+          (System.nanoTime() - t0) / 1e9
+        }.min
+        // release per-query cached state so queries stay independent —
+        // OUTSIDE the timed region (unpersist cost is not query work)
+        spark.catalog.clearCache()
+        Some(name -> dt)
+      } catch {
+        case NonFatal(e) =>
+          System.err.println(s"[bench] $name failed: ${e.getMessage}")
+          spark.catalog.clearCache()
+          failed += name
+          None
+      }
     }
     // The driver captures only the LAST 2000 chars of output and
     // parses the JSON line out of that tail; sbt appends a "[success]"
@@ -254,19 +259,25 @@ object Bench {
       String.format(java.util.Locale.ROOT, "%.2f", Double.box(v))
     val total = results.map(_._2).sum
     val a2Field = anchor2.map(v => s""","anchor2":${cs(v)}""").getOrElse("")
+    val failedKeys = failed.result()
+    val failedField =
+      if (failedKeys.isEmpty) ""
+      else failedKeys.map(k => "\"" + k.takeWhile(_ != '_') + "\"")
+        .mkString(""","failed":[""", ",", "]")
     def line(prec: Double => String): String = {
       val qs = results.map { case (k, v) =>
         "\"" + k.takeWhile(_ != '_') + "\":" + prec(v)
       }.mkString("{", ",", "}")
-      s"""{"metric":"total","value":${ms(total)},"unit":"sec","anchor":${cs(anchor)}$a2Field,"queries":$qs,"sf":"$sfDir"}"""
+      s"""{"metric":"total","value":${ms(total)},"unit":"sec","anchor":${cs(anchor)}$a2Field,"queries":$qs$failedField,"sf":"$sfDir"}"""
     }
     // degrade per-query precision before ever risking the window; the
     // headline total keeps ms precision in every shape
     val out = Seq[Double => String](cs,
       v => String.format(java.util.Locale.ROOT, "%.1f", Double.box(v)))
       .map(line).find(_.length <= 1900)
-      .getOrElse(s"""{"metric":"total","value":${ms(total)},"unit":"sec","anchor":${cs(anchor)}$a2Field,"queries":{},"sf":"$sfDir"}""")
+      .getOrElse(s"""{"metric":"total","value":${ms(total)},"unit":"sec","anchor":${cs(anchor)}$a2Field,"queries":{}$failedField,"sf":"$sfDir"}""")
     println(out)
     spark.stop()
+    if (failedKeys.nonEmpty) sys.exit(1)
   }
 }

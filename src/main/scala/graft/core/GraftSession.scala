@@ -4,10 +4,11 @@ import org.apache.spark.sql.SparkSession
 
 /** Session factory for the graft engine.
   *
-  * Local-mode defaults are tuned for the test harness (local[32],
-  * 32 shuffle partitions); on a real cluster the same builder is used
-  * with `master` unset and shuffle partitions sized to ~2-3x total
-  * cores (or left to AQE coalescing, which is enabled here).
+  * Local mode defaults to one task slot and one shuffle partition per
+  * core (`SPARK_GRAFT_CPUS`, else the JVM's available processors);
+  * on a real cluster the same builder is used with `master` unset and
+  * shuffle partitions sized to ~2-3x total cores (or left to AQE
+  * coalescing, which is enabled here).
   */
 object GraftSession {
 
@@ -32,7 +33,8 @@ object GraftSession {
     c.set("spark.sql.adaptive.enabled", "true")
     c.set("spark.sql.adaptive.coalescePartitions.enabled", "true")
     c.set("spark.sql.adaptive.skewJoin.enabled", "true")
-    // Round-13 measurement (Profile13 minpart, OPTIMIZATION_r13.md):
+    // Round-13 measurement, re-adjudicated A/B/C in round 14
+    // (OPTIMIZATION_r14.md §2, "minPartitionSize floor"):
     // AQE's byte-based coalescing merges CPU-heavy but byte-light
     // post-shuffle stages below the core count — a 1.3M-row pair set
     // is ~20 MB, so the default 1 MB floor coalesces the per-pair
@@ -62,7 +64,14 @@ object GraftSession {
     configure(spark)
   }
 
-  def defaultCpus: Int =
-    sys.env.get("SPARK_GRAFT_CPUS").map(_.toInt)
-      .getOrElse(Runtime.getRuntime.availableProcessors())
+  def defaultCpus: Int = cpusFrom(sys.env.get("SPARK_GRAFT_CPUS"))
+
+  /** Parses a `SPARK_GRAFT_CPUS` value (absent: the JVM's available
+    * processors); a value that is not a positive integer fails naming
+    * the variable. */
+  private[graft] def cpusFrom(raw: Option[String]): Int =
+    raw.fold(Runtime.getRuntime.availableProcessors())(v =>
+      v.trim.toIntOption.filter(_ > 0).getOrElse(
+        throw new IllegalArgumentException(
+          s"SPARK_GRAFT_CPUS must be a positive integer, got '$v'")))
 }

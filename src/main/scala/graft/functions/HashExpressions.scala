@@ -80,7 +80,7 @@ object Md5PrefixLong {
   * Why: `zip_with` has no codegen (ArrayZipWith is an interpreted
   * HOF — one lambda closure eval per element per fold step), and the
   * fold materializes n-1 intermediate arrays plus 3 slices per row.
-  * Measured on the bench corpus (Profile14 `words`): the tokenize
+  * Measured on the bench corpus (OPTIMIZATION_r14.md §1): the tokenize
   * step costs 0.12 s and the zip_with shingle fold lifts it to
   * 0.59 s per pass — the shingle assembly, not the tokenize or the
   * hash, dominates every gram pipeline. This node is one loop per

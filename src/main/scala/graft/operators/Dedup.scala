@@ -47,7 +47,7 @@ object Dedup extends graft.QueryModule {
   private[operators] val MaxBroadcastSourceBytes = BigInt(1L << 30)
 
   /** The broadcast-gate decision every gated operator here derives
-    * from the source scan's stats, exposed so tools/tests can assert
+    * from the source scan's stats, exposed so tests can assert
     * the AUTOMATIC flip (not just force it with overrides). */
   private[graft] def wouldBroadcastSource(df: DataFrame): Boolean =
     df.queryExecution.optimizedPlan.stats.sizeInBytes <=
@@ -723,9 +723,8 @@ object Dedup extends graft.QueryModule {
     * broadcast) degrades both to shuffled id joins past it. The final
     * agg groups a tiny source-pair key space.
     */
-  def dupSources(documents: DataFrame,
-                 broadcastPairs: Option[Boolean] = None): DataFrame = {
-    val bcast = gateBroadcast(documents, broadcastPairs)
+  def dupSources(documents: DataFrame): DataFrame = {
+    val bcast = wouldBroadcastSource(documents)
     def g(df: DataFrame) = if (bcast) broadcast(df) else df
     val src = documents.select(col("doc_id"), col("source"))
     val pairs = minhashPairs(documents).select(col("a"), col("b"))

@@ -274,8 +274,8 @@ object Multimodal extends graft.QueryModule {
     // round 13: fill the packed RGB raster directly and encode with
     // the from-scratch writers — same pixel function, same decoded
     // raster, no per-pixel ColorModel dispatch, no ImageIO.write
-    // per-call setup (ProfileSynth: ~0.7 s/pass of the image-family
-    // queries was ImageIO encode overhead)
+    // per-call setup (round-13 measurement, commit 8dcc3a6: ~0.7 s/pass
+    // of the image-family queries was ImageIO encode overhead)
     val px = new Array[Byte](width * 3 * height)
     var y = 0
     while (y < height) {
@@ -666,9 +666,9 @@ object Multimodal extends graft.QueryModule {
     * accept and ImageIO's own writer emits: BM magic, 40-byte
     * BITMAPINFOHEADER, 24-bit BI_RGB, bottom-up rows padded to 4
     * bytes. Input raster: packed top-down RGB rows (the
-    * [[decodeRasterAny]] convention). Round-13 finding (ProfileSynth,
-    * sf0.1): ImageIO.write's per-call plugin setup was ~0.7 s of the
-    * 0.9 s image fixture-synthesis pass — the ENCODE twin of the
+    * [[decodeRasterAny]] convention). Round-13 finding (commit
+    * 8dcc3a6, sf0.1): ImageIO.write's per-call plugin setup was ~0.7 s
+    * of the 0.9 s image fixture-synthesis pass — the ENCODE twin of the
     * round-7 decode finding (ImageIO per-call setup ≈ 85% of the
     * gate's decode cost). Decoded-raster equality with the ImageIO
     * writer path is spec-asserted, so every downstream hash/feature

@@ -603,7 +603,7 @@ object Similarity extends graft.QueryModule {
     * documented kmeans-family collect) and inlined as plan literals,
     * so the per-vector argmax is a projection with NO exchange below
     * it (a broadcast-join + groupBy(vec_id) spelling would shuffle a
-    * corpus-keyed row set instead — PlanAudit caught exactly that in
+    * corpus-keyed row set instead — DumpPlans' audit caught that in
     * the first cut); occupancy is one |C|-keyed exchange of partial
     * counts, and every stat computes on the |C|-row table (tiny
     * window + one-row broadcast; integer cross-multiplied median, the

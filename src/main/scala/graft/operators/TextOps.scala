@@ -486,8 +486,9 @@ object TextOps extends graft.QueryModule {
     * q125ab) measured the fused path 0.5-0.6 s SLOWER per run and it
     * was opt-in through round 13; the round-14 fused expression
     * nodes (WordShingles + Md5PrefixLong) cut its per-row cost 3-4×
-    * and the same A/B now favors it (Profile14 q125: 0.64 s fused vs
-    * 0.75 s join for the report, 1.12 vs 1.39 for the apply).
+    * and the same A/B now favors it (OPTIMIZATION_r14.md §6: 0.64 s
+    * fused vs 0.75 s join for the report, 1.12 vs 1.39 for the
+    * apply).
     */
   def contamination(documents: DataFrame, benchSource: String = "src0",
                     n: Int = 5,
@@ -575,8 +576,8 @@ object TextOps extends graft.QueryModule {
     * [[graft.streaming.StreamAggs.decontamGate]] makes in-stream.
     * The round-8 A/B measured the fused path SLOWER (its shingle
     * assembly and gram hash were interpreted then); with the round-14
-    * fused expression nodes it re-measured FASTER (Profile14 q125:
-    * fused 1.12 s vs join 1.39 s at sf0.1), and past the gate the
+    * fused expression nodes it re-measured FASTER (fused 1.12 s vs
+    * join 1.39 s at sf0.1, OPTIMIZATION_r14.md §6), and past the gate the
     * index cannot freeze on the driver so the join path remains the
     * scale fallback. Path equality is spec-asserted (OperatorsSpec).
     */

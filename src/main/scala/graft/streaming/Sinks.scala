@@ -120,8 +120,9 @@ object Sinks {
   /** T11: checkpointing defaults (`checkpointing/Checkpointing.java:28-91`
     * → Spark): checkpoint dir + trigger interval; state backend is
     * session-level (`spark.sql.streaming.stateStore.providerClass` →
-    * RocksDBStateStoreProvider for large keyed state, set in
-    * GraftSession for clusters).
+    * RocksDBStateStoreProvider for large keyed state, set with
+    * `spark.conf.set` before the query starts, as ProfileStream's
+    * `--rocksdb` does).
     */
   def checkpointed[T](w: DataStreamWriter[T], checkpoint: String,
                       triggerMs: Long = 1000): DataStreamWriter[T] =

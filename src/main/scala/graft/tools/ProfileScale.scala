@@ -760,7 +760,7 @@ object ProfileScale {
       "q128_jac_profile"  -> (d => Dedup.jaccardProfile(d)),
       "q131_leak_scrub"   -> (d => Dedup.leakageScrub(d)),
       // round-8: the recall eval at 100× — the full-outer join over
-      // the q26 and q29 pair sets. PlanAudit proved it adds no
+      // the q26 and q29 pair sets. DumpPlans' audit showed it adds no
       // exchange at sf0.1 stats; this point measures that the join
       // input stays the two bounded (bucket-capped) pair sets, i.e.
       // growth tracks the heavier subtree (q29), never a cross

@@ -2,6 +2,7 @@ package graft.tools
 
 import org.apache.spark.sql.{Dataset, SparkSession}
 import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
+import graft.core.GraftSession
 import graft.streaming.Stateful
 import graft.streaming.Models._
 
@@ -38,13 +39,10 @@ object ProfileStream {
   def main(args: Array[String]): Unit = {
     val rocksdb = args.contains("--rocksdb")
     val only = args.filterNot(_.startsWith("--")).toSet
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS",
-      Runtime.getRuntime.availableProcessors().toString)
-    val b = SparkSession.builder().master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.ui.enabled", "false")
+    val spark = GraftSession.build()
+    spark.sparkContext.setLogLevel("ERROR")
     if (rocksdb) {
-      b.config("spark.sql.streaming.stateStore.providerClass",
+      spark.conf.set("spark.sql.streaming.stateStore.providerClass",
         "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
       // 4.1's checksummed checkpoint files cost real throughput under
       // RocksDB (measured round 8: fraud 43 -> 35 krows/s — every
@@ -54,11 +52,9 @@ object ProfileStream {
       // so the sweep measures the operators, not the durability
       // audit; pass --checksum to re-measure with them on.
       if (!args.contains("--checksum"))
-        b.config("spark.sql.streaming.checkpoint.fileChecksum.enabled",
+        spark.conf.set("spark.sql.streaming.checkpoint.fileChecksum.enabled",
           "false")
     }
-    val spark = b.getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
     import spark.implicits._
 
     // the Bench calibration anchor: fixed, data-independent,
@@ -74,7 +70,7 @@ object ProfileStream {
     }
     println(f"anchor $anchor%.2f s  (state store: ${
       if (rocksdb) "rocksdb" else "hdfs-backed"}, $Rows rows x " +
-      s"$Batches batches, $cpus cores)")
+      s"$Batches batches, ${spark.sparkContext.defaultParallelism} cores)")
 
     /** One timed run: fresh stream + query, `Batches` micro-batches. */
     def drive[T](mk: SparkSession => (Seq[T] => Unit,

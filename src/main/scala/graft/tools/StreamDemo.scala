@@ -1,8 +1,8 @@
 package graft.tools
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
 import org.apache.spark.sql.functions._
+import graft.core.GraftSession
 import graft.streaming._
 import graft.streaming.Models._
 
@@ -12,11 +12,7 @@ import graft.streaming.Models._
   */
 object StreamDemo {
   def main(args: Array[String]): Unit = {
-    val spark = SparkSession.builder()
-      .master("local[4]")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    val spark = GraftSession.build("graft-streamdemo", Some("local[4]"), 4)
     spark.sparkContext.setLogLevel("ERROR")
     import spark.implicits._
     implicit val ctx = spark.sqlContext

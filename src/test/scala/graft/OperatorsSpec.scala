@@ -593,6 +593,16 @@ class OperatorsSpec extends SparkSpec {
     assert(e.getMessage.contains("SPARK_GRAFT_MAX_DRIVER_VOCAB"))
   }
 
+  test("SPARK_GRAFT_CPUS: absent means all cores, a bad value names the env var") {
+    import graft.core.GraftSession
+    assert(GraftSession.cpusFrom(None) == Runtime.getRuntime.availableProcessors())
+    assert(GraftSession.cpusFrom(Some(" 3 ")) == 3)
+    for (bad <- Seq("0", "-2", "four", "2.5", "")) {
+      val e = intercept[IllegalArgumentException](GraftSession.cpusFrom(Some(bad)))
+      assert(e.getMessage.contains("SPARK_GRAFT_CPUS"), e.getMessage)
+    }
+  }
+
   test("md5Prefix rejects a non-string input at analysis") {
     val e = intercept[org.apache.spark.sql.AnalysisException](
       spark.range(3).select(graft.functions.HashExpressions.md5Prefix($"id", 15)))

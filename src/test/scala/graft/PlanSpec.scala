@@ -1,5 +1,6 @@
 package graft
 
+import org.apache.spark.sql.DataFrame
 import graft.core.Tables
 import graft.operators._
 
@@ -145,6 +146,38 @@ class PlanSpec extends SparkSpec {
       df.as[(Long, Long, Long)].collect().toSet
     assert(rows(Dedup.dedupKeepers(docs, broadcastGroups = Some(false))) ==
       rows(Dedup.dedupKeepers(docs, broadcastGroups = Some(true))))
+  }
+
+  test("gates flip from scan stats alone") {
+    // An RDD-backed copy of the corpus has no scan stats, so its size
+    // estimate is spark.sql.defaultSizeInBytes (Long.MaxValue): every
+    // source-stats gate must pick its past-broadcast fallback on its
+    // own, with no override, while the data stays suite-sized.
+    val docs = Tables.documents(spark, sf)
+    val big = spark.createDataFrame(docs.rdd, docs.schema)
+    assert(!Dedup.wouldBroadcastSource(big), "gate still broadcasts")
+    assert(Dedup.wouldBroadcastSource(docs), "gate shuffles a small scan")
+    val ops: Seq[(String, DataFrame => DataFrame)] = Seq(
+      "q29" -> (d => Dedup.ngramJaccardPairs(d, 0.8)),
+      "q53" -> (d => Dedup.dedupKeepers(d)),
+      "q43" -> (d => Dedup.dedupApply(d)),
+      "q55" -> (d => TextOps.contamination(d)),
+      "q97" -> (d => TextOps.subwordEncode(d)),
+      "q64" -> (d => Dedup.dupSources(d)))
+    // auto-broadcast off (the discipline above): a shuffled join is
+    // the gate's own fallback, not Spark's size-based choice
+    spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
+    try for ((q, op) <- ops) {
+      val plan = planOf(op(big)).split("== Initial Plan ==")(0)
+      assert(!plan.contains("BroadcastHashJoin") &&
+        (plan.contains("SortMergeJoin") || plan.contains("ShuffledHashJoin")),
+        s"$q did not flip to shuffled joins:\n$plan")
+    } finally spark.conf.unset("spark.sql.autoBroadcastJoinThreshold")
+    // the fallback computes the broadcast path's rows
+    def rows(df: DataFrame): Seq[String] =
+      df.collect().map(_.toString).sorted.toSeq
+    for ((q, op) <- ops)
+      assert(rows(op(big)) == rows(op(docs)), s"$q: fallback rows differ")
   }
 
   test("round-4 pipeline queries keep their scale shapes") {

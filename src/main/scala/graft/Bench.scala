@@ -115,7 +115,10 @@ object Bench {
     // fill — without this, those one-time costs land on whichever
     // query happens to run first per table, skewing per-query times
     spark.range(1000000).selectExpr("sum(id * 2)").collect()
-    locally {
+    // an unreadable SF dir would fail every loader with a full stack
+    // trace; say so once and let the queries report their failures
+    val sfPath = new java.io.File(sfDir)
+    if (sfPath.isDirectory && sfPath.canRead) {
       import graft.core.Tables
       val loaders = Seq[(SparkSession, String) => org.apache.spark.sql.DataFrame](
         Tables.region, Tables.nation, Tables.customer, Tables.supplier,
@@ -125,7 +128,9 @@ object Bench {
         try { l(spark, sfDir).count(); () }
         catch { case NonFatal(_) => () }
       }
-    }
+    } else
+      System.err.println(
+        s"[bench] $sfDir is not a readable directory; table warm-up skipped")
     // Calibration anchor: a fixed, data-independent, codegen-only
     // workload timed under the exact bench discipline. Round-7
     // finding (BENCHDRIFT.md): the box's effective throughput drifts

@@ -152,17 +152,13 @@ object Analysis extends graft.QueryModule {
     * happens once per group row on exact integer sums.
     */
   def tokenizerFertility(documents: DataFrame,
-                         vocab: Seq[String] = TextOps.subwordVocab,
-                         broadcastEncodings: Option[Boolean] = None)
+                         vocab: Seq[String] = TextOps.subwordVocab)
   : DataFrame = {
     val tok = documents
       .filter(col("lang").isNotNull)
       .select(col("lang"), explode(words(col("text"))).as("w"))
     val dw = TextOps.encodeDistinctWords(tok.select(col("w")), vocab)
-    val bcast = broadcastEncodings.getOrElse(
-      documents.queryExecution.optimizedPlan.stats.sizeInBytes <=
-        Dedup.MaxBroadcastSourceBytes)
-    tok.join(if (bcast) broadcast(dw) else dw, "w")
+    tok.join(SizeGate.broadcastIfSmall(documents)(dw), "w")
       .groupBy(col("lang"))
       .agg(count(lit(1)).as("n_words"), sum(col("np")).as("n_pieces"),
         sum(col("nu")).as("n_unk"))

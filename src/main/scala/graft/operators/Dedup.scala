@@ -38,21 +38,6 @@ object Dedup extends graft.QueryModule {
     */
   private[operators] val DefaultMaxBucket = 100
 
-  /** ngramJaccardPairs broadcasts its per-doc word-set lookup only
-    * while the source scan is plausibly broadcast-sized; above this
-    * the lookup IS the corpus and the op falls back to a shuffled
-    * join on the pair keys (Spark's hard broadcast ceiling is 8 GB,
-    * and a multi-GB driver-held table is trouble long before that).
-    */
-  private[operators] val MaxBroadcastSourceBytes = BigInt(1L << 30)
-
-  /** The broadcast-gate decision every gated operator here derives
-    * from the source scan's stats, exposed so tests can assert
-    * the AUTOMATIC flip (not just force it with overrides). */
-  private[graft] def wouldBroadcastSource(df: DataFrame): Boolean =
-    df.queryExecution.optimizedPlan.stats.sizeInBytes <=
-      MaxBroadcastSourceBytes
-
   /** Affine hash-family coefficients, derived from md5 so the oracle
     * can inline the identical literals. a ∈ [1, 2^30), b ∈ [0, p):
     * a·h32 + b < 2^62 — no 64-bit overflow on either engine. */
@@ -351,8 +336,7 @@ object Dedup extends graft.QueryModule {
     * candidates.
     */
   def ngramJaccardPairs(documents: DataFrame, threshold: Double = 0.8,
-                        maxShingleFreq: Int = DefaultMaxBucket,
-                        broadcastLookup: Option[Boolean] = None): DataFrame = {
+                        maxShingleFreq: Int = DefaultMaxBucket): DataFrame = {
     // doc_id → SORTED word set: sorting once per doc lets the per-pair
     // jaccard be a single codegen merge walk (SortedArrayJaccard).
     // Computed per lookup join below (2× word-split of matched docs)
@@ -392,22 +376,13 @@ object Dedup extends graft.QueryModule {
       .select(col("p.a").as("a"), col("p.b").as("b")).distinct()
     // broadcast the doc→wset lookups while the corpus is small enough
     // that the candidate pairs (the big, skew-prone side) should never
-    // shuffle and the jaccard runs map-side. Catalyst's size estimate
-    // for array columns overshoots the 10 MB auto-broadcast threshold,
-    // so the hint is explicit — but size-gated on the source scan
-    // stats: past MaxBroadcastSourceBytes the word-set table IS the
-    // corpus, so the op switches to a shuffled join on the pair keys
-    // instead of broadcasting (override with `broadcastLookup`).
-    val bcast = broadcastLookup.getOrElse(
-      documents.queryExecution.optimizedPlan.stats.sizeInBytes <=
-        MaxBroadcastSourceBytes)
-    def lookup(idCol: String, wCol: String): DataFrame = {
-      val t = wsets.toDF(idCol, wCol)
-      if (bcast) broadcast(t) else t
-    }
+    // shuffle and the jaccard runs map-side; past the SizeGate the
+    // word-set table IS the corpus, so the op switches to a shuffled
+    // join on the pair keys instead.
+    val g = SizeGate.broadcastIfSmall(documents)
     cands
-      .join(lookup("a", "a_w"), "a")
-      .join(lookup("b", "b_w"), "b")
+      .join(g(wsets.toDF("a", "a_w")), "a")
+      .join(g(wsets.toDF("b", "b_w")), "b")
       .select(col("a"), col("b"),
         graft.functions.VectorExpressions
           .sortedJaccard(col("a_w"), col("b_w")).as("jaccard"))
@@ -432,8 +407,7 @@ object Dedup extends graft.QueryModule {
     * gate, else the candidate join shuffles on the pair keys.
     */
   def containmentPairs(documents: DataFrame, threshold: Double = 0.9,
-                       maxShingleFreq: Int = DefaultMaxBucket,
-                       broadcastLookup: Option[Boolean] = None): DataFrame = {
+                       maxShingleFreq: Int = DefaultMaxBucket): DataFrame = {
     val ssets = documents
       .select(col("doc_id"), words(col("text")).as("w"))
       .select(col("doc_id"),
@@ -451,16 +425,10 @@ object Dedup extends graft.QueryModule {
       .select(explode_outer(sortedPairs(col("ids"))).as("p"))
       .filter(col("p").isNotNull)
       .select(col("p.a").as("a"), col("p.b").as("b")).distinct()
-    val bcast = broadcastLookup.getOrElse(
-      documents.queryExecution.optimizedPlan.stats.sizeInBytes <=
-        MaxBroadcastSourceBytes)
-    def lookup(idCol: String, sCol: String): DataFrame = {
-      val t = ssets.toDF(idCol, sCol)
-      if (bcast) broadcast(t) else t
-    }
+    val g = SizeGate.broadcastIfSmall(documents)
     cands
-      .join(lookup("a", "a_s"), "a")
-      .join(lookup("b", "b_s"), "b")
+      .join(g(ssets.toDF("a", "a_s")), "a")
+      .join(g(ssets.toDF("b", "b_s")), "b")
       .select(col("a"), col("b"),
         graft.functions.VectorExpressions
           .sortedLongIntersect(col("a_s"), col("b_s")).as("inter"),
@@ -655,29 +623,23 @@ object Dedup extends graft.QueryModule {
     * corpus (only docs that paired) and broadcasts against the per-doc
     * quality projection — but at crawl-scale 30–50% duplication it is
     * corpus-ordered and would hit the 8 GB broadcast ceiling, so the
-    * broadcast is size-gated on the source-scan stats exactly like
-    * ngramJaccardPairs' lookup, with a shuffled join as the fallback
-    * (override with `broadcastGroups`).
+    * broadcast is size-gated on the source-scan stats ([[SizeGate]])
+    * exactly like ngramJaccardPairs' lookup, with a shuffled join as
+    * the fallback.
     */
-  def dedupKeepers(documents: DataFrame,
-                   broadcastGroups: Option[Boolean] = None): DataFrame =
+  def dedupKeepers(documents: DataFrame): DataFrame =
     keeperTable(documents, dedupGroups(documents),
-      gateBroadcast(documents, broadcastGroups))
-
-  private def gateBroadcast(documents: DataFrame,
-                            over: Option[Boolean]): Boolean =
-    over.getOrElse(
-      documents.queryExecution.optimizedPlan.stats.sizeInBytes <=
-        MaxBroadcastSourceBytes)
+      SizeGate.broadcastIfSmall(documents))
 
   /** (group_id, keep_id, n_docs) from a labeled group table: one
-    * max-struct aggregate over the quality-joined groups. */
+    * max-struct aggregate over the quality-joined groups, `g` being
+    * the caller's size-gate hint for the group side. */
   private def keeperTable(documents: DataFrame, groups: DataFrame,
-                          bcast: Boolean): DataFrame = {
+                          g: DataFrame => DataFrame): DataFrame = {
     val quality = documents
       .select(col("doc_id"),
         size(graft.functions.Portable.words(col("text"))).as("n_tokens"))
-    quality.join(if (bcast) broadcast(groups) else groups, "doc_id")
+    quality.join(g(groups), "doc_id")
       .groupBy(col("group_id"))
       .agg(
         max(struct(col("n_tokens"), (-col("doc_id")).as("neg"))).as("m"),
@@ -697,12 +659,10 @@ object Dedup extends graft.QueryModule {
     * same stats gate as the keeper broadcast — past it, the anti-join
     * shuffles on doc_id instead of broadcasting.
     */
-  def dedupApply(documents: DataFrame,
-                 broadcastGroups: Option[Boolean] = None): DataFrame = {
-    val bcast = gateBroadcast(documents, broadcastGroups)
-    def g(df: DataFrame) = if (bcast) broadcast(df) else df
+  def dedupApply(documents: DataFrame): DataFrame = {
+    val g = SizeGate.broadcastIfSmall(documents)
     val groups = dedupGroups(documents)
-    val keep = keeperTable(documents, groups, bcast)
+    val keep = keeperTable(documents, groups, g)
       .select(col("group_id"), col("keep_id"))
     val drops = groups.join(g(keep), "group_id")
       .filter(col("doc_id") =!= col("keep_id"))
@@ -724,8 +684,7 @@ object Dedup extends graft.QueryModule {
     * agg groups a tiny source-pair key space.
     */
   def dupSources(documents: DataFrame): DataFrame = {
-    val bcast = wouldBroadcastSource(documents)
-    def g(df: DataFrame) = if (bcast) broadcast(df) else df
+    val g = SizeGate.broadcastIfSmall(documents)
     val src = documents.select(col("doc_id"), col("source"))
     val pairs = minhashPairs(documents).select(col("a"), col("b"))
     val withA = src.toDF("a", "source_a").join(g(pairs), "a")
@@ -828,8 +787,8 @@ object Dedup extends graft.QueryModule {
     * data volume, and partial aggregation means each map task emits
     * at most `buckets` bitsets however many rows it scanned.
     *
-    * `broadcastSmall` gates the suspect/confirmed broadcasts exactly
-    * like the other gated ops (default: batch source under 1 GiB —
+    * The suspect/confirmed broadcasts are gated on the BATCH source
+    * like the other gated ops ([[SizeGate]]: batch under 1 GiB —
     * conservative; the suspect set is usually orders smaller). Above
     * the gate both joins fall back to key-partitioned shuffles of the
     * SUSPECT set only — still never the full corpora.
@@ -837,13 +796,11 @@ object Dedup extends graft.QueryModule {
   def bloomAdmit(reference: DataFrame, batch: DataFrame,
                  buckets: Int = 64, bitsPerKey: Int = 10,
                  numHashes: Int = 5,
-                 expectedRefKeys: Long = 1L << 20,
-                 broadcastSmall: Option[Boolean] = None): DataFrame = {
+                 expectedRefKeys: Long = 1L << 20): DataFrame = {
     import graft.functions.{Aggregators, Bloom}
     require(buckets >= 1, "need at least one bloom bucket")
     val numBits = Bloom.pow2Bits(bitsPerKey * expectedRefKeys / buckets)
-    val bcast = broadcastSmall.getOrElse(wouldBroadcastSource(batch))
-    def gate(df: DataFrame): DataFrame = if (bcast) broadcast(df) else df
+    val gate = SizeGate.broadcastIfSmall(batch)
     def keyed(df: DataFrame, cols: Column*): DataFrame = df.select(
       cols :+ md5(normText(col("text"))).as("m"): _*)
       .withColumn("h", conv(substring(col("m"), 1, 15), 16, 10).cast("long"))
@@ -1091,11 +1048,8 @@ object Dedup extends graft.QueryModule {
     * threshold). Split membership is a hash expression on the pair
     * ids, so no corpus join exists before the single anti-join.
     */
-  def leakageScrub(documents: DataFrame, trainPct: Int = 90,
-                   broadcastDrop: Option[Boolean] = None): DataFrame = {
+  def leakageScrub(documents: DataFrame, trainPct: Int = 90): DataFrame = {
     require(trainPct > 0 && trainPct <= 100, s"bad trainPct=$trainPct")
-    val bcast = gateBroadcast(documents, broadcastDrop)
-    def g(df: DataFrame) = if (bcast) broadcast(df) else df
     def bucket(id: Column): Column = TextOps.splitBucket(id)
     val drops = minhashPairs(documents)
       .select(col("a"), col("b"),
@@ -1105,7 +1059,8 @@ object Dedup extends graft.QueryModule {
       .select(when(col("ba") < trainPct, col("a")).otherwise(col("b"))
         .as("doc_id"))
       .distinct()
-    documents.join(g(drops), Seq("doc_id"), "left_anti")
+    documents.join(SizeGate.broadcastIfSmall(documents)(drops), Seq("doc_id"),
+        "left_anti")
       .select(col("doc_id"), col("lang"), col("source"), col("n_chars"))
   }
 
@@ -1165,8 +1120,7 @@ object Dedup extends graft.QueryModule {
     * decile space.
     */
   def jaccardProfile(documents: DataFrame,
-                     maxShingleFreq: Int = DefaultMaxBucket,
-                     broadcastLookup: Option[Boolean] = None): DataFrame = {
+                     maxShingleFreq: Int = DefaultMaxBucket): DataFrame = {
     val ssets = documents
       .select(col("doc_id"), words(col("text")).as("w"))
       .select(col("doc_id"),
@@ -1184,16 +1138,10 @@ object Dedup extends graft.QueryModule {
       .select(explode_outer(sortedPairs(col("ids"))).as("p"))
       .filter(col("p").isNotNull)
       .select(col("p.a").as("a"), col("p.b").as("b")).distinct()
-    val bcast = broadcastLookup.getOrElse(
-      documents.queryExecution.optimizedPlan.stats.sizeInBytes <=
-        MaxBroadcastSourceBytes)
-    def lookup(idCol: String, sCol: String): DataFrame = {
-      val t = ssets.toDF(idCol, sCol)
-      if (bcast) broadcast(t) else t
-    }
+    val g = SizeGate.broadcastIfSmall(documents)
     val deciled = cands
-      .join(lookup("a", "a_s"), "a")
-      .join(lookup("b", "b_s"), "b")
+      .join(g(ssets.toDF("a", "a_s")), "a")
+      .join(g(ssets.toDF("b", "b_s")), "b")
       .select(col("a"), col("b"),
         graft.functions.VectorExpressions
           .sortedLongIntersect(col("a_s"), col("b_s")).as("inter"),

@@ -3100,7 +3100,10 @@ object Multimodal extends graft.QueryModule {
     // other two are CANCELLED (not left running detached) before the
     // failure propagates — Await on a failed Future.sequence would
     // otherwise return immediately while orphan jobs keep the
-    // executors busy (round-13 advice item).
+    // executors busy. The cancel also covers jobs an arm submits
+    // after it, so the group ids are unique per call: a cancelled id
+    // stays cancelled for the life of the SparkContext.
+    val group = s"q143-${funnelCalls.incrementAndGet()}"
     val pool = java.util.concurrent.Executors.newFixedThreadPool(3)
     implicit val ec: scala.concurrent.ExecutionContext =
       scala.concurrent.ExecutionContext.fromExecutorService(pool)
@@ -3112,7 +3115,7 @@ object Multimodal extends graft.QueryModule {
       try {
         val futures = arms.map { case (kind, mk) =>
           scala.concurrent.Future {
-            spark.sparkContext.setJobGroup(s"q143-$kind",
+            spark.sparkContext.setJobGroup(s"$group-$kind",
               s"q143 funnel: $kind groups", interruptOnCancel = true)
             try row(kind, mk())
             finally spark.sparkContext.clearJobGroup()
@@ -3122,7 +3125,8 @@ object Multimodal extends graft.QueryModule {
           scala.concurrent.Future.sequence(futures)
             .recoverWith { case e =>
               arms.foreach { case (kind, _) =>
-                spark.sparkContext.cancelJobGroup(s"q143-$kind") }
+                spark.sparkContext.cancelJobGroupAndFutureJobs(
+                  s"$group-$kind") }
               scala.concurrent.Future.failed(e)
             }(scala.concurrent.ExecutionContext.global),
           scala.concurrent.duration.Duration.Inf)
@@ -3130,6 +3134,8 @@ object Multimodal extends graft.QueryModule {
     rows.toDF("kind", "n_total", "n_dropped", "n_kept")
       .withColumn("permille_kept", expr("n_kept * 1000 div n_total"))
   }
+
+  private val funnelCalls = new java.util.concurrent.atomic.AtomicLong
 
   def mediaCurationFunnelQuery(s: SparkSession, d: String): DataFrame =
     mediaCurationFunnel(Tables.documents(s, d))

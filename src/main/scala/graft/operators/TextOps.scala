@@ -135,21 +135,16 @@ object TextOps extends graft.QueryModule {
     *
     * SCALE SHAPE: one token-scale exchange produces the distinct-word
     * table; encodings broadcast back under the q29 source-stats gate
-    * (shuffled word-key join fallback above it — `Some(false)`
-    * forces it for tests); the per-doc rollup rides a doc_id
-    * exchange. Greedy-longest-match is deterministic, so the DuckDB
+    * ([[SizeGate]]; shuffled word-key join fallback above it); the
+    * per-doc rollup rides a doc_id exchange. Greedy-longest-match is deterministic, so the DuckDB
     * recursive-CTE oracle reproduces counts exactly.
     */
   def subwordEncode(documents: DataFrame,
-                    vocab: Seq[String] = subwordVocab,
-                    broadcastEncodings: Option[Boolean] = None): DataFrame = {
+                    vocab: Seq[String] = subwordVocab): DataFrame = {
     val tok = documents
       .select(col("doc_id"), explode(words(col("text"))).as("w"))
     val dw = encodeDistinctWords(tok.select(col("w")), vocab)
-    val bcast = broadcastEncodings.getOrElse(
-      documents.queryExecution.optimizedPlan.stats.sizeInBytes <=
-        Dedup.MaxBroadcastSourceBytes)
-    tok.join(if (bcast) broadcast(dw) else dw, "w")
+    tok.join(SizeGate.broadcastIfSmall(documents)(dw), "w")
       .groupBy(col("doc_id"))
       .agg(count(lit(1)).as("n_words"), sum(col("np")).as("n_pieces"),
         sum(col("nu")).as("n_unk"))
@@ -183,8 +178,7 @@ object TextOps extends graft.QueryModule {
     */
   def tokenizerDiff(documents: DataFrame,
                     vocabA: Seq[String] = subwordVocab,
-                    vocabB: Seq[String] = subwordVocabV2,
-                    broadcastEncodings: Option[Boolean] = None): DataFrame = {
+                    vocabB: Seq[String] = subwordVocabV2): DataFrame = {
     val tok = documents
       .select(col("source"), explode(words(col("text"))).as("w"))
     val dw = tok.select(col("w")).distinct()
@@ -193,10 +187,7 @@ object TextOps extends graft.QueryModule {
       .select(col("w"),
         col("ea._1").as("np_a"), col("ea._2").as("nu_a"),
         col("eb._1").as("np_b"), col("eb._2").as("nu_b"))
-    val bcast = broadcastEncodings.getOrElse(
-      documents.queryExecution.optimizedPlan.stats.sizeInBytes <=
-        Dedup.MaxBroadcastSourceBytes)
-    tok.join(if (bcast) broadcast(dw) else dw, "w")
+    tok.join(SizeGate.broadcastIfSmall(documents)(dw), "w")
       .groupBy(col("source"))
       .agg(count(lit(1)).as("n_words"),
         sum(col("np_a")).as("pieces_a"), sum(col("np_b")).as("pieces_b"),
@@ -474,32 +465,24 @@ object TextOps extends graft.QueryModule {
     * Docs appear in the output iff they share at least one n-gram,
     * with the doc's total gram count for a ratio.
     *
-    * `fusedProbe` picks between a frozen-index MAP-ONLY variant (one
+    * The [[SizeGate]] on the benchmark side picks the plan. Under it,
+    * a frozen-index MAP-ONLY probe runs (one
     * [[graft.functions.GramSetSharedCount]] call per doc against the
     * fitContamIndex array — zero exchanges, zero joins, the exact
-    * shape the streaming gate serves from) and the gram-explode +
-    * index-join formulation, with identical rows (parity-spec'd).
-    * DEFAULT (round 14): fused while the benchmark side sits under
-    * the broadcast-source gate, join past it — past broadcast scale
-    * the index cannot freeze on the driver, so the join path is the
-    * scale fallback either way. History: the round-8 A/B (ProfileOps
-    * q125ab) measured the fused path 0.5-0.6 s SLOWER per run and it
-    * was opt-in through round 13; the round-14 fused expression
-    * nodes (WordShingles + Md5PrefixLong) cut its per-row cost 3-4×
-    * and the same A/B now favors it (OPTIMIZATION_r14.md §6: 0.64 s
-    * fused vs 0.75 s join for the report, 1.12 vs 1.39 for the
-    * apply).
+    * shape the streaming gate serves from). Past it the index cannot
+    * freeze on the driver, so the gram-explode + shuffled index-join
+    * formulation runs instead, with identical rows (parity-spec'd on
+    * an input past the gate). History: the round-8 A/B measured the
+    * fused path 0.5-0.6 s SLOWER per run and it was opt-in through
+    * round 13; the round-14 fused expression nodes (WordShingles +
+    * Md5PrefixLong) cut its per-row cost 3-4× and the same A/B then
+    * favored it (OPTIMIZATION_r14.md §6: 0.64 s fused vs 0.75 s join
+    * for the report, 1.12 vs 1.39 for the apply).
     */
   def contamination(documents: DataFrame, benchSource: String = "src0",
-                    n: Int = 5,
-                    broadcastIndex: Option[Boolean] = None,
-                    fusedProbe: Option[Boolean] = None): DataFrame = {
-    val benchDocs = documents.filter(col("source") === benchSource)
-    val small =
-      benchDocs.queryExecution.optimizedPlan.stats.sizeInBytes <=
-        Dedup.MaxBroadcastSourceBytes
-    if (fusedProbe.getOrElse(small)) {
-      // FUSED probe (default under the gate; see the scaladoc):
+                    n: Int = 5): DataFrame =
+    if (SizeGate.small(documents.filter(col("source") === benchSource))) {
+      // FUSED probe (under the gate; see the scaladoc):
       // freeze the benchmark grams as a sorted h60 array
       // (fitContamIndex — the exact structure the streaming gate
       // serves from) and count per-doc membership in ONE generated
@@ -523,35 +506,37 @@ object TextOps extends graft.QueryModule {
         .select(col("doc_id"), col("n_grams"), col("n_shared"),
           (col("n_shared").cast("double") / col("n_grams"))
             .as("contam_ratio"))
-    } else {
-      // join path — the scale fallback when the benchmark side is
-      // too large to freeze on the driver. Token array materialized
-      // in its OWN projection before the shingle lambda references
-      // it n times — inlined, every element_at re-runs the regex
-      // split (measured 15× slower). The explode is the OUTER
-      // variant + an explicit post-generate null filter: a plain
-      // explode makes the optimizer infer `size(gs) > 0` and push
-      // it below the projection as an INTERPRETED filter with the
-      // whole shingle pipeline inlined twice per row (measured 25 s
-      // of a 29 s query at sf0.1).
-      def grams(df: DataFrame): DataFrame = df
-        .select(col("doc_id"), words(col("text")).as("ws"))
-        .filter(size(col("ws")) >= n)
-        .select(col("doc_id"), array_distinct(shingles(col("ws"), n)).as("gs"))
-        .select(col("doc_id"), size(col("gs")).as("n_grams"),
-          explode_outer(col("gs")).as("g"))
-        .filter(col("g").isNotNull)
-        .select(col("doc_id"), col("n_grams"), hash60(col("g")).as("gh"))
-      val bcast = broadcastIndex.getOrElse(small)
-      val idx = grams(benchDocs).select(col("gh")).distinct()
-      grams(documents.filter(col("source") =!= benchSource))
-        .join(if (bcast) broadcast(idx) else idx, "gh")
-        .groupBy(col("doc_id"), col("n_grams"))
-        .agg(count(lit(1)).as("n_shared"))
-        .select(col("doc_id"), col("n_grams"), col("n_shared"),
-          (col("n_shared").cast("double") / col("n_grams"))
-            .as("contam_ratio"))
-    }
+    } else contaminationJoin(documents, benchSource, n)
+
+  /** [[contamination]] past the gate: the benchmark side is too large
+    * to freeze on the driver, so both sides explode to gram hashes
+    * and meet in a shuffled join. Token array materialized in its OWN
+    * projection before the shingle lambda references it n times —
+    * inlined, every element_at re-runs the regex split (measured 15×
+    * slower). The explode is the OUTER variant + an explicit
+    * post-generate null filter: a plain explode makes the optimizer
+    * infer `size(gs) > 0` and push it below the projection as an
+    * INTERPRETED filter with the whole shingle pipeline inlined twice
+    * per row (measured 25 s of a 29 s query at sf0.1). */
+  private def contaminationJoin(documents: DataFrame, benchSource: String,
+                                n: Int): DataFrame = {
+    def grams(df: DataFrame): DataFrame = df
+      .select(col("doc_id"), words(col("text")).as("ws"))
+      .filter(size(col("ws")) >= n)
+      .select(col("doc_id"), array_distinct(shingles(col("ws"), n)).as("gs"))
+      .select(col("doc_id"), size(col("gs")).as("n_grams"),
+        explode_outer(col("gs")).as("g"))
+      .filter(col("g").isNotNull)
+      .select(col("doc_id"), col("n_grams"), hash60(col("g")).as("gh"))
+    val idx = grams(documents.filter(col("source") === benchSource))
+      .select(col("gh")).distinct()
+    grams(documents.filter(col("source") =!= benchSource))
+      .join(idx, "gh")
+      .groupBy(col("doc_id"), col("n_grams"))
+      .agg(count(lit(1)).as("n_shared"))
+      .select(col("doc_id"), col("n_grams"), col("n_shared"),
+        (col("n_shared").cast("double") / col("n_grams"))
+          .as("contam_ratio"))
   }
 
   /** Decontamination APPLY — the surviving corpus after dropping every
@@ -564,33 +549,26 @@ object TextOps extends graft.QueryModule {
     * themselves are not part of the output (they are eval data, not
     * training data).
     *
-    * SCALE SHAPE: rides [[contamination]]'s gated gram-index shape
-    * unchanged (60-bit gram hashes, distinct bench index, stats-gated
-    * broadcast), then ONE bare-id drop set anti-joins the corpus
-    * under the same gate — payloads move zero times. With
-    * `fusedProbe = Some(false)` the keep/drop decision runs as that
-    * report→anti-join composition; the DEFAULT (round 14) fuses it
-    * into the corpus scan itself while the benchmark side sits under
-    * the broadcast-source gate — ONE map-only pass, zero exchanges,
-    * zero joins; the exact per-document decision
+    * SCALE SHAPE: while the benchmark side sits under the
+    * [[SizeGate]], the keep/drop decision fuses into the corpus scan
+    * itself — ONE map-only pass, zero exchanges, zero joins; the
+    * exact per-document decision
     * [[graft.streaming.StreamAggs.decontamGate]] makes in-stream.
+    * Past the gate the index cannot freeze on the driver, so it rides
+    * [[contamination]]'s shuffled gram-index join (60-bit gram
+    * hashes, distinct bench index), then ONE bare-id drop set
+    * anti-joins the corpus on doc_id — payloads move zero times.
     * The round-8 A/B measured the fused path SLOWER (its shingle
     * assembly and gram hash were interpreted then); with the round-14
     * fused expression nodes it re-measured FASTER (fused 1.12 s vs
-    * join 1.39 s at sf0.1, OPTIMIZATION_r14.md §6), and past the gate the
-    * index cannot freeze on the driver so the join path remains the
-    * scale fallback. Path equality is spec-asserted (OperatorsSpec).
+    * join 1.39 s at sf0.1, OPTIMIZATION_r14.md §6). Path equality is
+    * spec-asserted (OperatorsSpec).
     */
   def decontaminate(documents: DataFrame, benchSource: String = "src0",
-                    n: Int = 5, maxSharePermille: Long = 100,
-                    broadcastIndex: Option[Boolean] = None,
-                    fusedProbe: Option[Boolean] = None): DataFrame = {
+                    n: Int = 5, maxSharePermille: Long = 100): DataFrame = {
     require(maxSharePermille >= 1,
       s"maxSharePermille must be >= 1, got $maxSharePermille")
-    val small = documents.filter(col("source") === benchSource)
-      .queryExecution.optimizedPlan.stats.sizeInBytes <=
-      Dedup.MaxBroadcastSourceBytes
-    if (fusedProbe.getOrElse(small)) {
+    if (SizeGate.small(documents.filter(col("source") === benchSource))) {
       val idx = fitContamIndex(documents, benchSource, n)
       val out = Seq(col("doc_id"), col("lang"), col("source"),
         col("n_chars"))
@@ -608,14 +586,12 @@ object TextOps extends graft.QueryModule {
             lit(maxSharePermille) * size(col("__gs")))
         .select(out: _*)
     } else {
-      def g(df: DataFrame) = if (broadcastIndex.getOrElse(small)) broadcast(df) else df
-      val drops = contamination(documents, benchSource, n,
-        broadcastIndex, fusedProbe = Some(false))
+      val drops = contaminationJoin(documents, benchSource, n)
         .filter(col("n_shared") * 1000L >=
           lit(maxSharePermille) * col("n_grams"))
         .select(col("doc_id"))
       documents.filter(col("source") =!= benchSource)
-        .join(g(drops), Seq("doc_id"), "left_anti")
+        .join(drops, Seq("doc_id"), "left_anti")
         .select(col("doc_id"), col("lang"), col("source"), col("n_chars"))
     }
   }
@@ -665,11 +641,10 @@ object TextOps extends graft.QueryModule {
     * count (8-byte word hashes, partial-aggregated). The vocab table
     * (natural-language vocabularies are millions of rows, not corpus-
     * sized) broadcasts under the same source-stats gate as the q29
-    * lookup; past the gate the scoring join degrades to a shuffled
-    * hash join on the word-hash key (`broadcastVocab` overrides).
+    * lookup ([[SizeGate]]); past the gate the scoring join degrades to
+    * a shuffled hash join on the word-hash key.
     */
-  def unigramSurprisal(documents: DataFrame,
-                       broadcastVocab: Option[Boolean] = None): DataFrame = {
+  def unigramSurprisal(documents: DataFrame): DataFrame = {
     def flog2(c: Column): Column = length(bin(c)) - 1
     val tok = documents
       .select(col("doc_id"), explode_outer(words(col("text"))).as("w"))
@@ -682,10 +657,7 @@ object TextOps extends graft.QueryModule {
       .agg(count(lit(1)).as("tf"))
     val vocab = tf.groupBy(col("wh")).agg(sum(col("tf")).as("cnt"))
     val total = tf.agg(sum(col("tf")).as("total"))
-    val bcast = broadcastVocab.getOrElse(
-      documents.queryExecution.optimizedPlan.stats.sizeInBytes <=
-        Dedup.MaxBroadcastSourceBytes)
-    tf.join(if (bcast) broadcast(vocab) else vocab, "wh")
+    tf.join(SizeGate.broadcastIfSmall(documents)(vocab), "wh")
       .crossJoin(broadcast(total))
       .groupBy(col("doc_id"))
       .agg(sum(col("tf")).as("n_tokens"),
@@ -722,14 +694,9 @@ object TextOps extends graft.QueryModule {
     * scalar. At 100 TB the held-out side streams through map-side
     * hash probes of the model.
     */
-  def bigramSurprisal(reference: DataFrame, scored: DataFrame,
-                      broadcastModel: Option[Boolean] = None): DataFrame = {
+  def bigramSurprisal(reference: DataFrame, scored: DataFrame): DataFrame = {
     def lg(c: Column): Column = length(bin(c))
-    val bcast = broadcastModel.getOrElse(
-      reference.queryExecution.optimizedPlan.stats.sizeInBytes <=
-        Dedup.MaxBroadcastSourceBytes)
-    def gate(model: DataFrame): DataFrame =
-      if (bcast) broadcast(model) else model
+    val gate = SizeGate.broadcastIfSmall(reference)
     val refW = reference
       .select(explode_outer(words(col("text"))).as("w"))
       .filter(col("w").isNotNull)
@@ -799,8 +766,7 @@ object TextOps extends graft.QueryModule {
     * moves only N ids.
     */
   def dsirSelect(documents: DataFrame, targetSource: String = "src0",
-                 buckets: Int = 4096, topN: Int = 100,
-                 broadcastModel: Option[Boolean] = None): DataFrame = {
+                 buckets: Int = 4096, topN: Int = 100): DataFrame = {
     def flog2(c: Column): Column = length(bin(c)) - 1
     val perDoc = documents
       .select(col("doc_id"), col("source"),
@@ -825,11 +791,8 @@ object TextOps extends graft.QueryModule {
     val shift = marginals.agg(
       (flog2(sum(col("cr")) + buckets) -
         flog2(coalesce(sum(col("ct")), lit(0L)) + buckets)).as("c0"))
-    val bcast = broadcastModel.getOrElse(
-      documents.queryExecution.optimizedPlan.stats.sizeInBytes <=
-        Dedup.MaxBroadcastSourceBytes)
     val scored = perDoc
-      .join(if (bcast) broadcast(model) else model, "b")
+      .join(SizeGate.broadcastIfSmall(documents)(model), "b")
       .crossJoin(broadcast(shift))
       .groupBy(col("doc_id"))
       .agg(sum(col("n")).as("n_feats"),
@@ -956,8 +919,7 @@ object TextOps extends graft.QueryModule {
     * gate and roll up per doc.
     */
   def unigramTokenize(documents: DataFrame, maxPiece: Int = 4,
-                      minCount: Long = 5,
-                      broadcastEncodings: Option[Boolean] = None): DataFrame = {
+                      minCount: Long = 5): DataFrame = {
     val spark = documents.sparkSession
     import spark.implicits._
     val tok = documents
@@ -1005,10 +967,7 @@ object TextOps extends graft.QueryModule {
     }
     val dw = wtab.select(col("w")).withColumn("e", dp(col("w")))
       .select(col("w"), col("e._1").as("bits"), col("e._2").as("pieces"))
-    val bcast = broadcastEncodings.getOrElse(
-      documents.queryExecution.optimizedPlan.stats.sizeInBytes <=
-        Dedup.MaxBroadcastSourceBytes)
-    tok.join(if (bcast) broadcast(dw) else dw, "w")
+    tok.join(SizeGate.broadcastIfSmall(documents)(dw), "w")
       .groupBy(col("doc_id"))
       .agg(count(lit(1)).as("n_words"),
         sum(col("pieces")).as("n_pieces"),
@@ -1368,7 +1327,7 @@ object TextOps extends graft.QueryModule {
     * SCALE SHAPE: training is q101's (vocab-keyed rounds over the
     * checkpointed word table); the final piece table is VOCAB-sized
     * and joins the exploded corpus under the q97 source gate
-    * (broadcast below [[Dedup.MaxBroadcastSourceBytes]], shuffled
+    * (broadcast below [[SizeGate.MaxSourceBytes]], shuffled
     * key-join fallback above); the per-doc rollup rides one doc_id
     * exchange. The corpus text itself never shuffles with payloads —
     * only (doc_id, word) pairs move.
@@ -1377,7 +1336,6 @@ object TextOps extends graft.QueryModule {
     * early pair exhaustion — the unrolled oracle cannot branch).
     */
   def bpeEncode(documents: DataFrame, merges: Int = 8,
-                broadcastVocab: Option[Boolean] = None,
                 checkpointDir: Option[String] = None,
                 maxDriverVocab: Long = MaxDriverVocab): DataFrame = {
     val (learned, state) =
@@ -1390,10 +1348,7 @@ object TextOps extends graft.QueryModule {
         .as("np"))
     val dw = documents.select(col("doc_id"),
       explode(words(col("text"))).as("word"))
-    val bcast = broadcastVocab.getOrElse(
-      documents.queryExecution.optimizedPlan.stats.sizeInBytes <=
-        Dedup.MaxBroadcastSourceBytes)
-    dw.join(if (bcast) broadcast(enc) else enc, Seq("word"), "left")
+    dw.join(SizeGate.broadcastIfSmall(documents)(enc), Seq("word"), "left")
       .groupBy(col("doc_id"))
       .agg(count(lit(1)).as("n_words"),
         sum(coalesce(col("np"), lit(1L))).as("n_tokens"))
@@ -1575,11 +1530,15 @@ object TextOps extends graft.QueryModule {
 
   /** `[bias] ++ bucket(bigram)` feature-occurrence ids of a text
     * column — the [[probeTrain]]/[[probeScore]] feature map, a pure
-    * Column expression (works on batch and streaming frames alike). */
+    * Column expression (works on batch and streaming frames alike).
+    * A null text has no bigrams but keeps its bias occurrence, so it
+    * still counts in probeTrain's divisor (the oracle's
+    * `list_concat([0], NULL)` is `[0]`). */
   private def probeJs(text: Column, buckets: Int): Column =
     concat(array(lit(0)),
-      transform(shingles(words(text), 2),
-        g => (pmod(hash60(g), lit(buckets.toLong)) + 1).cast("int")))
+      coalesce(transform(shingles(words(text), 2),
+          g => (pmod(hash60(g), lit(buckets.toLong)) + 1).cast("int")),
+        typedlit(Seq.empty[Int])))
 
   /** [[probeTrain]]'s feature map — label + `[bias] ++ bucket(bigram)`
     * occurrence ids, a pure map over the corpus (zero exchanges). */

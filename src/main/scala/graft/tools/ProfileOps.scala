@@ -26,7 +26,7 @@ object ProfileOps {
     val sections: Map[String, SparkSession => Unit] = Map(
       "ops" -> scratch, "q20" -> q20, "q29" -> q29, "q34" -> q34,
       "q55" -> q55, "q58" -> q58, "q83" -> q83, "q83b" -> q83b,
-      "q83c" -> q83c, "q125ab" -> q125ab, "q137" -> q137, "q133" -> q133)
+      "q83c" -> q83c, "q137" -> q137, "q133" -> q133)
     val run = if (args.isEmpty) Seq("ops") else args.toSeq
     run.foreach { s =>
       println(s"== section $s")
@@ -343,35 +343,6 @@ object ProfileOps {
     time("explode (no when guard)")(
       shNoWhen.select(col("doc_id"), explode(col("sg")).as("bg")))
     mat.unpersist()
-  }
-
-  /** A/B of the decontamination paths (round 8): the fused
-    * frozen-index probe vs the gram hash-join, q55 and q125, at
-    * sf0.1 and at the 10× replica set ProfileScale builds (the
-    * benchmark source is fixed-size in the replicas — the q120
-    * discipline — so both scales probe the SAME index). Timings
-    * include each run's whole cost: the fused path pays
-    * fitContamIndex as a separate driver job, the join path folds
-    * the bench-gram scan into the same job. */
-  private def q125ab(spark: SparkSession): Unit = {
-    val sf1Path = "/tmp/graft_sf1/documents.parquet"
-    if (!new java.io.File("/tmp/graft_sf1").exists())
-      sys.error("build the 10x replicas first: runMain " +
-        "graft.tools.ProfileScale q125_decontam")
-    def filt(df: DataFrame) = df.filter(
-      col("source") =!= "src0" || col("doc_id") < 10000000L)
-    val d01 = filt(Tables.documents(spark, d))
-    val d1 = filt(spark.read.parquet(sf1Path))
-    for ((nm, dd) <- Seq("sf0.1" -> d01, "sf1" -> d1)) {
-      time(s"$nm q55  fused")(
-        TextOps.contamination(dd, fusedProbe = Some(true)))
-      time(s"$nm q55  join")(
-        TextOps.contamination(dd, fusedProbe = Some(false)))
-      time(s"$nm q125 fused")(
-        TextOps.decontaminate(dd, fusedProbe = Some(true)))
-      time(s"$nm q125 join")(
-        TextOps.decontaminate(dd, fusedProbe = Some(false)))
-    }
   }
 
   /** q137 stage decomposition: where does the video pair pass spend

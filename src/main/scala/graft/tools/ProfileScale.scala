@@ -269,10 +269,8 @@ object ProfileScale {
                  else ops.filter { case (n, _) => only(n) }
 
     for ((docs, label) <- Seq((d01, "sf0.1"), (d1, "sf1"))) {
-      val stats = docs.queryExecution.optimizedPlan.stats.sizeInBytes
-      println(s"== $label: ${docs.count()} docs, scan stats $stats bytes, " +
-        s"q29 gate -> ${if (stats <= BigInt(1L << 30)) "broadcast"
-          else "shuffled"}")
+      println(s"== $label: ${docs.count()} docs, size gate -> ${
+        if (graft.operators.SizeGate.small(docs)) "broadcast" else "shuffled"}")
       for ((name, op) <- opsRun) {
         op(docs).write.format("noop").mode("overwrite")
           .save() // warm: codegen+JIT compile out of the timing

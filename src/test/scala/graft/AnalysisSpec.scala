@@ -123,10 +123,9 @@ class AnalysisSpec extends SparkSpec {
 
   test("tokenizerFertility shuffled-join fallback equals the broadcast path") {
     val d = docs(Seq((1L, "the cat sat", "en"), (2L, "?? !!", "xx")))
-    val a = Analysis.tokenizerFertility(d,
-        broadcastEncodings = Some(true)).orderBy("lang").collect().toSeq
-    val b = Analysis.tokenizerFertility(d,
-        broadcastEncodings = Some(false)).orderBy("lang").collect().toSeq
+    val a = Analysis.tokenizerFertility(d).orderBy("lang").collect().toSeq
+    val b = Analysis.tokenizerFertility(pastGate(d))
+      .orderBy("lang").collect().toSeq
     assert(a == b)
   }
 

@@ -428,25 +428,20 @@ class OperatorsSpec extends SparkSpec {
     def rows(df: org.apache.spark.sql.DataFrame) =
       df.collect().map(_.toSeq).toSeq
         .sortBy(_.head.asInstanceOf[Long])
-    val cFused = rows(graft.operators.TextOps.contamination(d,
-      fusedProbe = Some(true)))
-    val cJoinB = rows(graft.operators.TextOps.contamination(d,
-      fusedProbe = Some(false), broadcastIndex = Some(true)))
-    val cJoinS = rows(graft.operators.TextOps.contamination(d,
-      fusedProbe = Some(false), broadcastIndex = Some(false)))
-    assert(cFused == cJoinB && cFused == cJoinS,
-      s"contamination paths diverge:\n$cFused\n$cJoinB\n$cJoinS")
+    // fused under the size gate, index join past it
+    val cFused = rows(graft.operators.TextOps.contamination(d))
+    val cJoin = rows(graft.operators.TextOps.contamination(pastGate(d)))
+    assert(cFused == cJoin,
+      s"contamination paths diverge:\n$cFused\n$cJoin")
     assert(cFused.nonEmpty, "fixture should have contaminated docs")
 
-    val dFused = rows(graft.operators.TextOps.decontaminate(d,
-      fusedProbe = Some(true)))
-    val dJoin = rows(graft.operators.TextOps.decontaminate(d,
-      fusedProbe = Some(false)))
+    val dFused = rows(graft.operators.TextOps.decontaminate(d))
+    val dJoin = rows(graft.operators.TextOps.decontaminate(pastGate(d)))
     assert(dFused == dJoin,
       s"decontaminate paths diverge:\n$dFused\n$dJoin")
     // the fused plan is the point: no join, no shuffle, map-only
-    val plan = graft.operators.TextOps.decontaminate(d,
-      fusedProbe = Some(true)).queryExecution.executedPlan.toString
+    val plan = graft.operators.TextOps.decontaminate(d)
+      .queryExecution.executedPlan.toString
     assert(!plan.contains("Join") && !plan.contains("Exchange"),
       s"fused decontaminate should be map-only:\n$plan")
   }
@@ -745,11 +740,32 @@ class OperatorsSpec extends SparkSpec {
     assert(got == want)
   }
 
+  test("probeTrain counts a null-text doc by its bias row, as the oracle does") {
+    // the q102/q110 oracle's feature list for a null text is
+    // list_concat([0], NULL) = [0]: the doc keeps its bias occurrence
+    // and counts in the divisor — exactly what an empty text gives
+    val docs = Seq[(Long, Option[String], String)](
+      (1L, Some("alpha beta gamma delta"), "en"),
+      (2L, Some("beta gamma alpha"), "en"),
+      (3L, Some("eta theta zeta eta"), "de"),
+      (4L, None, "en"),
+      (5L, Some("gamma delta eps"), "zh"))
+    def train(rows: Seq[(Long, Option[String], String)]): Seq[Long] =
+      TextOps.probeTrain(rows.toDF("doc_id", "text", "lang"), buckets = 8,
+          iters = 3)
+        .as[(Int, Long)].collect().sortBy(_._1).map(_._2).toSeq
+    val withNull = train(docs)
+    val withEmpty = train(docs.map { case (id, t, l) =>
+      (id, t.orElse(Some("")), l) })
+    assert(withNull == withEmpty,
+      s"null text dropped from the divisor: $withNull vs $withEmpty")
+  }
+
   test("BPE encode: shuffled vocab-join fallback returns identical counts") {
     val docs = graft.core.Tables.documents(spark, "/root/testdata/sf0.001")
-    val viaB = TextOps.bpeEncode(docs, broadcastVocab = Some(true))
+    val viaB = TextOps.bpeEncode(docs)
       .as[(Long, Long, Long)].collect().sortBy(_._1).toSeq
-    val viaS = TextOps.bpeEncode(docs, broadcastVocab = Some(false))
+    val viaS = TextOps.bpeEncode(pastGate(docs))
       .as[(Long, Long, Long)].collect().sortBy(_._1).toSeq
     assert(viaB == viaS, "gate fallback must not change the encoding")
     assert(viaB.nonEmpty && viaB.forall { case (_, w, t) => t >= 1 && w >= 1 })
@@ -869,12 +885,11 @@ class OperatorsSpec extends SparkSpec {
     val want = Seq(103L, 105L)
     // saturated bloom (64 bits, 60 keys): nearly every probe is a
     // false positive — the md5 confirmation must still be exact
-    for (bc <- Seq(Some(true), Some(false), None)) {
-      val tight = Dedup.bloomAdmit(ref, batch, buckets = 1,
-        bitsPerKey = 1, numHashes = 2, expectedRefKeys = 64,
-        broadcastSmall = bc)
+    for ((path, b) <- Seq("broadcast" -> batch, "shuffled" -> pastGate(batch))) {
+      val tight = Dedup.bloomAdmit(ref, b, buckets = 1,
+        bitsPerKey = 1, numHashes = 2, expectedRefKeys = 64)
         .select("doc_id").as[Long].collect().sorted.toSeq
-      assert(tight == want, s"saturated bloom, broadcast=$bc")
+      assert(tight == want, s"saturated bloom, $path path")
     }
     val roomy = Dedup.bloomAdmit(ref, batch, expectedRefKeys = 1024)
       .select("doc_id").as[Long].collect().sorted.toSeq
@@ -1094,8 +1109,8 @@ class OperatorsSpec extends SparkSpec {
     assert(got.map(r => (r._1, r._2, r._3)).toSeq == want,
       s"got ${got.toSeq} want $want")
     // the gated model join: fallback shuffled path = broadcast path
-    val fb = TextOps.dsirSelect(docs, targetSource = "t", buckets = 64,
-      topN = 3, broadcastModel = Some(false))
+    val fb = TextOps.dsirSelect(pastGate(docs), targetSource = "t",
+      buckets = 64, topN = 3)
       .as[(Long, Long, Long, Int)].collect().sortBy(_._4)
     assert(fb.toSeq == got.toSeq)
   }
@@ -1279,9 +1294,9 @@ class OperatorsSpec extends SparkSpec {
     assert(got(2L) == ((1L, 2L, 2.0)))
     // broadcast and shuffled-join paths agree on real data
     val real = Tables.documents(spark, sf)
-    val b = TextOps.unigramSurprisal(real, broadcastVocab = Some(true))
+    val b = TextOps.unigramSurprisal(real)
       .as[(Long, Long, Long, Double)].collect().toSet
-    val s = TextOps.unigramSurprisal(real, broadcastVocab = Some(false))
+    val s = TextOps.unigramSurprisal(pastGate(real))
       .as[(Long, Long, Long, Double)].collect().toSet
     assert(b.nonEmpty && b == s)
   }
@@ -1299,9 +1314,9 @@ class OperatorsSpec extends SparkSpec {
     assert(Dedup.ngramJaccardPairs(docs, threshold = 0.8).isEmpty)
     // broadcast and shuffled lookup paths agree on real data
     val real = Tables.documents(spark, sf)
-    val bc = Dedup.containmentPairs(real, broadcastLookup = Some(true))
+    val bc = Dedup.containmentPairs(real)
       .as[(Long, Long, Double)].collect().toSet
-    val sh = Dedup.containmentPairs(real, broadcastLookup = Some(false))
+    val sh = Dedup.containmentPairs(pastGate(real))
       .as[(Long, Long, Double)].collect().toSet
     assert(bc.nonEmpty && bc == sh)
   }
@@ -1600,7 +1615,7 @@ class OperatorsSpec extends SparkSpec {
     val real = Tables.documents(spark, sf)
     val bc = TextOps.subwordEncode(real).collect()
       .map(r => r.getLong(0) -> r.toSeq).toMap
-    val sh = TextOps.subwordEncode(real, broadcastEncodings = Some(false))
+    val sh = TextOps.subwordEncode(pastGate(real))
       .collect().map(r => r.getLong(0) -> r.toSeq).toMap
     assert(bc == sh)
     // the UDF runs on the distinct-word table, never the token scale:
@@ -1738,10 +1753,9 @@ class OperatorsSpec extends SparkSpec {
     // join really shuffles, and returns the same rows
     spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
     try {
-      val shuffled = TextOps.tokenizerDiff(d,
+      val shuffled = TextOps.tokenizerDiff(pastGate(d),
           vocabA = Seq("a", "b", "c"),
-          vocabB = Seq("a", "b", "c", "ab", "abc"),
-          broadcastEncodings = Some(false))
+          vocabB = Seq("a", "b", "c", "ab", "abc"))
       assert(!shuffled.queryExecution.executedPlan.toString
         .split("== Initial Plan ==")(0).contains("BroadcastHashJoin"))
       assert(shuffled.orderBy("source")
@@ -1829,7 +1843,7 @@ class OperatorsSpec extends SparkSpec {
     val natGot = Dedup.leakageScrub(nat)
       .select("doc_id").as[Long].collect().toSet
     assert(natGot == all -- drop)
-    assert(natGot == Dedup.leakageScrub(nat, broadcastDrop = Some(false))
+    assert(natGot == Dedup.leakageScrub(pastGate(nat))
       .select("doc_id").as[Long].collect().toSet)
   }
 
@@ -2450,5 +2464,18 @@ class OperatorsSpec extends SparkSpec {
         s"$kind: got ${got(kind)}, want dropped=$d of $total")
       assert(d > 0, s"$kind dedup dropped nothing — funnel vacuous")
     }
+  }
+
+  test("media curation funnel still runs after a failed call in the same session") {
+    // a null doc_id fails every modality arm in its tasks, so the
+    // failed call cancels its arms' job groups, future jobs included;
+    // the next call runs under fresh group ids and must not inherit
+    // that cancel
+    val bad = Seq(Some(1L), None).toDF("doc_id")
+    intercept[Exception](Multimodal.mediaCurationFunnel(bad).collect())
+    val docs = Tables.documents(spark, sf)
+    val got = Multimodal.mediaCurationFunnel(docs).collect()
+    assert(got.map(_.getString(0)).toSet == Set("image", "audio", "video"))
+    assert(got.forall(_.getLong(1) == docs.count()))
   }
 }

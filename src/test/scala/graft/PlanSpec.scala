@@ -102,16 +102,14 @@ class PlanSpec extends SparkSpec {
     // small corpus → auto path broadcasts the word-set lookups
     val auto = planOf(Dedup.ngramJaccardPairs(docs))
     assert(auto.contains("BroadcastHashJoin"), s"no broadcast join:\n$auto")
-    // forced fallback (what the gate picks past MaxBroadcastSourceBytes):
-    // no broadcast HINT on the word sets. At sf0.001 Catalyst's real
-    // stats still auto-broadcast the tiny sides, so mimic at-scale
-    // stats (nothing auto-broadcastable) to see the fallback shape.
-    val fb = Dedup.ngramJaccardPairs(docs, broadcastLookup = Some(false))
+    // past the size gate: no broadcast HINT on the word sets. At
+    // sf0.001 Catalyst's real stats still auto-broadcast the tiny
+    // sides, so mimic at-scale stats (nothing auto-broadcastable) to
+    // see the fallback shape.
+    val fb = Dedup.ngramJaccardPairs(pastGate(docs))
     spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
     try {
-      val fbPlan = planOf(
-          Dedup.ngramJaccardPairs(docs, broadcastLookup = Some(false)))
-        .split("== Initial Plan ==")(0)
+      val fbPlan = planOf(fb).split("== Initial Plan ==")(0)
       assert(!fbPlan.contains("BroadcastHashJoin"),
         s"fallback still broadcasts:\n$fbPlan")
       assert(fbPlan.contains("SortMergeJoin") ||
@@ -121,19 +119,17 @@ class PlanSpec extends SparkSpec {
     import spark.implicits._
     def rows(df: org.apache.spark.sql.DataFrame) =
       df.as[(Long, Long, Double)].collect().toSet
-    assert(rows(fb) == rows(Dedup.ngramJaccardPairs(docs,
-      broadcastLookup = Some(true))))
+    assert(rows(fb) == rows(Dedup.ngramJaccardPairs(docs)))
   }
 
   test("keeper-selection group broadcast is size-gated with a shuffled-join fallback") {
     val docs = Tables.documents(spark, sf)
-    // forced fallback (what the gate picks past MaxBroadcastSourceBytes):
-    // no broadcast hint on the group table; with auto-broadcast off (to
-    // mimic at-scale stats) the quality⋈groups join must go shuffled
+    // past the size gate: no broadcast hint on the group table; with
+    // auto-broadcast off (to mimic at-scale stats) the quality⋈groups
+    // join must go shuffled
     spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
     try {
-      val fbPlan = planOf(
-          Dedup.dedupKeepers(docs, broadcastGroups = Some(false)))
+      val fbPlan = planOf(Dedup.dedupKeepers(pastGate(docs)))
         .split("== Initial Plan ==")(0)
       assert(!fbPlan.contains("BroadcastHashJoin"),
         s"fallback still broadcasts:\n$fbPlan")
@@ -144,8 +140,8 @@ class PlanSpec extends SparkSpec {
     import spark.implicits._
     def rows(df: org.apache.spark.sql.DataFrame) =
       df.as[(Long, Long, Long)].collect().toSet
-    assert(rows(Dedup.dedupKeepers(docs, broadcastGroups = Some(false))) ==
-      rows(Dedup.dedupKeepers(docs, broadcastGroups = Some(true))))
+    assert(rows(Dedup.dedupKeepers(pastGate(docs))) ==
+      rows(Dedup.dedupKeepers(docs)))
   }
 
   test("gates flip from scan stats alone") {
@@ -154,29 +150,49 @@ class PlanSpec extends SparkSpec {
     // source-stats gate must pick its past-broadcast fallback on its
     // own, with no override, while the data stays suite-sized.
     val docs = Tables.documents(spark, sf)
-    val big = spark.createDataFrame(docs.rdd, docs.schema)
-    assert(!Dedup.wouldBroadcastSource(big), "gate still broadcasts")
-    assert(Dedup.wouldBroadcastSource(docs), "gate shuffles a small scan")
-    val ops: Seq[(String, DataFrame => DataFrame)] = Seq(
-      "q29" -> (d => Dedup.ngramJaccardPairs(d, 0.8)),
-      "q53" -> (d => Dedup.dedupKeepers(d)),
-      "q43" -> (d => Dedup.dedupApply(d)),
-      "q55" -> (d => TextOps.contamination(d)),
-      "q97" -> (d => TextOps.subwordEncode(d)),
-      "q64" -> (d => Dedup.dupSources(d)))
+    val big = pastGate(docs)
+    assert(!SizeGate.small(big), "gate still broadcasts")
+    assert(SizeGate.small(docs), "gate shuffles a small scan")
+    import org.apache.spark.sql.functions.{col, lit, pmod}
+    // q77/q78's fit/score split, as their driver queries build it
+    def split(d: DataFrame): (DataFrame, DataFrame) =
+      (d.filter(pmod(col("doc_id"), lit(10)) < 8),
+        d.filter(pmod(col("doc_id"), lit(10)) >= 8))
+    // every gated driver query's operator, with the broadcast hash
+    // joins it keeps past the gate: q78's bloom bitsets (one row per
+    // bucket) and q83's top-N ids are model-sized and never gated
+    val ops: Seq[(String, Int, DataFrame => DataFrame)] = Seq(
+      ("q29", 0, d => Dedup.ngramJaccardPairs(d, 0.8)),
+      ("q43", 0, d => Dedup.dedupApply(d)),
+      ("q53", 0, d => Dedup.dedupKeepers(d)),
+      ("q55", 0, d => TextOps.contamination(d)),
+      ("q64", 0, d => Dedup.dupSources(d)),
+      ("q65", 0, d => TextOps.unigramSurprisal(d)),
+      ("q66", 0, d => Dedup.containmentPairs(d, 0.9)),
+      ("q77", 0, d => { val (r, s) = split(d); TextOps.bigramSurprisal(r, s) }),
+      ("q78", 1, d => { val (r, b) = split(d); Dedup.bloomAdmit(r, b) }),
+      ("q83", 1, d => TextOps.dsirSelect(d)),
+      ("q97", 0, d => TextOps.subwordEncode(d)),
+      ("q103", 0, d => TextOps.bpeEncode(d)),
+      ("q106", 0, d => Analysis.tokenizerFertility(d)),
+      ("q123", 0, d => TextOps.unigramTokenize(d)),
+      ("q125", 0, d => TextOps.decontaminate(d)),
+      ("q128", 0, d => Dedup.jaccardProfile(d)),
+      ("q131", 0, d => Dedup.leakageScrub(d)),
+      ("q132", 0, d => TextOps.tokenizerDiff(d)))
     // auto-broadcast off (the discipline above): a shuffled join is
     // the gate's own fallback, not Spark's size-based choice
     spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
-    try for ((q, op) <- ops) {
+    try for ((q, kept, op) <- ops) {
       val plan = planOf(op(big)).split("== Initial Plan ==")(0)
-      assert(!plan.contains("BroadcastHashJoin") &&
+      assert("BroadcastHashJoin".r.findAllIn(plan).size == kept &&
         (plan.contains("SortMergeJoin") || plan.contains("ShuffledHashJoin")),
         s"$q did not flip to shuffled joins:\n$plan")
     } finally spark.conf.unset("spark.sql.autoBroadcastJoinThreshold")
     // the fallback computes the broadcast path's rows
     def rows(df: DataFrame): Seq[String] =
       df.collect().map(_.toString).sorted.toSeq
-    for ((q, op) <- ops)
+    for ((q, _, op) <- ops)
       assert(rows(op(big)) == rows(op(docs)), s"$q: fallback rows differ")
   }
 
@@ -208,15 +224,16 @@ class PlanSpec extends SparkSpec {
     assert(!conPlan.contains("Join") &&
       exchanges(TextOps.contamination(Tables.documents(spark, sf))) == 0,
       s"fused contamination should be map-only:\n$conPlan")
-    // past-the-gate fallback keeps the join shape: benchmark index
-    // broadcast; training side only shuffles once, for its final
-    // per-doc count
-    val conJoin = planOf(TextOps.contamination(Tables.documents(spark, sf),
-      fusedProbe = Some(false)))
-    assert(conJoin.contains("BroadcastHashJoin"), s"no broadcast:\n$conJoin")
-    assert(exchanges(TextOps.contamination(Tables.documents(spark, sf),
-        fusedProbe = Some(false))) == 2,
-      s"expected bench-distinct + per-doc count exchanges only:\n$conJoin")
+    // past the gate the index cannot freeze on the driver: both sides
+    // shuffle on the gram hash into one sort-merge join, and the
+    // per-doc count adds the only other exchange
+    val conJoinDf = TextOps.contamination(pastGate(Tables.documents(spark, sf)))
+    val conJoin = planOf(conJoinDf)
+    assert(!conJoin.contains("BroadcastHashJoin") &&
+      conJoin.contains("SortMergeJoin"), s"not a shuffled join:\n$conJoin")
+    assert(exchanges(conJoinDf) == 3,
+      s"expected bench-distinct, train-gram and per-doc count exchanges " +
+        s"only:\n$conJoin")
   }
 
   test("round-5 queries keep their scale shapes") {
@@ -362,12 +379,10 @@ class PlanSpec extends SparkSpec {
     // stats would still auto-broadcast, so mimic at-scale stats
     spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
     try {
-      val surFb = planOf(TextOps.unigramSurprisal(docs,
-        broadcastVocab = Some(false)))
+      val surFb = planOf(TextOps.unigramSurprisal(pastGate(docs)))
       assert(surFb.contains("SortMergeJoin") ||
         surFb.contains("ShuffledHashJoin"), s"no shuffled fallback:\n$surFb")
-      val conFb = planOf(Dedup.containmentPairs(docs,
-        broadcastLookup = Some(false)))
+      val conFb = planOf(Dedup.containmentPairs(pastGate(docs)))
       assert(conFb.contains("SortMergeJoin") ||
         conFb.contains("ShuffledHashJoin"), s"no shuffled fallback:\n$conFb")
     } finally spark.conf.unset("spark.sql.autoBroadcastJoinThreshold")
@@ -543,8 +558,7 @@ class PlanSpec extends SparkSpec {
     assert(!auto.contains("Window"), auto)
     spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
     try {
-      val fbPlan = planOf(
-          Dedup.jaccardProfile(docs, broadcastLookup = Some(false)))
+      val fbPlan = planOf(Dedup.jaccardProfile(pastGate(docs)))
         .split("== Initial Plan ==")(0)
       assert(!fbPlan.contains("BroadcastHashJoin"),
         s"fallback still broadcasts:\n$fbPlan")
@@ -555,8 +569,8 @@ class PlanSpec extends SparkSpec {
     import spark.implicits._
     def rows(df: org.apache.spark.sql.DataFrame) =
       df.as[(Long, Long, Long)].collect().toSet
-    assert(rows(Dedup.jaccardProfile(docs, broadcastLookup = Some(false))) ==
-      rows(Dedup.jaccardProfile(docs, broadcastLookup = Some(true))))
+    assert(rows(Dedup.jaccardProfile(pastGate(docs))) ==
+      rows(Dedup.jaccardProfile(docs)))
   }
 
   test("image dHash pairs: payload bytes never shuffle — one exchange " +

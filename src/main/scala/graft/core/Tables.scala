@@ -2,6 +2,7 @@ package graft.core
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.StructType
 
 /** Typed loaders for the driver-generated TPC-H-ish parquet tables
   * (see /root/repo/TESTDATA.md). All loaders are plain parquet scans so
@@ -12,7 +13,45 @@ object Tables {
 
   private def read(spark: SparkSession, dir: String, name: String): DataFrame = {
     GraftSession.configure(spark)
-    spark.read.parquet(path(dir, name))
+    val p = path(dir, name)
+    val key = fileKey(spark, p)
+    key.flatMap(k => Option(schemas.get(k))) match {
+      case Some(schema) => spark.read.schema(schema).parquet(p)
+      case None =>
+        // first read, or an unlistable path that Spark then reports
+        val df = spark.read.parquet(p)
+        key.foreach(schemas.put(_, df.schema))
+        df
+    }
+  }
+
+  /** Inferred schemas by [[fileKey]]. Inferring a parquet schema runs
+    * one Spark job (a footer read) per `spark.read.parquet` call; a
+    * warm read of unchanged files skips it. */
+  private val schemas =
+    new java.util.concurrent.ConcurrentHashMap[FileKey, StructType]()
+
+  private type FileKey = (Seq[(String, Long, Long)], Seq[(String, String)])
+
+  /** What a parquet read's inferred schema depends on: the canonical
+    * path, length and mtime of the file (or of each file directly in
+    * the directory), and the session's parquet read confs. None when
+    * the path cannot be listed. */
+  private def fileKey(spark: SparkSession, p: String): Option[FileKey] = {
+    import org.apache.hadoop.fs.Path
+    try {
+      val hp = new Path(p)
+      val fs = hp.getFileSystem(spark.sparkContext.hadoopConfiguration)
+      val st = fs.getFileStatus(hp)
+      val files = if (st.isDirectory) fs.listStatus(hp).toSeq else Seq(st)
+      val confs = spark.conf.getAll.filter { case (k, _) =>
+        k.startsWith("spark.sql.parquet.") || k.startsWith("spark.sql.legacy.parquet.")
+      }
+      Some((files.map(f => (fs.makeQualified(f.getPath).toString, f.getLen,
+        f.getModificationTime)).sortBy(_._1), confs.toSeq.sorted))
+    } catch {
+      case _: java.io.IOException => None
+    }
   }
 
   def region(s: SparkSession, d: String): DataFrame   = read(s, d, "region")

@@ -3,6 +3,7 @@ package graft.functions
 import org.apache.spark.sql.Column
 import org.apache.spark.sql.catalyst.expressions.{ExpectsInputTypes, Expression, UnaryExpression}
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
+import org.apache.spark.sql.catalyst.expressions.UnsafeArrayData
 import org.apache.spark.sql.catalyst.util.{ArrayData, GenericArrayData}
 import org.apache.spark.sql.types.{ArrayType, DataType, LongType, StringType}
 import org.apache.spark.unsafe.types.UTF8String
@@ -140,6 +141,94 @@ object WordShingles {
   }
 }
 
+/** Per-row MinHash signature of a shingle array as ONE generated
+  * call: every non-null shingle is hashed once with the 32-bit md5
+  * prefix ([[Md5PrefixLong]] at 8 nibbles, i.e. Portable.hash32) and
+  * element i is the min over shingles of `(a_i·h + b_i) mod p`. A
+  * null input, or one with no non-null shingle, yields null. Repeated
+  * shingles change nothing: min is idempotent.
+  *
+  * Per row, the signature is a map: a consumer keyed on something
+  * else (band keys) shuffles once, with no aggregate on doc_id first —
+  * one stage less for a scheduler-bound query to wait on. Per-row
+  * semantics are what the oracle's `sig` CTE computes; they equal a
+  * per-doc aggregate only while doc_id is unique per input.
+  *
+  * Coefficients are plan constants: 0 ≤ a_i, b_i < 2³¹ and 0 < p,
+  * so `a_i·h + b_i` never overflows a long and `%` equals `pmod`.
+  */
+case class MinHashMins(child: Expression, a: Array[Long], b: Array[Long],
+                       p: Long) extends UnaryExpression with ExpectsInputTypes {
+  require(a.nonEmpty && a.length == b.length,
+    s"need as many a as b coefficients: ${a.length} vs ${b.length}")
+  require(p > 0 && (a ++ b).forall(c => c >= 0 && c < (1L << 31)),
+    "coefficients must lie in [0, 2^31) and p must be positive")
+
+  override def inputTypes = Seq(ArrayType(StringType))
+
+  override def dataType: DataType = ArrayType(LongType, containsNull = false)
+
+  override def nullable: Boolean = true
+
+  override def nullSafeEval(v: Any): Any =
+    MinHashMins.mins(v.asInstanceOf[ArrayData], a, b, p)
+
+  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
+    nullSafeCodeGen(ctx, ev, v => {
+      val ar = ctx.addReferenceObj("mhA", a, "long[]")
+      val br = ctx.addReferenceObj("mhB", b, "long[]")
+      s"""${ev.value} = graft.functions.MinHashMins.mins($v, $ar, $br, ${p}L);
+         |${ev.isNull} = ${ev.value} == null;""".stripMargin
+    })
+
+  // plan strings show the family size, not two array references
+  override def stringArgs: Iterator[Any] = Iterator(child, s"k=${a.length}", p)
+
+  // arrays compare by reference by default, which would make
+  // canonicalization (and with it exchange reuse) miss two
+  // structurally identical nodes — compare contents
+  override def equals(o: Any): Boolean = o match {
+    case that: MinHashMins =>
+      child == that.child && p == that.p &&
+        java.util.Arrays.equals(a, that.a) && java.util.Arrays.equals(b, that.b)
+    case _ => false
+  }
+  override def hashCode(): Int =
+    31 * (31 * (31 * child.hashCode() + java.util.Arrays.hashCode(a)) +
+      java.util.Arrays.hashCode(b)) + java.lang.Long.hashCode(p)
+
+  override protected def withNewChildInternal(newChild: Expression): Expression =
+    copy(child = newChild)
+}
+
+object MinHashMins {
+
+  /** The k running mins of one row, or null when it has no non-null
+    * shingle; shared by both evaluation paths. */
+  def mins(shingles: ArrayData, a: Array[Long], b: Array[Long],
+           p: Long): ArrayData = {
+    val k = a.length
+    val out = Array.fill(k)(Long.MaxValue)
+    val n = shingles.numElements()
+    var seen = false
+    var i = 0
+    while (i < n) {
+      if (!shingles.isNullAt(i)) {
+        seen = true
+        val h = Md5PrefixLong.prefix(shingles.getUTF8String(i), 8)
+        var j = 0
+        while (j < k) {
+          val v = (a(j) * h + b(j)) % p
+          if (v < out(j)) out(j) = v
+          j += 1
+        }
+      }
+      i += 1
+    }
+    if (seen) UnsafeArrayData.fromPrimitiveArray(out) else null
+  }
+}
+
 object HashExpressions {
   import org.apache.spark.sql.graftbridge.ColumnBridge
 
@@ -150,4 +239,9 @@ object HashExpressions {
   /** Space-joined n-gram shingles in one pass (see [[WordShingles]]). */
   def wordShingles(tokens: Column, n: Int): Column =
     ColumnBridge.column(WordShingles(ColumnBridge.expression(tokens), n))
+
+  /** Per-row MinHash mins of a shingle array (see [[MinHashMins]]). */
+  def minhashMins(shingles: Column, a: Array[Long], b: Array[Long],
+                  p: Long): Column =
+    ColumnBridge.column(MinHashMins(ColumnBridge.expression(shingles), a, b, p))
 }

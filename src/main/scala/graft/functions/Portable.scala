@@ -89,6 +89,18 @@ object Portable {
   def shingles(tokens: Column, n: Int): Column =
     HashExpressions.wordShingles(tokens, n)
 
+  /** Per-row MinHash signature of a shingle array: element i is the
+    * min over the row's non-null shingles s of
+    * `(a_i·hash32(s) + b_i) mod p`; null when the row has no shingle.
+    * One generated node ([[MinHashMins]]) — no explode, no aggregate,
+    * so a consumer never shuffles on doc_id to build a signature.
+    * DuckDB: `list_transform(generate_series(0, k - 1), i -> list_min(
+    *            list_transform(sh, s -> (a[i + 1] * h32(s) + b[i + 1]) % p)))`
+    * over `sh` with at least one element (`list_min([])` is NULL).
+    */
+  def minhash(shingles: Column, a: Array[Long], b: Array[Long], p: Long): Column =
+    HashExpressions.minhashMins(shingles, a, b, p)
+
   /** Exact decimal view of a double metric column: per-row cast is
     * deterministic (nearest-decimal of an identical double), and the
     * subsequent SUM is exact integer arithmetic — hence independent of

@@ -9,13 +9,12 @@ import graft.functions.Portable._
   * `documents`. Scale design notes (100 TB):
   *   - exact dedup: hash-groupBy on a 128-bit content address — one
   *     shuffle of (hash, id), never of the payload;
-  *   - MinHash/LSH: candidate pairs come from equi-joining on band
-  *     keys (bucket join) — the only scalable alternative to O(n²)
-  *     all-pairs. One md5 per shingle, then k affine transforms
-  *     (a·h+b mod p) form the hash family — not k md5 passes. The
-  *     banded projection is repartitioned on the join keys so the
-  *     self-join's two sides reuse ONE shuffle (ReuseExchange) instead
-  *     of recomputing signatures per side;
+  *   - MinHash/LSH: candidate pairs come from grouping docs by band
+  *     key (one bucket aggregate) — the only scalable alternative to
+  *     O(n²) all-pairs. One md5 per shingle, then k affine transforms
+  *     (a·h+b mod p) form the hash family — not k md5 passes — all in
+  *     one per-row codegen node ([[graft.functions.MinHashMins]]), so
+  *     the signature is a map and the band key is the first shuffle;
   *   - SimHash: the 32-bit fingerprint is computed by exploding
   *     token hashes and running 32 vectorized ±1 sums in a single
   *     hash aggregate (whole-stage codegen) — not a nested
@@ -29,7 +28,7 @@ import graft.functions.Portable._
   */
 object Dedup extends graft.QueryModule {
 
-  private val P = 1000000007L
+  private[graft] val P = 1000000007L
 
   /** Default in-bucket population cap for the LSH-style candidate ops
     * (q26/q28/q29): a bucket shared by more docs than this is a
@@ -41,14 +40,14 @@ object Dedup extends graft.QueryModule {
   /** Affine hash-family coefficients, derived from md5 so the oracle
     * can inline the identical literals. a ∈ [1, 2^30), b ∈ [0, p):
     * a·h32 + b < 2^62 — no 64-bit overflow on either engine. */
-  private[operators] def h32Scala(s: String): Long = {
+  private[graft] def h32Scala(s: String): Long = {
     val d = java.security.MessageDigest.getInstance("MD5")
       .digest(s.getBytes("UTF-8"))
     java.lang.Long.parseLong(d.take(4).map(b => f"${b & 0xff}%02x").mkString, 16)
   }
-  private[operators] val coefA: Array[Long] =
+  private[graft] val coefA: Array[Long] =
     Array.tabulate(16)(i => h32Scala(s"a$i") % 1073741789L + 1)
-  private[operators] val coefB: Array[Long] =
+  private[graft] val coefB: Array[Long] =
     Array.tabulate(16)(i => h32Scala(s"b$i") % P)
 
   /** Exact dedup groups: content-md5 → canonical (min) doc_id + group
@@ -91,23 +90,19 @@ object Dedup extends graft.QueryModule {
       .filter(col("n_variants") > 1)
   }
 
-  /** doc_id + per-seed min columns m0..m{k-1}: shingles exploded once,
-    * then k mins in ONE vectorized hash aggregate (whole-stage
-    * codegen) — a nested HOF fold would interpret k×|shingles| lambda
-    * calls per document. */
-  private def minhashMins(documents: DataFrame, k: Int): DataFrame = {
+  /** Per-row MinHash signature of `text`'s 3-word shingles — the k
+    * hashes of the affine family above, one generated node per row
+    * ([[graft.functions.MinHashMins]]): no explode, no aggregate, so
+    * no consumer shuffles on doc_id to build it. Null for a null text
+    * or one with fewer than 3 words. The signature is per ROW, which
+    * is what the oracles' `sig` CTE computes: doc_id must be unique
+    * per input.
+    * DuckDB: `list_transform(generate_series(0, k - 1), i -> list_min(
+    *   list_transform(sh, s -> (a[i + 1] * h32(s) + b[i + 1]) % p)))`
+    */
+  private def minhashSig(text: Column, k: Int): Column = {
     require(k <= 16, "coefficient table has 16 entries")
-    // materialize the token array first: inside a HOF lambda there is
-    // no common-subexpression reuse, so shingling words(text) directly
-    // would re-run the regex split per element_at reference
-    val exploded = documents
-      .select(col("doc_id"), words(col("text")).as("w"))
-      .select(col("doc_id"), explode_outer(shingles(col("w"), 3)).as("s"))
-      .filter(col("s").isNotNull)
-      .select(col("doc_id"), hash32(col("s")).as("h"))
-    val mins = (0 until k).map(i =>
-      min(pmod(lit(coefA(i)) * col("h") + lit(coefB(i)), lit(P))).as(s"m$i"))
-    exploded.groupBy(col("doc_id")).agg(mins.head, mins.tail: _*)
+    minhash(shingles(words(text), 3), coefA.take(k), coefB.take(k), P)
   }
 
   /** MinHash signature of `k` hashes over 3-word shingles: one 32-bit
@@ -117,8 +112,11 @@ object Dedup extends graft.QueryModule {
     * than 3 words have no shingles and drop out.
     */
   def minhashSignature(documents: DataFrame, k: Int): DataFrame =
-    minhashMins(documents, k).select(col("doc_id"),
-      array((0 until k).map(i => col(s"m$i")): _*).as("sig"))
+    documents.select(col("doc_id"), minhashSig(col("text"), k).as("sig"))
+      // a one-element explode drops the null rows: a filter would be
+      // pushed below the projection and run the kernel twice per row
+      .select(col("doc_id"),
+        explode(when(col("sig").isNotNull, array(col("sig")))).as("sig"))
 
   /** All unordered (ids[i], ids[j]) pairs, i < j, of a pre-sorted
     * array — the in-bucket pair generator shared by the LSH-style
@@ -143,26 +141,30 @@ object Dedup extends graft.QueryModule {
   private[operators] def sortedPairs(ids: Column): Column =
     graft.functions.VectorExpressions.sortedArrayPairs(ids)
 
+  /** Band `b`'s key of a signature: its rows b·r … b·r+r−1 joined
+    * with "|" as decimal strings. */
+  private def bandKey(sig: Column, b: Int, r: Int): Column =
+    concat_ws("|", (b * r until (b + 1) * r).map(i => sig(i).cast("string")): _*)
+
+  /** (doc_id, band_idx, band_key) rows of the banded MinHash
+    * signature — the LSH keying of [[minhashPairs]] and
+    * [[dupRateEstimate]]. Map-only. Documents with < 3 words have no
+    * signature and produce no rows. */
+  private def bandedKeys(documents: DataFrame, k: Int,
+                         bands: Int): DataFrame = {
+    val r = k / bands
+    val sig = col("sig")
+    documents.select(col("doc_id"), minhashSig(col("text"), k).as("sig"))
+      .select(col("doc_id"), posexplode(when(sig.isNotNull,
+        array((0 until bands).map(b => bandKey(sig, b, r)): _*))))
+      .toDF("doc_id", "band_idx", "band_key")
+  }
+
   /** LSH candidate pairs: split the k-element signature into `bands`
     * bands of k/bands rows, key each band by its joined slice, group
     * docs by band key, and emit in-bucket pairs. Emits each unordered
     * pair once with the number of matching bands.
     */
-  /** (doc_id, band_idx, band_key) rows of the banded MinHash
-    * signature — the LSH keying shared by [[minhashPairs]] and
-    * [[incrementalAdmit]]. Documents with < 3 words have no shingles
-    * and produce no rows. */
-  private def bandedKeys(documents: DataFrame, k: Int,
-                         bands: Int): DataFrame = {
-    val r = k / bands
-    minhashMins(documents, k).select(
-        col("doc_id"),
-        posexplode(array((0 until bands).map(b =>
-          concat_ws("|", (b * r until (b + 1) * r).map(i =>
-            col(s"m$i").cast("string")): _*)): _*)))
-      .toDF("doc_id", "band_idx", "band_key")
-  }
-
   def minhashPairs(documents: DataFrame, k: Int = 16, bands: Int = 4,
                    maxBucket: Int = DefaultMaxBucket): DataFrame = {
     val banded = bandedKeys(documents, k, bands)
@@ -718,46 +720,68 @@ object Dedup extends graft.QueryModule {
     * standard trade for a one-pass parallel admission — no
     * sequential dependence, so 1000 executors admit independently.
     *
-    * Scale shape: the reference corpus' text never moves — it is
-    * reduced map-side to 16-byte content hashes and band keys, and
-    * every test is a key-partitioned semi/anti-join on those keys
-    * (hash, band) with the batch side. No pairs are enumerated at
-    * all; the stop-band cap bounds the only skew surface.
+    * Scale shape: one map-only projection over BOTH sides computes
+    * each doc's content md5 and its per-row MinHash signature, and
+    * explodes them into keys — `(-1, md5)` for every doc, plus
+    * `(band_idx, band_key)` per band when it has a signature. ONE
+    * aggregate on that key gives every test: the reference count
+    * `n_ref` and the batch ids of each key, and from them
+    *   T1: a content key with `n_ref = 0` (or a null md5) admits its
+    *       min batch id;
+    *   T2: a band key with `n_ref` in 1..maxBucket rejects its ids;
+    *   T3: the other band keys with ≥ 2 batch ids are regrouped over
+    *       the T1∩T2 survivors.
+    * The reference corpus' text never moves — only keys and ids
+    * shuffle, once — and no pairs are enumerated; the stop-band cap
+    * bounds the only skew surface. doc_id must be unique per input.
+    * DuckDB: the q73 oracle's `sig` CTE is this signature
+    * ([[minhashSig]]), row for row.
     */
   def incrementalAdmit(reference: DataFrame, batch: DataFrame,
                        k: Int = 16, bands: Int = 4,
                        maxBucket: Int = DefaultMaxBucket): DataFrame = {
-    val refMd5 = reference.select(md5(normText(col("text"))).as("h")).distinct()
-    val batchMd5 = batch.select(col("doc_id"), md5(normText(col("text"))).as("h"))
-    // T1: first batch holder of a content hash unseen in the reference
-    val t1 = batchMd5
-      .groupBy(col("h")).agg(min(col("doc_id")).as("doc_id"))
-      .join(refMd5, Seq("h"), "left_anti")
-      .select(col("doc_id"))
-    // T2: reference band set (stop-bands dropped in the same agg that
-    // builds it), anti-joined against the batch's bands
-    val refBands = bandedKeys(reference, k, bands)
+    val r = k / bands
+    def side(df: DataFrame, ref: Boolean): DataFrame =
+      df.select(lit(ref).as("ref"), col("doc_id"), col("text"))
+    val docs = side(reference, ref = true).unionByName(side(batch, ref = false))
+      .select(col("ref"), col("doc_id"), md5(normText(col("text"))).as("md5"),
+        minhashSig(col("text"), k).as("sig"))
+    def key(idx: Int, value: Column): Column =
+      struct(lit(idx).as("band_idx"), value.as("band_key"))
+    val md5Key = array(key(-1, col("md5")))
+    val keys = docs.select(col("ref"), col("doc_id"),
+      inline(when(col("sig").isNull, md5Key).otherwise(concat(md5Key,
+        array((0 until bands).map(b => key(b, bandKey(col("sig"), b, r))): _*)))))
+    val nRef = count_if(col("ref"))
+    val ids = collect_list(when(!col("ref"), col("doc_id")))
+    // each key's role is an aggregate OUTPUT: a filter conjunct on the
+    // grouping key alone would be pushed below the aggregate and split
+    // it in two (the second copy rescans and re-hashes both sides)
+    val role =
+      when(col("band_idx") < 0,
+        when((nRef === 0 || col("band_key").isNull) && size(ids) > 0, 1))
+        .when(nRef.between(1, maxBucket), 2)
+        .when(size(ids) >= 2, 3)
+    val buckets = keys
       .groupBy(col("band_idx"), col("band_key"))
-      .agg(count(lit(1)).as("n"))
-      .filter(col("n") <= maxBucket)
-      .select(col("band_idx"), col("band_key"))
-    val batchBands = bandedKeys(batch, k, bands)
-    val refCollided = batchBands
-      .join(refBands, Seq("band_idx", "band_key"), "left_semi")
-      .select(col("doc_id")).distinct()
-    val t12 = t1.join(refCollided, Seq("doc_id"), "left_anti")
+      .agg(ids.as("ids"), role.as("role"))
+    def withRole(n: Int): DataFrame = buckets.filter(col("role") === n)
+    // T1 minus T2; anti-join inputs need no distinct
+    val t12 = withRole(1).select(array_min(col("ids")).as("doc_id"))
+      .join(withRole(2).select(explode(col("ids")).as("doc_id")),
+        Seq("doc_id"), "left_anti")
     // T3: min-per-bucket among surviving batch docs; oversized buckets
     // are stop-bands here too (same cap semantics as minhashPairs)
-    val survivorBands = batchBands.join(t12, Seq("doc_id"), "left_semi")
-    val rejected = survivorBands
+    val rejected = withRole(3)
+      .select(col("band_idx"), col("band_key"), explode(col("ids")).as("doc_id"))
+      .join(t12, Seq("doc_id"), "left_semi")
       .groupBy(col("band_idx"), col("band_key"))
       .agg(array_sort(collect_list(col("doc_id"))).as("ids"))
       .filter(size(col("ids")).between(2, maxBucket))
       .select(explode_outer(slice(col("ids"), lit(2), size(col("ids"))))
         .as("doc_id"))
-      .distinct()
     // full admitted rows — callers project; the scan prunes unused
-    // columns (text is only read by the hash/band subplans above)
+    // columns (text is only read by the key projection above)
     batch
       .join(t12, Seq("doc_id"), "left_semi")
       .join(rejected, Seq("doc_id"), "left_anti")
@@ -802,8 +826,8 @@ object Dedup extends graft.QueryModule {
     val numBits = Bloom.pow2Bits(bitsPerKey * expectedRefKeys / buckets)
     val gate = SizeGate.broadcastIfSmall(batch)
     def keyed(df: DataFrame, cols: Column*): DataFrame = df.select(
-      cols :+ md5(normText(col("text"))).as("m"): _*)
-      .withColumn("h", conv(substring(col("m"), 1, 15), 16, 10).cast("long"))
+      cols :+ md5(normText(col("text"))).as("m") :+
+        hash60(normText(col("text"))).as("h"): _*)
     val refKeys = keyed(reference)
     val blooms = refKeys
       .groupBy(pmod(col("h"), lit(buckets.toLong)).as("bucket"))

@@ -1541,11 +1541,13 @@ object TextOps extends graft.QueryModule {
         typedlit(Seq.empty[Int])))
 
   /** [[probeTrain]]'s feature map — label + `[bias] ++ bucket(bigram)`
-    * occurrence ids, a pure map over the corpus (zero exchanges). */
+    * occurrence ids, a pure map over the corpus (zero exchanges). A
+    * null `lang` labels 0, as the oracle's `CASE WHEN lang = … ELSE 0`
+    * does. */
   private[graft] def probeFeatures(documents: DataFrame, buckets: Int,
                                    targetLang: String): DataFrame =
     documents.select(
-      (col("lang") === targetLang).cast("long").as("y"),
+      (col("lang") <=> targetLang).cast("long").as("y"),
       probeJs(col("text"), buckets).as("js"))
 
   /** Score documents with a trained probe ([[probeTrain]] weights):

@@ -152,20 +152,17 @@ object StreamAggs {
                        numHashes: Int = 5,
                        expectedRefKeys: Long = 1L << 20): DataFrame = {
     import graft.functions.{Aggregators, Bloom}
-    import graft.functions.Portable.normText
+    import graft.functions.Portable.{hash60, normText}
     val numBits = Bloom.pow2Bits(bitsPerKey * expectedRefKeys / buckets)
     val refKeys = reference
-      .select(md5(normText(textCol)).as("__m"))
-      .withColumn("__h",
-        conv(substring(col("__m"), 1, 15), 16, 10).cast("long"))
+      .select(md5(normText(textCol)).as("__m"), hash60(normText(textCol)).as("__h"))
     val blooms = refKeys
       .groupBy(pmod(col("__h"), lit(buckets.toLong)).as("__bucket"))
       .agg(Aggregators.bloomAgg(numBits, numHashes)(col("__h")).as("__bloom"))
       .cache()
     val tagged = stream
       .withColumn("__m", md5(normText(textCol)))
-      .withColumn("__h",
-        conv(substring(col("__m"), 1, 15), 16, 10).cast("long"))
+      .withColumn("__h", hash60(normText(textCol)))
       .withColumn("__bucket", pmod(col("__h"), lit(buckets.toLong)))
     val probed = tagged
       .join(broadcast(blooms), Seq("__bucket"), "left")

@@ -761,6 +761,24 @@ class OperatorsSpec extends SparkSpec {
       s"null text dropped from the divisor: $withNull vs $withEmpty")
   }
 
+  test("probeTrain labels a null-lang doc 0, as the oracle does") {
+    // the q102/q110 oracle labels `CASE WHEN lang = … ELSE 0`: a null
+    // lang is a negative example, exactly like any other lang
+    val docs = Seq[(Long, String, Option[String])](
+      (1L, "alpha beta gamma delta", Some("en")),
+      (2L, "beta gamma alpha", Some("en")),
+      (3L, "eta theta zeta eta", None),
+      (4L, "gamma delta eps", Some("de")))
+    def train(rows: Seq[(Long, String, Option[String])]): Seq[Long] =
+      TextOps.probeTrain(rows.toDF("doc_id", "text", "lang"), buckets = 8,
+          iters = 3)
+        .as[(Int, Long)].collect().sortBy(_._1).map(_._2).toSeq
+    val withNull = train(docs)
+    val withZz = train(docs.map { case (id, t, l) => (id, t, l.orElse(Some("zz"))) })
+    assert(withNull == withZz,
+      s"null lang is not labelled 0: $withNull vs $withZz")
+  }
+
   test("BPE encode: shuffled vocab-join fallback returns identical counts") {
     val docs = graft.core.Tables.documents(spark, "/root/testdata/sf0.001")
     val viaB = TextOps.bpeEncode(docs)
@@ -814,6 +832,84 @@ class OperatorsSpec extends SparkSpec {
     val admitted = Dedup.incrementalAdmit(ref, batch)
       .select("doc_id").as[Long].collect().sorted.toSeq
     assert(admitted == Seq(110L, 114L, 116L))
+  }
+
+  test("incremental admission equals a driver-side T1/T2/T3 reference on random corpora") {
+    import graft.functions.Portable.wordsScala
+    val k = 16
+    def md5hex(s: String) = java.security.MessageDigest.getInstance("MD5")
+      .digest(s.getBytes("UTF-8")).map(b => f"${b & 0xff}%02x").mkString
+    // per-row signature and band keys, straight from the definition
+    def bandsOf(text: String): Seq[(Int, String)] =
+      Option(text).map(wordsScala).filter(_.length >= 3).toSeq.flatMap { w =>
+        val hs = w.sliding(3).map(s => Dedup.h32Scala(s.mkString(" "))).toSeq
+        val sig = (0 until k).map(i =>
+          hs.map(h => (Dedup.coefA(i) * h + Dedup.coefB(i)) % Dedup.P).min)
+        (0 until 4).map(b => (b, sig.slice(4 * b, 4 * b + 4).mkString("|")))
+      }
+    def expected(ref: Seq[(Long, String)], batch: Seq[(Long, String)],
+                 maxBucket: Int): Seq[Long] = {
+      def content(t: String) = Option(t).map(x => md5hex(wordsScala(x).mkString(" ")))
+      val refMd5 = ref.flatMap(d => content(d._2)).toSet
+      // T1: min batch holder of a content md5 the reference lacks (a
+      // null md5 never matches, so its min holder passes)
+      val t1 = batch.groupBy(d => content(d._2)).collect {
+        case (m, ds) if m.forall(x => !refMd5(x)) => ds.map(_._1).min }.toSet
+      // T2: any band shared with 1..maxBucket reference docs
+      val refBand = ref.flatMap(d => bandsOf(d._2)).groupBy(identity)
+        .map { case (key, xs) => key -> xs.size }
+      val t12 = t1.filterNot(id => bandsOf(batch.find(_._1 == id).get._2)
+        .exists(key => refBand.get(key).exists(_ <= maxBucket)))
+      // T3: in a 2..maxBucket bucket of survivors, only the min stays
+      val rejected = batch.filter(d => t12(d._1))
+        .flatMap(d => bandsOf(d._2).map(_ -> d._1)).groupBy(_._1).values
+        .map(_.map(_._2).distinct.sorted)
+        .filter(ids => ids.size >= 2 && ids.size <= maxBucket)
+        .flatMap(_.tail).toSet
+      (t12 -- rejected).toSeq.sorted
+    }
+    val vocab = Seq("a", "b", "c", "d", "e", "f")
+    for (seed <- 1 to 4) {
+      val r = new scala.util.Random(seed)
+      def words(n: Int) = Seq.fill(n)(vocab(r.nextInt(vocab.size))).mkString(" ")
+      def text(): String = r.nextInt(10) match {
+        case 0 => null
+        case 1 => words(r.nextInt(3))             // < 3 words, or ""
+        case 2 => "  X y   Z x  y z "               // one shingle set, many spellings
+        case _ => words(3 + r.nextInt(4))
+      }
+      // 6 identical reference docs make a stop-band at maxBucket 4;
+      // batch docs reuse reference texts (shared md5) and each other's
+      val stop = "p q r p q r"
+      val ref = (1L to 30L).map(i => i -> (if (i <= 6) stop else text()))
+      val batchTexts = Seq(stop + " p", ref(10)._2, ref(11)._2) ++ Seq.fill(27)(text())
+      val batch = batchTexts.zipWithIndex.map { case (t, i) =>
+        (1000L + i) -> (if (i > 5 && r.nextInt(5) == 0) batchTexts(r.nextInt(i)) else t) }
+      def df(ds: Seq[(Long, String)]) = ds.map { case (id, t) => (id, Option(t)) }
+        .toDF("doc_id", "text")
+      for (maxBucket <- Seq(4, 100)) {
+        val got = Dedup.incrementalAdmit(df(ref), df(batch), maxBucket = maxBucket)
+          .select("doc_id").as[Long].collect().sorted.toSeq
+        assert(got == expected(ref, batch, maxBucket),
+          s"seed $seed maxBucket $maxBucket:\nref=$ref\nbatch=$batch")
+      }
+    }
+  }
+
+  test("minhash signature equals the explode + hash32 + min composite") {
+    // the per-row kernel against the per-doc aggregate it replaced
+    val docs = Tables.documents(spark, sf)
+    val mins = (0 until 16).map(i => min(pmod(lit(Dedup.coefA(i)) * col("h") +
+      lit(Dedup.coefB(i)), lit(Dedup.P))))
+    val composite = docs
+      .select(col("doc_id"), explode(graft.functions.Portable.shingles(
+        graft.functions.Portable.words(col("text")), 3)).as("s"))
+      .select(col("doc_id"), graft.functions.Portable.hash32(col("s")).as("h"))
+      .groupBy("doc_id").agg(array(mins: _*).as("sig"))
+      .as[(Long, Seq[Long])].collect().toMap
+    val kernel = Dedup.minhashSignature(docs, 16)
+      .as[(Long, Seq[Long])].collect().toMap
+    assert(kernel.nonEmpty && kernel == composite)
   }
 
   test("span dedup keeps first occurrences and reassembles survivors") {

@@ -84,17 +84,17 @@ class PlanSpec extends SparkSpec {
     assert(plan.contains("BroadcastNestedLoopJoin"), s"no broadcast:\n$plan")
   }
 
-  test("LSH pair generation needs only three exchanges (sig, bucket, pair aggs)") {
+  test("LSH pair generation needs only two exchanges (bucket, pair aggs)") {
     val df = Dedup.minhashPairs(Tables.documents(spark, sf))
     df.collect() // finalize AQE
     // AQE appends the pre-adaptive plan under "== Initial Plan ==" —
-    // count shuffles in the executed section only. Minimal shape:
-    // shingle→signature agg on doc_id, band-bucket agg, pair-count
-    // agg — and no join exchanges (the old persisted self-join had 2
-    // more plus a cached scan per side).
+    // count shuffles in the executed section only. Minimal shape: the
+    // signature is a per-row map (no doc_id agg), then the band-bucket
+    // agg and the pair-count agg — and no join exchanges (the old
+    // persisted self-join had 2 more plus a cached scan per side).
     val plan = planOf(df).split("== Initial Plan ==")(0)
     val exchanges = "Exchange hashpartitioning".r.findAllIn(plan).size
-    assert(exchanges == 3, s"$exchanges exchanges (want 3):\n$plan")
+    assert(exchanges == 2, s"$exchanges exchanges (want 2):\n$plan")
   }
 
   test("jaccard lookup broadcast is size-gated with a shuffled-join fallback") {
@@ -345,11 +345,23 @@ class PlanSpec extends SparkSpec {
     val (ref, batch) = (
       Tables.documents(spark, sf).filter("doc_id % 10 < 8"),
       Tables.documents(spark, sf).filter("doc_id % 10 >= 8"))
-    val admPlan = planOf(Dedup.incrementalAdmit(ref, batch))
+    val adm = Dedup.incrementalAdmit(ref, batch)
+    adm.collect() // finalize AQE
+    val admPlan = planOf(adm).split("== Initial Plan ==")(0)
     assert("LeftSemi".r.findAllIn(admPlan).size >= 2, admPlan)
     assert("LeftAnti".r.findAllIn(admPlan).size >= 2, admPlan)
     assert(!admPlan.contains("Window") && !admPlan.contains("Cartesian"),
       admPlan)
+    // one shared key aggregate: the (band_idx, band_key) exchange is
+    // built once and every other role reads it as a ReusedExchange;
+    // no doc_id-keyed aggregate (signature or distinct) anywhere
+    val hashEx = "Exchange hashpartitioning".r.findAllIn(admPlan).size
+    val reused = "ReusedExchange.*Exchange hashpartitioning".r.findAllIn(admPlan).size
+    assert(hashEx <= 4, s"$hashEx hash exchanges (want <= 4):\n$admPlan")
+    assert(hashEx - reused == 1 && reused >= 1,
+      s"bucket exchange not shared:\n$admPlan")
+    assert(!"Aggregate\\(keys=\\[doc_id".r.findFirstIn(admPlan).isDefined,
+      s"doc_id-keyed aggregate:\n$admPlan")
   }
 
   test("round-5 retrieval/scoring queries keep their scale shapes") {
@@ -519,12 +531,12 @@ class PlanSpec extends SparkSpec {
   test("q127 split leakage never joins the corpus (split is an expression)") {
     val leak = planOf(Dedup.splitLeakage(Tables.documents(spark, sf)))
       .split("== Initial Plan ==")(0)
-    // q26's three exchanges + the (eval_id, split) rollup — and NO
+    // q26's two exchanges + the (eval_id, split) rollup — and NO
     // join anywhere: the split buckets are hash expressions on the
     // pair ids, not a lookup against the document table
     assert(!leak.contains("Join"), s"join found:\n$leak")
-    assert("Exchange hashpartitioning".r.findAllIn(leak).size == 4,
-      s"want 4 exchanges:\n$leak")
+    assert("Exchange hashpartitioning".r.findAllIn(leak).size == 3,
+      s"want 3 exchanges:\n$leak")
     assert(!leak.contains("Window"), leak)
   }
 

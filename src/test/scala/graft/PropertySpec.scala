@@ -456,6 +456,53 @@ object GraftProperties extends Properties("graft") {
     }
   }
 
+  property("MinHashMins CODEGEN == interpreted == explode + hash32 + min composite") = {
+    import org.apache.spark.sql.types.StringType
+    import org.apache.spark.unsafe.types.UTF8String
+    val p = graft.operators.Dedup.P
+    val (a, b) = (graft.operators.Dedup.coefA, graft.operators.Dedup.coefB)
+    // the production input: 3-word shingles of a token array, so fewer
+    // than 3 tokens reaches the kernel as an empty shingle array and a
+    // null token as a null shingle
+    val toks = BoundReference(0, ArrayType(StringType, containsNull = true), nullable = true)
+    val expr = graft.functions.MinHashMins(
+      graft.functions.WordShingles(toks, 3), a, b, p)
+    val proj = GenerateUnsafeProjection.generate(Seq(expr))
+    // equal-content coefficient arrays make an equal node: plan
+    // canonicalization (exchange reuse) depends on it
+    val twin = graft.functions.MinHashMins(
+      graft.functions.WordShingles(toks, 3), a.clone, b.clone, p)
+    // a small vocabulary repeats shingles within a row
+    val tokGen = Gen.chooseNum(0, 12).flatMap(m =>
+      Gen.listOfN(m, Gen.frequency(
+        6 -> Gen.oneOf("x", "y", "z", "wörd", "日本"),
+        3 -> Gen.alphaNumStr,
+        1 -> Gen.const(null: String))))
+    val rowGen = Gen.frequency(9 -> tokGen.map(Option(_)), 1 -> Gen.const(None))
+    // the composite the node replaced: explode the shingles, drop the
+    // null ones, md5 hex prefix per shingle, then k mins of
+    // pmod(a_i * h + b_i, p) per document; no shingle -> no row (null)
+    def hexH32(s: String): Long = java.lang.Long.parseLong(
+      java.security.MessageDigest.getInstance("MD5").digest(s.getBytes("UTF-8"))
+        .take(4).map(x => f"${x & 0xff}%02x").mkString, 16)
+    def composite(ts: Seq[String]): Option[Seq[Long]] = {
+      val hs = ts.sliding(3).filter(w => w.length == 3 && !w.contains(null))
+        .map(w => hexH32(w.mkString(" "))).toSeq
+      if (hs.isEmpty) None
+      else Some(a.indices.map(i =>
+        hs.map(h => java.lang.Math.floorMod(a(i) * h + b(i), p)).min))
+    }
+    forAll(rowGen) { row =>
+      val in = InternalRow(row.map(ts => new GenericArrayData(
+        ts.map(t => if (t == null) null else UTF8String.fromString(t): Any).toArray)).orNull)
+      val out = proj(in)
+      val gen = if (out.isNullAt(0)) None else Some(out.getArray(0).toLongArray().toSeq)
+      val interp = Option(expr.eval(in)).map(_.asInstanceOf[ArrayData].toLongArray().toSeq)
+      gen == interp && gen == row.flatMap(composite) &&
+        twin == expr && twin.hashCode == expr.hashCode
+    }
+  }
+
   property("SigBandScore CODEGEN == interpreted == plain-Scala mirror") = {
     val expr = graft.functions.SigBandScore(
       BoundReference(0, ArrayType(LongType), nullable = true),

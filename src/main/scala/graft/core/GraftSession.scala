@@ -47,6 +47,10 @@ object GraftSession {
     // Env-overridable for cluster deployments that want the default.
     c.set("spark.sql.adaptive.coalescePartitions.minPartitionSize",
       sys.env.getOrElse("SPARK_GRAFT_MIN_PARTITION_SIZE", "128k"))
+    // Streaming checkpoints on the local file system skip Hadoop
+    // FileContext's per-rename shell forks; other file systems keep
+    // Spark's default manager (CheckpointFiles).
+    c.set(CheckpointFiles.ConfKey, classOf[CheckpointFiles].getName)
     spark
   }
 

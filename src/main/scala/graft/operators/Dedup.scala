@@ -1382,9 +1382,11 @@ object Dedup extends graft.QueryModule {
       FROM k GROUP BY doc_id""",
     /* q73: same banded-signature machinery as q26, split 80/20 into
      * reference/batch on doc_id % 10; T1 = first batch holder of an
-     * unseen content md5, T2 = no band collision with the (stop-band-
-     * capped) reference band set, T3 = min doc_id per surviving batch
-     * bucket. Mirrors incrementalAdmit exactly. */
+     * unseen content md5 or of the null md5 (a null never matches, and
+     * a NULL in a NOT IN set would reject every probe), T2 = no band
+     * collision with the (stop-band-capped) reference band set, T3 =
+     * min doc_id per surviving batch bucket. Mirrors incrementalAdmit
+     * exactly. */
     "q73_incremental_dedup" -> s"""
       WITH sh AS (
         SELECT doc_id, ${shinglesSql(wordsSql)} AS sh FROM documents),
@@ -1409,7 +1411,8 @@ object Dedup extends graft.QueryModule {
         SELECT doc_id FROM (
           SELECT doc_id, h, min(doc_id) OVER (PARTITION BY h) AS mn
           FROM m WHERE doc_id % 10 >= 8)
-        WHERE doc_id = mn AND h NOT IN (SELECT h FROM refmd5)),
+        WHERE doc_id = mn AND (h IS NULL OR
+          h NOT IN (SELECT h FROM refmd5 WHERE h IS NOT NULL))),
       refb AS (
         SELECT band_idx, band_key FROM banded WHERE doc_id % 10 < 8
         GROUP BY 1, 2 HAVING count(*) <= $DefaultMaxBucket),

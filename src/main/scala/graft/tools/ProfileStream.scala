@@ -41,20 +41,9 @@ object ProfileStream {
     val only = args.filterNot(_.startsWith("--")).toSet
     val spark = GraftSession.build()
     spark.sparkContext.setLogLevel("ERROR")
-    if (rocksdb) {
+    if (rocksdb)
       spark.conf.set("spark.sql.streaming.stateStore.providerClass",
         "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
-      // 4.1's checksummed checkpoint files cost real throughput under
-      // RocksDB (measured round 8: fraud 43 -> 35 krows/s — every
-      // snapshot-zip close waits on its checksum future, jstack shows
-      // all 32 executor threads parked in
-      // ChecksumCancellableFSDataOutputStream.close). Off by default
-      // so the sweep measures the operators, not the durability
-      // audit; pass --checksum to re-measure with them on.
-      if (!args.contains("--checksum"))
-        spark.conf.set("spark.sql.streaming.checkpoint.fileChecksum.enabled",
-          "false")
-    }
     import spark.implicits._
 
     // the Bench calibration anchor: fixed, data-independent,

@@ -896,6 +896,28 @@ class OperatorsSpec extends SparkSpec {
     }
   }
 
+  test("q73 admits a null-text batch doc next to a null-text reference doc") {
+    // q73's split: doc_id % 10 < 8 is reference, the rest is the batch.
+    // Hand-derived: 8 and 18 share the null md5 and 8 is its min batch
+    // holder; 9 is ref 1's text respelled (T1 reject); 19 is new text
+    // with no shingle in common with the reference. A null reference
+    // md5 matches nothing.
+    val texts = Map(0L -> null, 1L -> "the quick brown fox jumps",
+      2L -> "alpha beta gamma delta epsilon", 3L -> null,
+      8L -> null, 18L -> null, 9L -> "The  quick BROWN fox jumps ",
+      19L -> "zeta eta theta iota kappa lambda")
+    val dir = java.nio.file.Files.createTempDirectory("graft_q73_null")
+    try {
+      texts.toSeq.map { case (id, t) => (id, Option(t), "en", "web",
+          Option(t).fold(0L)(_.length.toLong)) }
+        .toDF("doc_id", "text", "lang", "source", "n_chars")
+        .write.parquet(dir.resolve("documents.parquet").toString)
+      val got = Dedup.queries("q73_incremental_dedup")(spark, dir.toString)
+        .select("doc_id").as[Long].collect().sorted.toSeq
+      assert(got == Seq(8L, 19L))
+    } finally org.apache.commons.io.FileUtils.deleteQuietly(dir.toFile)
+  }
+
   test("minhash signature equals the explode + hash32 + min composite") {
     // the per-row kernel against the per-doc aggregate it replaced
     val docs = Tables.documents(spark, sf)

@@ -68,14 +68,17 @@ object GraftSession {
     configure(spark)
   }
 
-  def defaultCpus: Int = cpusFrom(sys.env.get("SPARK_GRAFT_CPUS"))
+  def defaultCpus: Int = positiveIntEnv("SPARK_GRAFT_CPUS",
+    Runtime.getRuntime.availableProcessors())
 
-  /** Parses a `SPARK_GRAFT_CPUS` value (absent: the JVM's available
-    * processors); a value that is not a positive integer fails naming
-    * the variable. */
-  private[graft] def cpusFrom(raw: Option[String]): Int =
-    raw.fold(Runtime.getRuntime.availableProcessors())(v =>
+  /** Reads env var `name` as a positive integer (absent: `default`); a
+    * value that is not a positive integer fails naming the variable.
+    * `env` is the lookup, the process environment unless a test
+    * passes its own. */
+  private[graft] def positiveIntEnv(name: String, default: => Int,
+      env: String => Option[String] = sys.env.get): Int =
+    env(name).fold(default)(v =>
       v.trim.toIntOption.filter(_ > 0).getOrElse(
         throw new IllegalArgumentException(
-          s"SPARK_GRAFT_CPUS must be a positive integer, got '$v'")))
+          s"$name must be a positive integer, got '$v'")))
 }

@@ -1874,161 +1874,34 @@ object Multimodal extends graft.QueryModule {
     * fit/serve split, completing the streaming-twin parity set for
     * multimodal dedup (text admission `StreamAggs.bloomAdmitStream`,
     * decontamination `StreamAggs.decontamGate`, scrub
-    * `StreamAggs.scrubGate`). Reference dHashes are keyed by the SAME
-    * 8 byte-bands as [[imageDHashPairs]]; buckets over the cap are
-    * dropped entirely (stop-bands — the q26/q28/q133 recall-loss
-    * mode). The bucket key space is 8 bands × 256 values, so the
-    * frozen index holds ≤ 2048·cap hashes REGARDLESS of reference
-    * corpus size — the cap discipline is what makes the broadcast
-    * bounded; a larger deployment widens the keys with the corpus,
-    * the standard LSH banding trade. Measured saturation point
-    * (SCALE.md gatefit): ~20 000 references cap out 75% of this key
-    * space — [[WideImageDupIndex]] (band-PAIR keys, ~900× the space,
-    * identical recall guarantee) is the widening. */
+    * `StreamAggs.scrubGate`). Reference dHashes are keyed by BAND
+    * PAIRS: the C(8,2) = 28 ordered pairs of the hash's 8 byte bands,
+    * 16 bits of value each (key space 28·65536 ≈ 1.8 M), so reference
+    * mass spreads across vastly more buckets than a single-byte-band
+    * key before any cap bites (SCALE.md gatefit: a 2048-key
+    * single-band space capped out 75% of its entries at 20 000
+    * references). Buckets over the cap are dropped entirely
+    * (stop-bands — the q26/q28/q133 recall-loss mode). Recall is
+    * pigeonhole-complete for `maxDist` ≤ 6: ≤ 6 bit errors over 8
+    * bands leave ≥ 2 bands error-free, and some PAIR of clean bands is
+    * then a shared key. The cost is 28 entries per reference and 28
+    * lookups per probe — both orders of magnitude below the gate's
+    * decode cost. */
   case class ImageDupIndex(maxDist: Int, maxBucket: Int,
-                           buckets: Array[Array[Long]]) {
-    /** true iff `hash` near-dups some reference image: a band-matching
-      * uncapped bucket holds a hash within total Hamming ≤ maxDist. */
-    def hits(lo: Long, hi: Long): Boolean = {
-      var k = 0
-      while (k < 8) {
-        val bv = (if (k < 4) (lo >> (k * 8)) else (hi >> ((k - 4) * 8))) & 255
-        val b = buckets((k << 8) + bv.toInt)
-        var i = 0
-        while (i < b.length) {
-          if (java.lang.Long.bitCount(b(i) ^ lo) +
-              java.lang.Long.bitCount(b(i + 1) ^ hi) <= maxDist)
-            return true
-          i += 2
-        }
-        k += 1
-      }
-      false
-    }
-  }
-
-  /** Reference count past which the NARROW image/video indexes'
-    * measured recall collapse begins (SCALE.md gatefit: narrow image
-    * 20% recall at 100k refs, narrow video already missing 2/3 of
-    * true dups at 20k and 94% at 200k — bucket-cap survival, not
-    * index mass, is what saturates). The narrow fits LOG A WARNING at
-    * this size pointing at the wide fit (the types differ, so the fit
-    * cannot silently switch the way the semantic AUTO default does);
-    * the wide indexes hold ≥99.9% through 200k. */
-  private[operators] val NarrowMediaIndexWarnRefs = 20000L
-  private lazy val mediaLog =
-    org.slf4j.LoggerFactory.getLogger("graft.operators.Multimodal")
-
-  /** Fit the frozen index: one map-only decode+hash pass over the
-    * reference, one exchange on the 2048-key band space, a bounded
-    * driver collect (≤ 2048·cap hashes by construction). Singleton
-    * buckets stay — unlike the pair op, admission matches a stream
-    * image against ONE reference image. At ≥ 20k references prefer
-    * [[fitWideImageDupIndex]] — the narrow byte-band key's bucket
-    * survival collapses there (warned at fit time, SCALE.md). */
-  def fitImageDupIndex(reference: Dataset[MediaRecord], maxDist: Int = 6,
-                       maxBucket: Int = Dedup.DefaultMaxBucket)
-      : ImageDupIndex = {
-    // warn-gate ref count via an accumulator riding the decode+hash
-    // pass below — NOT a separate count() action, which would
-    // re-execute an uncached upstream pipeline once per fit (the
-    // video fit reuses its collected signatures for the same reason).
-    // Task retries can overcount an accumulator; acceptable for a
-    // log-threshold gate.
-    val refAcc = reference.sparkSession.sparkContext
-      .longAccumulator("graft.fitImageDupIndex.refCount")
-    import reference.sparkSession.implicits._
-    val counted = reference.map { r => refAcc.add(1L); r }
-    val rows = imageDHash(counted)
-      .select(col("media_id"), col("hash_lo"), col("hash_hi"),
-        posexplode(expr("""concat(
-          transform(sequence(0, 3), b -> shiftright(hash_lo, b * 8) & 255),
-          transform(sequence(0, 3), b -> shiftright(hash_hi, b * 8) & 255))""")))
-      .toDF("media_id", "hash_lo", "hash_hi", "band_idx", "band_val")
-      .groupBy(col("band_idx"), col("band_val"))
-      .agg(collect_list(array(col("hash_lo"), col("hash_hi"))).as("hs"))
-      .filter(size(col("hs")) <= maxBucket)
-      .collect()
-    val nRefs = refAcc.value
-    if (nRefs >= NarrowMediaIndexWarnRefs)
-      mediaLog.warn(s"fitImageDupIndex over $nRefs references " +
-        "(post-fit check - the index was already built): the " +
-        "narrow byte-band index's recall collapses at this size " +
-        "(20% at 100k measured) - use fitWideImageDupIndex / " +
-        "imageAdmitStreamWide (>=99.9% recall through 200k)")
-    val buckets = Array.fill(2048)(Array.emptyLongArray)
-    rows.foreach { r =>
-      val slot = (r.getInt(0) << 8) + r.getLong(1).toInt
-      buckets(slot) = r.getSeq[scala.collection.Seq[Long]](2)
-        .flatMap(p => Seq(p(0), p(1))).toArray
-    }
-    ImageDupIndex(maxDist, maxBucket, buckets)
-  }
-
-  /** Streaming image admission against the frozen index: decode each
-    * arriving payload (REAL ImageIO path), dHash it, admit unless the
-    * index reports a near-dup. STATELESS per row — the index ships
-    * once per executor via the broadcast, the stream never joins,
-    * shuffles, or keeps state, and no watermark is needed; works
-    * identically on a batch Dataset (parity spec-asserted against a
-    * brute-force mirror of the band/cap/Hamming semantics). Arriving
-    * near-dups of EACH OTHER both admit (the index is frozen);
-    * compose with `StreamAggs.dedupWithinWatermark` on a content key
-    * for in-stream dedup, the bloomAdmitStream layering. */
-  def imageAdmitStream(media: Dataset[MediaRecord],
-                       index: org.apache.spark.broadcast.Broadcast[ImageDupIndex])
-      : Dataset[MediaRecord] = {
-    val spark = media.sparkSession
-    import spark.implicits._
-    val bc = index
-    media.mapPartitions { it =>
-      it.filter { r =>
-        val (lo, hi) = dHashAny(r.payload, s"media ${r.media_id}")
-        !bc.value.hits(lo, hi)
-      }
-    }
-  }
-
-  /** Convenience overload that broadcasts the fitted index itself;
-    * the broadcast-lifecycle caveat on `StreamAggs.decontamGate`
-    * applies verbatim. */
-  def imageAdmitStream(media: Dataset[MediaRecord], index: ImageDupIndex)
-      : Dataset[MediaRecord] =
-    imageAdmitStream(media,
-      media.sparkSession.sparkContext.broadcast(index))
-
-  /** [[ImageDupIndex]] with BAND-PAIR keys — the measured answer to
-    * the byte-band space saturating (`ProfileScale gatefit`: at
-    * 20 000 references, 75% of the 2048-key space's entries are
-    * stop-band drops and recall collapses). Keys are the C(8,2) = 28
-    * ordered pairs of the dHash's byte bands, 16 bits of value each
-    * (key space 28·65536 ≈ 1.8 M — ~900× the single-band space), so
-    * the same reference mass spreads across vastly more buckets
-    * before any cap bites. Recall stays pigeonhole-complete at the
-    * same `maxDist` ≤ 6: ≤ 6 bit errors over 8 bands leave ≥ 2 bands
-    * error-free, and some PAIR of clean bands is then a shared key.
-    * The trade is ×3.5 index mass (28 entries per reference instead
-    * of 8) and ×3.5 probe lookups — both measured orders of
-    * magnitude below the gate's decode cost. Verdicts are IDENTICAL
-    * to the single-band index wherever neither index drops a bucket
-    * (both are recall-complete and verify exact Hamming;
-    * spec-asserted on the fixture). */
-  case class WideImageDupIndex(maxDist: Int, maxBucket: Int,
       buckets: java.util.HashMap[Integer, Array[Long]]) {
     // the pigeonhole-recall premise is a property of EVERY instance,
-    // not just the fit path: ≤ 6 bit errors over 8 bands leave ≥ 2
-    // clean bands, so some pair key is shared; constructing (or
-    // .copy()-ing) one with maxDist 7 would silently lose recall
-    // relative to the single-band index, which is complete to 7
+    // not just the fit path: constructing (or .copy()-ing) one with
+    // maxDist 7 would silently lose recall
     require(maxDist <= 6,
-      s"band-pair pigeonhole needs maxDist <= 6, got $maxDist " +
-        "(use the single-band ImageDupIndex up to 7)")
+      s"band-pair pigeonhole needs maxDist <= 6, got $maxDist")
+    /** true iff `hash` near-dups some reference image: a surviving
+      * pair-key bucket holds a hash within total Hamming ≤ maxDist. */
     def hits(lo: Long, hi: Long): Boolean = {
       var a = 0
       while (a < 8) {
         var b = a + 1
         while (b < 8) {
-          val k = WideImageDupIndex.key(a, b, lo, hi)
+          val k = ImageDupIndex.key(a, b, lo, hi)
           val bk = buckets.get(k)
           if (bk != null) {
             var i = 0
@@ -2047,7 +1920,7 @@ object Multimodal extends graft.QueryModule {
     }
   }
 
-  object WideImageDupIndex {
+  object ImageDupIndex {
     private def byteBand(k: Int, lo: Long, hi: Long): Int =
       (((if (k < 4) lo >> (k * 8) else hi >> ((k - 4) * 8))) & 255L).toInt
     /** pairIdx(a,b) << 16 | byte_a << 8 | byte_b, a < b. */
@@ -2070,65 +1943,37 @@ object Multimodal extends graft.QueryModule {
                    else shiftright(hash_hi, (b - 4) * 8) end) & 255))))"""
   }
 
-  /** Fit the wide index: the same one decode+hash pass as
-    * [[fitImageDupIndex]] and the SAME distributed cap discipline —
-    * explode the 28 pair keys per hash ([[WideImageDupIndex.keysSql]],
-    * bit-equal twin of the Scala key), one exchange on the keys,
-    * over-cap buckets filtered BEFORE the driver collect. The driver
-    * transfer is bounded by the surviving buckets (≤ occupied-keys·cap
-    * hashes), not by the reference corpus — the round-9 version
-    * collected every reference hash first, a linear transfer the
-    * narrow fit never paid (round-10 advice fix). */
-  def fitWideImageDupIndex(reference: Dataset[MediaRecord], maxDist: Int = 6,
-                           maxBucket: Int = Dedup.DefaultMaxBucket)
-      : WideImageDupIndex = {
-    // maxDist <= 6 (the pair-key pigeonhole) is enforced by the
-    // WideImageDupIndex constructor itself
-    val rows = imageDHash(reference)
-      .select(col("hash_lo"), col("hash_hi"),
-        explode(expr(WideImageDupIndex.keysSql)).as("k"))
-      .groupBy(col("k"))
-      .agg(collect_list(array(col("hash_lo"), col("hash_hi"))).as("hs"))
-      .filter(size(col("hs")) <= maxBucket)
-      .collect()
-    val buckets = new java.util.HashMap[Integer, Array[Long]]
-    rows.foreach { r =>
-      buckets.put(r.getLong(0).toInt,
-        r.getSeq[scala.collection.Seq[Long]](1)
-          .flatMap(p => Seq(p(0), p(1))).toArray)
-    }
-    WideImageDupIndex(maxDist, maxBucket, buckets)
-  }
-
-  /** [[fitWideImageDupIndex]] with the REFERENCE-SHARDED cap budget
-    * ([[fitWideVideoDupIndexSharded]]'s recipe — see there for the
-    * rationale and the measured ceiling it lifts): references are
-    * hash-partitioned on `media_id` into `shards` groups (0 = auto
-    * via one extra count() action — pass an explicit count-derived
-    * value to skip it on an expensive uncached reference pipeline)
-    * and the bucket cap applies PER (key, shard), so the budget
-    * scales with the reference count. The cap itself still runs
-    * DISTRIBUTED — the explode/groupBy now keys on (pair-key, shard),
-    * same one exchange, and the driver transfer stays bounded by
-    * surviving (key, shard) slices (≤ cap entries each). Returns a
-    * plain [[WideImageDupIndex]] (merged bucket map, single key walk
-    * per probe); shards = 1 keeps the flat-cap survival rule. Image
-    * shard identity is xxhash64(media_id) — any deterministic
-    * spreading hash works; near-identical images with DIFFERENT ids
-    * spread across shards, which is what lets an exact-dup-heavy key
-    * keep up to cap·shards representatives instead of dropping. */
-  def fitWideImageDupIndexSharded(reference: Dataset[MediaRecord],
-                                  maxDist: Int = 6,
-                                  maxBucket: Int = Dedup.DefaultMaxBucket,
-                                  shards: Int = 0)
-      : WideImageDupIndex = {
+  /** Fit the frozen image index: one map-only decode+hash pass over the
+    * reference, the 28 pair keys per hash exploded in SQL
+    * ([[ImageDupIndex.keysSql]]), ONE exchange on (pair key, shard),
+    * and over-cap slices filtered BEFORE the driver collect — the
+    * driver transfer is bounded by the surviving slices (≤ cap entries
+    * each), not by the reference corpus. Singleton buckets stay:
+    * admission matches a stream image against ONE reference image.
+    *
+    * The cap budget is REFERENCE-SHARDED ([[fitVideoDupIndex]]'s
+    * recipe — see there for the rationale and the measured ceiling it
+    * lifts): references are hash-partitioned on xxhash64(media_id)
+    * into `shards` groups and the cap applies PER (key, shard), so the
+    * budget scales with the reference count; the survivors merge into
+    * one bucket map, one key walk per probe. `shards` = 0 is auto,
+    * ceil(n / [[ImageShardTargetRefs]]) via one extra count() action
+    * (pass an explicit count-derived value to skip it on an expensive
+    * uncached reference pipeline); at or below the target that is 1,
+    * the flat drop-if-over-cap rule. Near-identical images with
+    * DIFFERENT ids spread across shards, which is what lets an
+    * exact-dup-heavy key keep up to cap·shards representatives instead
+    * of dropping. */
+  def fitImageDupIndex(reference: Dataset[MediaRecord], maxDist: Int = 6,
+                       maxBucket: Int = Dedup.DefaultMaxBucket,
+                       shards: Int = 0): ImageDupIndex = {
     require(shards >= 0, s"shards must be >= 1 (or 0 = auto), got $shards")
     val nShards = resolveShards(shards,
       if (shards > 0) 1L else reference.count(), ImageShardTargetRefs)
     val rows = imageDHash(reference)
       .select(col("hash_lo"), col("hash_hi"),
         pmod(xxhash64(col("media_id")), lit(nShards)).as("shard"),
-        explode(expr(WideImageDupIndex.keysSql)).as("k"))
+        explode(expr(ImageDupIndex.keysSql)).as("k"))
       .groupBy(col("k"), col("shard"))
       .agg(collect_list(array(col("hash_lo"), col("hash_hi"))).as("hs"))
       .filter(size(col("hs")) <= maxBucket)
@@ -2146,13 +1991,21 @@ object Multimodal extends graft.QueryModule {
     merged.forEach { (k, lst) =>
       buckets.put(k, Array.tabulate(lst.size)(lst.get(_).longValue()))
     }
-    WideImageDupIndex(maxDist, maxBucket, buckets)
+    ImageDupIndex(maxDist, maxBucket, buckets)
   }
 
-  /** [[imageAdmitStream]] against the wide band-pair index — same
-    * stateless shape, same decode fast path. */
-  def imageAdmitStreamWide(media: Dataset[MediaRecord],
-      index: org.apache.spark.broadcast.Broadcast[WideImageDupIndex])
+  /** Streaming image admission against the frozen index: decode each
+    * arriving payload (REAL ImageIO path), dHash it, admit unless the
+    * index reports a near-dup. STATELESS per row — the index ships
+    * once per executor via the broadcast, the stream never joins,
+    * shuffles, or keeps state, and no watermark is needed; works
+    * identically on a batch Dataset (parity spec-asserted against a
+    * brute-force mirror of the band-pair/cap/Hamming semantics).
+    * Arriving near-dups of EACH OTHER both admit (the index is
+    * frozen); compose with `StreamAggs.dedupWithinWatermark` on a
+    * content key for in-stream dedup, the bloomAdmitStream layering. */
+  def imageAdmitStream(media: Dataset[MediaRecord],
+                       index: org.apache.spark.broadcast.Broadcast[ImageDupIndex])
       : Dataset[MediaRecord] = {
     val spark = media.sparkSession
     import spark.implicits._
@@ -2165,9 +2018,12 @@ object Multimodal extends graft.QueryModule {
     }
   }
 
-  def imageAdmitStreamWide(media: Dataset[MediaRecord],
-                           index: WideImageDupIndex): Dataset[MediaRecord] =
-    imageAdmitStreamWide(media,
+  /** Convenience overload that broadcasts the fitted index itself;
+    * the broadcast-lifecycle caveat on `StreamAggs.decontamGate`
+    * applies verbatim. */
+  def imageAdmitStream(media: Dataset[MediaRecord], index: ImageDupIndex)
+      : Dataset[MediaRecord] =
+    imageAdmitStream(media,
       media.sparkSession.sparkContext.broadcast(index))
 
   // ---- streaming media admission: audio near-dup gate --------------------
@@ -2186,8 +2042,8 @@ object Multimodal extends graft.QueryModule {
     * in batch too; parity spec-asserted against a brute-force
     * mirror).
     *
-    * Scale bound: unlike the image index (whose 2048-key band space
-    * bounds it structurally), this index carries the full reference
+    * Scale bound: unlike the image index (which holds nothing but
+    * capped 16-byte hashes), this index carries the full reference
     * sets — ~one 8-byte sub-fingerprint per reference audio FRAME —
     * because the batch verify needs exact intersections. That is the
     * [[graft.streaming.StreamAggs.scrubGate]] class of bound: an
@@ -2250,49 +2106,15 @@ object Multimodal extends graft.QueryModule {
   /** Fit the frozen audio index: ONE map-only decode+fingerprint pass
     * over the reference (the full sets must come to the driver anyway
     * for the exact verify, so the bucket build and cap run driver-side
-    * on the collected sets — no second decode pass). */
-  def fitAudioDupIndex(reference: Dataset[MediaRecord], threshold10: Int = 5,
-                       maxBucket: Int = Dedup.DefaultMaxBucket)
-      : AudioDupIndex = {
-    val spark = reference.sparkSession
-    import spark.implicits._
-    val sets: Array[Array[Long]] = reference.mapPartitions { it =>
-      it.flatMap { r =>
-        val fps = audioFpSet(r.payload)
-        if (fps.isEmpty) None else Some(fps)
-      }
-    }.collect()
-    val byFp = new java.util.HashMap[Long, java.util.ArrayList[Integer]]
-    sets.zipWithIndex.foreach { case (fps, idx) =>
-      fps.foreach { fp =>
-        byFp.computeIfAbsent(fp, _ => new java.util.ArrayList[Integer])
-          .add(idx)
-      }
-    }
-    // probe-side layout: primitive open-addressed long keys
-    // (scala.collection.mutable.LongMap) — a java.util.HashMap[Long,_]
-    // boxes every get() on the hot probe path (round-10 fix, shared
-    // with the video index where the cost was first measured)
-    val buckets = new scala.collection.mutable.LongMap[Array[Int]](
-      byFp.size * 2)
-    byFp.forEach { (fp, ids) =>
-      // singletons stay — admission matches a stream track against
-      // ONE reference track (the fitImageDupIndex argument)
-      if (ids.size <= maxBucket)
-        buckets.update(fp, Array.tabulate(ids.size)(ids.get(_).intValue()))
-    }
-    buckets.repack()
-    AudioDupIndex(threshold10, maxBucket, sets, buckets)
-  }
-
-  /** [[fitAudioDupIndex]] with the REFERENCE-SHARDED cap budget
-    * ([[fitWideVideoDupIndexSharded]]'s recipe; auto shard count =
-    * ceil(n / [[AudioShardTargetRefs]]) — audio's measured knee is
-    * 10× below video/image's): reference tracks are
-    * hash-partitioned by collected index and the sub-fingerprint
-    * bucket cap applies per shard, so the budget scales with the
-    * reference count. One semantic delta from per-shard batch
-    * semantics, documented rather than hidden: the verify's
+    * on the collected sets — no second decode pass).
+    *
+    * The cap budget is REFERENCE-SHARDED ([[fitVideoDupIndex]]'s
+    * recipe): reference tracks are hash-partitioned by collected index
+    * and the sub-fingerprint bucket cap applies per shard. `shards` =
+    * 0 is auto, ceil(n / [[AudioShardTargetRefs]]) — audio's measured
+    * knee is 10× below video/image's; at or below it that is 1, the
+    * flat drop-if-over-cap rule. One semantic delta from per-shard
+    * batch semantics, documented rather than hidden: the verify's
     * one-emission check (`buckets.contains(minShared)`) consults the
     * MERGED survivor map, so a candidate discovered through shard s
     * can pass on shard t's survival of its smallest shared element —
@@ -2305,11 +2127,9 @@ object Multimodal extends graft.QueryModule {
     * FRAME) is untouched by sharding — the curated-bounded-set
     * caveat on [[AudioDupIndex]] stands; sharding lifts the bucket
     * RECALL ceiling, not the broadcast mass. */
-  def fitAudioDupIndexSharded(reference: Dataset[MediaRecord],
-                              threshold10: Int = 5,
-                              maxBucket: Int = Dedup.DefaultMaxBucket,
-                              shards: Int = 0)
-      : AudioDupIndex = {
+  def fitAudioDupIndex(reference: Dataset[MediaRecord], threshold10: Int = 5,
+                       maxBucket: Int = Dedup.DefaultMaxBucket,
+                       shards: Int = 0): AudioDupIndex = {
     require(shards >= 0, s"shards must be >= 1 (or 0 = auto), got $shards")
     val spark = reference.sparkSession
     import spark.implicits._
@@ -2327,9 +2147,15 @@ object Multimodal extends graft.QueryModule {
           .add(idx)
       }
     }
+    // probe-side layout: primitive open-addressed long keys
+    // (scala.collection.mutable.LongMap) — a java.util.HashMap[Long,_]
+    // boxes every get() on the hot probe path (round-10 fix, shared
+    // with the video index where the cost was first measured)
     val buckets = new scala.collection.mutable.LongMap[Array[Int]](
       byFp.size * 2)
     byFp.forEach { (fp, ids) =>
+      // singletons stay — admission matches a stream track against
+      // ONE reference track (the fitImageDupIndex argument)
       val kept = perShardCapFilter(ids, nShards, maxBucket)
       if (kept != null) buckets.update(fp, kept)
     }
@@ -2368,146 +2194,42 @@ object Multimodal extends graft.QueryModule {
 
   /** Frozen video near-dup index: reference per-frame dHash
     * signatures (16 bytes per reference frame — compact by
-    * construction, no full-set caveat) plus q137's frame-aligned
-    * (nf, band, value) bucket space with over-cap buckets dropped.
-    * A probe reproduces the batch semantics verbatim: equal frame
-    * count by key construction, candidates through surviving
-    * buckets, exact total Hamming ≤ maxDist via the SAME fused walk
-    * the batch verify runs ([[graft.functions.SigBandScore]].score,
-    * plain-array overload, property-pinned bit-equal), and the pair
-    * counts only if its LOWEST matching band's bucket survived the
-    * cap — the batch one-emission discipline. */
+    * construction, no full-set caveat) plus a bucket map keyed by
+    * WITHIN-FRAME BAND PAIRS — the [[ImageDupIndex]] key applied per
+    * frame: the C(8,2) = 28 ordered byte-band pairs of EACH FRAME
+    * (16-bit values), with the frame count riding in the key so only
+    * equal-length clips meet (q137's frame alignment). Over-cap
+    * buckets are dropped. A probe walks the 28·nf keys of the
+    * arriving clip and verifies each candidate's exact total Hamming
+    * ≤ maxDist via the SAME fused walk the batch verify runs
+    * ([[graft.functions.SigBandScore]].score, plain-array overload,
+    * property-pinned bit-equal).
+    *
+    * Pigeonhole recall: ≤ maxDist bit errors across nf frames leave
+    * some frame with ≤ ⌊maxDist/nf⌋ errors; that frame has ≥ 2 clean
+    * bands — hence a clean shared pair key — whenever its error count
+    * ≤ 6, which is guaranteed iff maxDist ≤ 7·nf − 1. With the default
+    * maxDist = 12 the guarantee covers every clip of ≥ 2 frames;
+    * SINGLE-frame clips are complete only to maxDist 6 (the image
+    * bound — they ARE images), which this scaladoc documents rather
+    * than hides: fit with maxDist ≤ 6 if single-frame clips matter.
+    * Pairs, not single byte bands, because a single-band key's buckets
+    * over-cap early: gatefit measured it missing 2/3 of true dups at
+    * 20k references (SCALE.md). */
   case class VideoDupIndex(maxDist: Int, maxBucket: Int,
-                           refSigs: Array[Array[Long]],
-                           buckets: scala.collection.mutable.LongMap[Array[Int]]) {
-    /** true iff a clip with `nf` frames and interleaved signature
-      * `sig` near-dups some reference clip. */
-    def hits(nf: Int, sig: Array[Long]): Boolean = {
-      if (nf < 1) return false
-      // lazily-allocated BitSet dedup — same rationale as
-      // AudioDupIndex.hits: video buckets are FAT (8-bit band values
-      // collide heavily across clips, so a probe can walk thousands
-      // of candidates), and the HashSet[Int] this replaces boxed an
-      // Integer per candidate
-      var seen: java.util.BitSet = null
-      var j = 0
-      while (j < nf * 8) {
-        val b = buckets.getOrNull(VideoDupIndex.key(nf, j, sigByteOf(sig, j)))
-        if (b != null) {
-          if (seen == null) seen = new java.util.BitSet(refSigs.length)
-          var k = 0
-          while (k < b.length) {
-            val id = b(k)
-            if (!seen.get(id)) {
-              seen.set(id)
-              if (verify(nf, sig, refSigs(id))) return true
-            }
-            k += 1
-          }
-        }
-        j += 1
-      }
-      false
-    }
-    private def verify(nf: Int, sig: Array[Long], ref: Array[Long]): Boolean = {
-      val score = graft.functions.SigBandScore.score(sig, ref)
-      val first = (score >>> 32).toInt
-      val ham = score & 0xffffffffL
-      // no matching band ⇒ batch never buckets the pair together
-      first < nf * 8 && ham <= maxDist &&
-        // both share the byte at `first`, so the bucket key exists
-        // unless the cap dropped it — then batch loses the pair too
-        buckets.contains(VideoDupIndex.key(nf, first, sigByteOf(sig, first)))
-    }
-  }
-
-  object VideoDupIndex {
-    /** Bucket key: frame count rides in the key (only equal-length
-      * clips meet, q137's frame alignment), then global band index
-      * and band value. */
-    def key(nf: Int, bandIdx: Int, bandVal: Int): Long =
-      (nf.toLong << 32) | (bandIdx.toLong << 8) | bandVal
-  }
-
-  /** byte `j` of an interleaved per-frame signature — the plain-Scala
-    * twin of the [[sigByte]] SQL fragment (band j = byte j%8 of frame
-    * j/8; lo element carries bytes 0-3, hi carries 4-7). */
-  private def sigByteOf(sig: Array[Long], j: Int): Int = {
-    val el = sig(2 * (j / 8) + (if (j % 8 < 4) 0 else 1))
-    ((el >>> ((j % 4) * 8)) & 255L).toInt
-  }
-
-  /** Fit the frozen video index: ONE map-only demux+decode+hash pass
-    * (signatures must come to the driver anyway for the exact
-    * Hamming verify; bucket build and cap run driver-side). */
-  def fitVideoDupIndex(reference: Dataset[MediaRecord], maxDist: Int = 12,
-                       maxBucket: Int = Dedup.DefaultMaxBucket)
-      : VideoDupIndex = {
-    val spark = reference.sparkSession
-    import spark.implicits._
-    val sigs: Array[(Int, Array[Long])] = reference.mapPartitions { it =>
-      it.flatMap { r =>
-        val (nf, sig) = clipSignature(r)
-        if (nf == 0) None else Some((nf, sig))
-      }
-    }.collect()
-    if (sigs.length >= NarrowMediaIndexWarnRefs)
-      mediaLog.warn(s"fitVideoDupIndex over ${sigs.length} references: " +
-        "the narrow (nf, band, byte) index's recall collapses at this " +
-        "size (2/3 of true dups missed at 20k, 94% at 200k measured) " +
-        "- use fitWideVideoDupIndex / videoAdmitStreamWide (>=99.9% " +
-        "recall through 200k)")
-    val byBand = new java.util.HashMap[Long, java.util.ArrayList[Integer]]
-    sigs.zipWithIndex.foreach { case ((nf, sig), idx) =>
-      var j = 0
-      while (j < nf * 8) {
-        byBand.computeIfAbsent(VideoDupIndex.key(nf, j, sigByteOf(sig, j)),
-          _ => new java.util.ArrayList[Integer]).add(idx)
-        j += 1
-      }
-    }
-    // primitive open-addressed probe layout (round-10 fix): the
-    // boxed-HashMap probe measured 51k/s at 2k refs and 34k/s at 20k
-    // (a fresh java.lang.Long per get(), nf*8 gets per probe); the
-    // LongMap layout removes the allocation from the hot loop
-    val buckets = new scala.collection.mutable.LongMap[Array[Int]](
-      byBand.size * 2)
-    byBand.forEach { (k, ids) =>
-      if (ids.size <= maxBucket)
-        buckets.update(k, Array.tabulate(ids.size)(ids.get(_).intValue()))
-    }
-    buckets.repack()
-    VideoDupIndex(maxDist, maxBucket, sigs.map(_._2), buckets)
-  }
-
-  /** [[VideoDupIndex]] with WITHIN-FRAME BAND-PAIR keys — the
-    * [[WideImageDupIndex]] widening applied to the video key, built
-    * when round 10's gatefit charted the narrow (nf, band, byte)
-    * space cliffing at ~200k reference clips (57 → 6 k probes/s:
-    * surviving buckets ride the cap and every probe verifies
-    * thousands of candidates). Keys are the C(8,2) = 28 ordered
-    * byte-band pairs of EACH FRAME (16-bit values), so the key space
-    * per frame count is ~900× the narrow one and the same reference
-    * mass spreads out before the cap bites. Pigeonhole recall: ≤
-    * maxDist bit errors across nf frames leave some frame with ≤
-    * ⌊maxDist/nf⌋ errors; that frame has ≥ 2 clean bands — hence a
-    * clean shared pair key — whenever its error count ≤ 6, which is
-    * guaranteed iff maxDist ≤ 7·nf − 1. With the default maxDist =
-    * 12 the guarantee covers every clip of ≥ 2 frames; SINGLE-frame
-    * clips are complete only to maxDist 6 (the image bound — they
-    * ARE images), which the constructor documents rather than hides:
-    * fit with maxDist ≤ 6 if single-frame clips matter. The trade is
-    * ×3.5 index mass (28·nf entries per clip instead of 8·nf). */
-  case class WideVideoDupIndex(maxDist: Int, maxBucket: Int,
       refSigs: Array[Array[Long]],
       buckets: scala.collection.mutable.LongMap[Array[Int]]) {
     // beyond 13, even two-frame clips lose the pigeonhole guarantee
     require(maxDist <= 13,
       s"within-frame band-pair pigeonhole needs maxDist <= 7*nf-1; " +
-        s"$maxDist exceeds the two-frame bound 13 (narrow " +
-        "VideoDupIndex has no such cap)")
+        s"$maxDist exceeds the two-frame bound 13")
+    /** true iff a clip with `nf` frames and interleaved signature
+      * `sig` near-dups some reference clip. */
     def hits(nf: Int, sig: Array[Long]): Boolean = {
       if (nf < 1) return false
+      // lazily-allocated BitSet dedup — same rationale as
+      // AudioDupIndex.hits: a probe can walk many candidates, and a
+      // HashSet[Int] would box an Integer per candidate
       var seen: java.util.BitSet = null
       var f = 0
       while (f < nf) {
@@ -2516,7 +2238,7 @@ object Multimodal extends graft.QueryModule {
           val va = sigByteOf(sig, f * 8 + a)
           var b = a + 1
           while (b < 8) {
-            val bk = buckets.getOrNull(WideVideoDupIndex.key(
+            val bk = buckets.getOrNull(VideoDupIndex.key(
               nf, f, a, b, va, sigByteOf(sig, f * 8 + b)))
             if (bk != null) {
               if (seen == null) seen = new java.util.BitSet(refSigs.length)
@@ -2525,9 +2247,9 @@ object Multimodal extends graft.QueryModule {
                 val id = bk(k)
                 if (!seen.get(id)) {
                   seen.set(id)
-                  // exact total Hamming via the same fused walk the
-                  // narrow verify uses; a shared pair key implies a
-                  // matching band exists, so no `first` check needed
+                  // exact total Hamming via the batch verify's fused
+                  // walk; a shared pair key implies a matching band
+                  // exists, so no first-band check is needed
                   if ((graft.functions.SigBandScore.score(sig,
                     refSigs(id)) & 0xffffffffL) <= maxDist) return true
                 }
@@ -2544,7 +2266,7 @@ object Multimodal extends graft.QueryModule {
     }
   }
 
-  object WideVideoDupIndex {
+  object VideoDupIndex {
     /** nf << 40 | (frame·28 + pairIdx(a,b)) << 16 | byte_a << 8 |
       * byte_b, a < b — frame count rides in the key (q137's
       * equal-length alignment), then the frame-local pair. */
@@ -2553,55 +2275,73 @@ object Multimodal extends graft.QueryModule {
       (nf.toLong << 40) | ((f * 28 + pairIdx).toLong << 16) |
         (va.toLong << 8) | vb.toLong
     }
+
+    /** The 28·nf within-frame pair keys of one clip, frame-major — the
+      * one key enumeration the fit and both serving-table paths share
+      * (`hits` keeps its own early-exit walk). */
+    def keys(nf: Int, sig: Array[Long]): Array[Long] = {
+      val out = new Array[Long](28 * nf)
+      var o = 0
+      var f = 0
+      while (f < nf) {
+        var a = 0
+        while (a < 8) {
+          val va = sigByteOf(sig, f * 8 + a)
+          var b = a + 1
+          while (b < 8) {
+            out(o) = key(nf, f, a, b, va, sigByteOf(sig, f * 8 + b))
+            o += 1
+            b += 1
+          }
+          a += 1
+        }
+        f += 1
+      }
+      out
+    }
   }
 
-  /** Fit the wide video index: the same one demux+decode+hash pass
-    * and driver-side bucket build as [[fitVideoDupIndex]] (signatures
-    * come down whole for the exact verify either way), bucketed on
-    * the 28·nf within-frame pair keys with the same cap discipline.
-    * Equivalent to [[fitWideVideoDupIndexSharded]] at shards = 1 (it
-    * IS that call — one code path). */
-  def fitWideVideoDupIndex(reference: Dataset[MediaRecord],
-                           maxDist: Int = 12,
-                           maxBucket: Int = Dedup.DefaultMaxBucket)
-      : WideVideoDupIndex =
-    fitWideVideoDupIndexSharded(reference, maxDist, maxBucket, shards = 1)
+  /** byte `j` of an interleaved per-frame signature — the plain-Scala
+    * twin of the [[sigByte]] SQL fragment (band j = byte j%8 of frame
+    * j/8; lo element carries bytes 0-3, hi carries 4-7). */
+  private def sigByteOf(sig: Array[Long], j: Int): Int = {
+    val el = sig(2 * (j / 8) + (if (j % 8 < 4) 0 else 1))
+    ((el >>> ((j % 4) * 8)) & 255L).toInt
+  }
 
-  /** [[fitWideVideoDupIndex]] with a REFERENCE-SHARDED cap budget —
-    * the serving layout for reference sets past the single-cap
-    * envelope. Round 11 measured the wide index's ceiling (SCALE.md):
-    * at 2M adversarially dense refs the flat 100-entry bucket cap
-    * drops ~17% of genuine near-dups (bucket SURVIVAL, not index
-    * mass, is what saturates), while per ≤200k refs the same cap
-    * holds ≥99.9% recall. So: hash-partition the REFERENCE SET into
-    * `shards` groups (0 = auto, ceil(n / [[MediaShardTargetRefs]]) —
-    * each shard back on the measured ≤200k curve) and apply the
-    * bucket cap PER SHARD: key k keeps shard s's entries iff shard s
-    * contributed ≤ maxBucket of them. The cap budget then scales
-    * with the reference count while staying balanced across it (a
-    * flat cap raise keeps NOTHING of a key the moment one more ref
-    * crosses the line; the sharded budget keeps every surviving
-    * shard slice).
+  /** Fit the frozen video index: ONE map-only demux+decode+hash pass
+    * (signatures must come to the driver anyway for the exact Hamming
+    * verify), then a driver-side bucket build on the 28·nf pair keys
+    * with a REFERENCE-SHARDED cap budget — the serving layout for
+    * reference sets past the single-cap envelope. Round 11 measured
+    * the index's ceiling (SCALE.md): at 2M adversarially dense refs a
+    * flat 100-entry bucket cap drops ~17% of genuine near-dups
+    * (bucket SURVIVAL, not index mass, is what saturates), while per
+    * ≤200k refs the same cap holds ≥99.9% recall. So: hash-partition
+    * the REFERENCE SET into `shards` groups (0 = auto, ceil(n /
+    * [[VideoShardTargetRefs]]) — each shard back on the measured
+    * ≤200k curve, and exactly 1 at or below it: the flat
+    * drop-if-over-cap rule) and apply the bucket cap PER SHARD: key k
+    * keeps shard s's entries iff shard s contributed ≤ maxBucket of
+    * them. The cap budget then scales with the reference count while
+    * staying balanced across it (a flat cap raise keeps NOTHING of a
+    * key the moment one more ref crosses the line; the sharded budget
+    * keeps every surviving shard slice).
     *
-    * The PROBE layout is unchanged: one merged bucket map, the same
-    * single key walk per probe — the "union of shard probes" gate
-    * collapsed into one lookup (probing S separate maps would pay S
-    * misses for every key that hits nowhere, the common case). The
-    * returned index is a plain [[WideVideoDupIndex]]; `hits`,
-    * admission, broadcast, and the parity specs all reuse it, and
-    * shards = 1 reproduces the flat-cap fit bit-identically.
+    * The PROBE layout is one merged bucket map, a single key walk per
+    * probe — the "union of shard probes" gate collapsed into one
+    * lookup (probing S separate maps would pay S misses for every key
+    * that hits nowhere, the common case).
     *
     * Cost: index mass grows toward the uncapped 28·nf entries per
     * ref — at 2M refs ~90M entries, low-GBs broadcast. That is the
     * documented trade for ≥99% recall past 1M refs; size executors
-    * for it, or fit shard-at-a-time (explicit `shards` + a filtered
-    * reference) and gate in sequential batch stages when one
-    * resident index is too big. */
-  def fitWideVideoDupIndexSharded(reference: Dataset[MediaRecord],
-                                  maxDist: Int = 12,
-                                  maxBucket: Int = Dedup.DefaultMaxBucket,
-                                  shards: Int = 0)
-      : WideVideoDupIndex = {
+    * for it, fit shard-at-a-time (explicit `shards` + a filtered
+    * reference) and gate in sequential batch stages, or serve from
+    * [[videoServingTables]] when one resident index is too big. */
+  def fitVideoDupIndex(reference: Dataset[MediaRecord], maxDist: Int = 12,
+                       maxBucket: Int = Dedup.DefaultMaxBucket,
+                       shards: Int = 0): VideoDupIndex = {
     require(shards >= 0, s"shards must be >= 1 (or 0 = auto), got $shards")
     val spark = reference.sparkSession
     import spark.implicits._
@@ -2611,26 +2351,17 @@ object Multimodal extends graft.QueryModule {
         if (nf == 0) None else Some((nf, sig))
       }
     }.collect()
-    val nShards = resolveShards(shards, sigs.length)
+    val nShards = resolveShards(shards, sigs.length, VideoShardTargetRefs)
     val byKey = new java.util.HashMap[Long, java.util.ArrayList[Integer]]
     sigs.zipWithIndex.foreach { case ((nf, sig), idx) =>
-      var f = 0
-      while (f < nf) {
-        var a = 0
-        while (a < 8) {
-          val va = sigByteOf(sig, f * 8 + a)
-          var b = a + 1
-          while (b < 8) {
-            byKey.computeIfAbsent(WideVideoDupIndex.key(
-                nf, f, a, b, va, sigByteOf(sig, f * 8 + b)),
-              _ => new java.util.ArrayList[Integer]).add(idx)
-            b += 1
-          }
-          a += 1
-        }
-        f += 1
+      VideoDupIndex.keys(nf, sig).foreach { k =>
+        byKey.computeIfAbsent(k, _ => new java.util.ArrayList[Integer])
+          .add(idx)
       }
     }
+    // primitive open-addressed probe layout (round-10 fix): a boxed
+    // java.util.HashMap probe allocates a fresh java.lang.Long per
+    // get(); the LongMap layout removes the allocation from the hot loop
     val buckets = new scala.collection.mutable.LongMap[Array[Int]](
       byKey.size * 2)
     byKey.forEach { (k, ids) =>
@@ -2638,35 +2369,57 @@ object Multimodal extends graft.QueryModule {
       if (kept != null) buckets.update(k, kept)
     }
     buckets.repack()
-    WideVideoDupIndex(maxDist, maxBucket, sigs.map(_._2), buckets)
+    VideoDupIndex(maxDist, maxBucket, sigs.map(_._2), buckets)
   }
+
+  /** Streaming video admission against the frozen index: demux +
+    * decode each arriving payload (REAL RIFF/AVI path, raw-DIB or
+    * MJPEG), signature it, admit unless the index reports a near-dup.
+    * Same stateless shape as [[imageAdmitStream]]/[[audioAdmitStream]]. */
+  def videoAdmitStream(media: Dataset[MediaRecord],
+                       index: org.apache.spark.broadcast.Broadcast[VideoDupIndex])
+      : Dataset[MediaRecord] = {
+    val spark = media.sparkSession
+    import spark.implicits._
+    val bc = index
+    media.mapPartitions { it =>
+      it.filter { r =>
+        val (nf, sig) = clipSignature(r)
+        !bc.value.hits(nf, sig)
+      }
+    }
+  }
+
+  def videoAdmitStream(media: Dataset[MediaRecord], index: VideoDupIndex)
+      : Dataset[MediaRecord] =
+    videoAdmitStream(media,
+      media.sparkSession.sparkContext.broadcast(index))
 
   // ---- serving tables: past the single-broadcast ceiling -----------------
 
-  /** The sharded wide index's documented ceiling (SCALE.md round 12):
+  /** The VIDEO index re-expressed as two relations — the path past
+    * the broadcast index's documented ceiling (SCALE.md round 12):
     * index mass grows ~linearly in refs — 106.6M entries ≈ ~1.6 GB
     * resident (12-16 B per bucket entry in the LongMap) at 2M video
     * refs — so around a 1 GB broadcast budget (~64M entries) one
     * resident index stops being the right shape. Past it, serve from
-    * [[videoServingTables]] — the same keys, cap rule and exact
-    * verify as distributed RELATIONS joined per batch, with no
-    * driver collect and no broadcast of the reference mass at all. */
-  val MediaServingBudgetEntries: Long = 64L * 1000 * 1000
-
-  /** The sharded wide VIDEO index re-expressed as two relations —
-    * the round-12 "band-partitioned serving shards" design, spelled
-    * Spark-first: instead of per-executor resident index singletons
-    * (a side-channel Spark cannot plan around), the bucket map
+    * these tables: the same keys, cap rule and exact verify as
+    * distributed RELATIONS joined per batch, with no driver collect
+    * and no broadcast of the reference mass at all.
+    *
+    * This is the round-12 "band-partitioned serving shards" design,
+    * spelled Spark-first: instead of per-executor resident index
+    * singletons (a side-channel Spark cannot plan around), the bucket map
     * becomes a `(key, ref_id)` TABLE and the verify corpus a
     * `(ref_id, nf, sig)` TABLE; gating is then an ordinary shuffled
     * equi-join Catalyst distributes, AQE balances, and a real cluster
     * spills — nothing needs to fit on one executor, so the reference
     * set scales with the CLUSTER, not with one broadcast budget.
     *
-    * Same construction as [[fitWideVideoDupIndexSharded]]: one
+    * Same construction as [[fitVideoDupIndex]]: one
     * demux+decode+hash pass (persisted — it is both the key source
     * and the verify corpus), the 28·nf within-frame pair keys from
-    * the SAME packing ([[WideVideoDupIndex.key]]), and the per-shard
+    * the SAME enumeration ([[VideoDupIndex.keys]]), and the per-shard
     * cap budget — key k keeps shard s's entries iff s contributed
     * ≤ maxBucket of them, as one `groupBy(key, shard)` instead of a
     * driver map build. The one deliberate delta: shards hash from the
@@ -2691,28 +2444,11 @@ object Multimodal extends graft.QueryModule {
     import spark.implicits._
     val sigs = videoDHashSignature(reference)
       .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    val nShards = resolveShards(shards, sigs.count())
+    val nShards = resolveShards(shards, sigs.count(), VideoShardTargetRefs)
     val keyRows = sigs.as[(Long, Int, Array[Long])].flatMap {
       case (id, nf, sig) =>
-        val out = new Array[(Long, Long, Int)](28 * nf)
-        var o = 0
-        var f = 0
-        while (f < nf) {
-          var a = 0
-          while (a < 8) {
-            val va = sigByteOf(sig, f * 8 + a)
-            var b = a + 1
-            while (b < 8) {
-              out(o) = (WideVideoDupIndex.key(nf, f, a, b, va,
-                sigByteOf(sig, f * 8 + b)), id, shardOfId(id, nShards))
-              o += 1
-              b += 1
-            }
-            a += 1
-          }
-          f += 1
-        }
-        out.toSeq
+        val shard = shardOfId(id, nShards)
+        VideoDupIndex.keys(nf, sig).map(k => (k, id, shard)).toSeq
     }.toDF("key", "ref_id", "shard")
     // BUCKET-PER-ROW, signatures inline: the index's LongMap bucket
     // becomes one (key, sigs[]) row, so serving is ONE equi-join
@@ -2747,7 +2483,7 @@ object Multimodal extends graft.QueryModule {
   }
 
   /** Video admission against [[videoServingTables]] — decision-
-    * identical to `videoAdmitStreamWide` over the equally-configured
+    * identical to `videoAdmitStream` over the equally-configured
     * broadcast index (spec-asserted): admit an arriving clip unless
     * SOME reference clip shares a surviving pair key (same nf — nf
     * rides in the key) AND verifies at total Hamming ≤ maxDist (the
@@ -2763,8 +2499,8 @@ object Multimodal extends graft.QueryModule {
     * distinct on hit ids, and a left-anti join on `media_id`.
     * Streaming: run inside `foreachBatch` — a distributed join per
     * trigger is exactly what the past-the-broadcast regime costs;
-    * the stateless broadcast gate remains the right shape below
-    * [[MediaServingBudgetEntries]]. Cost scales with the batch's
+    * the stateless broadcast gate remains the right shape below the
+    * ~64M-entry broadcast budget. Cost scales with the batch's
     * candidate density (a dup-heavy batch pays per genuine
     * candidate; the broadcast probe's first-hit early exit has no
     * relational analogue) — the measured worst case is the gatefit
@@ -2777,25 +2513,7 @@ object Multimodal extends graft.QueryModule {
     val arrKeys = videoDHashSignature(media)
       .as[(Long, Int, Array[Long])].flatMap {
         case (id, nf, sig) =>
-          val out = new Array[(Long, Long, Array[Long])](28 * nf)
-          var o = 0
-          var f = 0
-          while (f < nf) {
-            var a = 0
-            while (a < 8) {
-              val va = sigByteOf(sig, f * 8 + a)
-              var b = a + 1
-              while (b < 8) {
-                out(o) = (WideVideoDupIndex.key(nf, f, a, b, va,
-                  sigByteOf(sig, f * 8 + b)), id, sig)
-                o += 1
-                b += 1
-              }
-              a += 1
-            }
-            f += 1
-          }
-        out.toSeq
+          VideoDupIndex.keys(nf, sig).map(k => (k, id, sig)).toSeq
       }.toDF("key", "arr_id", "arr_sig")
     // Bucket the ARRIVING side per key too: the join is then
     // bucket-to-bucket (≤ one output row per shared key, each
@@ -2827,7 +2545,7 @@ object Multimodal extends graft.QueryModule {
 
   /** [[videoServingTables]]'s IMAGE twin — the same bucket-per-row
     * relational layout over the C(8,2) = 28 band-pair keys
-    * ([[WideImageDupIndex.keysSql]], bit-equal to the Scala key,
+    * ([[ImageDupIndex.keysSql]], bit-equal to the Scala key,
     * spec-asserted), the same per-(key, shard) cap rule (here the
     * distributed groupBy the sharded image fit already ran — this
     * just skips the driver collect and keeps the relation), shards
@@ -2856,7 +2574,7 @@ object Multimodal extends graft.QueryModule {
     val keys = hashes
       .select(col("hash_lo"), col("hash_hi"),
         pmod(xxhash64(col("media_id")), lit(nShards)).as("shard"),
-        explode(expr(WideImageDupIndex.keysSql)).as("k"))
+        explode(expr(ImageDupIndex.keysSql)).as("k"))
       .groupBy(col("k"), col("shard"))
       .agg(collect_list(struct(col("hash_lo").as("lo"),
         col("hash_hi").as("hi"))).as("hs"))
@@ -2867,7 +2585,7 @@ object Multimodal extends graft.QueryModule {
   }
 
   /** Image admission against [[imageServingTables]] —
-    * decision-identical to `imageAdmitStreamWide` over the
+    * decision-identical to `imageAdmitStream` over the
     * equally-configured broadcast index (spec-asserted): one decode
     * pass, a SQL key explode, ONE shuffled key join, and a
     * short-circuiting `exists` Hamming verify (`bit_count` of the
@@ -2881,7 +2599,7 @@ object Multimodal extends graft.QueryModule {
     val arrKeys = imageDHash(media)
       .select(col("media_id").as("arr_id"),
         col("hash_lo"), col("hash_hi"),
-        explode(expr(WideImageDupIndex.keysSql)).as("key"))
+        explode(expr(ImageDupIndex.keysSql)).as("key"))
     val hit = arrKeys
       .join(serving.keys, "key")
       .filter(exists(col("hs"), h =>
@@ -2898,7 +2616,7 @@ object Multimodal extends graft.QueryModule {
     * exact-oracle tables: wide video 98.8% recall at 200k refs per
     * flat 100-entry cap; sharded at this target, 99.09% at 2M).
     * AUTO shard counts are ceil(nRefs / this). */
-  val MediaShardTargetRefs: Int = 200000
+  val VideoShardTargetRefs: Int = 200000
 
   /** The IMAGE shard target — half the video one, from the round-13
     * calibration: image's 21-bit pair-key space is structurally
@@ -2916,8 +2634,8 @@ object Multimodal extends graft.QueryModule {
     * a large fraction of tracks). */
   val AudioShardTargetRefs: Int = 20000
 
-  private def resolveShards(shards: Int, nRefs: Long,
-                            target: Int = MediaShardTargetRefs): Int =
+  private[graft] def resolveShards(shards: Int, nRefs: Long,
+                                   target: Int): Int =
     if (shards > 0) shards
     else math.max(1L, (nRefs + target - 1) / target).toInt
 
@@ -2969,50 +2687,6 @@ object Multimodal extends graft.QueryModule {
     }
     out
   }
-
-  /** [[videoAdmitStream]] against the wide band-pair index — same
-    * stateless shape, same decode path. */
-  def videoAdmitStreamWide(media: Dataset[MediaRecord],
-      index: org.apache.spark.broadcast.Broadcast[WideVideoDupIndex])
-      : Dataset[MediaRecord] = {
-    val spark = media.sparkSession
-    import spark.implicits._
-    val bc = index
-    media.mapPartitions { it =>
-      it.filter { r =>
-        val (nf, sig) = clipSignature(r)
-        !bc.value.hits(nf, sig)
-      }
-    }
-  }
-
-  def videoAdmitStreamWide(media: Dataset[MediaRecord],
-                           index: WideVideoDupIndex): Dataset[MediaRecord] =
-    videoAdmitStreamWide(media,
-      media.sparkSession.sparkContext.broadcast(index))
-
-  /** Streaming video admission against the frozen index: demux +
-    * decode each arriving payload (REAL RIFF/AVI path, raw-DIB or
-    * MJPEG), signature it, admit unless the index reports a near-dup.
-    * Same stateless shape as [[imageAdmitStream]]/[[audioAdmitStream]]. */
-  def videoAdmitStream(media: Dataset[MediaRecord],
-                       index: org.apache.spark.broadcast.Broadcast[VideoDupIndex])
-      : Dataset[MediaRecord] = {
-    val spark = media.sparkSession
-    import spark.implicits._
-    val bc = index
-    media.mapPartitions { it =>
-      it.filter { r =>
-        val (nf, sig) = clipSignature(r)
-        !bc.value.hits(nf, sig)
-      }
-    }
-  }
-
-  def videoAdmitStream(media: Dataset[MediaRecord], index: VideoDupIndex)
-      : Dataset[MediaRecord] =
-    videoAdmitStream(media,
-      media.sparkSession.sparkContext.broadcast(index))
 
   // ---- corrupt-payload tolerance (q144) ----------------------------------
 

@@ -1299,10 +1299,11 @@ object Similarity extends graft.QueryModule {
     * 1×8 layout's probe decaying LINEARLY with refs (a 256-key space
     * walks ~refs/256 exact cosines per probe — 1 275 probes/s at 200k)
     * while 4×16 holds 146–447 k probes/s at ~98.5% recall (SCALE.md
-    * semantic table). Same discipline as `WideImageDupIndex` being
-    * "the ≥20k config" for images, applied to the fit default so a
-    * plain `fitSemanticDupIndex(refs)` at scale cannot silently get
-    * the decaying layout. */
+    * semantic table). Same discipline as the media fits' auto
+    * `shards` (`Multimodal.fitImageDupIndex` resolves one shard per
+    * `ImageShardTargetRefs` references), applied to the layout default
+    * so a plain `fitSemanticDupIndex(refs)` at scale cannot silently
+    * get the decaying layout. */
   val semanticAutoWideRefs = 20000
 
   /** Fit the frozen semantic index over a reference embedding frame

@@ -332,31 +332,17 @@ object ProfileScale {
     spark.stop()
   }
 
-  /** `runMain graft.tools.ProfileScale q47gate [k...]` — calibrate
-    * the dedupGroups driver-union-find vs distributed-propagation
-    * gate (`maxDriverEdges`). For each replica factor k the sweep
-    * builds a prefix-remapped k-replica corpus (the sf10 discipline:
-    * replicas share no tokens, so the pair graph is k disjoint copies
-    * of sf0.1's and edge count scales exactly linearly), reports the
-    * edge count, and times the WHOLE dedupGroups call down each path
-    * (gate forced wide open vs forced shut) — whole-call wall is the
-    * decision the gate actually makes. min-of-2 timed runs after a
-    * warm run, the Bench discipline. SCALE.md records the crossover;
-    * the `maxDriverEdges` default derives from it.
-    */
-  /** Fit + probe cost of the three frozen media admission indexes at
-    * 1× and 10× reference size (SCALE.md rows): fit wall (the one
-    * decode pass + driver bucket build), index mass (buckets /
-    * entries), and the pure per-row PROBE rate against each index —
+  /** `gatefit [sizes...] [image|audio|video|semantic|oracle...]` —
+    * fit + probe cost of the frozen admission indexes (SCALE.md rows):
+    * fit wall (the one decode pass + bucket build), index mass
+    * (entries), and the pure per-row PROBE rate against each index —
     * the number that must NOT degrade with reference size for the
     * stateless-gate scale story to hold (bucket caps bound per-probe
     * work; reference growth adds buckets, not bucket depth, at
-    * constant dup density). */
-  /** `gatefit [sizes...] [image|audio|video...]` — numeric args are
-    * reference-set sizes (default 2000 20000); family names narrow
-    * the run (default all three). Round 10 added the knobs for the
-    * 100k-ref point and the audio 100× (200k) probe without paying
-    * all three fits at every size. */
+    * constant dup density). Numeric args are reference-set sizes
+    * (default 2000 20000); family names narrow the run (default all
+    * four); `oracle` adds the exact-recall rows (uncapped index =
+    * ground truth). */
   private def runGateFit(spark: SparkSession, gfArgs: Seq[String]): Unit = {
     import graft.operators.Multimodal
     import org.apache.spark.sql.functions.col
@@ -409,45 +395,26 @@ object ProfileScale {
       (best, hits)
     }
     for (n <- sizes) {
+      // every family charts two fits of the ONE index per modality:
+      // the flat cap (shards = 1) and the auto shard count its fit
+      // resolves from the modality's calibrated *ShardTargetRefs
+      // (identical rows at or below the target)
       if (want("image")) locally { // image
-        val (idx, tFit) = wall(
-          Multimodal.fitImageDupIndex(Multimodal.nearDupImageTable(docs(n))))
-        val entries = idx.buckets.map(_.length / 2).sum
+        val (idx, tFit) = wall(Multimodal.fitImageDupIndex(
+          Multimodal.nearDupImageTable(docs(n)), shards = 1))
+        var entries = 0L
+        idx.buckets.forEach((_, b) => entries += b.length / 2)
         val arriving = Multimodal.imageDHash(
             Multimodal.nearDupImageTable(docs(n * 2)
               .filter(col("doc_id") >= n)))
           .collect().map(r => (r.getLong(1), r.getLong(2)))
-        val (rate, _) = probeRate(arriving.length)(i =>
+        val (rate, hits) = probeRate(arriving.length)(i =>
           idx.hits(arriving(i)._1, arriving(i)._2))
         println(f"image  n=$n%-6d fit ${tFit}%6.2f s  " +
-          f"entries $entries%8d  probe ${rate / 1000}%8.0f kprobes/s")
-        // the wide band-pair index at the same reference size: entries
-        // surviving the cap (vs the byte-band space saturating) and
-        // the dropped arriving near-dups (recall evidence)
-        val (widx, tFitW) = wall(Multimodal.fitWideImageDupIndex(
-          Multimodal.nearDupImageTable(docs(n))))
-        var entriesW = 0L
-        widx.buckets.forEach((_, b) => entriesW += b.length / 2)
-        val (rateW, hitsW) = probeRate(arriving.length)(i =>
-          widx.hits(arriving(i)._1, arriving(i)._2))
-        val (_, hitsN) = probeRate(arriving.length)(i =>
-          idx.hits(arriving(i)._1, arriving(i)._2))
-        println(f"imageW n=$n%-6d fit ${tFitW}%6.2f s  " +
-          f"entries $entriesW%8d  probe ${rateW / 1000}%8.0f kprobes/s  " +
-          f"(gated: wide ${hitsW}%d vs narrow ${hitsN}%d " +
-          f"of ${arriving.length}%d)")
-        // the round-12 sharded cap budget at the same reference size;
-        // SPARK_GRAFT_IMAGE_SHARD_TARGET overrides the per-shard ref
-        // target for calibration sweeps. Round 13 calibrated the
-        // default to the per-modality ImageShardTargetRefs=100k (the
-        // bounded 1.8M-key pair space piles mass earlier than
-        // video's nf-indexed space): 99.94% exact recall at 2M vs
-        // 98.93% at the video-shared 200k target.
-        val imgTarget = sys.env
-          .getOrElse("SPARK_GRAFT_IMAGE_SHARD_TARGET",
-            Multimodal.ImageShardTargetRefs.toString).toInt
-        val nSh = ((n + imgTarget - 1) / imgTarget).toInt
-        val (sidx, tFitS) = wall(Multimodal.fitWideImageDupIndexSharded(
+          f"entries $entries%8d  probe ${rate / 1000}%8.0f kprobes/s  " +
+          f"(gated: $hits%d of ${arriving.length}%d)")
+        val nSh = Multimodal.resolveShards(0, n, Multimodal.ImageShardTargetRefs)
+        val (sidx, tFitS) = wall(Multimodal.fitImageDupIndex(
           Multimodal.nearDupImageTable(docs(n)), shards = nSh))
         var entriesS = 0L
         sidx.buckets.forEach((_, b) => entriesS += b.length / 2)
@@ -455,10 +422,10 @@ object ProfileScale {
           sidx.hits(arriving(i)._1, arriving(i)._2))
         println(f"imageS n=$n%-6d fit ${tFitS}%6.2f s  " +
           f"entries $entriesS%8d  probe ${rateS / 1000}%8.0f kprobes/s  " +
-          f"(gated: sharded($nSh%d) ${hitsS}%d vs wide ${hitsW}%d " +
+          f"(gated: sharded($nSh%d) ${hitsS}%d vs flat ${hits}%d " +
           f"of ${arriving.length}%d)")
         if (want1("oracle")) { // exact recall accounting: uncapped = truth
-          val (oidx, tFitO) = wall(Multimodal.fitWideImageDupIndexSharded(
+          val (oidx, tFitO) = wall(Multimodal.fitImageDupIndex(
             Multimodal.nearDupImageTable(docs(n)),
             maxBucket = Int.MaxValue, shards = 1))
           val genuine = java.util.stream.IntStream.range(0, arriving.length)
@@ -466,12 +433,12 @@ object ProfileScale {
             .filter(i => oidx.hits(arriving(i)._1, arriving(i)._2)).count()
           println(f"imageO n=$n%-6d fit ${tFitO}%6.2f s  genuine " +
             f"$genuine%8d  recall: sharded ${pct(hitsS, genuine)}%s  " +
-            f"wide ${pct(hitsW, genuine)}%s  narrow ${pct(hitsN, genuine)}%s")
+            f"flat ${pct(hits, genuine)}%s")
         }
       }
       if (want("audio")) locally { // audio
-        val (idx, tFit) = wall(
-          Multimodal.fitAudioDupIndex(Multimodal.nearDupAudioTable(docs(n))))
+        val (idx, tFit) = wall(Multimodal.fitAudioDupIndex(
+          Multimodal.nearDupAudioTable(docs(n)), shards = 1))
         val entries = idx.refSets.map(_.length).sum
         val arriving = Multimodal.nearDupAudioTable(docs(n * 2)
             .filter(col("doc_id") >= n)).collect()
@@ -481,10 +448,8 @@ object ProfileScale {
         println(f"audio  n=$n%-6d fit ${tFit}%6.2f s  " +
           f"entries $entries%8d  probe ${rate / 1000}%8.0f kprobes/s  " +
           f"(gated: $hitsA%d of ${arriving.length}%d)")
-        // the round-12 sharded cap budget at the same reference size
-        // (audio's AUTO target is the calibrated 20k, not 200k)
-        val nSh = ((n + 19999) / 20000).toInt
-        val (sidx, tFitS) = wall(Multimodal.fitAudioDupIndexSharded(
+        val nSh = Multimodal.resolveShards(0, n, Multimodal.AudioShardTargetRefs)
+        val (sidx, tFitS) = wall(Multimodal.fitAudioDupIndex(
           Multimodal.nearDupAudioTable(docs(n)), shards = nSh))
         val (rateS, hitsS) = probeRate(arriving.length)(i =>
           sidx.hits(arriving(i)))
@@ -497,7 +462,7 @@ object ProfileScale {
           f"(gated: sharded($nSh%d) $hitsS%d vs flat $hitsA%d " +
           f"of ${arriving.length}%d)")
         if (want1("oracle")) { // exact recall accounting: uncapped = truth
-          val (oidx, tFitO) = wall(Multimodal.fitAudioDupIndexSharded(
+          val (oidx, tFitO) = wall(Multimodal.fitAudioDupIndex(
             Multimodal.nearDupAudioTable(docs(n)),
             maxBucket = Int.MaxValue, shards = 1))
           val genuine = java.util.stream.IntStream.range(0, arriving.length)
@@ -508,34 +473,21 @@ object ProfileScale {
         }
       }
       if (want("video")) locally { // video
-        val (idx, tFit) = wall(
-          Multimodal.fitVideoDupIndex(Multimodal.nearDupVideoTable(docs(n))))
-        val entries = idx.refSigs.map(_.length / 2).sum
+        val (idx, tFit) = wall(Multimodal.fitVideoDupIndex(
+          Multimodal.nearDupVideoTable(docs(n)), shards = 1))
+        var entries = 0L
+        idx.buckets.foreachValue(b => entries += b.length)
         val arriving = Multimodal.videoDHashSignature(
             Multimodal.nearDupVideoTable(docs(n * 2)
               .filter(col("doc_id") >= n)))
           .collect().map(r => (r.getInt(1), r.getSeq[Long](2).toArray))
-        val (rate, hitsN) = probeRate(arriving.length)(i =>
+        val (rate, hits) = probeRate(arriving.length)(i =>
           idx.hits(arriving(i)._1, arriving(i)._2))
         println(f"video  n=$n%-6d fit ${tFit}%6.2f s  " +
           f"entries $entries%8d  probe ${rate / 1000}%8.0f kprobes/s  " +
-          f"(gated: $hitsN%d of ${arriving.length}%d)")
-        // the wide within-frame band-pair index at the same size
-        // (round 10: the widening lever for the narrow key's ~200k
-        // saturation cliff)
-        val (widx, tFitW) = wall(Multimodal.fitWideVideoDupIndex(
-          Multimodal.nearDupVideoTable(docs(n))))
-        var entriesW = 0L
-        widx.buckets.foreachValue(b => entriesW += b.length)
-        val (rateW, hitsW) = probeRate(arriving.length)(i =>
-          widx.hits(arriving(i)._1, arriving(i)._2))
-        println(f"videoW n=$n%-6d fit ${tFitW}%6.2f s  " +
-          f"entries $entriesW%8d  probe ${rateW / 1000}%8.0f kprobes/s  " +
-          f"(gated: wide $hitsW%d vs narrow $hitsN%d " +
-          f"of ${arriving.length}%d)")
-        // the round-12 sharded cap budget at the same reference size
-        val nSh = ((n + 199999) / 200000).toInt
-        val (sidx, tFitS) = wall(Multimodal.fitWideVideoDupIndexSharded(
+          f"(gated: $hits%d of ${arriving.length}%d)")
+        val nSh = Multimodal.resolveShards(0, n, Multimodal.VideoShardTargetRefs)
+        val (sidx, tFitS) = wall(Multimodal.fitVideoDupIndex(
           Multimodal.nearDupVideoTable(docs(n)), shards = nSh))
         var entriesS = 0L
         sidx.buckets.foreachValue(b => entriesS += b.length)
@@ -543,7 +495,7 @@ object ProfileScale {
           sidx.hits(arriving(i)._1, arriving(i)._2))
         println(f"videoS n=$n%-6d fit ${tFitS}%6.2f s  " +
           f"entries $entriesS%8d  probe ${rateS / 1000}%8.0f kprobes/s  " +
-          f"(gated: sharded($nSh%d) $hitsS%d vs wide $hitsW%d " +
+          f"(gated: sharded($nSh%d) $hitsS%d vs flat $hits%d " +
           f"of ${arriving.length}%d)")
         // round 13: the serving-TABLE join gate (past the broadcast
         // ceiling) at the same reference size and shard count — fit
@@ -577,7 +529,7 @@ object ProfileScale {
           f"(gated: serving $hitsJ%d vs sharded($nSh%d) $hitsS%d " +
           f"of ${arriving.length}%d)")
         if (want1("oracle")) { // exact recall accounting: uncapped = truth
-          val (oidx, tFitO) = wall(Multimodal.fitWideVideoDupIndexSharded(
+          val (oidx, tFitO) = wall(Multimodal.fitVideoDupIndex(
             Multimodal.nearDupVideoTable(docs(n)),
             maxBucket = Int.MaxValue, shards = 1))
           val genuine = java.util.stream.IntStream.range(0, arriving.length)
@@ -585,8 +537,7 @@ object ProfileScale {
             .filter(i => oidx.hits(arriving(i)._1, arriving(i)._2)).count()
           println(f"videoO n=$n%-6d fit ${tFitO}%6.2f s  genuine " +
             f"$genuine%8d  recall: serving ${pct(hitsJ, genuine)}%s  " +
-            f"sharded ${pct(hitsS, genuine)}%s  " +
-            f"wide ${pct(hitsW, genuine)}%s  narrow ${pct(hitsN, genuine)}%s")
+            f"sharded ${pct(hitsS, genuine)}%s  flat ${pct(hits, genuine)}%s")
         }
         stv.keys.unpersist(); stv.unpersist()
       }
@@ -629,6 +580,18 @@ object ProfileScale {
     }
   }
 
+  /** `runMain graft.tools.ProfileScale q47gate [k...]` — calibrate
+    * the dedupGroups driver-union-find vs distributed-propagation
+    * gate (`maxDriverEdges`). For each replica factor k the sweep
+    * builds a prefix-remapped k-replica corpus (the sf10 discipline:
+    * replicas share no tokens, so the pair graph is k disjoint copies
+    * of sf0.1's and edge count scales exactly linearly), reports the
+    * edge count, and times the WHOLE dedupGroups call down each path
+    * (gate forced wide open vs forced shut) — whole-call wall is the
+    * decision the gate actually makes. min-of-2 timed runs after a
+    * warm run, the Bench discipline. SCALE.md records the crossover;
+    * the `maxDriverEdges` default derives from it.
+    */
   private def runQ47Gate(spark: SparkSession, argKs: Seq[String]): Unit = {
     val sf01 = "/root/testdata/sf0.1"
     // "k" = k disjoint prefix-remapped replicas (edge count scales

@@ -30,11 +30,11 @@ import graft.streaming.Models._
   */
 object ProfileStream {
   private val Rows =
-    sys.env.getOrElse("SPARK_GRAFT_STREAM_ROWS", "1000000").toInt
+    GraftSession.positiveIntEnv("SPARK_GRAFT_STREAM_ROWS", 1000000)
   private val Batches =
-    sys.env.getOrElse("SPARK_GRAFT_STREAM_BATCHES", "10").toInt
+    GraftSession.positiveIntEnv("SPARK_GRAFT_STREAM_BATCHES", 10)
   private val Keys =
-    sys.env.getOrElse("SPARK_GRAFT_STREAM_KEYS", "10000").toInt
+    GraftSession.positiveIntEnv("SPARK_GRAFT_STREAM_KEYS", 10000)
 
   def main(args: Array[String]): Unit = {
     val rocksdb = args.contains("--rocksdb")
@@ -158,7 +158,7 @@ object ProfileStream {
     }, i => KeyedValue("k" + (i % Keys), i, i))
 
     // streaming image-admission gate: STATELESS, so the number is
-    // pure ImageIO-decode + dHash + 8 index probes per row. A 1000-
+    // pure ImageIO-decode + dHash + 28 band-pair probes per row. A 1000-
     // image payload pool cycles through the stream (driver-side
     // encode cost stays out of the measure; the EXECUTOR decodes
     // every row for real); the frozen index is fit on the pool's
@@ -210,7 +210,7 @@ object ProfileStream {
     }
 
     // streaming video-admission gate: demux + per-frame dHash off the
-    // raw DIB rasters + banded index probes per row.
+    // raw DIB rasters + 28·nf band-pair probes per row.
     locally {
       import graft.operators.Multimodal
       lazy val vidPool: IndexedSeq[Multimodal.MediaRecord] =

@@ -590,11 +590,19 @@ class OperatorsSpec extends SparkSpec {
 
   test("SPARK_GRAFT_CPUS: absent means all cores, a bad value names the env var") {
     import graft.core.GraftSession
-    assert(GraftSession.cpusFrom(None) == Runtime.getRuntime.availableProcessors())
-    assert(GraftSession.cpusFrom(Some(" 3 ")) == 3)
-    for (bad <- Seq("0", "-2", "four", "2.5", "")) {
-      val e = intercept[IllegalArgumentException](GraftSession.cpusFrom(Some(bad)))
-      assert(e.getMessage.contains("SPARK_GRAFT_CPUS"), e.getMessage)
+    def parse(name: String, raw: Option[String]): Int =
+      GraftSession.positiveIntEnv(name, Runtime.getRuntime.availableProcessors(),
+        env = n => if (n == name) raw else Some("wrong variable read"))
+    // the stream profiler's knobs share the parser: 0 batches or keys
+    // would divide by zero mid-run instead of failing up front
+    for (name <- Seq("SPARK_GRAFT_CPUS", "SPARK_GRAFT_STREAM_ROWS",
+        "SPARK_GRAFT_STREAM_BATCHES", "SPARK_GRAFT_STREAM_KEYS")) {
+      assert(parse(name, None) == Runtime.getRuntime.availableProcessors())
+      assert(parse(name, Some(" 3 ")) == 3)
+      for (bad <- Seq("0", "-2", "four", "2.5", "")) {
+        val e = intercept[IllegalArgumentException](parse(name, Some(bad)))
+        assert(e.getMessage.contains(name), e.getMessage)
+      }
     }
   }
 

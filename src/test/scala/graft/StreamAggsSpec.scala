@@ -682,34 +682,55 @@ class StreamAggsSpec extends SparkSpec {
     val all = Multimodal.nearDupImageTable(docs.limit(200))
     val reference = all.filter(col("media_id") % 4 < 2)
     val arriving = all.filter(col("media_id") % 4 >= 2)
-    val index = Multimodal.fitImageDupIndex(reference)
-    // brute-force mirror of the frozen index semantics
+    // brute-force mirror of the frozen index semantics, spelled from
+    // the public hash op alone: a key is a pair of byte bands (a < b)
+    // and their two values, a bucket over the cap is dropped whole,
+    // and a surviving bucket hits on total Hamming <= 6
     val refHs = Multimodal.imageDHash(reference).collect()
       .map(r => (r.getLong(1), r.getLong(2)))
-    def bands(lo: Long, hi: Long): Seq[(Int, Long)] =
-      (0 until 8).map(k => k ->
-        ((if (k < 4) lo >> (k * 8) else hi >> ((k - 4) * 8)) & 255))
-    val buckets = refHs.flatMap { case (lo, hi) =>
-      bands(lo, hi).map { case (k, v) => ((k, v), (lo, hi)) }
-    }.groupBy(_._1).view.mapValues(_.map(_._2).toSeq)
-      .filter(_._2.size <= 100).toMap
+    def band(k: Int, lo: Long, hi: Long): Long =
+      (if (k < 4) lo >>> (k * 8) else hi >>> ((k - 4) * 8)) & 255L
+    def pairKeys(lo: Long, hi: Long): Seq[(Int, Int, Long, Long)] =
+      for (a <- 0 until 8; b <- a + 1 until 8)
+        yield (a, b, band(a, lo, hi), band(b, lo, hi))
     val streamHs = Multimodal.imageDHash(arriving).collect()
       .map(r => (r.getLong(0), r.getLong(1), r.getLong(2)))
-    val expectedAdmit = streamHs.collect {
-      case (id, lo, hi) if !bands(lo, hi).exists { case (k, v) =>
-        buckets.getOrElse((k, v), Nil).exists { case (rl, rh) =>
-          java.lang.Long.bitCount(rl ^ lo) +
-            java.lang.Long.bitCount(rh ^ hi) <= 6 } } => id
-    }.toSet
+    def mirrorAdmit(cap: Int): Set[Long] = {
+      val buckets = refHs.toSeq
+        .flatMap { case (lo, hi) => pairKeys(lo, hi).map(_ -> (lo, hi)) }
+        .groupBy(_._1).filter(_._2.size <= cap)
+        .view.mapValues(_.map(_._2)).toMap
+      streamHs.collect {
+        case (id, lo, hi) if !pairKeys(lo, hi).exists(k =>
+          buckets.getOrElse(k, Nil).exists { case (rl, rh) =>
+            java.lang.Long.bitCount(rl ^ lo) +
+              java.lang.Long.bitCount(rh ^ hi) <= 6 }) => id
+      }.toSet
+    }
+    val expectedAdmit = mirrorAdmit(100)
     // planted groups actually gate: most arriving members near-dup
     // their group's reference members
     assert(expectedAdmit.size < streamHs.length / 2,
       s"gate vacuous: ${expectedAdmit.size}/${streamHs.length} admitted")
     assert(expectedAdmit.nonEmpty, "gate degenerate: everything dropped")
     // batch parity: the gate is stateless, so batch == mirror
-    val batchAdmit = Multimodal.imageAdmitStream(arriving, index)
-      .select("media_id").as[Long].collect().toSet
-    assert(batchAdmit == expectedAdmit)
+    val index = Multimodal.fitImageDupIndex(reference)
+    def admitted(ix: Multimodal.ImageDupIndex): Set[Long] =
+      Multimodal.imageAdmitStream(arriving, ix)
+        .select("media_id").as[Long].collect().toSet
+    assert(admitted(index) == expectedAdmit)
+    // the cap boundary: at cap 2 the two reference members of a
+    // planted group fill their shared buckets exactly, so a bucket of
+    // exactly `cap` entries must survive — verdicts differ from cap 1
+    assert(mirrorAdmit(2) != mirrorAdmit(1), "cap boundary never bites")
+    assert(admitted(Multimodal.fitImageDupIndex(reference, maxBucket = 2)) ==
+      mirrorAdmit(2), "capped index diverges from the mirror")
+    // the pigeonhole bound and the shard count are loud contracts
+    val e = intercept[IllegalArgumentException](index.copy(maxDist = 7))
+    assert(e.getMessage.contains("pigeonhole"), e.getMessage)
+    val es = intercept[IllegalArgumentException](
+      Multimodal.fitImageDupIndex(reference, shards = -1))
+    assert(es.getMessage.contains("shards"), es.getMessage)
     // streaming: same records through a MemoryStream, two batches
     val in = MemoryStream[Multimodal.MediaRecord]
     val sq = Multimodal.imageAdmitStream(in.toDS(), index)
@@ -724,59 +745,6 @@ class StreamAggsSpec extends SparkSpec {
       sq.processAllAvailable()
       val stream = spark.table("img_admit_out").as[Long].collect().toSet
       assert(stream == expectedAdmit, "stream verdicts diverge from batch")
-    } finally sq.stop()
-  }
-
-  test("wide band-pair image index: verdicts equal the single-band " +
-    "index below the cap, and the key space spreads ~28x wider") {
-    import graft.operators.Multimodal
-    implicit val sqlCtx = spark.sqlContext
-    val docs = graft.core.Tables.documents(spark, "/root/testdata/sf0.001")
-    val all = Multimodal.nearDupImageTable(docs.limit(200))
-    val reference = all.filter(col("media_id") % 4 < 2)
-    val arriving = all.filter(col("media_id") % 4 >= 2)
-    val narrow = Multimodal.fitImageDupIndex(reference)
-    val wide = Multimodal.fitWideImageDupIndex(reference)
-    // both indexes are pigeonhole-complete at maxDist 6 and verify
-    // exact Hamming, so with no bucket capped their verdicts coincide.
-    // Capping is only detectable at FIT time by mass accounting —
-    // dropped buckets leave no trace in the pruned index — so compare
-    // entry counts against the uncapped totals (8 band entries and 28
-    // pair entries per reference image)
-    val nRefs = reference.count()
-    assert(narrow.buckets.map(_.length / 2L).sum == nRefs * 8,
-      "narrow index capped a bucket; the exact-parity premise is void")
-    var wideEntries = 0L
-    wide.buckets.forEach((_, b) => wideEntries += b.length / 2)
-    assert(wideEntries == nRefs * 28,
-      "wide index capped a bucket; the exact-parity premise is void")
-    val narrowAdmit = Multimodal.imageAdmitStream(arriving, narrow)
-      .select("media_id").as[Long].collect().toSet
-    val wideAdmit = Multimodal.imageAdmitStreamWide(arriving, wide)
-      .select("media_id").as[Long].collect().toSet
-    assert(wideAdmit == narrowAdmit,
-      s"wide and narrow verdicts diverge: ${
-        (wideAdmit -- narrowAdmit) ++ (narrowAdmit -- wideAdmit)}")
-    assert(narrowAdmit.nonEmpty && narrowAdmit.size < 100)
-    // the point of the wide index: the same reference mass occupies
-    // far more buckets, so the per-bucket load that triggers the
-    // stop-band cap is an order of magnitude lower
-    // (the 28/8 = 3.5x entry fan-out is the floor; shared near-dup
-    // hashes in the fixture keep the ratio near it at this scale)
-    val narrowOccupied = narrow.buckets.count(_.nonEmpty)
-    assert(wide.buckets.size() > narrowOccupied * 3,
-      s"wide ${wide.buckets.size()} vs narrow $narrowOccupied occupied")
-    // streaming parity on the wide gate
-    val in = MemoryStream[Multimodal.MediaRecord]
-    val sq = Multimodal.imageAdmitStreamWide(in.toDS(), wide)
-      .select("media_id")
-      .writeStream.format("memory").queryName("imgw_admit_out")
-      .outputMode("append").start()
-    try {
-      in.addData(arriving.collect().toSeq)
-      sq.processAllAvailable()
-      val stream = spark.table("imgw_admit_out").as[Long].collect().toSet
-      assert(stream == narrowAdmit)
     } finally sq.stop()
   }
 
@@ -814,6 +782,9 @@ class StreamAggsSpec extends SparkSpec {
     val batchAdmit = Multimodal.audioAdmitStream(arriving, index)
       .select("media_id").as[Long].collect().toSet
     assert(batchAdmit == expectedAdmit)
+    val es = intercept[IllegalArgumentException](
+      Multimodal.fitAudioDupIndex(reference, shards = -1))
+    assert(es.getMessage.contains("shards"), es.getMessage)
     // streaming: same records through a MemoryStream, two batches
     val in = MemoryStream[Multimodal.MediaRecord]
     val sq = Multimodal.audioAdmitStream(in.toDS(), index)
@@ -839,9 +810,11 @@ class StreamAggsSpec extends SparkSpec {
     val all = Multimodal.nearDupVideoTable(docs.limit(200))
     val reference = all.filter(col("media_id") % 4 < 2)
     val arriving = all.filter(col("media_id") % 4 >= 2)
-    val index = Multimodal.fitVideoDupIndex(reference)
     // brute-force mirror from the batch signature op — independent
-    // band/first-match/Hamming spelling, no index code reused
+    // key/cap/Hamming spelling, no index code reused: a key is (frame
+    // count, frame, byte-band pair a < b, both values); a bucket over
+    // the cap is dropped whole; a surviving bucket hits on total
+    // Hamming <= 12 over the equal-length signatures
     def sigs(ds: org.apache.spark.sql.Dataset[Multimodal.MediaRecord]) =
       Multimodal.videoDHashSignature(ds).collect()
         .map(r => (r.getLong(0), r.getInt(1),
@@ -850,32 +823,43 @@ class StreamAggsSpec extends SparkSpec {
       val el = sig(2 * (j / 8) + (if (j % 8 < 4) 0 else 1))
       (el >>> ((if (j % 8 < 4) j % 8 else j % 8 - 4) * 8)) & 255L
     }
-    val refSigs = sigs(reference)
-    val surviving: Map[(Int, Int, Long), Seq[Array[Long]]] = refSigs
-      .flatMap { case (_, nf, sig) =>
-        (0 until nf * 8).map(j => (nf, j, bandByte(sig, j)) -> sig) }
-      .groupBy(_._1).view.mapValues(_.map(_._2).toSeq)
-      .filter(_._2.size <= 100).toMap
-    val arrivingSigs = sigs(arriving)
+    def pairKeys(nf: Int, sig: Array[Long]) =
+      for (f <- 0 until nf; a <- 0 until 8; b <- a + 1 until 8)
+        yield (nf, f, a, b, bandByte(sig, f * 8 + a), bandByte(sig, f * 8 + b))
     def hamming(a: Array[Long], b: Array[Long]): Long =
       a.zip(b).map(p => java.lang.Long.bitCount(p._1 ^ p._2).toLong).sum
-    val expectedAdmit = arrivingSigs.collect { case (id, nf, sig)
-      if !(0 until nf * 8).flatMap(j =>
-        surviving.getOrElse((nf, j, bandByte(sig, j)), Nil)).distinct
-        .exists { r =>
-          val first = (0 until nf * 8)
-            .find(j => bandByte(sig, j) == bandByte(r, j))
-          first.exists(j0 =>
-            surviving.contains((nf, j0, bandByte(sig, j0))) &&
-              hamming(sig, r) <= 12)
-        } => id
-    }.toSet
+    val refSigs = sigs(reference)
+    val arrivingSigs = sigs(arriving)
+    def mirrorAdmit(cap: Int): Set[Long] = {
+      val buckets = refSigs.toSeq
+        .flatMap { case (_, nf, sig) => pairKeys(nf, sig).map(_ -> sig) }
+        .groupBy(_._1).filter(_._2.size <= cap)
+        .view.mapValues(_.map(_._2)).toMap
+      arrivingSigs.collect { case (id, nf, sig)
+        if !pairKeys(nf, sig).exists(k =>
+          buckets.getOrElse(k, Nil).exists(r => hamming(sig, r) <= 12)) => id
+      }.toSet
+    }
+    val expectedAdmit = mirrorAdmit(100)
     assert(expectedAdmit.size < arrivingSigs.length / 2,
       s"gate vacuous: ${expectedAdmit.size}/${arrivingSigs.length} admitted")
     assert(expectedAdmit.nonEmpty, "gate degenerate: everything dropped")
-    val batchAdmit = Multimodal.videoAdmitStream(arriving, index)
-      .select("media_id").as[Long].collect().toSet
-    assert(batchAdmit == expectedAdmit)
+    val index = Multimodal.fitVideoDupIndex(reference)
+    def admitted(ix: Multimodal.VideoDupIndex): Set[Long] =
+      Multimodal.videoAdmitStream(arriving, ix)
+        .select("media_id").as[Long].collect().toSet
+    assert(admitted(index) == expectedAdmit)
+    // the cap boundary: a bucket of exactly `cap` entries survives
+    assert(mirrorAdmit(2) != mirrorAdmit(1), "cap boundary never bites")
+    assert(admitted(Multimodal.fitVideoDupIndex(reference, maxBucket = 2)) ==
+      mirrorAdmit(2), "capped index diverges from the mirror")
+    // the two-frame pigeonhole bound and the shard count are loud
+    // contracts, not footguns
+    val e = intercept[IllegalArgumentException](index.copy(maxDist = 14))
+    assert(e.getMessage.contains("pigeonhole"), e.getMessage)
+    val es = intercept[IllegalArgumentException](
+      Multimodal.fitVideoDupIndex(reference, shards = -1))
+    assert(es.getMessage.contains("shards"), es.getMessage)
     val in = MemoryStream[Multimodal.MediaRecord]
     val sq = Multimodal.videoAdmitStream(in.toDS(), index)
       .select("media_id")
@@ -1025,55 +1009,6 @@ class StreamAggsSpec extends SparkSpec {
     } finally q.stop()
   }
 
-  test("wide band-pair video index: verdicts equal the narrow index " +
-    "below the cap, and the key space spreads ~28x wider") {
-    import graft.operators.Multimodal
-    implicit val sqlCtx = spark.sqlContext
-    val docs = graft.core.Tables.documents(spark, "/root/testdata/sf0.001")
-    val all = Multimodal.nearDupVideoTable(docs.limit(200))
-    val reference = all.filter(col("media_id") % 4 < 2)
-    val arriving = all.filter(col("media_id") % 4 >= 2)
-    val narrow = Multimodal.fitVideoDupIndex(reference)
-    val wide = Multimodal.fitWideVideoDupIndex(reference)
-    // with no bucket capped both indexes are recall-complete (every
-    // fixture clip has >= 2 frames, so maxDist 12 <= 7*nf-1) and
-    // verify the same exact Hamming — verdicts must coincide. Capping
-    // is only detectable at fit time by mass accounting: 8*nf narrow
-    // entries and 28*nf wide entries per reference clip
-    val frames = narrow.refSigs.map(_.length / 2L).sum
-    assert(narrow.buckets.values.map(_.length.toLong).sum == frames * 8,
-      "narrow index capped a bucket; the exact-parity premise is void")
-    assert(wide.buckets.values.map(_.length.toLong).sum == frames * 28,
-      "wide index capped a bucket; the exact-parity premise is void")
-    val narrowAdmit = Multimodal.videoAdmitStream(arriving, narrow)
-      .select("media_id").as[Long].collect().toSet
-    val wideAdmit = Multimodal.videoAdmitStreamWide(arriving, wide)
-      .select("media_id").as[Long].collect().toSet
-    assert(wideAdmit == narrowAdmit,
-      s"wide and narrow verdicts diverge: ${
-        (wideAdmit -- narrowAdmit) ++ (narrowAdmit -- wideAdmit)}")
-    assert(narrowAdmit.nonEmpty && narrowAdmit.size < 100)
-    assert(wide.buckets.size > narrow.buckets.size * 3,
-      s"wide ${wide.buckets.size} vs narrow ${narrow.buckets.size} keys")
-    // streaming parity on the wide gate
-    val in = MemoryStream[Multimodal.MediaRecord]
-    val sq = Multimodal.videoAdmitStreamWide(in.toDS(), wide)
-      .select("media_id")
-      .writeStream.format("memory").queryName("vidw_admit_out")
-      .outputMode("append").start()
-    try {
-      in.addData(arriving.collect().toSeq)
-      sq.processAllAvailable()
-      val stream = spark.table("vidw_admit_out").as[Long].collect().toSet
-      assert(stream == narrowAdmit)
-    } finally sq.stop()
-    // the single-frame recall bound is a loud contract, not a footgun
-    val e = intercept[IllegalArgumentException] {
-      wide.copy(maxDist = 14)
-    }
-    assert(e.getMessage.contains("pigeonhole"))
-  }
-
   test("sharded wide video index: shards=1 is bit-identical to the " +
     "flat fit; the per-shard cap budget recovers cap-dropped genuine " +
     "dups without ever gating a non-dup") {
@@ -1082,10 +1017,11 @@ class StreamAggsSpec extends SparkSpec {
     val all = Multimodal.nearDupVideoTable(docs.limit(400))
     val reference = all.filter(col("media_id") % 4 < 2)
     val arriving = all.filter(col("media_id") % 4 >= 2)
-    // shards = 1 reproduces the flat fit bit-identically (same keys,
-    // same entries, same order) — the one-code-path claim
-    val flat = Multimodal.fitWideVideoDupIndex(reference)
-    val s1 = Multimodal.fitWideVideoDupIndexSharded(reference, shards = 1)
+    // below the shard target the default (auto) fit IS the flat-cap
+    // fit: shards = 1 reproduces it bit-identically (same keys, same
+    // entries, same order)
+    val flat = Multimodal.fitVideoDupIndex(reference)
+    val s1 = Multimodal.fitVideoDupIndex(reference, shards = 1)
     assert(flat.buckets.size == s1.buckets.size)
     flat.buckets.foreach { case (k, v) =>
       assert(java.util.Arrays.equals(v, s1.buckets.getOrNull(k)),
@@ -1094,11 +1030,11 @@ class StreamAggsSpec extends SparkSpec {
     // share near-identical signatures, so the flat rule drops their
     // shared buckets whole while the sharded budget keeps the <=cap
     // per-shard slices
-    val flatTiny = Multimodal.fitWideVideoDupIndexSharded(
+    val flatTiny = Multimodal.fitVideoDupIndex(
       reference, maxBucket = 1, shards = 1)
-    val shTiny = Multimodal.fitWideVideoDupIndexSharded(
+    val shTiny = Multimodal.fitVideoDupIndex(
       reference, maxBucket = 1, shards = 3)
-    val truth = Multimodal.fitWideVideoDupIndexSharded(
+    val truth = Multimodal.fitVideoDupIndex(
       reference, maxBucket = Int.MaxValue, shards = 1) // uncapped = exact
     val sigs = Multimodal.videoDHashSignature(arriving).collect()
       .map(r => (r.getLong(0), r.getInt(1), r.getSeq[Long](2).toArray))
@@ -1128,21 +1064,22 @@ class StreamAggsSpec extends SparkSpec {
     val all = Multimodal.nearDupImageTable(docs.limit(400))
     val reference = all.filter(col("media_id") % 4 < 2)
     val arriving = all.filter(col("media_id") % 4 >= 2)
-    val flat = Multimodal.fitWideImageDupIndex(reference)
-    val s1 = Multimodal.fitWideImageDupIndexSharded(reference, shards = 1)
-    // entry ORDER within a bucket comes from collect_list task order,
-    // so compare each bucket as a multiset of (lo, hi) pairs
+    // below the shard target the default (auto) fit IS the flat-cap
+    // fit; entry ORDER within a bucket comes from collect_list task
+    // order, so compare each bucket as a multiset of (lo, hi) pairs
+    val flat = Multimodal.fitImageDupIndex(reference)
+    val s1 = Multimodal.fitImageDupIndex(reference, shards = 1)
     def pairs(a: Array[Long]): Seq[(Long, Long)] =
       a.grouped(2).map(p => (p(0), p(1))).toSeq.sorted
     assert(flat.buckets.size == s1.buckets.size)
     flat.buckets.forEach { (k, v) =>
       assert(s1.buckets.containsKey(k) && pairs(v) == pairs(s1.buckets.get(k)),
         s"bucket $k diverges at shards=1") }
-    val flatTiny = Multimodal.fitWideImageDupIndexSharded(
+    val flatTiny = Multimodal.fitImageDupIndex(
       reference, maxBucket = 1, shards = 1)
-    val shTiny = Multimodal.fitWideImageDupIndexSharded(
+    val shTiny = Multimodal.fitImageDupIndex(
       reference, maxBucket = 1, shards = 3)
-    val truth = Multimodal.fitWideImageDupIndexSharded(
+    val truth = Multimodal.fitImageDupIndex(
       reference, maxBucket = Int.MaxValue, shards = 1)
     val hs = Multimodal.imageDHash(arriving).collect()
       .map(r => (r.getLong(0), r.getLong(1), r.getLong(2)))
@@ -1166,17 +1103,18 @@ class StreamAggsSpec extends SparkSpec {
     val all = Multimodal.nearDupAudioTable(docs.limit(400))
     val reference = all.filter(col("media_id") % 4 < 2)
     val arriving = all.filter(col("media_id") % 4 >= 2)
+    // below the shard target the default (auto) fit IS the flat-cap fit
     val flat = Multimodal.fitAudioDupIndex(reference)
-    val s1 = Multimodal.fitAudioDupIndexSharded(reference, shards = 1)
+    val s1 = Multimodal.fitAudioDupIndex(reference, shards = 1)
     assert(flat.buckets.size == s1.buckets.size)
     flat.buckets.foreach { case (k, v) =>
       assert(java.util.Arrays.equals(v, s1.buckets.getOrNull(k)),
         s"bucket $k diverges at shards=1") }
-    val flatTiny = Multimodal.fitAudioDupIndexSharded(
+    val flatTiny = Multimodal.fitAudioDupIndex(
       reference, maxBucket = 1, shards = 1)
-    val shTiny = Multimodal.fitAudioDupIndexSharded(
+    val shTiny = Multimodal.fitAudioDupIndex(
       reference, maxBucket = 1, shards = 3)
-    val truth = Multimodal.fitAudioDupIndexSharded(
+    val truth = Multimodal.fitAudioDupIndex(
       reference, maxBucket = Int.MaxValue, shards = 1)
     val fps = arriving.collect().map(r => (r.media_id,
       Multimodal.subFingerprints(
@@ -1200,11 +1138,11 @@ class StreamAggsSpec extends SparkSpec {
     val rnd = new scala.util.Random(0xA11CEL)
     val hs = Seq.fill(200)((rnd.nextLong(), rnd.nextLong()))
     val got = hs.toDF("hash_lo", "hash_hi")
-      .select(expr(Multimodal.WideImageDupIndex.keysSql).as("ks"))
+      .select(expr(Multimodal.ImageDupIndex.keysSql).as("ks"))
       .as[Seq[Long]].collect()
     hs.zip(got).foreach { case ((lo, hi), ks) =>
       val want = for (a <- 0 until 8; b <- a + 1 until 8)
-        yield Multimodal.WideImageDupIndex.key(a, b, lo, hi).toLong
+        yield Multimodal.ImageDupIndex.key(a, b, lo, hi).toLong
       assert(ks == want, f"keys diverge for lo=$lo%x hi=$hi%x")
     }
   }
@@ -1468,11 +1406,11 @@ class StreamAggsSpec extends SparkSpec {
 
     // under-cap: serving == broadcast wide gate, any shard count
     // (the cap never bites, so the shard-basis delta is invisible)
-    val wide = Multimodal.fitWideVideoDupIndex(reference)
+    val wide = Multimodal.fitVideoDupIndex(reference)
     val frames = wide.refSigs.map(_.length / 2L).sum
     assert(wide.buckets.values.map(_.length.toLong).sum == frames * 28,
       "fixture over-caps; the exact-parity premise is void")
-    val bcast = admitted(Multimodal.videoAdmitStreamWide(arriving, wide))
+    val bcast = admitted(Multimodal.videoAdmitStream(arriving, wide))
     val st = Multimodal.videoServingTables(reference, shards = 3)
     try {
       assert(admitted(Multimodal.videoAdmitServed(arriving, st)) == bcast,
@@ -1501,9 +1439,9 @@ class StreamAggsSpec extends SparkSpec {
     // shards=1 broadcast index (same flat drop-if-over-cap rule, no
     // shard basis in play), the sharded budget gates a strict
     // superset, and the exact verify keeps every widening genuine
-    val flatTiny = Multimodal.fitWideVideoDupIndexSharded(
+    val flatTiny = Multimodal.fitVideoDupIndex(
       reference, maxBucket = 1, shards = 1)
-    val truth = Multimodal.fitWideVideoDupIndexSharded(
+    val truth = Multimodal.fitVideoDupIndex(
       reference, maxBucket = Int.MaxValue, shards = 1)
     val sv1 = Multimodal.videoServingTables(reference,
       maxBucket = 1, shards = 1)
@@ -1516,7 +1454,7 @@ class StreamAggsSpec extends SparkSpec {
       val servedFlat = admitted(Multimodal.videoAdmitServed(arriving, sv1))
       val servedSh = admitted(Multimodal.videoAdmitServed(arriving, sv3))
       val gatedFlatB = arrIds -- admitted(
-        Multimodal.videoAdmitStreamWide(arriving, flatTiny))
+        Multimodal.videoAdmitStream(arriving, flatTiny))
       val gatedFlat = arrIds -- servedFlat
       val gatedSh = arrIds -- servedSh
       val sigs = Multimodal.videoDHashSignature(arriving).collect()
@@ -1545,12 +1483,12 @@ class StreamAggsSpec extends SparkSpec {
     def admitted(ds: org.apache.spark.sql.Dataset[Multimodal.MediaRecord])
         : Set[Long] = ds.select("media_id").as[Long].collect().toSet
     // under-cap, any shards: equal to the wide broadcast gate
-    val wide = Multimodal.fitWideImageDupIndex(reference)
+    val wide = Multimodal.fitImageDupIndex(reference)
     var wideEntries = 0L
     wide.buckets.forEach((_, b) => wideEntries += b.length / 2)
     assert(wideEntries == reference.count() * 28,
       "fixture over-caps; the under-cap premise is void")
-    val bcast = admitted(Multimodal.imageAdmitStreamWide(arriving, wide))
+    val bcast = admitted(Multimodal.imageAdmitStream(arriving, wide))
     val st = Multimodal.imageServingTables(reference, shards = 3)
     try {
       assert(admitted(Multimodal.imageAdmitServed(arriving, st)) == bcast,
@@ -1560,13 +1498,13 @@ class StreamAggsSpec extends SparkSpec {
     // fit shards on xxhash64(media_id) — the SAME basis serving uses —
     // so the two paths must agree bucket-for-bucket even where the
     // cap bites
-    val shTiny = Multimodal.fitWideImageDupIndexSharded(
+    val shTiny = Multimodal.fitImageDupIndex(
       reference, maxBucket = 1, shards = 3)
     val svTiny = Multimodal.imageServingTables(reference,
       maxBucket = 1, shards = 3)
     try {
       val gatedB = admitted(arriving) -- admitted(
-        Multimodal.imageAdmitStreamWide(arriving, shTiny))
+        Multimodal.imageAdmitStream(arriving, shTiny))
       val gatedS = admitted(arriving) -- admitted(
         Multimodal.imageAdmitServed(arriving, svTiny))
       assert(gatedS == gatedB,

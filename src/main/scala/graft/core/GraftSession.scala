@@ -15,6 +15,21 @@ object GraftSession {
   /** Apply engine-required SQL confs to an existing session (used when
     * the driver harness owns the builder, e.g. Verify/Bench). Safe to
     * call repeatedly; all confs are runtime-settable.
+    *
+    * `spark.sql.artifact.isolation.enabled` is false, so code generated
+    * for one query is reused by the next. `CodeGenerator` caches each
+    * compiled class under (context class loader, source). With
+    * isolation on, a session's jobs carry a `JobArtifactState` named by
+    * the session's UUID, and executors run their tasks under a class
+    * loader of that session's own. Each `writeStream.start()` clones
+    * the session under a fresh UUID, so every query start, restarts
+    * from a checkpoint included, would compile its generated classes
+    * again, and the JIT would compile those new classes again too.
+    * Isolation buys session-scoped `addArtifact` jars and classes, and
+    * Spark Connect; graft uses neither. A session reads the setting
+    * from its own conf when it first runs a job, and a clone copies its
+    * parent's conf, so setting it here at runtime reaches every stream
+    * started afterwards.
     */
   def configure(spark: SparkSession): SparkSession = {
     val c = spark.conf
@@ -51,6 +66,9 @@ object GraftSession {
     // FileContext's per-rename shell forks; other file systems keep
     // Spark's default manager (CheckpointFiles).
     c.set(CheckpointFiles.ConfKey, classOf[CheckpointFiles].getName)
+    // One class loader for every query's tasks, so the codegen cache
+    // hits across query starts (see the scaladoc above).
+    c.set("spark.sql.artifact.isolation.enabled", "false")
     spark
   }
 

@@ -1323,9 +1323,10 @@ object Multimodal extends graft.QueryModule {
       // (filter(sequence(0, nf·8−1), j -> …) + aggregate(zip_with))
       // re-read the signature arrays per band iteration and allocated
       // per candidate, costing ~8 s of the sf0.1 pass at 2.2 M
-      // capped-bucket candidates (ProfileOps q137); the fused node is
-      // an allocation-free loop and the many-literal-loops cliff does
-      // not apply (one loop, data-dependent bounds).
+      // capped-bucket candidates (SCALE.md, "q137 verify-stage
+      // measurement"); the fused node is an allocation-free loop and
+      // the many-literal-loops cliff does not apply (one loop,
+      // data-dependent bounds).
       .select(col("band_idx"),
         col("p.a.media_id").as("a"), col("p.b.media_id").as("b"),
         graft.functions.VectorExpressions

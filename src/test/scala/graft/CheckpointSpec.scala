@@ -10,6 +10,7 @@ import scala.util.Random
 import org.apache.hadoop.conf.Configuration
 import org.apache.hadoop.fs.{DelegateToFileSystem, FilterFileSystem, Path,
   RawLocalFileSystem}
+import org.apache.spark.metrics.source.CodegenMetrics
 import org.apache.spark.sql.{DataFrame, Dataset, Encoder, Row}
 import org.apache.spark.sql.execution.streaming.checkpointing.{
   CheckpointFileManager, FileContextBasedCheckpointFileManager,
@@ -69,10 +70,13 @@ class CheckpointSpec extends SparkSpec with BeforeAndAfterAll {
 
   /** A stateful operator under test: seeded events in arrival order, a
     * stream-only tail that lets the watermark release the output it
-    * holds back, and the query, which also gives the batch form. */
+    * holds back, and the query, which also gives the batch form unless
+    * the operator has no batch form of its own (`batch`). */
   private case class Op[T](events: Random => Seq[T],
                            query: Dataset[T] => DataFrame,
-                           tail: Seq[T] = Nil)(implicit val enc: Encoder[T])
+                           tail: Seq[T] = Nil,
+                           batch: Option[Dataset[T] => DataFrame] = None)
+                          (implicit val enc: Encoder[T])
 
   private val N = 40
   private val Keys = 5
@@ -108,6 +112,31 @@ class CheckpointSpec extends SparkSpec with BeforeAndAfterAll {
     ds => StreamAggs.windowedCounts(ds.toDF("ts", "key"), col("ts"),
       col("key"), "10 seconds", "5 seconds", "10 seconds"),
     tail = Seq((new Timestamp(3600L * 1000), "flush")))
+
+  // the same event times as `windows`, so no event is late; a 3 s gap
+  // against ~5 s between a key's events both merges and splits sessions,
+  // and the tail's far-future event closes every session still open
+  private val sessions = Op[(Timestamp, String, Int)](
+    r => (0 until N).map(i => (new Timestamp(i * 1000L + r.nextInt(9000)),
+      s"k${r.nextInt(Keys)}", r.nextInt(10))),
+    ds => StreamAggs.sessionSums(ds.toDF("ts", "key", "v"), col("ts"),
+      col("key"), col("v"), "3 seconds", "10 seconds"),
+    tail = Seq((new Timestamp(3600L * 1000), "flush", 0)))
+
+  // a key's copies come from one run of five consecutive events, so they
+  // span < 13 s of event time and all arrive before the watermark
+  // (max event time - 10 s) passes the first copy's time + 10 s: the
+  // stream keeps only each key's first copy, while earlier runs' keys
+  // are evicted mid-stream. Only the key is compared, and the batch
+  // form is the distinct keys (Spark rejects
+  // dropDuplicatesWithinWatermark on a batch Dataset). Dedup emits on
+  // arrival and holds nothing back, so it has no tail.
+  private val dedup = Op[(Timestamp, String)](
+    r => (0 until N).map(i => (new Timestamp(i * 1000L + r.nextInt(9000)),
+      s"g${i / 5}-${r.nextInt(2)}")),
+    ds => StreamAggs.dedupWithinWatermark(ds.toDF("ts", "key"), col("ts"),
+      "10 seconds", "key").select("key"),
+    batch = Some(ds => ds.toDF("ts", "key").select("key").distinct()))
 
   /** What the sink got from a query over a fresh MemoryStream on
     * checkpoint `ckpt`, keyed by batch id (a replayed batch overwrites,
@@ -146,7 +175,8 @@ class CheckpointSpec extends SparkSpec with BeforeAndAfterAll {
   }
 
   private def batchForm[T](op: Op[T], events: Seq[T]): Seq[String] =
-    multiset(op.query(spark.createDataset(events)(op.enc)).collect())
+    multiset(op.batch.getOrElse(op.query)(spark.createDataset(events)(op.enc))
+      .collect())
 
   private def restartMatches[T](op: Op[T], seed: Int): Unit = {
     val (events, chunks, stop) = plan(op, seed)
@@ -165,11 +195,13 @@ class CheckpointSpec extends SparkSpec with BeforeAndAfterAll {
          "fraud detector (no TTL)" -> fraud,
          "DFA state machine" -> dfa,
          "MATCH_RECOGNIZE A B+ C" -> mr,
-         "watermarked window counts" -> windows);
+         "watermarked window counts" -> windows,
+         "session window sums" -> sessions,
+         "dedupWithinWatermark" -> dedup);
        (pname, provider) <- Seq("HDFS-backed" -> Hdfs, "RocksDB" -> RocksDb))
     test(s"$name: stop/restart equals the uninterrupted run and the batch " +
       s"form ($pname, ${Seeds.size} seeds)") {
-      // one state partition per query keeps the 80 restarts inside the
+      // one state partition per query keeps the 120 restarts inside the
       // suite's time; the upgrade and corruption cases keep the default
       withConf(ProviderKey, Some(provider)) {
         withConf("spark.sql.shuffle.partitions", Some("1")) {
@@ -177,6 +209,31 @@ class CheckpointSpec extends SparkSpec with BeforeAndAfterAll {
         }
       }
     }
+
+  test("a second start of a stateful query reuses the first start's " +
+    "generated code") {
+    // each start clones the session; the codegen cache is keyed on the
+    // tasks' class loader, so this holds only while sessions share one
+    // (GraftSession.configure). A nonce literal in both stages makes the
+    // plan's generated code new to this JVM whatever ran before it, so
+    // the first start compiles each stage on the driver and in a task.
+    val nonce = -System.nanoTime()
+    val op = Op[Transaction](fraud.events, ds =>
+      Stateful.fraudDetector(ds.filter(col("seq") =!= nonce), flagTtlMs = None)
+        .toDF().filter(col("triggerSeq") =!= nonce))
+    val (_, chunks, _) = plan(op, 1)
+    // Janino compiles in this JVM while `body` runs
+    def compiles(body: => Unit): Long = {
+      val before = CodegenMetrics.METRIC_COMPILATION_TIME.getCount
+      body
+      CodegenMetrics.METRIC_COMPILATION_TIME.getCount - before
+    }
+    val first = compiles(segment(op, freshDir(), Nil, chunks))
+    val second = compiles(segment(op, freshDir(), Nil, chunks))
+    val counts = s"Janino compiles: $first at the first start, $second at the second"
+    info(counts)
+    assert(first >= 4 && second <= 3, counts)
+  }
 
   private def upgradeMatches[T](op: Op[T]): Unit = {
     val (events, chunks, stop) = plan(op, 1)

@@ -16,15 +16,10 @@ trait SparkSpec extends AnyFunSuite {
 }
 
 object SparkSpec {
+  /** The engine's own session, at suite size. */
   lazy val session: SparkSession = {
-    val s = SparkSession.builder()
-      .master("local[4]")
-      .appName("graft-test")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    val s = graft.core.GraftSession.build("graft-test", Some("local[4]"), 4)
     s.sparkContext.setLogLevel("ERROR")
-    graft.core.GraftSession.configure(s)
+    s
   }
 }

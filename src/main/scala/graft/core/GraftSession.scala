@@ -58,10 +58,9 @@ object GraftSession {
     // 128k keeps local parallelism at the core count for these
     // stages while staying invisible at production scale, where
     // post-shuffle partitions are far above 1 MB either way — the
-    // floor only matters in the small-bytes/heavy-CPU regime.
-    // Env-overridable for cluster deployments that want the default.
-    c.set("spark.sql.adaptive.coalescePartitions.minPartitionSize",
-      sys.env.getOrElse("SPARK_GRAFT_MIN_PARTITION_SIZE", "128k"))
+    // floor only matters in the small-bytes/heavy-CPU regime. A
+    // deployment that wants Spark's default sets the key after this.
+    c.set("spark.sql.adaptive.coalescePartitions.minPartitionSize", "128k")
     // Streaming checkpoints on the local file system skip Hadoop
     // FileContext's per-rename shell forks; other file systems keep
     // Spark's default manager (CheckpointFiles).

@@ -2004,28 +2004,16 @@ object Multimodal extends graft.QueryModule {
     * brute-force mirror of the band-pair/cap/Hamming semantics).
     * Arriving near-dups of EACH OTHER both admit (the index is
     * frozen); compose with `StreamAggs.dedupWithinWatermark` on a
-    * content key for in-stream dedup, the bloomAdmitStream layering. */
+    * content key for in-stream dedup, the bloomAdmitStream layering.
+    * The caller broadcasts the fitted index and owns the broadcast's
+    * lifecycle, as for every frozen-index gate. */
   def imageAdmitStream(media: Dataset[MediaRecord],
                        index: org.apache.spark.broadcast.Broadcast[ImageDupIndex])
-      : Dataset[MediaRecord] = {
-    val spark = media.sparkSession
-    import spark.implicits._
-    val bc = index
-    media.mapPartitions { it =>
-      it.filter { r =>
-        val (lo, hi) = dHashAny(r.payload, s"media ${r.media_id}")
-        !bc.value.hits(lo, hi)
-      }
-    }
-  }
-
-  /** Convenience overload that broadcasts the fitted index itself;
-    * the broadcast-lifecycle caveat on `StreamAggs.decontamGate`
-    * applies verbatim. */
-  def imageAdmitStream(media: Dataset[MediaRecord], index: ImageDupIndex)
       : Dataset[MediaRecord] =
-    imageAdmitStream(media,
-      media.sparkSession.sparkContext.broadcast(index))
+    media.filter { (r: MediaRecord) =>
+      val (lo, hi) = dHashAny(r.payload, s"media ${r.media_id}")
+      !index.value.hits(lo, hi)
+    }
 
   // ---- streaming media admission: audio near-dup gate --------------------
 
@@ -2174,22 +2162,8 @@ object Multimodal extends graft.QueryModule {
     * on a fingerprint key for in-stream collapse. */
   def audioAdmitStream(media: Dataset[MediaRecord],
                        index: org.apache.spark.broadcast.Broadcast[AudioDupIndex])
-      : Dataset[MediaRecord] = {
-    val spark = media.sparkSession
-    import spark.implicits._
-    val bc = index
-    media.mapPartitions { it =>
-      it.filter { r =>
-        val fps = audioFpSet(r.payload)
-        !bc.value.hits(fps)
-      }
-    }
-  }
-
-  def audioAdmitStream(media: Dataset[MediaRecord], index: AudioDupIndex)
       : Dataset[MediaRecord] =
-    audioAdmitStream(media,
-      media.sparkSession.sparkContext.broadcast(index))
+    media.filter((r: MediaRecord) => !index.value.hits(audioFpSet(r.payload)))
 
   // ---- streaming media admission: video near-dup gate --------------------
 
@@ -2278,8 +2252,7 @@ object Multimodal extends graft.QueryModule {
     }
 
     /** The 28·nf within-frame pair keys of one clip, frame-major — the
-      * one key enumeration the fit and both serving-table paths share
-      * (`hits` keeps its own early-exit walk). */
+      * fit's key enumeration (`hits` keeps its own early-exit walk). */
     def keys(nf: Int, sig: Array[Long]): Array[Long] = {
       val out = new Array[Long](28 * nf)
       var o = 0
@@ -2337,9 +2310,8 @@ object Multimodal extends graft.QueryModule {
     * Cost: index mass grows toward the uncapped 28·nf entries per
     * ref — at 2M refs ~90M entries, low-GBs broadcast. That is the
     * documented trade for ≥99% recall past 1M refs; size executors
-    * for it, fit shard-at-a-time (explicit `shards` + a filtered
-    * reference) and gate in sequential batch stages, or serve from
-    * [[videoServingTables]] when one resident index is too big. */
+    * for it, or fit shard-at-a-time (explicit `shards` + a filtered
+    * reference) and gate in sequential batch stages. */
   def fitVideoDupIndex(reference: Dataset[MediaRecord], maxDist: Int = 12,
                        maxBucket: Int = Dedup.DefaultMaxBucket,
                        shards: Int = 0): VideoDupIndex = {
@@ -2379,238 +2351,11 @@ object Multimodal extends graft.QueryModule {
     * Same stateless shape as [[imageAdmitStream]]/[[audioAdmitStream]]. */
   def videoAdmitStream(media: Dataset[MediaRecord],
                        index: org.apache.spark.broadcast.Broadcast[VideoDupIndex])
-      : Dataset[MediaRecord] = {
-    val spark = media.sparkSession
-    import spark.implicits._
-    val bc = index
-    media.mapPartitions { it =>
-      it.filter { r =>
-        val (nf, sig) = clipSignature(r)
-        !bc.value.hits(nf, sig)
-      }
-    }
-  }
-
-  def videoAdmitStream(media: Dataset[MediaRecord], index: VideoDupIndex)
       : Dataset[MediaRecord] =
-    videoAdmitStream(media,
-      media.sparkSession.sparkContext.broadcast(index))
-
-  // ---- serving tables: past the single-broadcast ceiling -----------------
-
-  /** The VIDEO index re-expressed as two relations — the path past
-    * the broadcast index's documented ceiling (SCALE.md round 12):
-    * index mass grows ~linearly in refs — 106.6M entries ≈ ~1.6 GB
-    * resident (12-16 B per bucket entry in the LongMap) at 2M video
-    * refs — so around a 1 GB broadcast budget (~64M entries) one
-    * resident index stops being the right shape. Past it, serve from
-    * these tables: the same keys, cap rule and exact verify as
-    * distributed RELATIONS joined per batch, with no driver collect
-    * and no broadcast of the reference mass at all.
-    *
-    * This is the round-12 "band-partitioned serving shards" design,
-    * spelled Spark-first: instead of per-executor resident index
-    * singletons (a side-channel Spark cannot plan around), the bucket map
-    * becomes a `(key, ref_id)` TABLE and the verify corpus a
-    * `(ref_id, nf, sig)` TABLE; gating is then an ordinary shuffled
-    * equi-join Catalyst distributes, AQE balances, and a real cluster
-    * spills — nothing needs to fit on one executor, so the reference
-    * set scales with the CLUSTER, not with one broadcast budget.
-    *
-    * Same construction as [[fitVideoDupIndex]]: one
-    * demux+decode+hash pass (persisted — it is both the key source
-    * and the verify corpus), the 28·nf within-frame pair keys from
-    * the SAME enumeration ([[VideoDupIndex.keys]]), and the per-shard
-    * cap budget — key k keeps shard s's entries iff s contributed
-    * ≤ maxBucket of them, as one `groupBy(key, shard)` instead of a
-    * driver map build. The one deliberate delta: shards hash from the
-    * STABLE `media_id` ([[shardOfId]]), not the in-memory fit's
-    * collect-order ordinal — collect order does not exist here; both
-    * are valid budget assignments and the cap rule is unchanged
-    * (parity with the broadcast path is exact whenever no (key,
-    * shard) slice exceeds the cap, and statistical above it).
-    *
-    * Scale shape: decode pass is map-only; ONE exchange on (key,
-    * shard) builds the capped key table; nothing ever collects.
-    * `keys` is worth persisting (or writing bucketed BY key) — every
-    * served batch joins it. */
-  def videoServingTables(reference: Dataset[MediaRecord],
-                         maxDist: Int = 12,
-                         maxBucket: Int = Dedup.DefaultMaxBucket,
-                         shards: Int = 0): MediaServingTables = {
-    require(maxDist <= 13, "within-frame band-pair pigeonhole needs " +
-      s"maxDist <= 13, got $maxDist")
-    require(shards >= 0, s"shards must be >= 1 (or 0 = auto), got $shards")
-    val spark = reference.sparkSession
-    import spark.implicits._
-    val sigs = videoDHashSignature(reference)
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    val nShards = resolveShards(shards, sigs.count(), VideoShardTargetRefs)
-    val keyRows = sigs.as[(Long, Int, Array[Long])].flatMap {
-      case (id, nf, sig) =>
-        val shard = shardOfId(id, nShards)
-        VideoDupIndex.keys(nf, sig).map(k => (k, id, shard)).toSeq
-    }.toDF("key", "ref_id", "shard")
-    // BUCKET-PER-ROW, signatures inline: the index's LongMap bucket
-    // becomes one (key, sigs[]) row, so serving is ONE equi-join
-    // where every arriving key meets AT MOST ONE row, verified with
-    // a short-circuiting `exists` over the bucket — the broadcast
-    // probe's first-hit early exit, distributed. The two rejected
-    // spellings both measured as bottlenecks on the all-dup fixture
-    // at 200k refs (~850 candidate refs per arriving clip): skinny
-    // keys + distinct pairs + two sig joins spent 102 s in the
-    // pair-distinct alone; entry-per-row with inline sigs turned the
-    // key join into a per-key cross product (SMJ replays the bucket
-    // per duplicate arriving key — 75 s). Bucket rows are unique per
-    // key, so the join output is bounded by the arriving key count.
-    val sigDf = sigs.toDF("ref_id", "nf", "sig")
-    val keys = keyRows
-      .groupBy(col("key"), col("shard"))
-      .agg(collect_list(col("ref_id")).as("ids"))
-      .filter(size(col("ids")) <= maxBucket)
-      .select(col("key"), explode(col("ids")).as("ref_id"))
-      .join(sigDf.select(col("ref_id"), col("sig")), "ref_id")
-      .groupBy(col("key"))
-      .agg(collect_list(col("sig")).as("sigs"))
-    MediaServingTables(keys, sigDf, maxDist, maxBucket, nShards)
-  }
-
-  /** The two serving relations + the verify threshold. `unpersist()`
-    * releases the signature pass both tables derive from. */
-  case class MediaServingTables(keys: DataFrame, sigs: DataFrame,
-                                maxDist: Int, maxBucket: Int,
-                                shards: Int) {
-    def unpersist(): Unit = { sigs.unpersist(); () }
-  }
-
-  /** Video admission against [[videoServingTables]] — decision-
-    * identical to `videoAdmitStream` over the equally-configured
-    * broadcast index (spec-asserted): admit an arriving clip unless
-    * SOME reference clip shares a surviving pair key (same nf — nf
-    * rides in the key) AND verifies at total Hamming ≤ maxDist (the
-    * same fused [[graft.functions.VectorExpressions.sigBandScore]]
-    * walk the batch pair op uses).
-    *
-    * Plan shape per batch: one decode pass over arriving media, a
-    * key explode carrying the arriving signature inline, ONE
-    * equi-join on `key` against the fat serving table (shuffled —
-    * the serving table is deliberately NOT broadcast; that ceiling
-    * is the reason this path exists), the fused codegen verify
-    * evaluated directly on each joined row, a map-side-combinable
-    * distinct on hit ids, and a left-anti join on `media_id`.
-    * Streaming: run inside `foreachBatch` — a distributed join per
-    * trigger is exactly what the past-the-broadcast regime costs;
-    * the stateless broadcast gate remains the right shape below the
-    * ~64M-entry broadcast budget. Cost scales with the batch's
-    * candidate density (a dup-heavy batch pays per genuine
-    * candidate; the broadcast probe's first-hit early exit has no
-    * relational analogue) — the measured worst case is the gatefit
-    * videoJ row's all-dup fixture. */
-  def videoAdmitServed(media: Dataset[MediaRecord],
-                       serving: MediaServingTables)
-      : Dataset[MediaRecord] = {
-    val spark = media.sparkSession
-    import spark.implicits._
-    val arrKeys = videoDHashSignature(media)
-      .as[(Long, Int, Array[Long])].flatMap {
-        case (id, nf, sig) =>
-          VideoDupIndex.keys(nf, sig).map(k => (k, id, sig)).toSeq
-      }.toDF("key", "arr_id", "arr_sig")
-    // Bucket the ARRIVING side per key too: the join is then
-    // bucket-to-bucket (≤ one output row per shared key, each
-    // carrying both arrays ONCE), and the probe runs as a nested
-    // higher-order filter/exists on that row — per arriving entry,
-    // walk the reference bucket until the first verifying signature
-    // (the broadcast probe's early exit), emit only the hits. The
-    // rejected spelling (entry-per-arr-row joining fat buckets)
-    // copied each up-to-3.2KB bucket onto EVERY matching arriving
-    // row — the join materialized tens of GB and measured 52 s of
-    // the 61 s gate at 200k refs on the all-dup fixture.
-    val arrBuckets = arrKeys.groupBy(col("key"))
-      .agg(collect_list(struct(col("arr_id"), col("arr_sig")))
-        .as("probes"))
-    val hit = arrBuckets
-      .join(serving.keys, "key")
-      // shared pair key ⇒ a matching band exists; mask off the
-      // first-band word and gate on the total Hamming alone (the
-      // broadcast hits() contract)
-      .select(explode(filter(col("probes"), p =>
-        exists(col("sigs"), s =>
-          graft.functions.VectorExpressions
-            .sigBandScore(p.getField("arr_sig"), s)
-            .bitwiseAND(lit(0xffffffffL)) <= serving.maxDist))).as("p"))
-      .select(col("p.arr_id")).distinct()
-    media.join(hit, media("media_id") === hit("arr_id"), "left_anti")
-      .as[MediaRecord]
-  }
-
-  /** [[videoServingTables]]'s IMAGE twin — the same bucket-per-row
-    * relational layout over the C(8,2) = 28 band-pair keys
-    * ([[ImageDupIndex.keysSql]], bit-equal to the Scala key,
-    * spec-asserted), the same per-(key, shard) cap rule (here the
-    * distributed groupBy the sharded image fit already ran — this
-    * just skips the driver collect and keeps the relation), shards
-    * hashed from the stable `media_id` exactly like the broadcast
-    * fit. `sigs` carries (media_id, hash_lo, hash_hi) — the decode
-    * pass, persisted.
-    *
-    * AUDIO has no serving twin BY MEASUREMENT, not omission: its
-    * verify needs each candidate's FULL sub-fingerprint set (exact
-    * Jaccard + smallest-shared-element survival), which cannot
-    * inline per bucket without quadratic mass, and its 2M-ref
-    * sharded broadcast fit measures 2.8 s at low-GB mass (SCALE.md
-    * round 12) — an order of magnitude inside the broadcast budget
-    * the serving layout exists to escape. */
-  def imageServingTables(reference: Dataset[MediaRecord],
-                         maxDist: Int = 6,
-                         maxBucket: Int = Dedup.DefaultMaxBucket,
-                         shards: Int = 0): MediaServingTables = {
-    require(maxDist <= 6,
-      s"band-pair pigeonhole needs maxDist <= 6, got $maxDist")
-    require(shards >= 0, s"shards must be >= 1 (or 0 = auto), got $shards")
-    val hashes = imageDHash(reference)
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    val nShards = resolveShards(shards,
-      if (shards > 0) 1L else hashes.count(), ImageShardTargetRefs)
-    val keys = hashes
-      .select(col("hash_lo"), col("hash_hi"),
-        pmod(xxhash64(col("media_id")), lit(nShards)).as("shard"),
-        explode(expr(ImageDupIndex.keysSql)).as("k"))
-      .groupBy(col("k"), col("shard"))
-      .agg(collect_list(struct(col("hash_lo").as("lo"),
-        col("hash_hi").as("hi"))).as("hs"))
-      .filter(size(col("hs")) <= maxBucket)
-      .select(col("k").as("key"), explode(col("hs")).as("h"))
-      .groupBy(col("key")).agg(collect_list(col("h")).as("hs"))
-    MediaServingTables(keys, hashes, maxDist, maxBucket, nShards)
-  }
-
-  /** Image admission against [[imageServingTables]] —
-    * decision-identical to `imageAdmitStream` over the
-    * equally-configured broadcast index (spec-asserted): one decode
-    * pass, a SQL key explode, ONE shuffled key join, and a
-    * short-circuiting `exists` Hamming verify (`bit_count` of the
-    * XORed halves — the index's exact rule) on the joined bucket
-    * row. Streaming: `foreachBatch`, as for video. */
-  def imageAdmitServed(media: Dataset[MediaRecord],
-                       serving: MediaServingTables)
-      : Dataset[MediaRecord] = {
-    val spark = media.sparkSession
-    import spark.implicits._
-    val arrKeys = imageDHash(media)
-      .select(col("media_id").as("arr_id"),
-        col("hash_lo"), col("hash_hi"),
-        explode(expr(ImageDupIndex.keysSql)).as("key"))
-    val hit = arrKeys
-      .join(serving.keys, "key")
-      .filter(exists(col("hs"), h =>
-        (bit_count(col("hash_lo").bitwiseXOR(h.getField("lo"))) +
-          bit_count(col("hash_hi").bitwiseXOR(h.getField("hi"))))
-          <= serving.maxDist))
-      .select(col("arr_id")).distinct()
-    media.join(hit, media("media_id") === hit("arr_id"), "left_anti")
-      .as[MediaRecord]
-  }
+    media.filter { (r: MediaRecord) =>
+      val (nf, sig) = clipSignature(r)
+      !index.value.hits(nf, sig)
+    }
 
   /** Reference count each shard of a sharded VIDEO index targets —
     * the measured single-cap serving envelope (SCALE.md round 12

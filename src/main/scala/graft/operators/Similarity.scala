@@ -1361,59 +1361,6 @@ object Similarity extends graft.QueryModule {
       refVecs.map(v => math.sqrt(dotScala(v, v))), buckets)
   }
 
-  /** Codegen entry point for [[SemanticHit]] — a static forwarder the
-    * generated code calls (object methods on a top-level object
-    * compile to statics), so the emitted Java never names the nested
-    * index class. */
-  def semanticHitEval(
-      bc: org.apache.spark.broadcast.Broadcast[SemanticDupIndex],
-      a: org.apache.spark.sql.catalyst.util.ArrayData): Boolean =
-    bc.value.hits(a.toDoubleArray())
-
-  /** The gate probe as a native codegen expression: null → false
-    * (admit), else one primitive bulk copy of the vector + the index
-    * probe. Measured equal to the Scala-UDF spelling in the semgate
-    * stream row (the MemoryStream array encode dominates both — see
-    * the sembase floor), but the node keeps the filter inside
-    * whole-stage codegen with the cast fused and skips the UDF's
-    * per-row Seq boxing (64 boxed doubles) — the cost that WOULD
-    * surface behind a cheaper source, e.g. a parquet scan. */
-  private case class SemanticHit(child: org.apache.spark.sql.catalyst.expressions.Expression,
-      index: org.apache.spark.broadcast.Broadcast[SemanticDupIndex])
-      extends org.apache.spark.sql.catalyst.expressions.UnaryExpression {
-    import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode, FalseLiteral}
-    import org.apache.spark.sql.catalyst.expressions.codegen.Block._
-
-    override def dataType: org.apache.spark.sql.types.DataType =
-      org.apache.spark.sql.types.BooleanType
-    override def nullable: Boolean = false
-
-    override def eval(input: org.apache.spark.sql.catalyst.InternalRow): Any = {
-      val v = child.eval(input)
-      v != null && semanticHitEval(index,
-        v.asInstanceOf[org.apache.spark.sql.catalyst.util.ArrayData])
-    }
-
-    override protected def doGenCode(ctx: CodegenContext,
-                                     ev: ExprCode): ExprCode = {
-      val bc = ctx.addReferenceObj("semIndex", index,
-        classOf[org.apache.spark.broadcast.Broadcast[_]].getName)
-      val childGen = child.genCode(ctx)
-      ev.copy(code = code"""
-        ${childGen.code}
-        boolean ${ev.value} = false;
-        if (!${childGen.isNull}) {
-          ${ev.value} =
-            graft.operators.Similarity.semanticHitEval($bc, ${childGen.value});
-        }""", isNull = FalseLiteral)
-    }
-
-    override protected def withNewChildInternal(
-        newChild: org.apache.spark.sql.catalyst.expressions.Expression)
-        : org.apache.spark.sql.catalyst.expressions.Expression =
-      copy(child = newChild)
-  }
-
   /** Streaming semantic admission against the frozen index: admit each
     * arriving row unless its embedding cosine-near-dups a reference.
     * STATELESS per row — the media gates' shape verbatim: the index
@@ -1421,20 +1368,16 @@ object Similarity extends graft.QueryModule {
     * identically on a batch frame (q146's spelling). Null embeddings
     * admit (they never pair in batch). Arriving near-dups of EACH
     * OTHER both admit (frozen index) — compose with
-    * [[semanticDedupStream]] for in-stream collapse. */
+    * [[semanticDedupStream]] for in-stream collapse. The caller
+    * broadcasts the fitted index and owns the broadcast's lifecycle. */
   def semanticAdmitStream(stream: DataFrame, embCol: Column,
                           index: org.apache.spark.broadcast.Broadcast[SemanticDupIndex])
       : DataFrame = {
-    import org.apache.spark.sql.graftbridge.ColumnBridge
-    val hit = ColumnBridge.column(SemanticHit(
-      ColumnBridge.expression(embCol.cast("array<double>")), index))
-    stream.filter(!hit)
+    val hit = udf { emb: Array[Double] =>
+      emb != null && index.value.hits(emb)
+    }
+    stream.filter(!hit(embCol.cast("array<double>")))
   }
-
-  def semanticAdmitStream(stream: DataFrame, embCol: Column,
-                          index: SemanticDupIndex): DataFrame =
-    semanticAdmitStream(stream, embCol,
-      stream.sparkSession.sparkContext.broadcast(index))
 
   /** In-stream embedding dedup — the media dedup twins' composition
     * for the embedding modality: key the watermark-bounded dedup on
@@ -1492,7 +1435,7 @@ object Similarity extends graft.QueryModule {
     val index = fitSemanticDupIndex(emb.filter(col("vec_id") % 4 < 2),
       bands = 1, planesPerBand = 8)
     semanticAdmitStream(emb.filter(col("vec_id") % 4 >= 2),
-        col("embedding"), index)
+        col("embedding"), s.sparkContext.broadcast(index))
       .select(col("vec_id"))
   }
 

@@ -268,15 +268,22 @@ object StreamAggs {
     * sets, so the index is benchmark-gram-sized, not corpus-sized),
     * the stream never joins, shuffles, or keeps state, and no
     * watermark is needed. Binary search per gram keeps the probe
-    * allocation-free.
+    * allocation-free, so the index must be SORTED
+    * (`TextOps.fitContamIndex` emits it sorted); the order is checked
+    * once, driver-side, before the filter is built. The caller owns
+    * the broadcast: a long-lived driver that refits the index should
+    * `destroy()` the superseded broadcast once the query using it
+    * stops (the [[surprisalScore]] lifecycle discipline).
     */
   def decontamGate(docs: DataFrame, textCol: Column,
                    index: org.apache.spark.broadcast.Broadcast[Array[Long]],
                    n: Int = 5, maxSharePermille: Long = 100,
                    isBenchSource: Option[Column] = None): DataFrame = {
     import graft.functions.Portable.{h60Scala, wordsScala}
+    require(n >= 1, s"n must be >= 1, got $n")
     require(maxSharePermille >= 1,
       s"maxSharePermille must be >= 1, got $maxSharePermille")
+    requireSorted("decontam", index.value)
     val bc = index
     val nn = n
     val permille = maxSharePermille
@@ -308,22 +315,17 @@ object StreamAggs {
     scored.filter(keep(textCol))
   }
 
-  /** Convenience overload that broadcasts the index itself. Long-lived
-    * drivers that refit the benchmark index periodically should use
-    * the Broadcast overload and `destroy()` superseded broadcasts once
-    * the query using them stops (the [[surprisalScore]] lifecycle
-    * discipline) — this overload creates a new broadcast per call and
-    * never destroys it. */
-  def decontamGate(docs: DataFrame, textCol: Column, index: Array[Long],
-                   n: Int, maxSharePermille: Long,
-                   isBenchSource: Option[Column]): DataFrame =
-    decontamGate(docs, textCol,
-      docs.sparkSession.sparkContext.broadcast(index), n, maxSharePermille,
-      isBenchSource)
-
-  def decontamGate(docs: DataFrame, textCol: Column, index: Array[Long],
-                   n: Int, maxSharePermille: Long): DataFrame =
-    decontamGate(docs, textCol, index, n, maxSharePermille, None)
+  /** [[decontamGate]] and [[scrubGate]] binary-search their index, and
+    * binary search on an unsorted array silently misses members, so
+    * each checks the order once, driver-side, before shipping. */
+  private def requireSorted(gate: String, index: Array[Long]): Unit = {
+    var i = 1
+    while (i < index.length) {
+      require(index(i - 1) <= index(i),
+        s"$gate index not sorted at $i: ${index(i - 1)} > ${index(i)}")
+      i += 1
+    }
+  }
 
   /** Streaming leakage-scrub gate — the serve half of q131's
     * report→apply closure ([[graft.operators.Dedup.leakageScrub]]),
@@ -348,33 +350,19 @@ object StreamAggs {
     * corpus-sized; the stream never joins, shuffles, or keeps state,
     * and no watermark is needed. Binary search per row is
     * allocation-free. Reference anchor for the keyed-gate-over-frozen-
-    * index shape: `connect/DoubleStreamMatch.java:132-231`.
+    * index shape: `connect/DoubleStreamMatch.java:132-231`. The
+    * index must be SORTED ([[graft.operators.Dedup.fitScrubIndex]]
+    * emits it sorted); the broadcast lifecycle is the caller's, as for
+    * [[decontamGate]].
     */
   def scrubGate(docs: DataFrame, idCol: Column,
                 index: org.apache.spark.broadcast.Broadcast[Array[Long]])
       : DataFrame = {
-    val bc = index
+    requireSorted("scrub", index.value)
     val keep = udf { id: Long =>
-      java.util.Arrays.binarySearch(bc.value, id) < 0
+      java.util.Arrays.binarySearch(index.value, id) < 0
     }
     docs.filter(keep(idCol))
-  }
-
-  /** Convenience overload that broadcasts the drop index itself; the
-    * broadcast-lifecycle caveat on the [[decontamGate]] overload
-    * applies verbatim. The index must be SORTED ([[graft.operators
-    * .Dedup.fitScrubIndex]] emits it sorted) — binary search on an
-    * unsorted array admits leaked docs silently, so this overload
-    * verifies order once, driver-side, before shipping. */
-  def scrubGate(docs: DataFrame, idCol: Column, index: Array[Long])
-      : DataFrame = {
-    var i = 1
-    while (i < index.length) {
-      require(index(i - 1) <= index(i),
-        s"scrub index not sorted at $i: ${index(i - 1)} > ${index(i)}")
-      i += 1
-    }
-    scrubGate(docs, idCol, docs.sparkSession.sparkContext.broadcast(index))
   }
 
   /** W12: idle-source tolerance — the Spark counterpart of Flink's

@@ -2,7 +2,7 @@ package graft.tools
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-import graft.core.Tables
+import graft.core.{GraftSession, Tables}
 import graft.operators.Dedup
 
 /** Scale spot-check for the dedup family: run q26/q28/q29/q47/q53 at
@@ -17,15 +17,16 @@ import graft.operators.Dedup
   */
 object ProfileScale {
   def main(args: Array[String]): Unit = {
-    val spark = SparkSession.builder().master("local[32]")
-      .config("spark.sql.shuffle.partitions", "32")
-      .config("spark.sql.session.timeZone", "UTC")
+    val cpus = GraftSession.defaultCpus
+    val spark = GraftSession.configure(SparkSession.builder()
+      .master(s"local[$cpus]")
+      .config("spark.sql.shuffle.partitions", cpus.toString)
       // the 2M-ref audio fit collects ~1.05 GiB of fingerprint sets,
       // over the 1g default cap (round 12; the fit itself documents
       // this as the refSets broadcast-mass bound — a profiling tool
       // measuring that bound must not die at it)
       .config("spark.driver.maxResultSize", "8g")
-      .config("spark.ui.enabled", "false").getOrCreate()
+      .config("spark.ui.enabled", "false").getOrCreate())
     spark.sparkContext.setLogLevel("ERROR")
 
     if (args.headOption.contains("sf10")) {
@@ -521,37 +522,6 @@ object ProfileScale {
             f"of ${arriving.length}%d)")
           hitsS
         }
-        // round 13: the serving-TABLE join gate (past the broadcast
-        // ceiling) at the same reference size and shard count — fit
-        // is the distributed table build (no driver collect), gate is
-        // the full decode+explode+join+verify+anti-join batch over
-        // the arriving set (end-to-end rows/s, all cores — the number
-        // to hold against the broadcast gate's decode-bound stream
-        // rate)
-        val (stv, tFitJ) = wall(locally {
-          val t = Multimodal.videoServingTables(
-            Multimodal.nearDupVideoTable(docs(n)), shards = nSh)
-          t.keys.persist(org.apache.spark.storage.StorageLevel
-            .MEMORY_AND_DISK).count() // materialize the capped build
-          t
-        })
-        val entriesJ = stv.keys
-          .selectExpr("sum(size(sigs))").collect()(0).getLong(0)
-        val arrDs = Multimodal.nearDupVideoTable(
-          docs(n * 2).filter(col("doc_id") >= n))
-        // warm run first (the Bench discipline): the cold gate pays
-        // Janino codegen + JIT of a many-operator plan — measured
-        // 51 s cold vs 5 s steady-state at 200k; steady-state is
-        // what scales with refs
-        Multimodal.videoAdmitServed(arrDs, stv).count()
-        val (admitJ, tGateJ) = wall(
-          Multimodal.videoAdmitServed(arrDs, stv).count())
-        val hitsJ = arriving.length - admitJ.toInt
-        println(f"videoJ n=$n%-6d fit ${tFitJ}%6.2f s  " +
-          f"entries $entriesJ%8d  gate ${tGateJ}%6.2f s = " +
-          f"${arriving.length / tGateJ / 1000}%6.1f krows/s  " +
-          f"(gated: serving $hitsJ%d vs sharded($nSh%d) $hitsS%d " +
-          f"of ${arriving.length}%d)")
         if (want1("oracle")) { // exact recall accounting: uncapped = truth
           val (oidx, tFitO) = wall(Multimodal.fitVideoDupIndex(
             Multimodal.nearDupVideoTable(docs(n)),
@@ -560,10 +530,9 @@ object ProfileScale {
             .parallel()
             .filter(i => oidx.hits(arriving(i)._1, arriving(i)._2)).count()
           println(f"videoO n=$n%-6d fit ${tFitO}%6.2f s  genuine " +
-            f"$genuine%8d  recall: serving ${pct(hitsJ, genuine)}%s  " +
-            f"sharded ${pct(hitsS, genuine)}%s  flat ${pct(hits, genuine)}%s")
+            f"$genuine%8d  recall: sharded ${pct(hitsS, genuine)}%s  " +
+            f"flat ${pct(hits, genuine)}%s")
         }
-        stv.keys.unpersist(); stv.unpersist()
       }
       if (want("semantic")) locally { // embedding gate (round 10)
         import graft.operators.Similarity

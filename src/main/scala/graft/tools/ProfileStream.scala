@@ -173,9 +173,9 @@ object ProfileStream {
             (grp % 5 + 12).toInt, grp, (id % 4).toInt,
             if (id % 2 == 0) "png" else "bmp")
         }
-      lazy val gateIdx = Multimodal.fitImageDupIndex(
-        Multimodal.nearDupImageTable(
-          spark.range(500).select($"id".as("doc_id"))))
+      lazy val gateIdx = spark.sparkContext.broadcast(
+        Multimodal.fitImageDupIndex(Multimodal.nearDupImageTable(
+          spark.range(500).select($"id".as("doc_id")))))
       bench[Multimodal.MediaRecord]("imggate")({ s =>
         implicit val sq = s.sqlContext
         val in = MemoryStream[Multimodal.MediaRecord]
@@ -198,9 +198,9 @@ object ProfileStream {
       lazy val audPool: IndexedSeq[Multimodal.MediaRecord] =
         Multimodal.nearDupAudioTable(
           spark.range(1000).select($"id".as("doc_id"))).collect().toIndexedSeq
-      lazy val gateIdx = Multimodal.fitAudioDupIndex(
-        Multimodal.nearDupAudioTable(
-          spark.range(500).select($"id".as("doc_id"))))
+      lazy val gateIdx = spark.sparkContext.broadcast(
+        Multimodal.fitAudioDupIndex(Multimodal.nearDupAudioTable(
+          spark.range(500).select($"id".as("doc_id")))))
       bench[Multimodal.MediaRecord]("audgate")({ s =>
         implicit val sq = s.sqlContext
         val in = MemoryStream[Multimodal.MediaRecord]
@@ -216,9 +216,9 @@ object ProfileStream {
       lazy val vidPool: IndexedSeq[Multimodal.MediaRecord] =
         Multimodal.nearDupVideoTable(
           spark.range(1000).select($"id".as("doc_id"))).collect().toIndexedSeq
-      lazy val gateIdx = Multimodal.fitVideoDupIndex(
-        Multimodal.nearDupVideoTable(
-          spark.range(500).select($"id".as("doc_id"))))
+      lazy val gateIdx = spark.sparkContext.broadcast(
+        Multimodal.fitVideoDupIndex(Multimodal.nearDupVideoTable(
+          spark.range(500).select($"id".as("doc_id")))))
       bench[Multimodal.MediaRecord]("vidgate")({ s =>
         implicit val sq = s.sqlContext
         val in = MemoryStream[Multimodal.MediaRecord]
@@ -243,10 +243,11 @@ object ProfileStream {
              Similarity.perturbedEmbedding((id - 500).toLong, 5000L + id)
            else Similarity.nearDupEmbedding(id.toLong + 1000L)).toSeq
         }
-      lazy val gateIdx = Similarity.fitSemanticDupIndex(
-        Similarity.nearDupEmbeddingTable(
-          spark.range(500).select($"id".as("doc_id"))),
-        threshold = 0.6) // the gatefit harness's fixture-calibrated bar
+      lazy val gateIdx = spark.sparkContext.broadcast(
+        Similarity.fitSemanticDupIndex(
+          Similarity.nearDupEmbeddingTable(
+            spark.range(500).select($"id".as("doc_id"))),
+          threshold = 0.6)) // the gatefit harness's fixture-calibrated bar
       // the vector-stream floor: the same (id, 64-float) rows with NO
       // gate — MemoryStream's per-row array encode is most of the
       // semgate number (the media gates' "decode-bound" framing, with

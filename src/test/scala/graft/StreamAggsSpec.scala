@@ -401,7 +401,7 @@ class StreamAggsSpec extends SparkSpec {
     // gate's own isBenchSource predicate (the documented contract)
     val q = StreamAggs.decontamGate(
         in.toDF().toDF("doc_id", "text", "source"),
-        col("text"), index, 5, permille,
+        col("text"), spark.sparkContext.broadcast(index), 5, permille,
         isBenchSource = Some(col("source") === "src0"))
       .writeStream.format("memory").queryName("decontam_out")
       .outputMode("append").start()
@@ -435,15 +435,22 @@ class StreamAggsSpec extends SparkSpec {
     // filters upstream or passes isBenchSource
     val docs = Seq((1L, "short bench doc", "src0"))
       .toDF("doc_id", "text", "source")
+    val index = spark.sparkContext.broadcast(Array(42L))
     val kept = StreamAggs.decontamGate(
-        docs, col("text"), Array(42L), 5, 1L)
+        docs, col("text"), index, 5, 1L)
       .select("doc_id").as[Long].collect()
     assert(kept.sameElements(Array(1L)))
     val gated = StreamAggs.decontamGate(
-        docs, col("text"), Array(42L), 5, 1L,
+        docs, col("text"), index, 5, 1L,
         isBenchSource = Some(col("source") === "src0"))
       .count()
     assert(gated == 0L)
+    // a zero gram length would index past the word array in every
+    // task; the gate refuses it at the call
+    val e = intercept[IllegalArgumentException] {
+      StreamAggs.decontamGate(docs, col("text"), index, 0, 1L)
+    }
+    assert(e.getMessage.contains("n must be >= 1"), e.getMessage)
   }
 
   test("streaming leakage-scrub gate reproduces q131's batch survivors") {
@@ -463,7 +470,8 @@ class StreamAggsSpec extends SparkSpec {
     implicit val sqlCtx = spark.sqlContext
     val in = MemoryStream[(Long, String)]
     val q = StreamAggs.scrubGate(
-        in.toDF().toDF("doc_id", "source"), col("doc_id"), index)
+        in.toDF().toDF("doc_id", "source"), col("doc_id"),
+        spark.sparkContext.broadcast(index))
       .writeStream.format("memory").queryName("scrub_out")
       .outputMode("append").start()
     try {
@@ -485,11 +493,18 @@ class StreamAggsSpec extends SparkSpec {
   }
 
   test("scrub gate rejects an unsorted drop index loudly") {
+    // both id gates binary-search their index, so both check its
+    // order before the first row is gated
     val docs = Seq((1L, "x")).toDF("doc_id", "source")
+    val unsorted = spark.sparkContext.broadcast(Array(5L, 3L))
     val err = intercept[IllegalArgumentException] {
-      StreamAggs.scrubGate(docs, col("doc_id"), Array(5L, 3L))
+      StreamAggs.scrubGate(docs, col("doc_id"), unsorted)
     }
     assert(err.getMessage.contains("not sorted"))
+    val errD = intercept[IllegalArgumentException] {
+      StreamAggs.decontamGate(docs, col("source"), unsorted)
+    }
+    assert(errD.getMessage.contains("not sorted"), errD.getMessage)
   }
 
   test("streaming probe scoring reproduces the batch scores exactly") {
@@ -716,7 +731,7 @@ class StreamAggsSpec extends SparkSpec {
     // batch parity: the gate is stateless, so batch == mirror
     val index = Multimodal.fitImageDupIndex(reference)
     def admitted(ix: Multimodal.ImageDupIndex): Set[Long] =
-      Multimodal.imageAdmitStream(arriving, ix)
+      Multimodal.imageAdmitStream(arriving, spark.sparkContext.broadcast(ix))
         .select("media_id").as[Long].collect().toSet
     assert(admitted(index) == expectedAdmit)
     // the cap boundary: at cap 2 the two reference members of a
@@ -733,7 +748,8 @@ class StreamAggsSpec extends SparkSpec {
     assert(es.getMessage.contains("shards"), es.getMessage)
     // streaming: same records through a MemoryStream, two batches
     val in = MemoryStream[Multimodal.MediaRecord]
-    val sq = Multimodal.imageAdmitStream(in.toDS(), index)
+    val sq = Multimodal.imageAdmitStream(in.toDS(),
+        spark.sparkContext.broadcast(index))
       .select("media_id")
       .writeStream.format("memory").queryName("img_admit_out")
       .outputMode("append").start()
@@ -779,7 +795,8 @@ class StreamAggsSpec extends SparkSpec {
       s"gate vacuous: ${expectedAdmit.size}/${arrivingSets.length} admitted")
     assert(expectedAdmit.nonEmpty, "gate degenerate: everything dropped")
     // batch parity: the gate is stateless, so batch == mirror
-    val batchAdmit = Multimodal.audioAdmitStream(arriving, index)
+    val bc = spark.sparkContext.broadcast(index)
+    val batchAdmit = Multimodal.audioAdmitStream(arriving, bc)
       .select("media_id").as[Long].collect().toSet
     assert(batchAdmit == expectedAdmit)
     val es = intercept[IllegalArgumentException](
@@ -787,7 +804,7 @@ class StreamAggsSpec extends SparkSpec {
     assert(es.getMessage.contains("shards"), es.getMessage)
     // streaming: same records through a MemoryStream, two batches
     val in = MemoryStream[Multimodal.MediaRecord]
-    val sq = Multimodal.audioAdmitStream(in.toDS(), index)
+    val sq = Multimodal.audioAdmitStream(in.toDS(), bc)
       .select("media_id")
       .writeStream.format("memory").queryName("aud_admit_out")
       .outputMode("append").start()
@@ -846,7 +863,7 @@ class StreamAggsSpec extends SparkSpec {
     assert(expectedAdmit.nonEmpty, "gate degenerate: everything dropped")
     val index = Multimodal.fitVideoDupIndex(reference)
     def admitted(ix: Multimodal.VideoDupIndex): Set[Long] =
-      Multimodal.videoAdmitStream(arriving, ix)
+      Multimodal.videoAdmitStream(arriving, spark.sparkContext.broadcast(ix))
         .select("media_id").as[Long].collect().toSet
     assert(admitted(index) == expectedAdmit)
     // the cap boundary: a bucket of exactly `cap` entries survives
@@ -861,7 +878,8 @@ class StreamAggsSpec extends SparkSpec {
       Multimodal.fitVideoDupIndex(reference, shards = -1))
     assert(es.getMessage.contains("shards"), es.getMessage)
     val in = MemoryStream[Multimodal.MediaRecord]
-    val sq = Multimodal.videoAdmitStream(in.toDS(), index)
+    val sq = Multimodal.videoAdmitStream(in.toDS(),
+        spark.sparkContext.broadcast(index))
       .select("media_id")
       .writeStream.format("memory").queryName("vid_admit_out")
       .outputMode("append").start()
@@ -1250,11 +1268,17 @@ class StreamAggsSpec extends SparkSpec {
       }.toSet
     assert(q35Reject == expectedReject,
       "brute-force mirror diverges from the batch q35 semantics")
-    val index = Similarity.fitSemanticDupIndex(
-      emb.filter(col("vec_id") % 4 < 2))
-    val expectedAdmit = arrivals.map(_._1).toSet -- expectedReject
+    val index = spark.sparkContext.broadcast(Similarity.fitSemanticDupIndex(
+      emb.filter(col("vec_id") % 4 < 2)))
+    // a null embedding never pairs in batch, so the gate admits it
+    val nullId = 990001L
+    val expectedAdmit =
+      arrivals.map(_._1).toSet -- expectedReject + nullId
+    val nullRow = emb.limit(1).select(lit(nullId).as("vec_id"),
+      lit(null).cast(emb.schema("embedding").dataType).as("embedding"))
     val batchAdmit = Similarity.semanticAdmitStream(
-        emb.filter(col("vec_id") % 4 >= 2), col("embedding"), index)
+        emb.filter(col("vec_id") % 4 >= 2).select("vec_id", "embedding")
+          .union(nullRow), col("embedding"), index)
       .select("vec_id").as[Long].collect().toSet
     assert(batchAdmit == expectedAdmit)
     // streaming: same vectors through a MemoryStream, two batches
@@ -1269,7 +1293,7 @@ class StreamAggsSpec extends SparkSpec {
         (id, v.map(_.toFloat).toSeq) }
       in.addData(rows.take(100).toSeq)
       sq.processAllAvailable()
-      in.addData(rows.drop(100).toSeq)
+      in.addData(rows.drop(100).toSeq :+ ((nullId, null: Seq[Float])))
       sq.processAllAvailable()
       val stream = spark.table("sem_admit_out").as[Long].collect().toSet
       assert(stream == expectedAdmit, "stream verdicts diverge from batch")
@@ -1283,7 +1307,8 @@ class StreamAggsSpec extends SparkSpec {
     val wide = Similarity.fitSemanticDupIndex(
       emb.filter(col("vec_id") % 4 < 2), bands = 4)
     val wideAdmit = Similarity.semanticAdmitStream(
-        emb.filter(col("vec_id") % 4 >= 2), col("embedding"), wide)
+        emb.filter(col("vec_id") % 4 >= 2), col("embedding"),
+        spark.sparkContext.broadcast(wide))
       .select("vec_id").as[Long].collect().toSet
     val wideReject = arrivals.map(_._1).toSet -- wideAdmit
     assert(defaultReject.subsetOf(wideReject),
@@ -1388,129 +1413,5 @@ class StreamAggsSpec extends SparkSpec {
       assert(msgs.exists(_.contains("vec 7")),
         s"null-embedding failure not attributed: $msgs")
     } finally q2.stop()
-  }
-
-  test("video serving tables: join-path admission equals the broadcast " +
-    "wide gate (exactly at shards=1 even over-cap), the sharded cap " +
-    "budget only widens gating with genuine dups, and the foreachBatch " +
-    "recipe matches the batch path") {
-    import graft.operators.Multimodal
-    implicit val sqlCtx = spark.sqlContext
-    val docs = graft.core.Tables.documents(spark, "/root/testdata/sf0.001")
-    val all = Multimodal.nearDupVideoTable(docs.limit(300))
-    val reference = all.filter(col("media_id") % 4 < 2)
-    val arriving = all.filter(col("media_id") % 4 >= 2)
-    def admitted(ds: org.apache.spark.sql.Dataset[Multimodal.MediaRecord])
-        : Set[Long] = ds.select("media_id").as[Long].collect().toSet
-    val arrIds = admitted(arriving)
-
-    // under-cap: serving == broadcast wide gate, any shard count
-    // (the cap never bites, so the shard-basis delta is invisible)
-    val wide = Multimodal.fitVideoDupIndex(reference)
-    val frames = wide.refSigs.map(_.length / 2L).sum
-    assert(wide.buckets.values.map(_.length.toLong).sum == frames * 28,
-      "fixture over-caps; the exact-parity premise is void")
-    val bcast = admitted(Multimodal.videoAdmitStream(arriving, wide))
-    val st = Multimodal.videoServingTables(reference, shards = 3)
-    try {
-      assert(admitted(Multimodal.videoAdmitServed(arriving, st)) == bcast,
-        "serving-join admission diverges from the broadcast gate")
-      // uncapped serving mass = 28 keys per frame, the index identity
-      assert(st.keys.agg(sum(size(col("sigs")))).as[Long].head() ==
-        frames * 28)
-
-      // foreachBatch recipe: the past-the-broadcast streaming shape
-      val in = MemoryStream[Multimodal.MediaRecord]
-      val got = scala.collection.mutable.Set.empty[Long]
-      val sq = in.toDS().writeStream.foreachBatch {
-        (batch: org.apache.spark.sql.Dataset[Multimodal.MediaRecord],
-         _: Long) =>
-          got ++= admitted(Multimodal.videoAdmitServed(batch, st))
-          ()
-      }.start()
-      try {
-        in.addData(arriving.collect().toSeq)
-        sq.processAllAvailable()
-        assert(got.toSet == bcast, "foreachBatch admission diverged")
-      } finally sq.stop()
-    } finally st.unpersist()
-
-    // over-cap (cap 1): shards=1 serving is DECISION-IDENTICAL to the
-    // shards=1 broadcast index (same flat drop-if-over-cap rule, no
-    // shard basis in play), the sharded budget gates a strict
-    // superset, and the exact verify keeps every widening genuine
-    val flatTiny = Multimodal.fitVideoDupIndex(
-      reference, maxBucket = 1, shards = 1)
-    val truth = Multimodal.fitVideoDupIndex(
-      reference, maxBucket = Int.MaxValue, shards = 1)
-    val sv1 = Multimodal.videoServingTables(reference,
-      maxBucket = 1, shards = 1)
-    val sv3 = Multimodal.videoServingTables(reference,
-      maxBucket = 1, shards = 3)
-    try {
-      // with shards=1 every surviving key bucket is globally <= cap
-      assert(sv1.keys.filter(size(col("sigs")) > 1).isEmpty,
-        "cap rule leaked at shards=1")
-      val servedFlat = admitted(Multimodal.videoAdmitServed(arriving, sv1))
-      val servedSh = admitted(Multimodal.videoAdmitServed(arriving, sv3))
-      val gatedFlatB = arrIds -- admitted(
-        Multimodal.videoAdmitStream(arriving, flatTiny))
-      val gatedFlat = arrIds -- servedFlat
-      val gatedSh = arrIds -- servedSh
-      val sigs = Multimodal.videoDHashSignature(arriving).collect()
-        .map(r => (r.getLong(0), r.getInt(1), r.getSeq[Long](2).toArray))
-      val genuine = sigs.filter(t => truth.hits(t._2, t._3)).map(_._1).toSet
-      assert(gatedFlat == gatedFlatB,
-        s"shards=1 serving != shards=1 index over-cap: ${
-          (gatedFlat -- gatedFlatB) ++ (gatedFlatB -- gatedFlat)}")
-      assert(gatedFlat.subsetOf(gatedSh),
-        s"sharded serving lost flat-gated ids: ${gatedFlat -- gatedSh}")
-      assert(gatedSh.subsetOf(genuine),
-        s"sharded serving gated non-dups: ${gatedSh -- genuine}")
-      assert(gatedSh.size > gatedFlat.size,
-        "cap never bit - the recovery premise is untested")
-    } finally { sv1.unpersist(); sv3.unpersist() }
-  }
-
-  test("image serving tables: join-path admission equals the broadcast " +
-    "wide gate EXACTLY at any shard count (same media_id shard basis), " +
-    "over-cap included") {
-    import graft.operators.Multimodal
-    val docs = graft.core.Tables.documents(spark, "/root/testdata/sf0.001")
-    val all = Multimodal.nearDupImageTable(docs.limit(300))
-    val reference = all.filter(col("media_id") % 4 < 2)
-    val arriving = all.filter(col("media_id") % 4 >= 2)
-    def admitted(ds: org.apache.spark.sql.Dataset[Multimodal.MediaRecord])
-        : Set[Long] = ds.select("media_id").as[Long].collect().toSet
-    // under-cap, any shards: equal to the wide broadcast gate
-    val wide = Multimodal.fitImageDupIndex(reference)
-    var wideEntries = 0L
-    wide.buckets.forEach((_, b) => wideEntries += b.length / 2)
-    assert(wideEntries == reference.count() * 28,
-      "fixture over-caps; the under-cap premise is void")
-    val bcast = admitted(Multimodal.imageAdmitStream(arriving, wide))
-    val st = Multimodal.imageServingTables(reference, shards = 3)
-    try {
-      assert(admitted(Multimodal.imageAdmitServed(arriving, st)) == bcast,
-        "serving-join admission diverges from the broadcast gate")
-    } finally st.unpersist()
-    // over-cap (cap 1, shards 3): unlike video, the image broadcast
-    // fit shards on xxhash64(media_id) — the SAME basis serving uses —
-    // so the two paths must agree bucket-for-bucket even where the
-    // cap bites
-    val shTiny = Multimodal.fitImageDupIndex(
-      reference, maxBucket = 1, shards = 3)
-    val svTiny = Multimodal.imageServingTables(reference,
-      maxBucket = 1, shards = 3)
-    try {
-      val gatedB = admitted(arriving) -- admitted(
-        Multimodal.imageAdmitStream(arriving, shTiny))
-      val gatedS = admitted(arriving) -- admitted(
-        Multimodal.imageAdmitServed(arriving, svTiny))
-      assert(gatedS == gatedB,
-        s"serving != broadcast over-cap at shards=3: ${
-          (gatedS -- gatedB) ++ (gatedB -- gatedS)}")
-      assert(gatedB.nonEmpty, "cap never bit - the over-cap arm is vacuous")
-    } finally svTiny.unpersist()
   }
 }

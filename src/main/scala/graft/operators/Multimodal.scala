@@ -10,21 +10,23 @@ import graft.core.Tables
   * `mapInPandas` — one decoder instance per partition, vectorized
   * batches, no per-row setup cost).
   *
-  * Two codec paths:
-  *   - IMAGES decode for real via the JDK's ImageIO (PNG/BMP — zero
-  *     extra dependencies): `decodeImage` reads geometry + mean
-  *     channel values from the actual pixel raster, and
-  *     `syntheticImageBytes`/`imageTable` generate deterministic
-  *     lossless payloads so the decode is golden-testable end to end
-  *     (MultimodalSpec).
+  * Every image and video decoder yields one packed top-down RGB
+  * raster, and one dHash rule ([[dHashGrid]]) hashes every image,
+  * frame and tile from it. The codec paths:
+  *   - IMAGES decode for real: writer-shape PNG/BMP through the
+  *     from-scratch readers ([[pngDecodeFast]], [[bmpDecodeFast]]),
+  *     anything else through the JDK's ImageIO ([[decodeRasterAny]]);
+  *     `syntheticImageBytes` generates deterministic lossless payloads
+  *     so the decode is golden-testable end to end (OperatorsSpec).
   *   - VIDEO decodes for real for AVI containers: `parseAvi` walks the
   *     RIFF chunk tree (pure byte arithmetic, no libs), raw-DIB frames
   *     (`00db`, BI_RGB bottom-up BGR24 — what `ffmpeg -c:v rawvideo`
-  *     emits) decode exactly, and MJPEG frames (`00dc`, one complete
-  *     JPEG per chunk) decode through the JDK's own JPEG ImageIO
-  *     codec. The DIB path is lossless, so q71 oracle-checks the
-  *     entire encode → demux → raster-decode round trip against
-  *     pixel-formula means recomputed in SQL.
+  *     emits) decode exactly through the same DIB reader as BMP, and
+  *     MJPEG frames (`00dc`, one complete JPEG per chunk) decode
+  *     through the JDK's own JPEG ImageIO codec. The DIB path is
+  *     lossless, so q71 oracle-checks the entire encode → demux →
+  *     raster-decode round trip against pixel-formula means
+  *     recomputed in SQL.
   *   - AUDIO decodes for real for WAV containers: `parseWav` walks
   *     the same RIFF structure (fmt + data chunks) and reads PCM16
   *     little-endian samples exactly; q72 oracle-checks the encode →
@@ -32,13 +34,6 @@ import graft.core.Tables
   *     waveform formulas recomputed in SQL, and the spec
   *     cross-validates the writer against the JDK's own
   *     javax.sound.sampled reader.
-  *   - compressed audio and inter-frame video codecs (MP3/AAC/H.264
-  *     etc.) stay STUBBED (no JDK decoder exists): `decodeStub`
-  *     derives a deterministic fake feature vector from the payload
-  *     bytes. The Spark-side plumbing — schema, partitioning, batch
-  *     shape, per-partition resource lifecycle — is real and tested;
-  *     swapping `decodeStub` for a JNI/FFI codec is a one-function
-  *     change.
   *
   * On top of the codec paths sits the media DEDUP SUITE (q133–q145),
   * every stage running over payloads decoded through those real
@@ -66,49 +61,6 @@ object Multimodal extends graft.QueryModule {
   case class MediaRecord(media_id: Long, kind: String, width: Int,
                          height: Int, payload: Array[Byte])
 
-  case class MediaFeatures(media_id: Long, kind: String, n_bytes: Int,
-                           mean_byte: Double, head_hash: Long)
-
-  /** Build a deterministic media table from `documents` (payload =
-    * utf-8 text bytes standing in for encoded media). */
-  def mediaTable(documents: DataFrame): Dataset[MediaRecord] = {
-    val spark = documents.sparkSession
-    import spark.implicits._
-    documents.select(
-      col("doc_id").as("media_id"),
-      element_at(array(lit("image"), lit("audio"), lit("video")),
-        (pmod(col("doc_id"), lit(3)) + 1).cast("int")).as("kind"),
-      (pmod(col("doc_id"), lit(640)) + 32).cast("int").as("width"),
-      (pmod(col("doc_id"), lit(480)) + 32).cast("int").as("height"),
-      encode(col("text"), "utf-8").as("payload"))
-      .as[MediaRecord]
-  }
-
-  /** STUB decoder: stands in for an image/audio codec. Deterministic:
-    * byte statistics + a rolling hash of the first 16 bytes. */
-  def decodeStub(r: MediaRecord): MediaFeatures = {
-    val bytes = r.payload
-    val mean =
-      if (bytes.isEmpty) 0.0
-      else bytes.foldLeft(0L)((a, b) => a + (b & 0xff)).toDouble / bytes.length
-    val headHash = bytes.take(16).foldLeft(0L)((a, b) =>
-      (a * 31 + (b & 0xff)) % 1000000007L)
-    MediaFeatures(r.media_id, r.kind, bytes.length, mean, headHash)
-  }
-
-  /** Batched per-partition decode — the mapInPandas-shaped hot path.
-    * One iterator pass per partition: decoder init happens once per
-    * partition (where a real codec would allocate its context).
-    */
-  def extractFeatures(media: Dataset[MediaRecord]): Dataset[MediaFeatures] = {
-    val spark = media.sparkSession
-    import spark.implicits._
-    media.mapPartitions { it =>
-      // per-partition decoder context would be created here
-      it.map(decodeStub)
-    }
-  }
-
   /** Unified decoded-media statistic: one row per media object, all
     * modalities, features from the ACTUAL decoded payload. `n_units`
     * is the decoded sample count (pixels / PCM samples / pixels ×
@@ -120,9 +72,9 @@ object Multimodal extends graft.QueryModule {
 
   /** Media table whose payloads are REAL encoded containers across
     * all three modalities, keyed by doc_id mod 3: PNG/BMP images
-    * (ImageIO-encoded), WAV PCM16 audio, AVI raw-DIB video — each
-    * family's geometry/length formulas shared with its dedicated
-    * table ([[imageTable]]/[[audioTable]]/[[videoTable]]) so the q40
+    * ([[syntheticImageBytes]]), WAV PCM16 audio, AVI raw-DIB video —
+    * the audio/video geometry/length formulas shared with their
+    * dedicated tables ([[audioTable]]/[[videoTable]]) so the q40
     * oracle reuses the q71/q72 formula discipline. This is the
     * mixed-manifest shape a 100 TB lakehouse scan actually sees. */
   def mixedMediaTable(documents: DataFrame): Dataset[MediaRecord] = {
@@ -153,12 +105,9 @@ object Multimodal extends graft.QueryModule {
     }
   }
 
-  /** REAL mixed-modality decode: dispatch on kind to the JDK codec
-    * paths (ImageIO raster / RIFF-WAVE PCM16 / RIFF-AVI DIB), reduce
-    * each decoded payload to the unified [[MediaSignal]]. The stub
-    * decoder is NOT on this path — it remains only the documented
-    * swap point for codecs with no pure-JDK decoder (MP3/AAC/H.264).
-    */
+  /** REAL mixed-modality decode: dispatch on kind to the codec
+    * paths (image raster / RIFF-WAVE PCM16 / RIFF-AVI frame rasters),
+    * reduce each decoded payload to the unified [[MediaSignal]]. */
   def decodeSignal(r: MediaRecord): MediaSignal = r.kind match {
     case "audio" =>
       val w = parseWav(r.payload)
@@ -173,16 +122,17 @@ object Multimodal extends graft.QueryModule {
       val s = parseAvi(r.payload)
       var total = 0L
       s.frames.foreach { f =>
-        val (sr, sg, sb) = frameChannelSums(s, f)
+        val (sr, sg, sb) = rgbSums(frameRaster(s, f, r.media_id)._3)
         total += sr + sg + sb
       }
       val units = s.width.toLong * s.height * s.frames.length
       MediaSignal(r.media_id, r.kind, s.width, s.height, units,
         if (units == 0) 0.0 else total.toDouble / (3 * units))
-    case _ => // image: ImageIO sniffs PNG vs BMP from the bytes
-      val f = decodeImage(r)
-      MediaSignal(r.media_id, r.kind, f.width, f.height,
-        f.width.toLong * f.height, f.mean_luma)
+    case _ => // image: the container is sniffed from the bytes
+      val (w, h, px) = decodeRasterAny(r.payload, s"media ${r.media_id}")
+      val (sr, sg, sb) = rgbSums(px)
+      val n = w.toLong * h
+      MediaSignal(r.media_id, r.kind, w, h, n, (sr + sg + sb).toDouble / (3 * n))
   }
 
   /** Batched per-partition mixed decode — the mapInPandas shape with
@@ -196,76 +146,9 @@ object Multimodal extends graft.QueryModule {
     }
   }
 
-  def featureQuery(s: SparkSession, d: String): DataFrame =
-    extractSignals(mixedMediaTable(Tables.documents(s, d))).toDF()
+  // ---- image rasters: PNG/BMP readers, ImageIO fallback ----------------
 
-  /** A resized media record: same payload contract, new target dims +
-    * the scale factor a real resampler would apply. */
-  case class ResizedRecord(media_id: Long, kind: String, width: Int,
-                           height: Int, scale: Double, payload: Array[Byte])
-
-  /** Resize-to-fit: compute the aspect-preserving target geometry
-    * (min-scale fit into `maxW`×`maxH`, never upscale) and run the
-    * payload through the batched per-partition "resampler" — the STUB
-    * truncates the payload proportionally to the area ratio, standing
-    * in for a pixel resampler. Geometry math is Column-level
-    * (codegen); only the payload transform needs the partition pass.
-    */
-  def resizeToFit(media: Dataset[MediaRecord], maxW: Int,
-                  maxH: Int): Dataset[ResizedRecord] = {
-    val spark = media.sparkSession
-    import spark.implicits._
-    media.mapPartitions { it =>
-      // per-partition resampler context would be created here
-      it.map { r =>
-        val scale = math.min(1.0,
-          math.min(maxW.toDouble / r.width, maxH.toDouble / r.height))
-        val w = math.max(1, math.floor(r.width * scale).toInt)
-        val h = math.max(1, math.floor(r.height * scale).toInt)
-        val keep = math.max(1,
-          math.floor(r.payload.length * scale * scale).toInt)
-        ResizedRecord(r.media_id, r.kind, w, h, scale,
-          r.payload.take(keep))
-      }
-    }
-  }
-
-  /** One sampled video frame: ordinal + byte offset + a fixed-size
-    * window of payload bytes standing in for the decoded frame. */
-  case class FrameSample(media_id: Long, frame_idx: Int, byte_offset: Int,
-                         frame: Array[Byte])
-
-  /** Frame sampling: every `everyN`-th "frame" of video payloads
-    * (non-video rows produce no frames — the filter prunes them before
-    * any decode work). The STUB treats the payload as fixed-size
-    * `frameBytes` chunks; a real codec would seek keyframes. The
-    * explode happens inside the partition pass — output rows stream
-    * out without materializing all frames of a video in memory.
-    */
-  def sampleFrames(media: Dataset[MediaRecord], everyN: Int,
-                   frameBytes: Int = 64): Dataset[FrameSample] = {
-    val spark = media.sparkSession
-    import spark.implicits._
-    media.filter(_.kind == "video").mapPartitions { it =>
-      // per-partition demuxer context would be created here
-      it.flatMap { r =>
-        val nFrames = r.payload.length / frameBytes
-        (0 until nFrames by everyN).iterator.map { f =>
-          val off = f * frameBytes
-          FrameSample(r.media_id, f, off,
-            r.payload.slice(off, off + frameBytes))
-        }
-      }
-    }
-  }
-
-  // ---- real image codec (JDK ImageIO, PNG/BMP) -------------------------
-
-  case class ImageFeatures(media_id: Long, format: String, width: Int,
-                           height: Int, mean_r: Double, mean_g: Double,
-                           mean_b: Double, mean_luma: Double)
-
-  /** Deterministic synthetic RGB image encoded with ImageIO — pixel
+  /** Deterministic synthetic RGB image encoded as PNG or BMP — pixel
     * (x, y) of image `seed` is a fixed affine function of its
     * coordinates, so a test can recompute the exact channel means the
     * decoder must read back (PNG and BMP are both lossless). */
@@ -290,56 +173,6 @@ object Multimodal extends graft.QueryModule {
       y += 1
     }
     encodeImage(width, height, px, format)
-  }
-
-  /** Media table whose payloads are REAL encoded images: small
-    * deterministic PNG (even ids) / BMP (odd ids) rasters derived from
-    * the document id. The declared width/height metadata matches the
-    * encoded geometry, as an object-store manifest's would. */
-  def imageTable(documents: DataFrame): Dataset[MediaRecord] = {
-    val spark = documents.sparkSession
-    import spark.implicits._
-    documents.select(col("doc_id")).as[Long].mapPartitions { it =>
-      it.map { id =>
-        val w = (id % 13 + 4).toInt
-        val h = (id % 9 + 4).toInt
-        val fmt = if (id % 2 == 0) "png" else "bmp"
-        MediaRecord(id, fmt, w, h, syntheticImageBytes(w, h, id, fmt))
-      }
-    }
-  }
-
-  /** REAL image decode: the container is sniffed from the BYTES (no
-    * trust in the metadata columns — the direct PNG/BMP raster paths
-    * check their own magic+shape, ImageIO sniffs the fallback) and
-    * the features come from the decoded pixel raster. */
-  def decodeImage(r: MediaRecord): ImageFeatures = {
-    val (w, h, px) = decodeRasterAny(r.payload, s"media ${r.media_id}")
-    var (sr, sg, sb) = (0L, 0L, 0L)
-    var o = 0
-    val end = w * 3 * h
-    while (o < end) {
-      sr += px(o) & 0xff; sg += px(o + 1) & 0xff; sb += px(o + 2) & 0xff
-      o += 3
-    }
-    val n = w.toLong * h
-    ImageFeatures(r.media_id, r.kind, w, h, sr.toDouble / n, sg.toDouble / n,
-      sb.toDouble / n, (sr + sg + sb).toDouble / (3 * n))
-  }
-
-  /** Batched per-partition REAL decode — same shape as
-    * `extractFeatures`, but the decoder is the JDK's actual image
-    * codec. ImageIO caches its reader SPI lookups per JVM, so the
-    * per-partition cost is one stream per record, no per-row codec
-    * setup. */
-  def extractImageFeatures(media: Dataset[MediaRecord]): Dataset[ImageFeatures] = {
-    val spark = media.sparkSession
-    import spark.implicits._
-    media.mapPartitions { it =>
-      // a pooled/reused ImageReader would be allocated here for a
-      // codec that needs per-partition context
-      it.map(decodeImage)
-    }
   }
 
   // ---- image near-dup dedup: dHash + Hamming band bucketing -----------
@@ -392,34 +225,18 @@ object Multimodal extends graft.QueryModule {
     }
   }
 
-  /** 64-bit difference hash of a decoded raster: nearest-neighbor
-    * sample a 9×8 luminance grid (`sx = gx·w/9`, `sy = gy·h/8` —
-    * integer division, so the hash is resolution-normalizing and
-    * exactly reproducible in SQL), set bit `gy·8+gx` iff the right
+  /** The one 64-bit difference-hash rule: over a 9×8 grid of
+    * luminances `lum(gx, gy)`, set bit `gy·8+gx` iff the right
     * neighbor is strictly brighter. Returned as two non-negative
     * 32-bit halves (lo = bits 0–31, hi = 32–63) so the DuckDB oracle
-    * can pack each half in BIGINT arithmetic without sign traps.
-    * Luminance is the exact integer channel sum r+g+b — no float
-    * rounding anywhere. */
-  def dHash64(img: java.awt.image.BufferedImage): (Long, Long) = {
-    val (w, h) = (img.getWidth, img.getHeight)
-    val lum = Array.ofDim[Int](8, 9)
+    * can pack each half in BIGINT arithmetic without sign traps. */
+  private def dHashGrid(lum: (Int, Int) => Int): (Long, Long) = {
+    var lo = 0L; var hi = 0L
     var gy = 0
     while (gy < 8) {
       var gx = 0
-      while (gx < 9) {
-        val p = img.getRGB(gx * w / 9, gy * h / 8)
-        lum(gy)(gx) = ((p >> 16) & 0xff) + ((p >> 8) & 0xff) + (p & 0xff)
-        gx += 1
-      }
-      gy += 1
-    }
-    var lo = 0L; var hi = 0L
-    gy = 0
-    while (gy < 8) {
-      var gx = 0
       while (gx < 8) {
-        if (lum(gy)(gx + 1) > lum(gy)(gx)) {
+        if (lum(gx + 1, gy) > lum(gx, gy)) {
           val j = gy * 8 + gx
           if (j < 32) lo |= 1L << j else hi |= 1L << (j - 32)
         }
@@ -430,49 +247,46 @@ object Multimodal extends graft.QueryModule {
     (lo, hi)
   }
 
-  /** Direct-raster fast path for the exact BMP shape ImageIO's own
-    * writer emits (BM magic, BITMAPINFOHEADER, 24-bit BI_RGB,
-    * bottom-up): dHash straight off the pixel bytes with no
-    * BufferedImage, no ColorModel, no per-call ImageIO plugin setup —
-    * measured ~2.3 ms/image of pure overhead on tiny rasters
-    * (ProfileStream imggate), which IS the decode-scan cost at 100×.
-    * Anything else (PNG, top-down, palettes, other depths) falls back
-    * to ImageIO; hash equality of the two paths on writer-emitted
-    * BMPs is spec-asserted pixel-exactly. Returns None when the
-    * payload is not that exact BMP shape. */
-  private[graft] def bmpDHashFast(p: Array[Byte]): Option[(Long, Long)] = {
-    import java.nio.{ByteBuffer, ByteOrder}
-    if (p.length < 54 || p(0) != 'B' || p(1) != 'M') return None
-    val buf = ByteBuffer.wrap(p).order(ByteOrder.LITTLE_ENDIAN)
-    val dataOff = buf.getInt(10)
-    val hdrSize = buf.getInt(14)
-    val w = buf.getInt(18)
-    val h = buf.getInt(22) // positive = bottom-up
-    val bits = buf.getShort(28) & 0xffff
-    val comp = buf.getInt(30)
-    if (hdrSize < 40 || w <= 0 || h <= 0 || bits != 24 || comp != 0)
-      return None
-    val stride = (w * 3 + 3) & ~3
-    if (dataOff < 0 || dataOff.toLong + stride.toLong * h > p.length)
-      return None
-    def lum(x: Int, y: Int): Int = {
-      val o = dataOff + (h - 1 - y) * stride + x * 3
-      (p(o) & 0xff) + (p(o + 1) & 0xff) + (p(o + 2) & 0xff)
+  /** [[dHashGrid]] of a packed top-down RGB raster `w` pixels wide,
+    * grid cell (gx, gy) sampling pixel (sx(gx), sy(gy)). Luminance is
+    * the exact integer channel sum r+g+b — no float rounding
+    * anywhere. */
+  private def rasterDHash(w: Int, px: Array[Byte], sx: Int => Int,
+                          sy: Int => Int): (Long, Long) =
+    dHashGrid { (gx, gy) =>
+      val o = (sy(gy) * w + sx(gx)) * 3
+      (px(o) & 0xff) + (px(o + 1) & 0xff) + (px(o + 2) & 0xff)
     }
-    var lo = 0L; var hi = 0L
-    var gy = 0
-    while (gy < 8) {
-      var gx = 0
-      while (gx < 8) {
-        if (lum((gx + 1) * w / 9, gy * h / 8) > lum(gx * w / 9, gy * h / 8)) {
-          val j = gy * 8 + gx
-          if (j < 32) lo |= 1L << j else hi |= 1L << (j - 32)
-        }
-        gx += 1
-      }
-      gy += 1
+
+  /** Whole-image dHash of a raster: nearest-neighbor sample the 9×8
+    * grid at `sx = gx·w/9`, `sy = gy·h/8` (integer division, so the
+    * hash is resolution-normalizing and exactly reproducible in
+    * SQL). */
+  private def rasterDHash(raster: (Int, Int, Array[Byte])): (Long, Long) = {
+    val (w, h, px) = raster
+    rasterDHash(w, px, gx => gx * w / 9, gy => gy * h / 8)
+  }
+
+  /** The whole-image dHash read straight off a decoded
+    * `BufferedImage` — the ImageIO reference the raster paths are
+    * spec-pinned against. */
+  def dHash64(img: java.awt.image.BufferedImage): (Long, Long) = {
+    val (w, h) = (img.getWidth, img.getHeight)
+    dHashGrid { (gx, gy) =>
+      val p = img.getRGB(gx * w / 9, gy * h / 8)
+      ((p >> 16) & 0xff) + ((p >> 8) & 0xff) + (p & 0xff)
     }
-    Some((lo, hi))
+  }
+
+  /** Per-channel sums (r, g, b) of a packed RGB raster. */
+  private[graft] def rgbSums(px: Array[Byte]): (Long, Long, Long) = {
+    var (sr, sg, sb) = (0L, 0L, 0L)
+    var o = 0
+    while (o + 2 < px.length) {
+      sr += px(o) & 0xff; sg += px(o + 1) & 0xff; sb += px(o + 2) & 0xff
+      o += 3
+    }
+    (sr, sg, sb)
   }
 
   /** From-scratch PNG decode of the shape ImageIO's writer emits —
@@ -565,42 +379,14 @@ object Multimodal extends graft.QueryModule {
     Some((w, h, out))
   }
 
-  /** dHash64 over a [[pngDecodeFast]] raster (packed RGB rows). */
-  private def pngDHashFast(payload: Array[Byte]): Option[(Long, Long)] =
-    pngDecodeFast(payload).map { case (w, h, px) =>
-      def lum(gx: Int, gy: Int): Int = {
-        val o = (gy * h / 8) * w * 3 + (gx * w / 9) * 3
-        (px(o) & 0xff) + (px(o + 1) & 0xff) + (px(o + 2) & 0xff)
-      }
-      var lo = 0L; var hi = 0L
-      var gy = 0
-      while (gy < 8) {
-        var gx = 0
-        while (gx < 8) {
-          if (lum(gx + 1, gy) > lum(gx, gy)) {
-            val j = gy * 8 + gx
-            if (j < 32) lo |= 1L << j else hi |= 1L << (j - 32)
-          }
-          gx += 1
-        }
-        gy += 1
-      }
-      (lo, hi)
-    }
-
-  /** BMP or PNG → dHash via the direct paths, ImageIO fallback. */
-  private[graft] def dHashAny(payload: Array[Byte], who: => String): (Long, Long) =
-    bmpDHashFast(payload).orElse(pngDHashFast(payload)).getOrElse {
-      val img = javax.imageio.ImageIO.read(
-        new java.io.ByteArrayInputStream(payload))
-      require(img != null, s"$who: payload is not a decodable image")
-      dHash64(img)
-    }
-
-  /** Writer-shape BMP → packed top-down RGB raster (the
-    * [[pngDecodeFast]] output convention), for ops that need pixel
-    * access beyond one whole-image hash. Same strict shape checks as
-    * [[bmpDHashFast]]. */
+  /** Writer-shape BMP (BM magic, BITMAPINFOHEADER, 24-bit BI_RGB,
+    * bottom-up — what ImageIO's own writer and [[encodeBmp24]] emit)
+    * → packed top-down RGB raster, with no BufferedImage, no
+    * ColorModel, no per-call ImageIO plugin setup (measured ~2.3
+    * ms/image of pure overhead on tiny rasters, ProfileStream
+    * imggate). Returns None for any other shape (top-down,
+    * palettes, other depths) or a pixel array that does not fit the
+    * payload — the caller falls back to ImageIO. */
   private[graft] def bmpDecodeFast(p: Array[Byte]): Option[(Int, Int, Array[Byte])] = {
     import java.nio.{ByteBuffer, ByteOrder}
     if (p.length < 54 || p(0) != 'B' || p(1) != 'M') return None
@@ -608,18 +394,28 @@ object Multimodal extends graft.QueryModule {
     val dataOff = buf.getInt(10)
     val hdrSize = buf.getInt(14)
     val w = buf.getInt(18)
-    val h = buf.getInt(22)
+    val h = buf.getInt(22) // positive = bottom-up
     val bits = buf.getShort(28) & 0xffff
     val comp = buf.getInt(30)
     if (hdrSize < 40 || w <= 0 || h <= 0 || bits != 24 || comp != 0)
       return None
-    val stride = (w * 3 + 3) & ~3
-    if (dataOff < 0 || dataOff.toLong + stride.toLong * h > p.length)
-      return None
+    dibRaster(p, dataOff, w, h).map(px => (w, h, px))
+  }
+
+  /** The one bottom-up BGR24 DIB reader (rows padded to 4 bytes),
+    * shared by BMP (pixel array at the header's data offset) and AVI
+    * raw-DIB frames (offset 0): → packed top-down RGB raster. The
+    * stride is computed in Long, so a huge declared width cannot wrap
+    * negative past the bounds check; None when the declared `w`×`h`
+    * does not fit in `p` from `off`. */
+  private def dibRaster(p: Array[Byte], off: Int, w: Int,
+                        h: Int): Option[Array[Byte]] = {
+    val stride = (w * 3L + 3) & ~3L
+    if (w <= 0 || h <= 0 || off < 0 || off + stride * h > p.length) return None
     val out = new Array[Byte](w * 3 * h)
     var y = 0
     while (y < h) {
-      val src = dataOff + (h - 1 - y) * stride
+      val src = off + (h - 1 - y) * stride.toInt
       var x = 0
       while (x < w) {
         val o = y * w * 3 + x * 3
@@ -630,7 +426,30 @@ object Multimodal extends graft.QueryModule {
       }
       y += 1
     }
-    Some((w, h, out))
+    Some(out)
+  }
+
+  /** The one `BufferedImage` → packed top-down RGB raster conversion
+    * (sRGB via `getRGB`), shared by the image fallback and MJPEG
+    * frames. */
+  private def imageRaster(img: java.awt.image.BufferedImage)
+      : (Int, Int, Array[Byte]) = {
+    val (w, h) = (img.getWidth, img.getHeight)
+    val out = new Array[Byte](w * 3 * h)
+    var y = 0
+    while (y < h) {
+      var x = 0
+      while (x < w) {
+        val p = img.getRGB(x, y)
+        val o = y * w * 3 + x * 3
+        out(o) = ((p >> 16) & 0xff).toByte
+        out(o + 1) = ((p >> 8) & 0xff).toByte
+        out(o + 2) = (p & 0xff).toByte
+        x += 1
+      }
+      y += 1
+    }
+    (w, h, out)
   }
 
   /** Any image payload → packed top-down RGB raster: direct PNG/BMP
@@ -641,28 +460,17 @@ object Multimodal extends graft.QueryModule {
       val img = javax.imageio.ImageIO.read(
         new java.io.ByteArrayInputStream(payload))
       require(img != null, s"$who: payload is not a decodable image")
-      val (w, h) = (img.getWidth, img.getHeight)
-      val out = new Array[Byte](w * 3 * h)
-      var y = 0
-      while (y < h) {
-        var x = 0
-        while (x < w) {
-          val p = img.getRGB(x, y)
-          val o = y * w * 3 + x * 3
-          out(o) = ((p >> 16) & 0xff).toByte
-          out(o + 1) = ((p >> 8) & 0xff).toByte
-          out(o + 2) = (p & 0xff).toByte
-          x += 1
-        }
-        y += 1
-      }
-      (w, h, out)
+      imageRaster(img)
     }
+
+  /** Any image payload → whole-image dHash via its raster. */
+  private[graft] def dHashAny(payload: Array[Byte], who: => String): (Long, Long) =
+    rasterDHash(decodeRasterAny(payload, who))
 
   // ---- from-scratch image ENCODERS (round 13 optimization) --------------
 
   /** Minimal deterministic 24-bit BMP writer — the exact canonical
-    * shape the fast decode paths ([[bmpDHashFast]]/[[bmpDecodeFast]])
+    * shape the fast decode path ([[bmpDecodeFast]])
     * accept and ImageIO's own writer emits: BM magic, 40-byte
     * BITMAPINFOHEADER, 24-bit BI_RGB, bottom-up rows padded to 4
     * bytes. Input raster: packed top-down RGB rows (the
@@ -778,7 +586,7 @@ object Multimodal extends graft.QueryModule {
   /** Per-partition REAL decode → dHash. Map-only: at 100 TB this is
     * the only pass that touches payload bytes; everything downstream
     * moves (id, 8 bytes of hash). Writer-shape BMPs and truecolor
-    * PNGs take the direct-raster fast paths ([[bmpDHashFast]] /
+    * PNGs take the direct-raster fast paths ([[bmpDecodeFast]] /
     * [[pngDecodeFast]], both pinned pixel-exact against ImageIO);
     * everything else decodes through ImageIO. */
   def imageDHash(media: Dataset[MediaRecord]): DataFrame = {
@@ -837,9 +645,6 @@ object Multimodal extends graft.QueryModule {
       .filter(col("hamming") <= maxDist)
   }
 
-  def imageDHashPairsQuery(s: SparkSession, d: String): DataFrame =
-    imageDHashPairs(nearDupImageTable(Tables.documents(s, d)))
-
   /** Image dedup groups: connected components over the q133 near-dup
     * pair graph — the grouping step that turns pairwise pHash matches
     * into keepable/droppable duplicate sets, reusing the size-gated
@@ -850,9 +655,6 @@ object Multimodal extends graft.QueryModule {
   def imageDedupGroups(media: Dataset[MediaRecord]): DataFrame =
     Dedup.connectedComponents(imageDHashPairs(media))
       .withColumnsRenamed(Map("doc_id" -> "media_id"))
-
-  def imageDedupGroupsQuery(s: SparkSession, d: String): DataFrame =
-    imageDedupGroups(nearDupImageTable(Tables.documents(s, d)))
 
   // ---- real video codec path: AVI (RIFF) demux + DIB/MJPEG decode ------
 
@@ -981,42 +783,24 @@ object Multimodal extends graft.QueryModule {
     AviStream(w, h, comp, frames.result())
   }
 
-  /** Channel sums of one frame, by codec: BI_RGB (comp 0) reads the
-    * raw bottom-up BGR24 raster directly; MJPG decodes the JPEG chunk
-    * through ImageIO. Returns (sumR, sumG, sumB). */
-  private def frameChannelSums(s: AviStream, frame: Array[Byte]): (Long, Long, Long) =
-    if (s.compression == 0) {
-      val stride = (s.width * 3 + 3) & ~3
-      var (sr, sg, sb) = (0L, 0L, 0L)
-      var y = 0
-      while (y < s.height) {
-        val row = y * stride
-        var x = 0
-        while (x < s.width) {
-          val o = row + x * 3
-          sb += frame(o) & 0xff; sg += frame(o + 1) & 0xff
-          sr += frame(o + 2) & 0xff
-          x += 1
-        }
-        y += 1
-      }
-      (sr, sg, sb)
-    } else if (s.compression == fourccLE("MJPG")) {
-      val img = javax.imageio.ImageIO.read(new java.io.ByteArrayInputStream(frame))
-      require(img != null, "MJPG frame did not decode as JPEG")
-      var (sr, sg, sb) = (0L, 0L, 0L)
-      var y = 0
-      while (y < img.getHeight) {
-        var x = 0
-        while (x < img.getWidth) {
-          val p = img.getRGB(x, y)
-          sr += (p >> 16) & 0xff; sg += (p >> 8) & 0xff; sb += p & 0xff
-          x += 1
-        }
-        y += 1
-      }
-      (sr, sg, sb)
-    } else sys.error(f"unsupported AVI codec fourcc 0x${s.compression}%08x")
+  /** One frame's packed top-down RGB raster, by codec: BI_RGB
+    * (comp 0) reads the raw bottom-up BGR24 DIB at the stream's
+    * declared geometry; MJPG decodes the JPEG chunk through ImageIO.
+    * Every failure names the media id. */
+  private def frameRaster(s: AviStream, frame: Array[Byte],
+                          mediaId: Long): (Int, Int, Array[Byte]) =
+    if (s.compression == 0)
+      (s.width, s.height, dibRaster(frame, 0, s.width, s.height).getOrElse(
+        throw new IllegalArgumentException(s"media $mediaId: DIB frame of " +
+          s"${frame.length} bytes does not hold the declared " +
+          s"${s.width}x${s.height} raster")))
+    else if (s.compression == fourccLE("MJPG")) {
+      val img = javax.imageio.ImageIO.read(
+        new java.io.ByteArrayInputStream(frame))
+      require(img != null, s"media $mediaId: MJPG frame did not decode")
+      imageRaster(img)
+    } else sys.error(f"media $mediaId: unsupported AVI codec fourcc " +
+      f"0x${s.compression}%08x")
 
   /** REAL frame sampling: demux the AVI container, decode every
     * `everyN`-th frame, emit per-frame channel means. The demux +
@@ -1034,7 +818,7 @@ object Multimodal extends graft.QueryModule {
         val n = s.width.toLong * s.height
         s.frames.iterator.zipWithIndex.collect {
           case (f, idx) if idx % everyN == 0 =>
-            val (sr, sg, sb) = frameChannelSums(s, f)
+            val (sr, sg, sb) = rgbSums(frameRaster(s, f, r.media_id)._3)
             VideoFrame(r.media_id, idx, s.width, s.height,
               sr.toDouble / n, sg.toDouble / n, sb.toDouble / n)
         }
@@ -1052,7 +836,7 @@ object Multimodal extends graft.QueryModule {
 
   /** One raw BI_RGB DIB frame of the deterministic raster: bottom-up
     * BGR24 rows padded to 4 bytes — exactly what `parseAvi` +
-    * `frameChannelSums` must read back. */
+    * `frameRaster` must read back. */
   def syntheticDibFrame(id: Long, f: Int, w: Int, h: Int): Array[Byte] = {
     val stride = (w * 3 + 3) & ~3
     val out = new Array[Byte](stride * h)
@@ -1089,9 +873,6 @@ object Multimodal extends graft.QueryModule {
       }
     }
   }
-
-  def videoFrameQuery(s: SparkSession, d: String): DataFrame =
-    sampleVideoFrames(videoTable(Tables.documents(s, d)), everyN = 2).toDF()
 
   // ---- audio containment pairs (q141): snippet / sample detection -------
 
@@ -1152,9 +933,6 @@ object Multimodal extends graft.QueryModule {
     elementSetPairs(sets, maxBucket)(containmentKeep(threshold10))
   }
 
-  def audioContainmentPairsQuery(s: SparkSession, d: String): DataFrame =
-    audioContainmentPairs(snippetAudioTable(Tables.documents(s, d)))
-
   // ---- video near-dup pairs (q137) --------------------------------------
 
   /** Near-dup video fixture (the q133 group discipline, video form):
@@ -1202,38 +980,14 @@ object Multimodal extends graft.QueryModule {
     }
   }
 
-  /** [[dHash64]] computed straight off a decoded bottom-up BGR24 DIB
-    * raster — same 9×8 sampled-luminance grid, exact integer math. */
-  def dibDHash64(frame: Array[Byte], w: Int, h: Int): (Long, Long) = {
-    val stride = (w * 3 + 3) & ~3
-    def lum(gx: Int, gy: Int): Int = {
-      val o = (h - 1 - gy * h / 8) * stride + (gx * w / 9) * 3
-      (frame(o) & 0xff) + (frame(o + 1) & 0xff) + (frame(o + 2) & 0xff)
-    }
-    var lo = 0L; var hi = 0L
-    var gy = 0
-    while (gy < 8) {
-      var gx = 0
-      while (gx < 8) {
-        if (lum(gx + 1, gy) > lum(gx, gy)) {
-          val j = gy * 8 + gx
-          if (j < 32) lo |= 1L << j else hi |= 1L << (j - 32)
-        }
-        gx += 1
-      }
-      gy += 1
-    }
-    (lo, hi)
-  }
-
   /** Per-partition REAL demux + decode → per-clip dHash signature:
     * (media_id, nf, sig) with sig = [lo₀, hi₀, lo₁, hi₁, …] over the
-    * frames in container order. Raw-DIB frames hash straight off the
-    * raster bytes ([[dibDHash64]], exact); MJPEG frames decode
-    * through the JDK's own JPEG codec and hash via [[dHash64]] — the
-    * same 9×8 grid, so a clip's signature is codec-consistent, but
-    * JPEG loss means an MJPEG re-encode is a NEAR-dup of its raw
-    * twin, not an exact one (spec-asserted both ways). Map-only; at
+    * frames in container order. Every frame hashes off its
+    * [[frameRaster]] — raw-DIB frames exactly, MJPEG frames after the
+    * JDK's own JPEG decode — on the same 9×8 grid, so a clip's
+    * signature is codec-consistent, but JPEG loss means an MJPEG
+    * re-encode is a NEAR-dup of its raw twin, not an exact one
+    * (spec-asserted both ways). Map-only; at
     * 100 TB everything downstream moves 16 bytes per frame. */
   def videoDHashSignature(media: Dataset[MediaRecord]): DataFrame = {
     val spark = media.sparkSession
@@ -1268,18 +1022,11 @@ object Multimodal extends graft.QueryModule {
   private def clipSignature(r: MediaRecord): (Int, Array[Long]) =
     clipSignature(r.payload, r.media_id)
 
-  /** One frame's dHash, by codec (shared by the signature and
-    * containment paths). */
+  /** One frame's dHash (shared by the signature and containment
+    * paths). */
   private def frameDHash(s: AviStream, frame: Array[Byte],
                          mediaId: Long): (Long, Long) =
-    if (s.compression == 0) dibDHash64(frame, s.width, s.height)
-    else if (s.compression == fourccLE("MJPG")) {
-      val img = javax.imageio.ImageIO.read(
-        new java.io.ByteArrayInputStream(frame))
-      require(img != null, s"media $mediaId: MJPG frame did not decode")
-      dHash64(img)
-    } else sys.error(f"media $mediaId: unsupported AVI codec fourcc " +
-      f"0x${s.compression}%08x on the signature path")
+    rasterDHash(frameRaster(s, frame, mediaId))
 
   /** byte j of the flattened per-frame-banded signature `arr`
     * (band j = band j%8 of frame j/8, q133's byte banding per frame),
@@ -1337,9 +1084,6 @@ object Multimodal extends graft.QueryModule {
         col("score").bitwiseAND(lit(0xffffffffL)).cast("int").as("hamming"))
       .filter(col("hamming") <= maxDist)
   }
-
-  def videoDHashPairsQuery(s: SparkSession, d: String): DataFrame =
-    videoDHashPairs(nearDupVideoTable(Tables.documents(s, d)))
 
   // ---- video containment pairs (q140): subclip detection -----------------
 
@@ -1532,44 +1276,21 @@ object Multimodal extends graft.QueryModule {
     val sets = media.mapPartitions { it =>
       it.map { r =>
         val (w, h, px) = decodeRasterAny(r.payload, s"media ${r.media_id}")
-        def lum(x: Int, y: Int): Int = {
-          val o = y * w * 3 + x * 3
-          (px(o) & 0xff) + (px(o + 1) & 0xff) + (px(o + 2) & 0xff)
-        }
         val hs = (for {
           ty <- 0 until h / TileH
           tx <- 0 until w / TileW
         } yield {
-          // dHash64 over the tile region, straight off the raster
-          // (TileW=18/TileH=16 make the 9×8 grid sample every second
-          // local pixel: lx = 2·gx, ly = 2·gy)
-          var lo = 0L; var hiB = 0L
-          var gy = 0
-          while (gy < 8) {
-            var gx = 0
-            while (gx < 8) {
-              if (lum(tx * TileW + 2 * (gx + 1), ty * TileH + 2 * gy) >
-                  lum(tx * TileW + 2 * gx, ty * TileH + 2 * gy)) {
-                val j = gy * 8 + gx
-                if (j < 32) lo |= 1L << j else hiB |= 1L << (j - 32)
-              }
-              gx += 1
-            }
-            gy += 1
-          }
-          lo | (hiB << 32)
+          // the tile's dHash: TileW=18/TileH=16 make the 9×8 grid
+          // sample every second local pixel (lx = 2·gx, ly = 2·gy)
+          val (lo, hi) = rasterDHash(w, px,
+            gx => tx * TileW + 2 * gx, gy => ty * TileH + 2 * gy)
+          lo | (hi << 32)
         }).distinct.sorted
         (r.media_id, hs)
       }
     }.toDF("media_id", "es")
     elementSetPairs(sets, maxBucket)(containmentKeep(threshold10))
   }
-
-  def imageCropContainmentPairsQuery(s: SparkSession, d: String): DataFrame =
-    imageCropContainmentPairs(cropImageTable(Tables.documents(s, d)))
-
-  def videoContainmentPairsQuery(s: SparkSession, d: String): DataFrame =
-    videoContainmentPairs(subClipVideoTable(Tables.documents(s, d)))
 
   // ---- real audio codec path: WAV (RIFF) PCM16 -------------------------
 
@@ -1690,9 +1411,6 @@ object Multimodal extends graft.QueryModule {
     }
   }
 
-  def audioFeatureQuery(s: SparkSession, d: String): DataFrame =
-    extractAudioFeatures(audioTable(Tables.documents(s, d))).toDF()
-
   // ---- audio fingerprint near-dup family (q135/q136) -------------------
 
   /** Fingerprint frame geometry: 33 contiguous 4-sample bands per
@@ -1795,9 +1513,6 @@ object Multimodal extends graft.QueryModule {
     }.toDF("media_id", "frame_idx", "subfp")
   }
 
-  def audioFingerprintQuery(s: SparkSession, d: String): DataFrame =
-    audioFingerprint(nearDupAudioTable(Tables.documents(s, d)))
-
   /** Audio near-dup pairs: distinct sub-fingerprint sets (built in
     * the SAME map-only decode pass — no per-media aggregation
     * exchange exists) → inverted index on the exact 32-bit subfp
@@ -1823,9 +1538,6 @@ object Multimodal extends graft.QueryModule {
     elementSetPairs(sets, maxBucket)(jaccardKeep(threshold10))
   }
 
-  def audioFpPairsQuery(s: SparkSession, d: String): DataFrame =
-    audioFpPairs(nearDupAudioTable(Tables.documents(s, d)))
-
   /** Audio / video dedup groups: the q134 closure applied to the
     * other two modalities — connected components over the q136 / q137
     * pair graphs via the shared size-gated machinery
@@ -1834,15 +1546,9 @@ object Multimodal extends graft.QueryModule {
     Dedup.connectedComponents(audioFpPairs(media).select("a", "b"))
       .withColumnsRenamed(Map("doc_id" -> "media_id"))
 
-  def audioDedupGroupsQuery(s: SparkSession, d: String): DataFrame =
-    audioDedupGroups(nearDupAudioTable(Tables.documents(s, d)))
-
   def videoDedupGroups(media: Dataset[MediaRecord]): DataFrame =
     Dedup.connectedComponents(videoDHashPairs(media).select("a", "b"))
       .withColumnsRenamed(Map("doc_id" -> "media_id"))
-
-  def videoDedupGroupsQuery(s: SparkSession, d: String): DataFrame =
-    videoDedupGroups(nearDupVideoTable(Tables.documents(s, d)))
 
   /** Media dedup APPLY — the media half of the report→apply closure
     * (text analog: `Dedup.dedupApply`, q43): drop every member of a
@@ -1862,11 +1568,6 @@ object Multimodal extends graft.QueryModule {
       .select(col("media_id"))
     media.toDF().join(drops, Seq("media_id"), "left_anti")
       .select(col("media_id"), col("kind"), col("width"), col("height"))
-  }
-
-  def imageDedupApplyQuery(s: SparkSession, d: String): DataFrame = {
-    val media = nearDupImageTable(Tables.documents(s, d))
-    mediaDedupApply(media, imageDedupGroups(media))
   }
 
   // ---- streaming media admission: image near-dup gate -------------------
@@ -2485,9 +2186,6 @@ object Multimodal extends graft.QueryModule {
     }
   }
 
-  def decodeAuditQuery(s: SparkSession, d: String): DataFrame =
-    decodeAudit(corruptedMediaTable(Tables.documents(s, d)))
-
   /** Cross-modality curation funnel — the media composed-pipeline
     * report (text analog: q100's curation funnel): per modality, how
     * much does near-dup dedup shrink the corpus? One row per kind
@@ -2556,9 +2254,6 @@ object Multimodal extends graft.QueryModule {
   }
 
   private val funnelCalls = new java.util.concurrent.atomic.AtomicLong
-
-  def mediaCurationFunnelQuery(s: SparkSession, d: String): DataFrame =
-    mediaCurationFunnel(Tables.documents(s, d))
 
   /** In-stream image dedup — the composition [[imageAdmitStream]]'s
     * scaladoc points at for arriving dups of EACH OTHER (the frozen
@@ -2663,23 +2358,40 @@ object Multimodal extends graft.QueryModule {
   // ---- driver bindings -------------------------------------------------
 
   def queries: Map[String, (SparkSession, String) => DataFrame] = Map(
-    "q40_media_features" -> ((s, d) => featureQuery(s, d)),
-    "q71_video_frames" -> ((s, d) => videoFrameQuery(s, d)),
-    "q72_audio_features" -> ((s, d) => audioFeatureQuery(s, d)),
-    "q133_image_dhash_pairs" -> ((s, d) => imageDHashPairsQuery(s, d)),
-    "q134_image_dedup_groups" -> ((s, d) => imageDedupGroupsQuery(s, d)),
-    "q135_audio_fingerprint" -> ((s, d) => audioFingerprintQuery(s, d)),
-    "q136_audio_dup_pairs" -> ((s, d) => audioFpPairsQuery(s, d)),
-    "q137_video_dup_pairs" -> ((s, d) => videoDHashPairsQuery(s, d)),
-    "q138_audio_dedup_groups" -> ((s, d) => audioDedupGroupsQuery(s, d)),
-    "q139_video_dedup_groups" -> ((s, d) => videoDedupGroupsQuery(s, d)),
-    "q140_video_containment" -> ((s, d) => videoContainmentPairsQuery(s, d)),
-    "q141_audio_containment" -> ((s, d) => audioContainmentPairsQuery(s, d)),
-    "q142_image_dedup_apply" -> ((s, d) => imageDedupApplyQuery(s, d)),
-    "q143_media_funnel" -> ((s, d) => mediaCurationFunnelQuery(s, d)),
-    "q144_decode_audit" -> ((s, d) => decodeAuditQuery(s, d)),
-    "q145_image_crop_containment" ->
-      ((s, d) => imageCropContainmentPairsQuery(s, d))
+    "q40_media_features" -> ((s, d) =>
+      extractSignals(mixedMediaTable(Tables.documents(s, d))).toDF()),
+    "q71_video_frames" -> ((s, d) =>
+      sampleVideoFrames(videoTable(Tables.documents(s, d)), everyN = 2).toDF()),
+    "q72_audio_features" -> ((s, d) =>
+      extractAudioFeatures(audioTable(Tables.documents(s, d))).toDF()),
+    "q133_image_dhash_pairs" -> ((s, d) =>
+      imageDHashPairs(nearDupImageTable(Tables.documents(s, d)))),
+    "q134_image_dedup_groups" -> ((s, d) =>
+      imageDedupGroups(nearDupImageTable(Tables.documents(s, d)))),
+    "q135_audio_fingerprint" -> ((s, d) =>
+      audioFingerprint(nearDupAudioTable(Tables.documents(s, d)))),
+    "q136_audio_dup_pairs" -> ((s, d) =>
+      audioFpPairs(nearDupAudioTable(Tables.documents(s, d)))),
+    "q137_video_dup_pairs" -> ((s, d) =>
+      videoDHashPairs(nearDupVideoTable(Tables.documents(s, d)))),
+    "q138_audio_dedup_groups" -> ((s, d) =>
+      audioDedupGroups(nearDupAudioTable(Tables.documents(s, d)))),
+    "q139_video_dedup_groups" -> ((s, d) =>
+      videoDedupGroups(nearDupVideoTable(Tables.documents(s, d)))),
+    "q140_video_containment" -> ((s, d) =>
+      videoContainmentPairs(subClipVideoTable(Tables.documents(s, d)))),
+    "q141_audio_containment" -> ((s, d) =>
+      audioContainmentPairs(snippetAudioTable(Tables.documents(s, d)))),
+    "q142_image_dedup_apply" -> ((s, d) => {
+      val media = nearDupImageTable(Tables.documents(s, d))
+      mediaDedupApply(media, imageDedupGroups(media))
+    }),
+    "q143_media_funnel" -> ((s, d) =>
+      mediaCurationFunnel(Tables.documents(s, d))),
+    "q144_decode_audit" -> ((s, d) =>
+      decodeAudit(corruptedMediaTable(Tables.documents(s, d)))),
+    "q145_image_crop_containment" -> ((s, d) =>
+      imageCropContainmentPairs(cropImageTable(Tables.documents(s, d))))
   )
 
   /** Every payload q40 reports on is a REAL encoded container and

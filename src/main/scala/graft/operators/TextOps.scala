@@ -1187,17 +1187,8 @@ object TextOps extends graft.QueryModule {
     * sane corpus, the driver holds (word, pieces, freq) ≈ ~100 B/row
     * → ~100 MB at the cap, and the mis-pick penalty is bounded (the
     * distributed loop still works below the cap, just ~1 s slower at
-    * bench scale). Env-overridable for cluster tuning; read per call,
-    * so a malformed value fails the call that uses it. */
-  private def MaxDriverVocab: Long =
-    driverVocabCap(sys.env.get("SPARK_GRAFT_MAX_DRIVER_VOCAB"))
-
-  /** Parses a `SPARK_GRAFT_MAX_DRIVER_VOCAB` value (absent: 1 000 000);
-    * a value that is not an integer fails naming the variable. */
-  private[graft] def driverVocabCap(raw: Option[String]): Long =
-    raw.fold(1000000L)(v => v.trim.toLongOption.getOrElse(
-      throw new IllegalArgumentException(
-        s"SPARK_GRAFT_MAX_DRIVER_VOCAB must be an integer, got '$v'")))
+    * bench scale). Callers override it through `maxDriverVocab`. */
+  private val MaxDriverVocab = 1000000L
 
   /** The [[bpeTrain]] driver loop; also returns the final piece table
     * (word, ps, freq) so [[bpeEncode]] can apply the learned merges.

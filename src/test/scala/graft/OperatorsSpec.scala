@@ -290,15 +290,6 @@ class OperatorsSpec extends SparkSpec {
     assert(got.forall { case (a, da, t, dt) => a == da && t == dt })
   }
 
-  test("media feature extraction is deterministic and typed") {
-    val feats = Multimodal.extractFeatures(
-      Multimodal.mediaTable(Tables.documents(spark, sf)))
-    val rows = feats.collect()
-    assert(rows.nonEmpty)
-    assert(rows.forall(f => f.mean_byte > 0 && f.n_bytes > 0))
-    assert(rows.map(_.kind).toSet.subsetOf(Set("image", "audio", "video")))
-  }
-
   test("q40 mixed decode: every modality's signal comes from real decoded bytes") {
     // golden: the mixed table's payloads are REAL PNG/BMP, WAV and
     // AVI-DIB containers of known generator formulas — the unified
@@ -341,38 +332,21 @@ class OperatorsSpec extends SparkSpec {
     }
   }
 
-  test("resize fits within bounds, preserves aspect, never upscales") {
-    val media = Multimodal.mediaTable(Tables.documents(spark, sf))
-    val orig = media.collect().map(r => r.media_id -> r).toMap
-    val resized = Multimodal.resizeToFit(media, 128, 128).collect()
-    assert(resized.nonEmpty)
-    for (r <- resized) {
-      val o = orig(r.media_id)
-      assert(r.width <= 128 && r.height <= 128)
-      assert(r.scale <= 1.0 && r.scale > 0)
-      // aspect preserved up to floor rounding
-      assert(r.width <= o.width && r.height <= o.height)
-      assert(r.payload.length <= o.payload.length)
-    }
-    // small images pass through unscaled
-    assert(resized.filter(_.scale == 1.0)
-      .forall(r => orig(r.media_id).width <= 128))
-  }
-
   test("real ImageIO decode reads back the generated geometry and channel means") {
     // golden: payloads are REAL PNG/BMP images of a known pixel
-    // function — the decode must recover the exact geometry and the
-    // exact per-channel means (both formats are lossless)
-    val docs = Tables.documents(spark, sf).limit(40)
-    val feats = Multimodal.extractImageFeatures(Multimodal.imageTable(docs))
-      .collect()
-    assert(feats.length == 40)
-    for (f <- feats) {
-      val id = f.media_id
+    // function — the raster decode must recover the exact geometry
+    // and the exact per-channel sums (both formats are lossless)
+    val ids = Tables.documents(spark, sf).limit(40).select("doc_id")
+      .as[Long].collect()
+    assert(ids.length == 40)
+    for (id <- ids) {
       val (w, h) = ((id % 13 + 4).toInt, (id % 9 + 4).toInt)
-      assert(f.width == w && f.height == h,
-        s"media $id: decoded ${f.width}x${f.height}, generated ${w}x$h")
-      assert(f.format == (if (id % 2 == 0) "png" else "bmp"))
+      val fmt = if (id % 2 == 0) "png" else "bmp"
+      val bytes = Multimodal.syntheticImageBytes(w, h, id, fmt)
+      assert((bytes(1) == 'P') == (fmt == "png"), s"media $id: not a $fmt")
+      val (dw, dh, px) = Multimodal.decodeRasterAny(bytes, s"media $id")
+      assert(dw == w && dh == h,
+        s"media $id: decoded ${dw}x$dh, generated ${w}x$h")
       // recompute the channel sums straight from the pixel function
       var (sr, sg, sb) = (0L, 0L, 0L)
       for (y <- 0 until h; x <- 0 until w) {
@@ -380,10 +354,8 @@ class OperatorsSpec extends SparkSpec {
         sg += math.floorMod(x * 5 + y * 11 + id * 2, 256)
         sb += math.floorMod(x * 13 + y * 17 + id * 3, 256)
       }
-      val n = w.toLong * h
-      assert(f.mean_r == sr.toDouble / n && f.mean_g == sg.toDouble / n &&
-        f.mean_b == sb.toDouble / n, s"media $id channel means diverge")
-      assert(f.mean_luma == (sr + sg + sb).toDouble / (3 * n))
+      assert(Multimodal.rgbSums(px) == ((sr, sg, sb)),
+        s"media $id channel sums diverge")
     }
   }
 
@@ -574,7 +546,7 @@ class OperatorsSpec extends SparkSpec {
     assert(encLocal == encDist, s"encode paths diverge:\n$encLocal\n$encDist")
   }
 
-  test("BPE driver-vocab cap: a huge cap clamps, a non-number names the env var") {
+  test("BPE driver-vocab cap: a huge cap clamps instead of wrapping negative") {
     // limit(cap + 1) takes an Int: Long.MaxValue must not wrap negative
     val docs = Seq((1L, "aaab abab ab"), (2L, "abab cdcd")).toDF("doc_id", "text")
     val capped = TextOps.bpeTrain(docs, merges = 3, maxDriverVocab = Long.MaxValue)
@@ -582,10 +554,6 @@ class OperatorsSpec extends SparkSpec {
     val dflt = TextOps.bpeTrain(docs, merges = 3)
       .as[(Int, String, String, String, Long)].collect().sortBy(_._1).toSeq
     assert(capped == dflt)
-    assert(TextOps.driverVocabCap(None) == 1000000L)
-    assert(TextOps.driverVocabCap(Some(" 42 ")) == 42L)
-    val e = intercept[IllegalArgumentException](TextOps.driverVocabCap(Some("1e6")))
-    assert(e.getMessage.contains("SPARK_GRAFT_MAX_DRIVER_VOCAB"))
   }
 
   test("SPARK_GRAFT_CPUS: absent means all cores, a bad value names the env var") {
@@ -1656,20 +1624,6 @@ class OperatorsSpec extends SparkSpec {
     assert(got.getDouble(3) == nHits.toDouble / nCand)
   }
 
-  test("frame sampling yields every Nth fixed-size chunk of video payloads") {
-    val media = Multimodal.mediaTable(Tables.documents(spark, sf))
-    val frames = Multimodal.sampleFrames(media, everyN = 3, frameBytes = 64)
-      .collect()
-    assert(frames.nonEmpty)
-    assert(frames.forall(_.frame_idx % 3 == 0))
-    assert(frames.forall(f => f.byte_offset == f.frame_idx * 64))
-    assert(frames.forall(_.frame.length <= 64))
-    // only videos produce frames
-    val kinds = Multimodal.mediaTable(Tables.documents(spark, sf))
-      .collect().map(r => r.media_id -> r.kind).toMap
-    assert(frames.forall(f => kinds(f.media_id) == "video"))
-  }
-
   test("dup-rate estimate: census equals the materialized pair expansion") {
     val docs = Tables.documents(spark, sf)
     val est = Dedup.dupRateEstimate(docs)
@@ -2034,24 +1988,50 @@ class OperatorsSpec extends SparkSpec {
 
   test("BMP fast-path dHash equals the ImageIO decode pixel-exactly " +
     "and declines anything that is not the writer's exact shape") {
+    // the raster path (PNG and BMP readers, one hash kernel) must
+    // reproduce the hash of ImageIO's own decode for every payload
     val docs = Tables.documents(spark, sf).limit(80)
     val media = Multimodal.nearDupImageTable(docs).collect()
-    var bmp = 0
-    media.foreach { r =>
-      val img = javax.imageio.ImageIO.read(
-        new java.io.ByteArrayInputStream(r.payload))
-      val slow = Multimodal.dHash64(img)
-      val fast = Multimodal.bmpDHashFast(r.payload)
-      if (r.kind == "bmp") {
-        assert(fast.contains(slow),
-          s"media ${r.media_id}: fast $fast != ImageIO $slow")
-        bmp += 1
-      } else assert(fast.isEmpty, s"fast path accepted a ${r.kind}")
+    val seen = media.groupBy(_.kind).map { case (kind, rs) =>
+      rs.foreach { r =>
+        val img = javax.imageio.ImageIO.read(
+          new java.io.ByteArrayInputStream(r.payload))
+        val slow = Multimodal.dHash64(img)
+        val fast = Multimodal.dHashAny(r.payload, s"media ${r.media_id}")
+        assert(fast == slow, s"media ${r.media_id} ($kind): raster $fast != ImageIO $slow")
+        // the BMP reader takes only BMPs
+        assert(Multimodal.bmpDecodeFast(r.payload).isDefined == (kind == "bmp"))
+      }
+      kind -> rs.length
     }
-    assert(bmp >= 30, s"only $bmp BMPs exercised the fast path")
+    assert(seen.getOrElse("png", 0) >= 30 && seen.getOrElse("bmp", 0) >= 30,
+      s"too few payloads per format exercised: $seen")
     // truncated raster: the bounds check declines, no read past end
     val cut = media.find(_.kind == "bmp").get.payload.take(60)
-    assert(Multimodal.bmpDHashFast(cut).isEmpty)
+    assert(Multimodal.bmpDecodeFast(cut).isEmpty)
+  }
+
+  test("BMP reader declines a header whose row stride overflows Int") {
+    // w = 0x2AAAAAAB makes w * 3 + 3 wrap negative in Int arithmetic;
+    // the declared raster then cannot fit the 54-byte payload
+    val hdr = java.nio.ByteBuffer.allocate(54)
+      .order(java.nio.ByteOrder.LITTLE_ENDIAN)
+    hdr.put(0, 'B'.toByte).put(1, 'M'.toByte).putInt(2, 54).putInt(10, 54)
+      .putInt(14, 40).putInt(18, 0x2AAAAAAB).putInt(22, 1)
+      .putShort(26, 1.toShort).putShort(28, 24.toShort)
+    assert(Multimodal.bmpDecodeFast(hdr.array()).isEmpty)
+  }
+
+  test("AVI frame shorter than its declared geometry fails naming the media id") {
+    // strf declares 8x8, the frames hold a 4x4 raster
+    val frames = (0 until 2).map(f => Multimodal.syntheticDibFrame(7L, f, 4, 4))
+    val clip = Multimodal.MediaRecord(4242L, "video", 8, 8,
+      Multimodal.aviBytes(frames, 8, 8, fps = 25, mjpeg = false))
+    val e = intercept[Exception](
+      Multimodal.videoDHashSignature(Seq(clip).toDS()).collect())
+    val msgs = Iterator.iterate[Throwable](e)(_.getCause)
+      .takeWhile(_ != null).map(t => String.valueOf(t.getMessage)).toList
+    assert(msgs.exists(_.contains("media 4242")), msgs.mkString(" | "))
   }
 
   test("image dHash pairs equal a brute-force mirror of the " +

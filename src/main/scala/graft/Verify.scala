@@ -15,6 +15,10 @@ object Verify {
     SparkEntry.queries
       .filter { case (name, _) => only.isEmpty || only(name) }
       .foreach { case (name, fn) =>
+      // a query that throws must leave no earlier run's parquet behind
+      // for the oracle compare to read
+      org.apache.commons.io.FileUtils.deleteDirectory(
+        new java.io.File(s"$outDir/$name"))
       try fn(spark, sfDir).coalesce(1).write.mode("overwrite")
         .parquet(s"$outDir/$name")
       catch { case NonFatal(e) =>

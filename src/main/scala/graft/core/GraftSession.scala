@@ -85,7 +85,7 @@ object GraftSession {
     configure(spark)
   }
 
-  def defaultCpus: Int = positiveIntEnv("SPARK_GRAFT_CPUS",
+  private def defaultCpus: Int = positiveIntEnv("SPARK_GRAFT_CPUS",
     Runtime.getRuntime.availableProcessors())
 
   /** Reads env var `name` as a positive integer (absent: `default`); a

@@ -470,8 +470,8 @@ object Dedup extends graft.QueryModule {
     *
     * Both paths produce the identical (doc_id, min-id-of-component)
     * labeling, so the gate is invisible to the oracle. The default
-    * derives from the round-7 crossover sweep (`ProfileScale
-    * q47gate`, SCALE.md): whole-call wall, both paths forced, on
+    * derives from the round-7 crossover sweep (SCALE.md, q47
+    * gate calibration): whole-call wall, both paths forced, on
     * verbatim-duplication graphs from 60 k to 6.7 M edges — the
     * driver path wins at ≤ 2.5 M edges (7.9 s vs 11.9 s at 2.5 M)
     * and loses from ~5 M (19.7 s vs 14.2 s at 5.05 M), so the

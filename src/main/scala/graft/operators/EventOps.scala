@@ -261,6 +261,8 @@ object EventOps extends graft.QueryModule {
     * filter — the declarative form; the streaming form is
     * streaming.Stateful.countWindowSum). */
   def countWindowSums(events: DataFrame, size: Int, slide: Int): DataFrame = {
+    require(size >= 1, s"size must be >= 1, got $size")
+    require(slide >= 1, s"slide must be >= 1, got $slide")
     val order = Window.partitionBy(col("user_id"))
       .orderBy(col("ts_ns").asc, col("event_id").asc)
     val frame = order.rowsBetween(-(size - 1), 0)

@@ -2081,8 +2081,8 @@ object Multimodal extends graft.QueryModule {
     * a large fraction of tracks). */
   val AudioShardTargetRefs: Int = 20000
 
-  private[graft] def resolveShards(shards: Int, nRefs: Long,
-                                   target: Int): Int =
+  private def resolveShards(shards: Int, nRefs: Long,
+                            target: Int): Int =
     if (shards > 0) shards
     else math.max(1L, (nRefs + target - 1) / target).toInt
 

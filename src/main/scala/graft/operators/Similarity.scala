@@ -1427,9 +1427,9 @@ object Similarity extends graft.QueryModule {
     * ≥[[semanticAutoWideRefs]] reference vectors — whose rejections
     * are a strict superset — breaking the hash-identity contract the
     * moment someone runs the oracle sweep on a replicated-embeddings
-    * scale (ProfileScale's 200k). AUTO stays the right default for
-    * serving callers; the oracle-checked query must be layout-stable
-    * regardless of data size. */
+    * scale (200k vectors in SCALE.md's 100× record). AUTO stays the
+    * right default for serving callers; the oracle-checked query must
+    * be layout-stable regardless of data size. */
   def semanticAdmitQuery(s: SparkSession, d: String): DataFrame = {
     val emb = Tables.embeddings(s, d)
     val index = fitSemanticDupIndex(emb.filter(col("vec_id") % 4 < 2),

@@ -186,6 +186,8 @@ object Stateful extends Serializable {
   def countWindowSum(values: Dataset[KeyedValue], size: Int,
                      slide: Int): Dataset[CountWindowSum] = {
     import values.sparkSession.implicits._
+    require(size >= 1, s"size must be >= 1, got $size")
+    require(slide >= 1, s"slide must be >= 1, got $slide")
     def fn(key: String, it: Iterator[KeyedValue],
            state: GroupState[(Seq[(String, Long, Long)], Int)]): Iterator[CountWindowSum] = {
       val (rawRing, rawSince) = state.getOption.getOrElse((Seq.empty, 0))

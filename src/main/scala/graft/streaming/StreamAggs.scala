@@ -197,20 +197,11 @@ object StreamAggs {
     * executor as a broadcast (the §2.3 P7 cached-file enrichment
     * pattern: the lookup table rides with the task, the stream never
     * joins or shuffles), so an admission filter can sit directly on
-    * `bits_per_token` with no watermark and no state store.
+    * `bits_per_token` with no watermark and no state store. The
+    * caller owns the broadcast: a long-lived driver that refits the
+    * vocab should `destroy()` the superseded broadcast once the query
+    * using it stops.
     */
-  def surprisalScore(docs: DataFrame, textCol: Column,
-                     vocab: Map[Long, Long], total: Long): DataFrame =
-    surprisalScore(docs, textCol,
-      docs.sparkSession.sparkContext.broadcast(vocab), total)
-
-  /** Broadcast-managed variant: this convenience-free overload is the
-    * one long-lived drivers should call. The `Map` overload above
-    * creates a NEW broadcast on every call and never destroys it — a
-    * driver that refits the vocab periodically would leak one
-    * model-sized broadcast per refit. Broadcast the vocab yourself,
-    * pass it here, and `destroy()` the superseded broadcast once the
-    * query using it is stopped. */
   def surprisalScore(docs: DataFrame, textCol: Column,
                      vocab: org.apache.spark.broadcast.Broadcast[Map[Long, Long]],
                      total: Long): DataFrame = {

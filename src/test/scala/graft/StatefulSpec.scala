@@ -211,6 +211,21 @@ class StatefulSpec extends SparkSpec {
       CountWindowSum("k", 6, 4, 18)))
   }
 
+  test("count windows reject size < 1 and slide < 1 at the call") {
+    val vals = spark.createDataset(Seq(KeyedValue("k", 1L, 1L)))
+    val events = Seq((1L, 1L, 1L, 1.0))
+      .toDF("user_id", "ts_ns", "event_id", "value")
+    // each call fails before any plan is built or action runs
+    def rejects(param: String)(call: => Any): Unit = {
+      val e = intercept[IllegalArgumentException](call)
+      assert(e.getMessage.contains(param), e.getMessage)
+    }
+    rejects("size")(Stateful.countWindowSum(vals, 0, 2))
+    rejects("slide")(Stateful.countWindowSum(vals, 4, 0))
+    rejects("size")(graft.operators.EventOps.countWindowSums(events, 0, 2))
+    rejects("slide")(graft.operators.EventOps.countWindowSums(events, 4, 0))
+  }
+
   test("count window carries ring and phase across micro-batches (RocksDB)") {
     implicit val sqlCtx = spark.sqlContext
     withRocksDb {

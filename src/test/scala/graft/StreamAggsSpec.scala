@@ -353,8 +353,9 @@ class StreamAggsSpec extends SparkSpec {
       .map(r => r._1 -> ((r._2, r._3, r._4))).toMap
     implicit val sqlCtx = spark.sqlContext
     val in = MemoryStream[(Long, String)]
+    val bc = spark.sparkContext.broadcast(vocab)
     val q = StreamAggs.surprisalScore(
-        in.toDF().toDF("doc_id", "text"), col("text"), vocab, total)
+        in.toDF().toDF("doc_id", "text"), col("text"), bc, total)
       .writeStream.format("memory").queryName("surprisal_out")
       .outputMode("append").start()
     try {
@@ -376,7 +377,7 @@ class StreamAggsSpec extends SparkSpec {
         .select("bits_per_token").as[Double].head()
       val fTotal = 63 - java.lang.Long.numberOfLeadingZeros(total)
       assert(oov == fTotal.toDouble)
-    } finally q.stop()
+    } finally { q.stop(); bc.destroy() }
   }
 
   test("streaming decontamination gate reproduces q125's batch survivors") {
@@ -567,25 +568,16 @@ class StreamAggsSpec extends SparkSpec {
     } finally q.stop()
   }
 
-  test("surprisal scoring rejects a degenerate fit and honors a caller broadcast") {
-    import graft.core.Tables
-    import graft.operators.TextOps
-    val docs = Tables.documents(spark, "/root/testdata/sf0.001").limit(20)
+  test("surprisal scoring rejects a degenerate fit") {
+    val docs = graft.core.Tables.documents(spark, "/root/testdata/sf0.001")
+      .limit(20)
     // total <= 0 must fail loudly, not score negative bits
-    val e = intercept[IllegalArgumentException] {
-      StreamAggs.surprisalScore(docs, col("text"), Map.empty[Long, Long], 0L)
-    }
-    assert(e.getMessage.contains("total"))
-    // the Broadcast overload (the refit-safe lifecycle path) scores
-    // identically to the convenience Map overload
-    val (vocab, total) = TextOps.fitSurprisalVocab(docs)
-    val viaMap = StreamAggs.surprisalScore(docs, col("text"), vocab, total)
-      .select("doc_id", "bits").as[(Long, Long)].collect().toMap
-    val bc = spark.sparkContext.broadcast(vocab)
+    val bc = spark.sparkContext.broadcast(Map.empty[Long, Long])
     try {
-      val viaBc = StreamAggs.surprisalScore(docs, col("text"), bc, total)
-        .select("doc_id", "bits").as[(Long, Long)].collect().toMap
-      assert(viaBc == viaMap)
+      val e = intercept[IllegalArgumentException] {
+        StreamAggs.surprisalScore(docs, col("text"), bc, 0L)
+      }
+      assert(e.getMessage.contains("total"))
     } finally bc.destroy()
   }
 

@@ -12,14 +12,21 @@ object Verify {
     val only = rest.toSet
     val spark = GraftSession.build()
     new java.io.File(outDir).mkdirs()
+    // an unreadable SF dir would fail every loader with a full stack
+    // trace; check it once and report each query failed without it
+    val sfPath = new java.io.File(sfDir)
+    val sfReadable = sfPath.isDirectory && sfPath.canRead
     SparkEntry.queries
       .filter { case (name, _) => only.isEmpty || only(name) }
       .foreach { case (name, fn) =>
-      // a query that throws must leave no earlier run's parquet behind
+      // a query that fails must leave no earlier run's parquet behind
       // for the oracle compare to read
       org.apache.commons.io.FileUtils.deleteDirectory(
         new java.io.File(s"$outDir/$name"))
-      try fn(spark, sfDir).coalesce(1).write.mode("overwrite")
+      if (!sfReadable)
+        System.err.println(
+          s"[verify] $name failed: $sfDir is not a readable directory")
+      else try fn(spark, sfDir).coalesce(1).write.mode("overwrite")
         .parquet(s"$outDir/$name")
       catch { case NonFatal(e) =>
         System.err.println(s"[verify] $name failed: ${e.getMessage}")

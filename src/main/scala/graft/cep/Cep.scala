@@ -15,8 +15,8 @@ import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode
   *     (`flink-sql/sql/dml/CEP.md:72-91`).
   *
   * The NFA core is engine-agnostic Scala; `matchBatch` runs it per key
-  * inside flatMapGroups, `Streaming.matchStream` carries partials in
-  * flatMapGroupsWithState across micro-batches.
+  * inside flatMapGroups, `CepStreaming.matchPattern` carries partials
+  * in flatMapGroupsWithState across micro-batches.
   */
 object Cep {
 
@@ -1057,21 +1057,12 @@ object Cep {
   }
 
   /** Batch CEP: per-key ordered NFA scan via flatMapGroups.
-    * `select` projects each completed match (step name → events). */
+    * `select` projects each completed match and each timed-out
+    * partial: (key, kind, step name → events), kind ∈ match | timeout.
+    * A partial times out only when a later same-key event passes its
+    * `within` bound; at the end of a key's rows, held-back matches
+    * release and live partials are dropped. */
   def matchBatch[T, K, R: Encoder](ds: Dataset[T], keyFn: T => K,
-      orderBy: T => Long, pattern: PatternSpec[T], tsOf: T => Long)
-      (select: (K, Map[String, Seq[T]]) => R)
-      (implicit ke: Encoder[K]): Dataset[R] = {
-    val nfa = new Nfa[T](pattern, tsOf)
-    ds.groupByKey(keyFn).flatMapGroups { (k: K, it: Iterator[T]) =>
-      val (done, _) = nfa.run(it.toSeq.sortBy(orderBy))
-      done.iterator.map(m => select(k, nfa.toNamed(m)))
-    }
-  }
-
-  /** Batch CEP including the timeout side channel: emits
-    * (kind, named events) where kind ∈ match | timeout. */
-  def matchBatchWithTimeouts[T, K, R: Encoder](ds: Dataset[T], keyFn: T => K,
       orderBy: T => Long, pattern: PatternSpec[T], tsOf: T => Long)
       (select: (K, String, Map[String, Seq[T]]) => R)
       (implicit ke: Encoder[K]): Dataset[R] = {
@@ -1082,4 +1073,13 @@ object Cep {
         .map(m => select(k, m.kind, nfa.toNamed(m)))
     }
   }
+
+  /** Whether `ds` is a stream that declares an event-time watermark:
+    * the streaming runners arm event-time timers only then, so batch
+    * inputs and unwatermarked streams keep the lazy-expiry path
+    * instead of failing analysis. */
+  private[cep] def hasWatermark(ds: Dataset[_]): Boolean =
+    ds.isStreaming && ds.queryExecution.logical.collectFirst {
+      case e: org.apache.spark.sql.catalyst.plans.logical.EventTimeWatermark => e
+    }.isDefined
 }

@@ -863,8 +863,8 @@ object MatchRecognize extends Serializable {
     * declared upstream (pending greedy matches release, timed-out
     * partials drop — the event-time-flush cadence); without a
     * watermark they expire lazily on the next same-key event, and a
-    * permanently idle key retains its partials (document-matching
-    * behavior of the DSL runner; use the watermark).
+    * permanently idle key retains its partials (the DSL runner's rule
+    * too; use the watermark).
     *
     * State per key: live partials + held-back matches, encoded as a
     * Tungsten Row (the input schema is a plan-time fact, so entries
@@ -878,8 +878,9 @@ object MatchRecognize extends Serializable {
     * agree), partials also flush on EVENT-TIME TIMERS: a key whose
     * window closes releases held-back greedy matches and drops dead
     * partials even if it never receives another event (the
-    * [[CepStreaming.matchPatternEventTime]] cadence). Without a
-    * watermark, expiry is lazy — the next same-key event notices.
+    * [[CepStreaming.matchPattern]] cadence under the same rule).
+    * Without a watermark, expiry is lazy — the next same-key event
+    * notices.
     *
     * CHECKPOINT COMPATIBILITY: round 11 changed the state encoder
     * from Java serialization to the Tungsten Row encoding above — a
@@ -910,14 +911,7 @@ object MatchRecognize extends Serializable {
     // plan-time facts, captured as vals: fn runs on executors where
     // the Dataset does not deserialize
     val streaming = df.isStreaming
-    // event-time timers need the query to carry a watermark; detect
-    // it on the input plan so batch inputs and unwatermarked streams
-    // keep the lazy-expiry path instead of failing analysis
-    val hasWatermark = streaming &&
-      df.queryExecution.logical.collectFirst {
-        case e: org.apache.spark.sql.catalyst.plans.logical.EventTimeWatermark =>
-          e
-      }.isDefined
+    val hasWatermark = Cep.hasWatermark(df)
     val expireOn = within.isDefined && hasWatermark
     // MATCH_NUMBER retention (round 12, the last unbounded-state
     // story): counter-only state — a key whose partials and pending
@@ -1109,7 +1103,8 @@ object MatchRecognize extends Serializable {
     // walk consecutive key runs in mapPartitions — no RDD shuffle of
     // Java/Kryo-serialized Rows, no per-key materialized Iterable
     // beyond the single run the NFA needs (the DSL path,
-    // Cep.matchBatch, uses the same encoder-based plan shape).
+    // Cep.matchBatch, groups with groupByKey.flatMapGroups instead and
+    // sorts each key's rows in memory).
     df.repartition(col(partitionBy))
       .sortWithinPartitions(col(partitionBy), col(c.clause.orderBy))
       .mapPartitions { it =>

@@ -45,14 +45,22 @@ object Portable {
   def normText(c: Column): Column =
     trim(regexp_replace(lower(c), "\\s+", " "))
 
+  /** Scala-side twin of [[hash32]] for constants computed once on the
+    * driver and inlined as literals into both the Spark plan and the
+    * oracle SQL (hash-family coefficients, LSH planes): same md5-prefix
+    * value as the Column expression, bit for bit. */
+  def h32Scala(s: String): Long = md5PrefixScala(s, 8)
+
   /** Scala-side twin of [[hash60]] for driver/executor code that
     * scores against collected models (streaming serve paths): same
     * md5-prefix value as the Column expression, bit for bit. */
-  def h60Scala(s: String): Long = {
+  def h60Scala(s: String): Long = md5PrefixScala(s, 15)
+
+  private def md5PrefixScala(s: String, nibbles: Int): Long = {
     val d = java.security.MessageDigest.getInstance("MD5")
       .digest(s.getBytes("UTF-8"))
     java.lang.Long.parseLong(
-      d.take(8).map(b => f"${b & 0xff}%02x").mkString.take(15), 16)
+      d.take(8).map(b => f"${b & 0xff}%02x").mkString.take(nibbles), 16)
   }
 
   /** Scala-side twin of [[words]] (lowercase, whitespace-normalize,

@@ -4,6 +4,7 @@ import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.expressions.Window
 import graft.core.Tables
+import graft.functions.Portable.h32Scala
 
 /** Approximate-nearest-neighbor search over the `embeddings` table
   * (64-dim float vectors).
@@ -217,16 +218,9 @@ object Similarity extends graft.QueryModule {
         col("col.sim").as("sim"), (col("pos") + 1).cast("int").as("rn"))
 
   /** Deterministic pseudo-random hyperplane components in [-1, 1]:
-    * md5("p<plane>_<dim>") → 32-bit int → scaled. Same formula is
-    * inlined into the oracle SQL as literals.
+    * md5("p<plane>_<dim>") → 32-bit int (`Portable.h32Scala`) →
+    * scaled. Same formula is inlined into the oracle SQL as literals.
     */
-  private def h32Scala(s: String): Long = {
-    val hex = java.security.MessageDigest.getInstance("MD5")
-      .digest(s.getBytes("UTF-8"))
-      .take(4).map(b => f"${b & 0xff}%02x").mkString
-    java.lang.Long.parseLong(hex, 16)
-  }
-
   lazy val planes: Array[Array[Double]] =
     Array.tabulate(nPlanes, dims)((p, i) =>
       (h32Scala(s"p${p}_$i") % 2001 - 1000) / 1000.0)

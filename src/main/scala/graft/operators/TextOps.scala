@@ -621,6 +621,10 @@ object TextOps extends graft.QueryModule {
     idx
   }
 
+  /** floor(log₂ x) = length(bin(x)) − 1 for x ≥ 1: an exact integer
+    * in any engine (see [[unigramSurprisal]]). */
+  private def flog2(c: Column): Column = length(bin(c)) - 1
+
   /** Unigram-LM surprisal — the perplexity-proxy quality score every
     * production filtering pipeline runs (CCNet-style: score each
     * document by how surprising its tokens are under a language model
@@ -645,7 +649,6 @@ object TextOps extends graft.QueryModule {
     * a shuffled hash join on the word-hash key.
     */
   def unigramSurprisal(documents: DataFrame): DataFrame = {
-    def flog2(c: Column): Column = length(bin(c)) - 1
     val tok = documents
       .select(col("doc_id"), explode_outer(words(col("text"))).as("w"))
       .filter(col("w").isNotNull)
@@ -767,7 +770,6 @@ object TextOps extends graft.QueryModule {
     */
   def dsirSelect(documents: DataFrame, targetSource: String = "src0",
                  buckets: Int = 4096, topN: Int = 100): DataFrame = {
-    def flog2(c: Column): Column = length(bin(c)) - 1
     val perDoc = documents
       .select(col("doc_id"), col("source"),
         explode(shingles(words(col("text")), 2)).as("bg"))
@@ -865,7 +867,6 @@ object TextOps extends graft.QueryModule {
     */
   def distinctiveTokens(documents: DataFrame, k: Int = 10,
                         minCount: Int = 5): DataFrame = {
-    def flog2(c: Column): Column = length(bin(c)) - 1
     // the explicit not-null filters match the constraints the joins
     // below infer on the scored branch — without them the cw/ts/tot
     // branches compile to a DIFFERENT scan subtree (no IsNotNull
@@ -992,7 +993,6 @@ object TextOps extends graft.QueryModule {
     */
   def collocations(documents: DataFrame, k: Int = 20,
                    minCount: Int = 5): DataFrame = {
-    def flog2(c: Column): Column = length(bin(c)) - 1
     val bi = documents
       .select(words(col("text")).as("ws"))
       .select(explode_outer(shingles(col("ws"), 2)).as("sh"))

@@ -21,12 +21,14 @@ object Models {
   /** `state/event/Alert.java:12-16`. */
   case class DfaAlert(sourceAddress: Int, state: String, transition: String)
 
-  /** `topn/pojo/ItemViewCount.java:9-13`. */
+  /** `topn/pojo/ItemViewCount.java:9-13`; the top-N operator's state
+    * element. */
   case class ItemViewCount(itemId: Long, windowEnd: Long, viewCount: Long)
 
-  /** Streaming variant: carries the event-time column the watermark is
-    * declared on (EventTimeTimeout requires the watermarked attribute
-    * to survive into the stateful operator's input encoder). */
+  /** Top-N input: an [[ItemViewCount]] plus the event-time column a
+    * stream declares its watermark on (EventTimeTimeout requires the
+    * watermarked attribute to survive into the stateful operator's
+    * input encoder). */
   case class TimedItemViewCount(itemId: Long, windowEnd: Long,
                                 viewCount: Long, eventTime: java.sql.Timestamp)
 
@@ -54,11 +56,10 @@ object Models {
   case class OrderMatch(orderId: String, kind: String,
                         bigTime: Option[Long], smallTime: Option[Long])
 
-  /** Streaming variant of the J3 input: carries the event-time column
-    * the watermark is declared on (EventTimeTimeout requires the
-    * watermarked attribute to survive into the stateful operator's
-    * input encoder — the [[TimedItemViewCount]] pattern; a bare
-    * `(String, Order)` has no timestamp attribute to watermark). */
+  /** J3 input: the order's side ("big"/"small") plus the event-time
+    * column a stream declares its watermark on (the
+    * [[TimedItemViewCount]] pattern; a bare `(String, Order)` has no
+    * timestamp attribute to watermark). */
   case class TimedTaggedOrder(side: String, order: Order,
                               eventTime: java.sql.Timestamp)
 

@@ -116,11 +116,10 @@ object Stateful extends Serializable {
   /** Buffer per-window ItemViewCounts in list state; when the
     * event-time watermark passes windowEnd (the reference's timer at
     * windowEnd+1, `HotItems.java:112-116`), sort and emit the top N.
-    * Input must carry a watermark on a timestamp derived from
-    * windowEnd for the timeout to fire.
+    * On a batch Dataset each window emits at once.
     */
-  private def topNFn[T](n: Int, toIvc: T => ItemViewCount)
-      (windowEnd: Long, it: Iterator[T],
+  private def topNFn(n: Int)
+      (windowEnd: Long, it: Iterator[TimedItemViewCount],
        state: GroupState[Seq[ItemViewCount]]): Iterator[RankedItem] = {
     def emit(items: Seq[ItemViewCount]): Iterator[RankedItem] =
       items.sortBy(i => (-i.viewCount, i.itemId)).take(n).zipWithIndex
@@ -131,7 +130,8 @@ object Stateful extends Serializable {
       state.remove()
       return emit(items)
     }
-    val buf = state.getOption.getOrElse(Seq.empty) ++ it.map(toIvc)
+    val buf = state.getOption.getOrElse(Seq.empty) ++
+      it.map(t => ItemViewCount(t.itemId, t.windowEnd, t.viewCount))
     val wm = watermarkOrNeg(state)
     if (wm >= 0) {
       // streaming: hold until the watermark passes windowEnd. Rows for
@@ -155,25 +155,17 @@ object Stateful extends Serializable {
     }
   }
 
-  def topNPerWindow(counts: Dataset[ItemViewCount], n: Int): Dataset[RankedItem] = {
+  /** Top-N per window over a batch or streaming Dataset. A stream
+    * emits each window once its watermark passes windowEnd: declare
+    * `withWatermark("eventTime", ...)` upstream (EventTimeTimeout needs
+    * the watermarked attribute in the operator's input encoder, hence
+    * the `eventTime` column in [[TimedItemViewCount]]). */
+  def topNPerWindow(counts: Dataset[TimedItemViewCount],
+                    n: Int): Dataset[RankedItem] = {
     import counts.sparkSession.implicits._
     counts.groupByKey(_.windowEnd)
       .flatMapGroupsWithState(OutputMode.Append,
-        GroupStateTimeout.EventTimeTimeout)(topNFn[ItemViewCount](n, identity))
-  }
-
-  /** Streaming top-N over TimedItemViewCount: EventTimeTimeout needs
-    * the watermarked attribute to survive into the operator's input
-    * encoder, so the event-time column is part of the model — declare
-    * `withWatermark("eventTime", ...)` upstream. */
-  def topNPerWindowStreaming(counts: Dataset[TimedItemViewCount],
-                             n: Int): Dataset[RankedItem] = {
-    import counts.sparkSession.implicits._
-    counts.groupByKey(_.windowEnd)
-      .flatMapGroupsWithState(OutputMode.Append,
-        GroupStateTimeout.EventTimeTimeout)(
-        topNFn[TimedItemViewCount](n,
-          t => ItemViewCount(t.itemId, t.windowEnd, t.viewCount)))
+        GroupStateTimeout.EventTimeTimeout)(topNFn(n))
   }
 
   // ---- A5/W5: count windows (`windowing/WindowWordCount.java:40-58`) --
@@ -218,80 +210,60 @@ object Stateful extends Serializable {
     * side null (side outputs as a tag column). A same-side re-arrival
     * overwrites the buffered order — the reference's ValueState.update
     * semantics (`DoubleStreamMatch.java:160-181`), so only the latest
-    * unmatched order per key surfaces.
+    * unmatched order per key surfaces. On a stream, declare
+    * `withWatermark("eventTime", ...)` upstream so the timeout fires;
+    * on a batch Dataset each unmatched order times out at once.
     */
-  def matchOrders(tagged: Dataset[(String, Order)],
+  def matchOrders(tagged: Dataset[TimedTaggedOrder],
                   timeoutMs: Long = 60 * 1000): Dataset[OrderMatch] = {
     import tagged.sparkSession.implicits._
-    tagged.groupByKey(_._2.orderId)
+    tagged.groupByKey(_.order.orderId)
       .flatMapGroupsWithState(OutputMode.Append,
         GroupStateTimeout.EventTimeTimeout)(matchFn(timeoutMs))
   }
 
-  /** Streaming-usable J3: identical group logic to [[matchOrders]]
-    * (the SAME function runs both), over [[TimedTaggedOrder]] so the
-    * caller can declare `withWatermark("eventTime", ...)` and the
-    * event-time timeout actually fires — a bare `(String, Order)` has
-    * no timestamp attribute that survives into the operator's input
-    * encoder (the [[topNPerWindowStreaming]] seam). */
-  def matchOrdersStreaming(tagged: Dataset[TimedTaggedOrder],
-                           timeoutMs: Long = 60 * 1000): Dataset[OrderMatch] = {
-    import tagged.sparkSession.implicits._
-    val fn = matchFn(timeoutMs)
-    tagged.groupByKey(_.order.orderId)
-      .flatMapGroupsWithState(OutputMode.Append,
-        GroupStateTimeout.EventTimeTimeout)(
-        (k: String, it: Iterator[TimedTaggedOrder],
-         s: GroupState[(String, Long)]) =>
-          fn(k, it.map(t => (t.side, t.order)), s))
-  }
-
   private def matchFn(timeoutMs: Long)
-      : (String, Iterator[(String, Order)], GroupState[(String, Long)])
-        => Iterator[OrderMatch] = {
-    def fn(orderId: String, it: Iterator[(String, Order)],
-           state: GroupState[(String, Long)]): Iterator[OrderMatch] = {
-      if (state.hasTimedOut) {
-        val (side, time) = state.get
-        state.remove()
-        val (big, small) =
-          if (side == "big") (Some(time), None) else (None, Some(time))
-        return Iterator(OrderMatch(orderId, "timeout", big, small))
-      }
-      val out = Seq.newBuilder[OrderMatch]
-      var pending = state.getOption
-      for ((side, order) <- it.toSeq.sortBy(_._2.time)) {
-        pending match {
-          case Some((pSide, pTime)) if pSide != side =>
-            val (big, small) =
-              if (side == "big") (Some(order.time), Some(pTime))
-              else (Some(pTime), Some(order.time))
-            out += OrderMatch(orderId, "match", big, small)
-            pending = None
-          case _ =>
-            pending = Some((side, order.time))
-        }
-      }
-      pending match {
-        case Some((side, time)) =>
-          state.update((side, time))
-          val wm = watermarkOrNeg(state)
-          if (wm >= 0)
-            // clamped: a base time already past the watermark must not
-            // produce a timeout timestamp the engine rejects
-            state.setTimeoutTimestamp(math.max(time + timeoutMs, wm + 1))
-          else {
-            // batch: no watermark — flush unmatched immediately
-            state.remove()
-            val (big, small) =
-              if (side == "big") (Some(time), None) else (None, Some(time))
-            out += OrderMatch(orderId, "timeout", big, small)
-          }
-        case None => state.remove()
-      }
-      out.result().iterator
+      (orderId: String, it: Iterator[TimedTaggedOrder],
+       state: GroupState[(String, Long)]): Iterator[OrderMatch] = {
+    if (state.hasTimedOut) {
+      val (side, time) = state.get
+      state.remove()
+      val (big, small) =
+        if (side == "big") (Some(time), None) else (None, Some(time))
+      return Iterator(OrderMatch(orderId, "timeout", big, small))
     }
-    fn
+    val out = Seq.newBuilder[OrderMatch]
+    var pending = state.getOption
+    for (TimedTaggedOrder(side, order, _) <- it.toSeq.sortBy(_.order.time)) {
+      pending match {
+        case Some((pSide, pTime)) if pSide != side =>
+          val (big, small) =
+            if (side == "big") (Some(order.time), Some(pTime))
+            else (Some(pTime), Some(order.time))
+          out += OrderMatch(orderId, "match", big, small)
+          pending = None
+        case _ =>
+          pending = Some((side, order.time))
+      }
+    }
+    pending match {
+      case Some((side, time)) =>
+        state.update((side, time))
+        val wm = watermarkOrNeg(state)
+        if (wm >= 0)
+          // clamped: a base time already past the watermark must not
+          // produce a timeout timestamp the engine rejects
+          state.setTimeoutTimestamp(math.max(time + timeoutMs, wm + 1))
+        else {
+          // batch: no watermark — flush unmatched immediately
+          state.remove()
+          val (big, small) =
+            if (side == "big") (Some(time), None) else (None, Some(time))
+          out += OrderMatch(orderId, "timeout", big, small)
+        }
+      case None => state.remove()
+    }
+    out.result().iterator
   }
 
   // ---- W4: delta trigger + time evictor (`windowing/CustomizeEvictorAndTrigger.java:49-61`)

@@ -132,7 +132,7 @@ object ProfileStream {
       val ds = in.toDS().withWatermark("eventTime", "0 milliseconds")
         .as[TimedItemViewCount](org.apache.spark.sql.Encoders.product)
       ((rows: Seq[TimedItemViewCount]) => { in.addData(rows); () },
-        Stateful.topNPerWindowStreaming(ds, 3).toDF())
+        Stateful.topNPerWindow(ds, 3).toDF())
     }, i => TimedItemViewCount(i % 1000, (i / 1000 + 1) * 1000L, i % 97,
       new java.sql.Timestamp((i / 1000 + 1) * 1000L)))
 
@@ -145,7 +145,7 @@ object ProfileStream {
       val ds = in.toDS().withWatermark("eventTime", "0 milliseconds")
         .as[TimedTaggedOrder](org.apache.spark.sql.Encoders.product)
       ((rows: Seq[TimedTaggedOrder]) => { in.addData(rows); () },
-        Stateful.matchOrdersStreaming(ds, timeoutMs = 3600L * 1000).toDF())
+        Stateful.matchOrders(ds, timeoutMs = 3600L * 1000).toDF())
     }, i => TimedTaggedOrder(if (i % 2 == 0) "big" else "small",
       Order(i, "o" + (i / 2), "u", 1, 10, 1), new java.sql.Timestamp(i)))
 

@@ -13,6 +13,8 @@ import graft.cep.CepStreaming.{CepMatch, CepRow}
 class CepSpec extends SparkSpec {
   import spark.implicits._
 
+  private def at(ms: Long) = new java.sql.Timestamp(ms)
+
   // FlinkCEP.java:36-46: (id, name, price, volume) — volume marks SubEvent
   private def flinkCepFixture: Seq[CepRow] = Seq(
     (1L, "barfoo", 1.0, None), (2L, "start", 2.0, None),
@@ -21,7 +23,7 @@ class CepSpec extends SparkSpec {
     (7L, "bar", 3.0, Some(3.0)), (42L, "42", 42.0, None),
     (8L, "end", 1.0, None)
   ).zipWithIndex.map { case ((id, n, p, v), i) =>
-    CepRow("k", id, n, p, v, 1000L + i)
+    CepRow("k", id, n, p, v, at(1000L + i))
   }
 
   private val startMiddleEnd = Cep.begin[CepRow]("start") {
@@ -32,7 +34,7 @@ class CepSpec extends SparkSpec {
   test("relaxed contiguity + subtype reproduces the reference match 2,6,8") {
     val got = Cep.matchBatch(spark.createDataset(flinkCepFixture),
       (r: CepRow) => r.key, (r: CepRow) => r.tsMs, startMiddleEnd,
-      (r: CepRow) => r.tsMs) { (k, m) =>
+      (r: CepRow) => r.tsMs) { (k, _, m) =>
       (k, m("start").head.id, m("middle").head.id, m("end").head.id)
     }.collect()
     assert(got.toSeq == Seq(("k", 2L, 6L, 8L)))
@@ -46,11 +48,11 @@ class CepSpec extends SparkSpec {
       (1L, "foo", 0L), (2L, "error", 100L), (3L, "critical", 200L),
       (4L, "bar", 300L), (5L, "33", 400L), (6L, "error", 500L),
       (7L, "bar", 600L), (42L, "55", 700L), (8L, "error", 3800L)
-    ).map { case (id, n, ts) => CepRow("k", id, n, 1.0, None, ts) }
+    ).map { case (id, n, ts) => CepRow("k", id, n, 1.0, None, at(ts)) }
     val pattern = Cep.begin[CepRow]("start") { (_, _) => true }
       .next("end") { (e, _) => e.name == "error" }
       .within(2000)
-    val got = Cep.matchBatchWithTimeouts(spark.createDataset(rows),
+    val got = Cep.matchBatch(spark.createDataset(rows),
       (r: CepRow) => r.key, (r: CepRow) => r.tsMs, pattern,
       (r: CepRow) => r.tsMs) { (k, kind, m) =>
       (kind, m("start").head.id)
@@ -66,12 +68,12 @@ class CepSpec extends SparkSpec {
   test("DSL optional step: a (b?) c matches with and without the middle event") {
     def run(names: String*): Seq[(Long, Long)] = {
       val rows = names.zipWithIndex.map { case (n, i) =>
-        CepRow("k", i + 1L, n, 1.0, None, 1000L + i * 100L) }
+        CepRow("k", i + 1L, n, 1.0, None, at(1000L + i * 100L)) }
       val pattern = Cep.begin[CepRow]("a") { (e, _) => e.name == "a" }
         .next("b") { (e, _) => e.name == "b" }.optional
         .next("c") { (e, _) => e.name == "c" }
       Cep.matchBatch(spark.createDataset(rows), (r: CepRow) => r.key,
-        (r: CepRow) => r.tsMs, pattern, (r: CepRow) => r.tsMs) { (_, m) =>
+        (r: CepRow) => r.tsMs, pattern, (r: CepRow) => r.tsMs) { (_, _, m) =>
         (m("a").head.id, m("c").head.id)
       }.collect().toSeq
     }
@@ -105,12 +107,12 @@ class CepSpec extends SparkSpec {
   test("DSL times(n, m) bounds repetitions of the last step") {
     def run(names: String*): Seq[Int] = {
       val rows = names.zipWithIndex.map { case (n, i) =>
-        CepRow("k", i + 1L, n, 1.0, None, 1000L + i * 100L) }
+        CepRow("k", i + 1L, n, 1.0, None, at(1000L + i * 100L)) }
       val pattern = Cep.begin[CepRow]("a") { (e, _) => e.name == "a" }
         .next("b") { (e, _) => e.name == "b" }.times(2, 3)
         .next("c") { (e, _) => e.name == "c" }
       Cep.matchBatch(spark.createDataset(rows), (r: CepRow) => r.key,
-        (r: CepRow) => r.tsMs, pattern, (r: CepRow) => r.tsMs) { (_, m) =>
+        (r: CepRow) => r.tsMs, pattern, (r: CepRow) => r.tsMs) { (_, _, m) =>
         m("b").size
       }.collect().toSeq
     }
@@ -127,14 +129,14 @@ class CepSpec extends SparkSpec {
     // bottom 10:00:07, up 10:00:08 — here ids 4..6
     val prices = Seq(12.0, 17.0, 19.0, 21.0, 25.0, 12.0, 15.0, 20.0, 24.0, 25.0)
     val rows = prices.zipWithIndex.map { case (p, i) =>
-      CepRow("ACME", i.toLong, "tick", p, None, 1000L * i)
+      CepRow("ACME", i.toLong, "tick", p, None, at(1000L * i))
     }
     val vshape = Cep.begin[CepRow]("A") { (_, _) => true }
       .next("B", oneOrMore = true) { (e, prev) => e.price < prev.last.price }
       .next("C") { (e, prev) => e.price > prev.last.price }
     val got = Cep.matchBatch(spark.createDataset(rows),
       (r: CepRow) => r.key, (r: CepRow) => r.tsMs, vshape,
-      (r: CepRow) => r.tsMs) { (k, m) =>
+      (r: CepRow) => r.tsMs) { (k, _, m) =>
       (m("A").head.id, m("B").map(_.id).mkString("+"), m("C").head.id)
     }.collect().toSeq
     assert(got.contains((4L, "5", 6L)))
@@ -145,12 +147,12 @@ class CepSpec extends SparkSpec {
     // B+, then expires at ts=20 — expiry of an already-matched partial
     // must be silent, not a contradictory "timeout"
     val rows = Seq(
-      CepRow("k", 1, "a", 1.0, None, 0L), CepRow("k", 2, "b", 1.0, None, 1000L),
-      CepRow("k", 9, "z", 1.0, None, 20000L))
+      CepRow("k", 1, "a", 1.0, None, at(0L)), CepRow("k", 2, "b", 1.0, None, at(1000L)),
+      CepRow("k", 9, "z", 1.0, None, at(20000L)))
     val pattern = Cep.begin[CepRow]("A") { (e, _) => e.name == "a" }
       .next("B", oneOrMore = true) { (e, _) => e.name == "b" }
       .within(10000)
-    val got = Cep.matchBatchWithTimeouts(spark.createDataset(rows),
+    val got = Cep.matchBatch(spark.createDataset(rows),
       (r: CepRow) => r.key, (r: CepRow) => r.tsMs, pattern,
       (r: CepRow) => r.tsMs) { (k, kind, m) => kind }.collect().toSeq
     assert(got == Seq("match"))
@@ -160,13 +162,13 @@ class CepSpec extends SparkSpec {
     // a a b a b: NoSkip pairs every 'a' with every later 'b' (relaxed
     // followedByAny); SkipPastLastEvent restarts after each match
     val rows = Seq(("a", 1L), ("a", 2L), ("b", 3L), ("a", 4L), ("b", 5L))
-      .map { case (n, id) => CepRow("k", id, n, 1.0, None, 1000L * id) }
+      .map { case (n, id) => CepRow("k", id, n, 1.0, None, at(1000L * id)) }
     def run(skip: Cep.AfterMatchSkip) = {
       val p = Cep.begin[CepRow]("A") { (e, _) => e.name == "a" }
         .followedByAny("B") { (e, _) => e.name == "b" }
         .afterMatchSkip(skip)
       Cep.matchBatch(spark.createDataset(rows), (r: CepRow) => r.key,
-        (r: CepRow) => r.tsMs, p, (r: CepRow) => r.tsMs) { (k, m) =>
+        (r: CepRow) => r.tsMs, p, (r: CepRow) => r.tsMs) { (k, _, m) =>
         (m("A").head.id, m("B").head.id)
       }.collect().toSeq.sorted
     }
@@ -179,13 +181,13 @@ class CepSpec extends SparkSpec {
     // BOTH → the quantifier decides; event 4 ("c", price 20) only C.
     val rows = Seq((1L, "a", 1.0), (2L, "x", 5.0), (3L, "c", 5.0),
       (4L, "c", 20.0)).map { case (id, n, p) =>
-      CepRow("k", id, n, p, None, 1000L * id) }
+      CepRow("k", id, n, p, None, at(1000L * id)) }
     def run(q: Cep.Quant) = {
       val p = Cep.begin[CepRow]("A") { (e, _) => e.name == "a" }
         .followedBy("B", oneOrMore = true, quant = q) { (e, _) => e.price < 10 }
         .followedBy("C") { (e, _) => e.name == "c" }
       Cep.matchBatch(spark.createDataset(rows), (r: CepRow) => r.key,
-        (r: CepRow) => r.tsMs, p, (r: CepRow) => r.tsMs) { (k, m) =>
+        (r: CepRow) => r.tsMs, p, (r: CepRow) => r.tsMs) { (k, _, m) =>
         (m("B").map(_.id).mkString("+"), m("C").head.id)
       }.collect().toSeq.sorted
     }
@@ -199,12 +201,12 @@ class CepSpec extends SparkSpec {
     // both B and C; the greedy-extended run B={2,3} has no event left
     // to complete C, so SQL semantics backtrack to B={2}, C=3.
     val rows = Seq((1L, "a", 1.0), (2L, "x", 4.0), (3L, "x", 5.0))
-      .map { case (id, n, p) => CepRow("k", id, n, p, None, 1000L * id) }
+      .map { case (id, n, p) => CepRow("k", id, n, p, None, at(1000L * id)) }
     val p = Cep.begin[CepRow]("A") { (e, _) => e.name == "a" }
       .followedBy("B", oneOrMore = true, quant = Cep.Greedy) { (e, _) => e.price < 10 }
       .followedBy("C") { (e, _) => e.price < 20 }
     val got = Cep.matchBatch(spark.createDataset(rows), (r: CepRow) => r.key,
-      (r: CepRow) => r.tsMs, p, (r: CepRow) => r.tsMs) { (k, m) =>
+      (r: CepRow) => r.tsMs, p, (r: CepRow) => r.tsMs) { (k, _, m) =>
       (m("B").map(_.id).mkString("+"), m("C").head.id)
     }.collect().toSeq
     assert(got == Seq(("2", 3L)))
@@ -215,28 +217,27 @@ class CepSpec extends SparkSpec {
     // never follows it; the longer B+ run's C D completes later.
     val rows = Seq((1L, "a", 1.0), (2L, "x", 5.0), (3L, "c", 6.0),
       (4L, "x", 50.0), (5L, "c", 7.0), (6L, "d", 50.0))
-      .map { case (id, n, p) => CepRow("k", id, n, p, None, 1000L * id) }
+      .map { case (id, n, p) => CepRow("k", id, n, p, None, at(1000L * id)) }
     val p = Cep.begin[CepRow]("A") { (e, _) => e.name == "a" }
       .followedBy("B", oneOrMore = true, quant = Cep.Reluctant) { (e, _) => e.price < 10 }
       .followedBy("C") { (e, _) => e.name == "c" }
       .next("D") { (e, _) => e.name == "d" }
     val got = Cep.matchBatch(spark.createDataset(rows), (r: CepRow) => r.key,
-      (r: CepRow) => r.tsMs, p, (r: CepRow) => r.tsMs) { (k, m) =>
+      (r: CepRow) => r.tsMs, p, (r: CepRow) => r.tsMs) { (k, _, m) =>
       (m("B").map(_.id).mkString("+"), m("C").head.id, m("D").head.id)
     }.collect().toSeq
     assert(got == Seq(("2+3", 5L, 6L)))
   }
 
   test("event-time timers flush within-timeouts on idle keys") {
-    import graft.cep.CepStreaming.TimedCepRow
     implicit val sqlCtx = spark.sqlContext
     def row(key: String, id: Long, name: String, ts: Long) =
-      TimedCepRow(key, id, name, 1.0, None, ts, new java.sql.Timestamp(ts))
-    val pattern = Cep.begin[TimedCepRow]("start") { (e, _) => e.name == "start" }
+      CepRow(key, id, name, 1.0, None, at(ts))
+    val pattern = Cep.begin[CepRow]("start") { (e, _) => e.name == "start" }
       .followedBy("end") { (e, _) => e.name == "end" }
       .within(2000)
-    val in = MemoryStream[TimedCepRow]
-    val q = CepStreaming.matchPatternEventTime(
+    val in = MemoryStream[CepRow]
+    val q = CepStreaming.matchPattern(
       in.toDS().withWatermark("eventTime", "0 seconds"), pattern)
       .writeStream.format("memory").queryName("cep_et_out")
       .outputMode("append").start()
@@ -250,6 +251,43 @@ class CepSpec extends SparkSpec {
       val got = spark.table("cep_et_out").as[CepMatch].collect()
       assert(got.toSeq == Seq(CepMatch("a", "timeout", Seq(1L))))
     } finally q.stop()
+  }
+
+  test("matchPattern on a batch Dataset equals Cep.matchBatch: a greedy " +
+    "run to the end of input, and a within timeout") {
+    def both(rows: Seq[CepRow], p: Cep.PatternSpec[CepRow]) = {
+      val ds = spark.createDataset(rows)
+      // the same call a stream makes: on a batch Dataset the watermark
+      // is inert and each key flushes at the end of its rows
+      val got = CepStreaming.matchPattern(
+        ds.withWatermark("eventTime", "0 seconds"), p)
+        .collect().toSeq.sortBy(m => (m.kind, m.ids.head))
+      val want = Cep.matchBatch(ds, (r: CepRow) => r.key,
+        (r: CepRow) => r.tsMs, p, (r: CepRow) => r.tsMs) { (k, kind, m) =>
+        CepMatch(k, kind, m.values.flatten.map(_.id).toSeq.sorted)
+      }.collect().toSeq.sortBy(m => (m.kind, m.ids.head))
+      assert(got == want)
+      got
+    }
+    // greedy A B+ over a,b,b: the match is held back while B+ could
+    // still grow, and only the end of input releases it
+    val greedy = Cep.begin[CepRow]("A") { (e, _) => e.name == "a" }
+      .next("B", oneOrMore = true, quant = Cep.Greedy) { (e, _) => e.name == "b" }
+    assert(both(Seq("a", "b", "b").zipWithIndex.map { case (n, i) =>
+      CepRow("k", i + 1L, n, 1.0, None, at(1000L * (i + 1))) }, greedy) ==
+      Seq(CepMatch("k", "match", Seq(1L, 2L, 3L))))
+    // CEPTimeout.java:41-51: the partial started at 42 times out
+    val timeouts = Seq(
+      (1L, "foo", 0L), (2L, "error", 100L), (3L, "critical", 200L),
+      (4L, "bar", 300L), (5L, "33", 400L), (6L, "error", 500L),
+      (7L, "bar", 600L), (42L, "55", 700L), (8L, "error", 3800L)
+    ).map { case (id, n, ts) => CepRow("k", id, n, 1.0, None, at(ts)) }
+    val within = Cep.begin[CepRow]("start") { (_, _) => true }
+      .next("end") { (e, _) => e.name == "error" }
+      .within(2000)
+    assert(both(timeouts, within) == Seq(
+      CepMatch("k", "match", Seq(1L, 2L)), CepMatch("k", "match", Seq(5L, 6L)),
+      CepMatch("k", "timeout", Seq(42L))))
   }
 
   test("streaming CEP carries partial matches across micro-batches") {

@@ -19,7 +19,8 @@ import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
 import org.apache.spark.sql.functions.col
 import org.apache.spark.sql.streaming.StreamingQueryException
 import org.scalatest.BeforeAndAfterAll
-import graft.cep.MatchRecognize
+import graft.cep.{Cep, CepStreaming, MatchRecognize}
+import graft.cep.CepStreaming.CepRow
 import graft.core.CheckpointFiles
 import graft.streaming.Models._
 import graft.streaming.{Stateful, StreamAggs}
@@ -138,6 +139,54 @@ class CheckpointSpec extends SparkSpec with BeforeAndAfterAll {
       "10 seconds", "key").select("key"),
     batch = Some(ds => ds.toDF("ts", "key").select("key").distinct()))
 
+  // window ends advance 1 s per four events with < 3 s of jitter,
+  // inside the 5 s watermark delay, so no row is late; the tail's
+  // far-future window closes every window the stream still holds
+  private val topN = Op[TimedItemViewCount](
+    r => (0 until N).map { i =>
+      val end = (i / 4 + r.nextInt(3) + 1) * 1000L
+      TimedItemViewCount(r.nextInt(Keys), end, r.nextInt(10), new Timestamp(end))
+    },
+    ds => Stateful.topNPerWindow(ds.withWatermark("eventTime", "5 seconds"), 3)
+      .toDF(),
+    tail = Seq(TimedItemViewCount(0, 3600L * 1000, 0, new Timestamp(3600L * 1000))))
+
+  // order times rise with arrival, so no row is late and each key's
+  // sides meet in one order on both forms; a key's sides come from one
+  // run of six events (< 6 s), inside the 10 s timeout, while older
+  // keys time out mid-stream; the tail's far-future order times out
+  // every side the stream still holds
+  private val orders = Op[TimedTaggedOrder](
+    r => (0 until N).map { i =>
+      val t = i * 1000L + r.nextInt(500)
+      TimedTaggedOrder(if (r.nextBoolean()) "big" else "small",
+        Order(t, s"o${i / 6}-${r.nextInt(2)}", "u", 1, 10, 1), new Timestamp(t))
+    },
+    ds => Stateful.matchOrders(ds.withWatermark("eventTime", "5 seconds"),
+      timeoutMs = 10000).toDF(),
+    tail = Seq(TimedTaggedOrder("big", Order(3600L * 1000, "flush", "u", 1, 10, 1),
+      new Timestamp(3600L * 1000))))
+
+  // event times rise with arrival, so no event is late and the NFA sees
+  // one order on both forms. The stream expires partials on event-time
+  // timers, the batch form only when a later same-key event passes the
+  // bound, so every key ends with a 'z' (no step takes it) past every
+  // window: each partial the stream times out, the batch form times
+  // out too. Not a tail: the batch form needs the closers as well.
+  private val Within = 4000L
+  private val cepPattern = Cep.begin[CepRow]("A") { (e, _) => e.name == "a" }
+    .followedBy("B", oneOrMore = true, quant = Cep.Greedy) { (e, _) => e.name == "b" }
+    .followedBy("C") { (e, _) => e.name == "c" }
+    .within(Within)
+  private val cep = Op[CepRow](
+    r => (0 until N).map { i =>
+      CepRow(s"k${r.nextInt(Keys)}", i, "abbcx".charAt(r.nextInt(5)).toString,
+        1.0, None, new Timestamp(i * 1000L + r.nextInt(500)))
+    } ++ (0 until Keys).map(k => CepRow(s"k$k", N + k, "z", 1.0, None,
+      new Timestamp(N * 1000L + Within + 1000))),
+    ds => CepStreaming.matchPattern(ds.withWatermark("eventTime", "2 seconds"),
+      cepPattern).toDF())
+
   /** What the sink got from a query over a fresh MemoryStream on
     * checkpoint `ckpt`, keyed by batch id (a replayed batch overwrites,
     * as in an idempotent sink). `replay` re-adds the chunks an earlier
@@ -197,11 +246,14 @@ class CheckpointSpec extends SparkSpec with BeforeAndAfterAll {
          "MATCH_RECOGNIZE A B+ C" -> mr,
          "watermarked window counts" -> windows,
          "session window sums" -> sessions,
-         "dedupWithinWatermark" -> dedup);
+         "dedupWithinWatermark" -> dedup,
+         "top-N per window" -> topN,
+         "two-stream match" -> orders,
+         "DSL CEP A B+ C within" -> cep);
        (pname, provider) <- Seq("HDFS-backed" -> Hdfs, "RocksDB" -> RocksDb))
     test(s"$name: stop/restart equals the uninterrupted run and the batch " +
       s"form ($pname, ${Seeds.size} seeds)") {
-      // one state partition per query keeps the 120 restarts inside the
+      // one state partition per query keeps the 180 restarts inside the
       // suite's time; the upgrade and corruption cases keep the default
       withConf(ProviderKey, Some(provider)) {
         withConf("spark.sql.shuffle.partitions", Some("1")) {

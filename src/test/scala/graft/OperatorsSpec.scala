@@ -818,7 +818,7 @@ class OperatorsSpec extends SparkSpec {
     // per-row signature and band keys, straight from the definition
     def bandsOf(text: String): Seq[(Int, String)] =
       Option(text).map(wordsScala).filter(_.length >= 3).toSeq.flatMap { w =>
-        val hs = w.sliding(3).map(s => Dedup.h32Scala(s.mkString(" "))).toSeq
+        val hs = w.sliding(3).map(s => graft.functions.Portable.h32Scala(s.mkString(" "))).toSeq
         val sig = (0 until k).map(i =>
           hs.map(h => (Dedup.coefA(i) * h + Dedup.coefB(i)) % Dedup.P).min)
         (0 until 4).map(b => (b, sig.slice(4 * b, 4 * b + 4).mkString("|")))

@@ -83,7 +83,7 @@ object GraftProperties extends Properties("graft") {
   private val nameGen = Gen.oneOf("x", "error")
   private val rowsGen: Gen[List[CepRow]] =
     Gen.listOf(nameGen).map(_.zipWithIndex.map { case (n, i) =>
-      CepRow("k", i.toLong, n, 1.0, None, 1000L * i)
+      CepRow("k", i.toLong, n, 1.0, None, new java.sql.Timestamp(1000L * i))
     })
 
   property("strict-pair NFA == naive adjacent scan") =
@@ -118,7 +118,7 @@ object GraftProperties extends Properties("graft") {
   private val pricesGen: Gen[List[CepRow]] =
     Gen.nonEmptyListOf(Gen.chooseNum(1.0, 20.0)).map(_.zipWithIndex.map {
       case (p, i) => CepRow("k", i.toLong, if (i == 0) "a" else "x", p,
-        None, 1000L * i)
+        None, new java.sql.Timestamp(1000L * i))
     })
 
   property("greedy B+ matches are at least as long as reluctant ones") =
@@ -389,11 +389,14 @@ object GraftProperties extends Properties("graft") {
         val gen = p(row).getLong(0)
         val interp = e.eval(row).asInstanceOf[Long]
         // pins the direct-from-digest-bytes fold to the composite
-        // conv(substring(md5(s),1,n),16,10) spelling (and, at n=15,
-        // to Portable.h60Scala, the driver twin every serve path uses)
+        // conv(substring(md5(s),1,n),16,10) spelling (and to the
+        // driver twins: Portable.h32Scala at n=8, the hash-family and
+        // plane constants; Portable.h60Scala at n=15, every serve path)
         val want = hexPrefix(s, n)
-        gen == interp && gen == want &&
-          (n != 15 || gen == graft.functions.Portable.h60Scala(s))
+        val twin =
+          if (n == 8) graft.functions.Portable.h32Scala(s)
+          else graft.functions.Portable.h60Scala(s)
+        gen == interp && gen == want && gen == twin
       }
     }
   }

@@ -132,10 +132,11 @@ class StatefulSpec extends SparkSpec {
   }
 
   test("top-N per window ranks by count desc (batch)") {
-    val counts = Seq(
-      ItemViewCount(101, 1000, 5), ItemViewCount(102, 1000, 9),
-      ItemViewCount(103, 1000, 9), ItemViewCount(104, 1000, 1),
-      ItemViewCount(101, 2000, 2))
+    def ivc(itemId: Long, windowEnd: Long, n: Long) =
+      TimedItemViewCount(itemId, windowEnd, n,
+        new java.sql.Timestamp(windowEnd))
+    val counts = Seq(ivc(101, 1000, 5), ivc(102, 1000, 9),
+      ivc(103, 1000, 9), ivc(104, 1000, 1), ivc(101, 2000, 2))
     val got = Stateful.topNPerWindow(spark.createDataset(counts), 2)
       .collect().sortBy(r => (r.windowEnd, r.rank))
     assert(got.toSeq == Seq(
@@ -153,7 +154,7 @@ class StatefulSpec extends SparkSpec {
     val ds = in.toDS()
       .withWatermark("eventTime", "0 milliseconds")
       .as[TimedItemViewCount]
-    val q = Stateful.topNPerWindowStreaming(ds, 2)
+    val q = Stateful.topNPerWindow(ds, 2)
       .writeStream.format("memory").queryName("topn_out")
       .outputMode(OutputMode.Append).start()
     try {
@@ -179,7 +180,7 @@ class StatefulSpec extends SparkSpec {
     val ds = in.toDS()
       .withWatermark("eventTime", "0 milliseconds")
       .as[TimedItemViewCount]
-    val q = Stateful.topNPerWindowStreaming(ds, 2)
+    val q = Stateful.topNPerWindow(ds, 2)
       .writeStream.format("memory").queryName("topn_late_out")
       .outputMode(OutputMode.Append).start()
     try {
@@ -254,6 +255,8 @@ class StatefulSpec extends SparkSpec {
       ("big", Order(1000, "o1", "u1", 1, 10, 1)),
       ("small", Order(1500, "o1", "u1", 1, 10, 1)),
       ("big", Order(2000, "o2", "u2", 2, 20, 1)))
+      .map { case (side, o) =>
+        TimedTaggedOrder(side, o, new java.sql.Timestamp(o.time)) }
     val got = Stateful.matchOrders(spark.createDataset(tagged))
       .collect().sortBy(_.orderId)
     assert(got.toSeq == Seq(
@@ -272,7 +275,7 @@ class StatefulSpec extends SparkSpec {
     val ds = in.toDS()
       .withWatermark("eventTime", "10 seconds")
       .as[TimedTaggedOrder]
-    val q = Stateful.matchOrdersStreaming(ds, timeoutMs = 1000)
+    val q = Stateful.matchOrders(ds, timeoutMs = 1000)
       .writeStream.format("memory").queryName("match_out")
       .outputMode(OutputMode.Append).start()
     try {

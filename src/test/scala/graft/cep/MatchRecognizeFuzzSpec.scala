@@ -516,7 +516,7 @@ class MatchRecognizeFuzzSpec extends AnyFunSuite {
   /** Streaming-cadence differential: the SAME compiled NFA driven the
     * way the streaming operators drive it — events split across
     * micro-batch chunks with `expire(watermark)` between chunks (the
-    * matchPatternEventTime cadence: in-order events, zero-delay
+    * CepStreaming.matchPattern timer cadence: in-order events, zero-delay
     * watermark = max event time seen) and a final `flush` — must
     * release the SAME match sequence as the one-shot batch `run`.
     * Only WITHIN patterns exercise anything new (expire is a no-op
